@@ -198,7 +198,10 @@ def decompress_blob(blob_bytes: bytes) -> bytes:
         # max_length caps expansion even when raw_size is absent or lies —
         # a ~1000:1 zlib bomb would otherwise expand 32MB → 32GB
         d = zlib.decompressobj()
-        out = d.decompress(bytes(val), MAX_BLOB_SIZE)
+        try:
+            out = d.decompress(bytes(val), MAX_BLOB_SIZE)
+        except zlib.error as exc:
+            raise BlobError(f"corrupt zlib stream in blob: {exc}") from exc
         if d.unconsumed_tail:
             raise BlobError(f"uncompressed blob too big: > {MAX_BLOB_SIZE}")
         if raw_size is not None and len(out) != raw_size:
@@ -211,7 +214,10 @@ def decompress_blob(blob_bytes: bytes) -> bytes:
         # few-KB lzma payload could otherwise expand unbounded before the
         # post-hoc size check runs
         d = lzma.LZMADecompressor()
-        out = d.decompress(bytes(val), max_length=MAX_BLOB_SIZE)
+        try:
+            out = d.decompress(bytes(val), max_length=MAX_BLOB_SIZE)
+        except lzma.LZMAError as exc:
+            raise BlobError(f"corrupt lzma stream in blob: {exc}") from exc
         if not d.eof:
             # two distinct failures hide behind "not eof": the stream hit
             # the size cap with input left over (bomb), or all input was

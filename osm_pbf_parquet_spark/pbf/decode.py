@@ -112,11 +112,10 @@ class _StringTable:
     (osmformat.proto:129-137). Strings decode lazily into a pyarrow array
     so tag/user columns are built with vectorized ``take``."""
 
-    __slots__ = ("_n", "_payload", "_starts", "_lens", "_pa", "_py")
+    __slots__ = ("_n", "_payload", "_starts", "_lens", "_pa")
 
     def __init__(self, payload) -> None:
         self._pa: pa.Array | None = None
-        self._py: list[str] | None = None
         self._payload = payload
         starts: list[int] = []
         lens: list[int] = []
@@ -130,9 +129,9 @@ class _StringTable:
                 while pos < n:
                     if view[pos] != 0x0A:
                         raw = message_fields(payload).get(1, [])
-                        self._pa = pa.array(
+                        self._pa = _utf8(pa.array(
                             (bytes(v) for v in raw), type=pa.binary()
-                        ).cast(pa.string())
+                        ))
                         self._n = len(raw)
                         return
                     pos += 1
@@ -159,6 +158,8 @@ class _StringTable:
         return self._n
 
     def arrow(self) -> pa.Array:
+        """The table as an Arrow string array (built once; its buffers
+        are copies, so it does not keep the block payload alive)."""
         if self._pa is None:
             if self._n == 0:
                 self._pa = pa.array([], type=pa.string())
@@ -177,25 +178,26 @@ class _StringTable:
                 pa.binary(), self._n,
                 [None, pa.py_buffer(offsets), pa.py_buffer(blob)],
             )
-            self._pa = binarr.cast(pa.string())
+            self._pa = _utf8(binarr)
         return self._pa
 
-    def py(self) -> list[str]:
-        if self._py is None:
-            self._py = self.arrow().to_pylist()
-        return self._py
 
-    def take(self, indices: np.ndarray) -> pa.Array:
-        if indices.size and (indices.min() < 0 or indices.max() >= self._n):
-            raise ProtoDecodeError("stringtable index out of bounds")
-        return self.arrow().take(pa.array(indices, type=pa.int64()))
+def _utf8(binarr: pa.Array) -> pa.Array:
+    try:
+        return binarr.cast(pa.string())
+    except pa.ArrowInvalid as exc:
+        raise ProtoDecodeError("stringtable entry is not valid UTF-8") from exc
 
 
 class _Columns:
-    """Flat per-column accumulators for one element kind; Arrow arrays are
-    assembled from offsets + flat value buffers (no per-row objects)."""
+    """Flat per-column accumulators for one element kind of one block;
+    Arrow arrays are assembled from offsets + flat value buffers (no
+    per-row objects). Tag keys/values, member roles and ``user_sid`` index
+    the block's ``_stringtable`` until ``seal`` swaps it for ``strings``."""
 
     def __init__(self) -> None:
+        self._stringtable: _StringTable | None = None
+        self.strings: pa.Array | None = None  # set by seal()
         self.n = 0
         self.ids: list[np.ndarray] = []
         self.lat: list[np.ndarray] = []  # degrees or None-marker chunks
@@ -228,6 +230,46 @@ class _Columns:
         self.has_coords = False
         self.has_nds = False
         self.has_members = False
+
+    def seal(self) -> None:
+        """Check every string-table index (and member type) against THIS
+        block's table, then keep the table as an Arrow array -- or an
+        empty one when no row refers to it -- and drop the block's
+        ``_StringTable``, so a sealed block no longer holds its blob's
+        decompressed payload. Idempotent. The checks live here, per
+        block, because after blocks are concatenated an index that
+        overruns its own table could silently read the next block's."""
+        if self.strings is not None:
+            return
+        st = self._stringtable
+        n_st = len(st) if st is not None else 0
+        self.tag_keys = _checked(self.tag_keys, 0, n_st, "stringtable index")
+        self.tag_vals = _checked(self.tag_vals, 0, n_st, "stringtable index")
+        self.mem_roles = _checked(self.mem_roles, 0, n_st, "stringtable index")
+        self.mem_types = _checked(self.mem_types, 0, len(_MEMBER_TYPES),
+                                  "relation member type")
+        # -1 = null user, -2 = empty string (see _Columns.user_sid)
+        self.user_sid = _checked(self.user_sid, -2, n_st, "user_sid")
+        n_keys = self.tag_keys[0].size if self.tag_keys else 0
+        if n_keys != (self.tag_vals[0].size if self.tag_vals else 0):
+            raise ProtoDecodeError("tag keys and values differ in length")
+        sids = self.user_sid[0] if self.user_sid else _EMPTY_I64
+        refers = (n_keys > 0 or bool(self.mem_roles)
+                  or (sids.size > 0 and int(sids.max()) >= 0))
+        self.strings = (st.arrow() if refers and st is not None
+                        else pa.array([], type=pa.string()))
+        self._stringtable = None
+
+
+def _checked(chunks: list[np.ndarray], lo: int, hi: int, what: str) -> list[np.ndarray]:
+    """Concatenate ``chunks`` into at most one int64 chunk whose values
+    all lie in ``[lo, hi)``; a value outside is a ProtoDecodeError."""
+    flat = _concat(chunks, np.int64)
+    if not flat.size:
+        return []
+    if int(flat.min()) < lo or int(flat.max()) >= hi:
+        raise ProtoDecodeError(f"{what} out of bounds")
+    return [flat]
 
 
 def _concat(chunks: list[np.ndarray], dtype) -> np.ndarray:
@@ -301,7 +343,7 @@ def decode_primitive_block(
         # payload — surface as the module's decode error, not IndexError
         raise ProtoDecodeError("truncated message") from exc
     for kind_cols in out.values():
-        kind_cols._stringtable = st  # type: ignore[attr-defined]
+        kind_cols._stringtable = st
     return out
 
 
@@ -1142,7 +1184,7 @@ def columns_to_arrow(
         c = per_kind.get(kind)
         if c is None or c.n == 0:
             continue
-        batches.append(_kind_batch(kind, c, schema, timestamp_unit))
+        batches.append(_kind_batch(kind, [c], schema, timestamp_unit))
     if not batches:
         return None
     if len(batches) == 1:
@@ -1151,107 +1193,169 @@ def columns_to_arrow(
     return merged[0] if merged else None
 
 
-def _kind_batch(kind: str, c: _Columns, schema: pa.Schema, timestamp_unit: str) -> pa.RecordBatch:
-    st: _StringTable = c._stringtable  # type: ignore[attr-defined]
-    n = c.n
+def kind_table(kind: str, blocks: list[_Columns]) -> pa.Table:
+    """Assemble one kind's accumulators from any number of blocks (each a
+    ``decode_primitive_block`` value for ``kind``) into ONE single-chunk
+    table in the full wide schema without ``type``: the rows of
+    ``columns_to_arrow`` over each block in turn, filtered to ``kind``."""
+    from ..schema import osm_arrow_schema
+
+    schema = osm_arrow_schema()
+    schema = schema.remove(schema.get_field_index("type"))
+    return pa.Table.from_batches([_kind_batch(kind, blocks, schema, "us")])
+
+
+def _kind_batch(kind: str, blocks: list[_Columns], schema: pa.Schema,
+                timestamp_unit: str) -> pa.RecordBatch:
+    """The one assembly path: ``blocks`` of one kind → a RecordBatch in
+    ``schema``. Each block's string tables are concatenated and its
+    string indices shifted by the table's offset in the concatenation
+    (bounds were checked per block by ``seal``)."""
+    for c in blocks:
+        c.seal()
+    n = sum(c.n for c in blocks)
+    strings = bases = None
+    if {"tags", "members", "user"} & set(schema.names):
+        strings, bases = _joined_strings(blocks)
     arrays = []
     for field in schema:
         name = field.name
         if name == "id":
-            arrays.append(pa.array(_concat(c.ids, np.int64), type=pa.int64()))
+            arrays.append(pa.array(_flat(blocks, "ids", np.int64), type=pa.int64()))
         elif name == "type":
             arrays.append(pa.DictionaryArray.from_arrays(
                 pa.array(np.zeros(n, dtype=np.int32)), pa.array([kind])
             ).cast(pa.string()))
         elif name == "tags":
-            arrays.append(_tags_array(c, st, n))
-        elif name == "lat":
-            arrays.append(_coord_array(c.lat, n, c.has_coords))
-        elif name == "lon":
-            arrays.append(_coord_array(c.lon, n, c.has_coords))
+            arrays.append(_tags_array(blocks, strings, bases, n))
+        elif name in ("lat", "lon"):
+            arrays.append(_coord_array(
+                _flat(blocks, name, np.float64),
+                n, any(c.has_coords for c in blocks),
+            ))
         elif name == "nds":
-            arrays.append(_nds_array(c, n, field.type))
+            arrays.append(_nds_array(blocks, n, field.type))
         elif name == "members":
-            arrays.append(_members_array(c, st, n, field.type))
+            arrays.append(_members_array(blocks, strings, bases, n, field.type))
         elif name == "changeset":
-            arrays.append(_masked_int(c.changeset, c.changeset_valid, n, pa.int64()))
+            arrays.append(_masked_int(blocks, "changeset", "changeset_valid", n, pa.int64()))
         elif name == "timestamp":
-            ts = _masked_int(c.ts_ms, c.ts_valid, n, pa.int64())
+            ts = _masked_int(blocks, "ts_ms", "ts_valid", n, pa.int64())
             arrays.append(ts.cast(pa.timestamp("ms")).cast(pa.timestamp(timestamp_unit)))
         elif name == "uid":
-            arrays.append(_masked_int(c.uid, c.uid_valid, n, pa.int32()))
+            arrays.append(_masked_int(blocks, "uid", "uid_valid", n, pa.int32()))
         elif name == "user":
-            arrays.append(_user_array(c, st, n))
+            arrays.append(_user_array(blocks, strings, bases, n))
         elif name == "version":
-            arrays.append(_masked_int(c.version, c.version_valid, n, pa.int32()))
+            arrays.append(_masked_int(blocks, "version", "version_valid", n, pa.int32()))
         elif name == "visible":
-            vis = _concat(c.visible, np.bool_)
-            mask = _concat(c.visible_valid, np.bool_)
+            vis = _flat(blocks, "visible", np.bool_)
             if vis.size == 0:
                 arrays.append(pa.nulls(n, pa.bool_()))
             else:
+                mask = _flat(blocks, "visible_valid", np.bool_)
                 arrays.append(pa.array(vis, mask=~mask))
         else:  # pragma: no cover
             raise ValueError(f"unknown column {name}")
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
-def _coord_array(chunks: list[np.ndarray], n: int, has_coords: bool) -> pa.Array:
+def _flat(blocks: list[_Columns], attr: str, dtype) -> np.ndarray:
+    """One accumulator (``attr``) of every block, concatenated."""
+    return _concat([a for c in blocks for a in getattr(c, attr)], dtype)
+
+
+def _joined_strings(blocks: list[_Columns]) -> tuple[pa.Array, list[int]]:
+    """→ (every block's string table concatenated, then one ``""`` for the
+    empty-user sentinel; each block's offset into it)."""
+    bases, total = [], 0
+    for c in blocks:
+        bases.append(total)
+        total += len(c.strings)
+    tables = [c.strings for c in blocks if len(c.strings)]
+    return pa.concat_arrays(tables + [pa.array([""], type=pa.string())]), bases
+
+
+def _string_refs(blocks: list[_Columns], attr: str, bases: list[int]) -> pa.Array:
+    """Per-block string indices (``attr``) shifted into the joined table."""
+    parts = [idx + base if base else idx
+             for c, base in zip(blocks, bases)
+             for idx in getattr(c, attr)]  # one chunk at most once sealed
+    return pa.array(_concat(parts, np.int64), type=pa.int64())
+
+
+def _masked_int(blocks: list[_Columns], attr: str, valid_attr: str, n: int,
+                pa_type) -> pa.Array:
+    vals = _flat(blocks, attr, np.int64)
+    if vals.size == 0:
+        return pa.nulls(n, pa_type)
+    mask = _flat(blocks, valid_attr, np.bool_)
+    return pa.array(vals, mask=~mask).cast(pa_type)
+
+
+def _counts_to_offsets(blocks: list[_Columns], attr: str, n: int) -> pa.Array:
+    flat = _flat(blocks, attr, np.int64)
+    if flat.size == 0:
+        flat = np.zeros(n, dtype=np.int64)
+    offsets = np.empty(flat.size + 1, dtype=np.int32)
+    offsets[0] = 0
+    np.cumsum(flat, out=offsets[1:])
+    return pa.array(offsets, type=pa.int32())
+
+
+def _coord_array(vals: np.ndarray, n: int, has_coords: bool) -> pa.Array:
     if not has_coords:
         return pa.nulls(n, pa.float64())
-    vals = _concat(chunks, np.float64)
     return pa.array(vals, mask=np.isnan(vals))
 
 
-def _tags_array(c: _Columns, st: _StringTable, n: int) -> pa.Array:
-    offsets = _counts_to_offsets(c.tag_counts, n)
-    keys_idx = _concat(c.tag_keys, np.int64)
-    vals_idx = _concat(c.tag_vals, np.int64)
-    keys = st.take(keys_idx) if keys_idx.size else pa.array([], type=pa.string())
-    vals = st.take(vals_idx) if vals_idx.size else pa.array([], type=pa.string())
-    return pa.MapArray.from_arrays(pa.array(offsets, type=pa.int32()), keys, vals)
+def _tags_array(blocks: list[_Columns], strings: pa.Array, bases: list[int],
+                n: int) -> pa.Array:
+    offsets = _counts_to_offsets(blocks, "tag_counts", n)
+    keys = strings.take(_string_refs(blocks, "tag_keys", bases))
+    vals = strings.take(_string_refs(blocks, "tag_vals", bases))
+    return pa.MapArray.from_arrays(offsets, keys, vals)
 
 
-def _nds_array(c: _Columns, n: int, list_type) -> pa.Array:
-    offsets = _counts_to_offsets(c.nd_counts, n)
-    refs = _concat(c.nd_refs, np.int64)
+def _nds_array(blocks: list[_Columns], n: int, list_type) -> pa.Array:
+    offsets = _counts_to_offsets(blocks, "nd_counts", n)
+    refs = _flat(blocks, "nd_refs", np.int64)
     struct = pa.StructArray.from_arrays([pa.array(refs, type=pa.int64())], ["ref"])
-    arr = pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), struct)
+    arr = pa.ListArray.from_arrays(offsets, struct)
     return arr.cast(list_type)
 
 
-def _members_array(c: _Columns, st: _StringTable, n: int, list_type) -> pa.Array:
-    offsets = _counts_to_offsets(c.mem_counts, n)
-    refs = _concat(c.mem_refs, np.int64)
-    types_idx = _concat(c.mem_types, np.int64)
-    roles_idx = _concat(c.mem_roles, np.int64)
+def _members_array(blocks: list[_Columns], strings: pa.Array, bases: list[int],
+                   n: int, list_type) -> pa.Array:
+    offsets = _counts_to_offsets(blocks, "mem_counts", n)
+    refs = _flat(blocks, "mem_refs", np.int64)
     type_dict = pa.array(list(_MEMBER_TYPES), type=pa.string())
-    if types_idx.size and (types_idx.min() < 0 or types_idx.max() > 2):
-        raise ProtoDecodeError("relation member type out of range")
-    types = type_dict.take(pa.array(types_idx, type=pa.int64()))
-    roles = st.take(roles_idx) if roles_idx.size else pa.array([], type=pa.string())
+    types = type_dict.take(pa.array(_flat(blocks, "mem_types", np.int64),
+                                    type=pa.int64()))
+    roles = strings.take(_string_refs(blocks, "mem_roles", bases))
     struct = pa.StructArray.from_arrays(
         [types, pa.array(refs, type=pa.int64()), roles], ["type", "ref", "role"]
     )
-    arr = pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), struct)
+    arr = pa.ListArray.from_arrays(offsets, struct)
     return arr.cast(list_type)
 
 
-def _user_array(c: _Columns, st: _StringTable, n: int) -> pa.Array:
-    sids = _concat(c.user_sid, np.int64)
-    if sids.size == 0:
+def _user_array(blocks: list[_Columns], strings: pa.Array, bases: list[int],
+                n: int) -> pa.Array:
+    if not any(c.user_sid for c in blocks):
         return pa.nulls(n, pa.string())
-    # -1 → null, -2 → "" (missing user on an element that HAS metadata);
-    # append the "" sentinel without materializing the table as Python
-    table = pa.concat_arrays([st.arrow(), pa.array([""], type=pa.string())])
-    empty_idx = len(st)
-    idx = sids.copy()
-    idx[idx == -2] = empty_idx
+    # -1 → null; -2 → "" (missing user on an element that HAS metadata),
+    # the last entry of the joined table; others shift by the block base
+    empty_idx = len(strings) - 1
+    parts = []
+    for c, base in zip(blocks, bases):
+        sids = c.user_sid[0] if c.user_sid else np.full(c.n, -1, np.int64)
+        parts.append(np.where(sids >= 0, sids + base,
+                              np.where(sids == -2, empty_idx, -1)))
+    idx = _concat(parts, np.int64)
     null_mask = idx == -1
     idx[null_mask] = 0
-    if idx.size and idx.max() > empty_idx:
-        raise ProtoDecodeError("user_sid out of bounds")
-    return table.take(pa.array(idx, mask=null_mask, type=pa.int64()))
+    return strings.take(pa.array(idx, mask=null_mask, type=pa.int64()))
 
 
 def parse_block_to_batch(

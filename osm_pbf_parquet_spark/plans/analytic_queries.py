@@ -521,6 +521,20 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream.withColumn("event_time", F.timestamp_micros(F.col("ts_us")))
 
 
+def _stream_replay_width(parallelism: int, session_width: str,
+                         override: str | None) -> str:
+    """Shuffle width for a gate replay. ``override`` is the
+    ``SPARK_GRAFT_STREAM_SHUFFLE`` value: unset or blank → ``min(parallelism,
+    8)``; ``0`` → ``session_width`` unchanged; any other value → that
+    width."""
+    if override is None or not override.strip():
+        return str(min(parallelism, 8))
+    width = int(override)
+    if width < 0:
+        raise ValueError(f"SPARK_GRAFT_STREAM_SHUFFLE must be >= 0, got {width}")
+    return session_width if width == 0 else str(width)
+
+
 def _run_stream_to_table(spark: SparkSession, df: DataFrame, name: str,
                          mode: str) -> DataFrame:
     """Execute a streaming DataFrame to a memory sink (availableNow) and
@@ -546,12 +560,12 @@ def _run_stream_to_table(spark: SparkSession, df: DataFrame, name: str,
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    par = spark.sparkContext.defaultParallelism
-    width = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "0")) or min(
-        par, 8
-    )
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    width = _stream_replay_width(
+        spark.sparkContext.defaultParallelism, prev,
+        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE"),
+    )
+    spark.conf.set("spark.sql.shuffle.partitions", width)
     try:
         q = (
             df.writeStream.format("memory")

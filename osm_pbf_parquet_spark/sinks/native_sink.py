@@ -9,14 +9,24 @@ row round-trip is pure overhead: measured at ~3× the cost of the parse
 itself on a 130 MB input.
 
 ``transcode_pbf`` removes it. Each task parses its blob ranges and writes
-hive-partitioned zstd parquet **directly from the Arrow batches** with
-pyarrow's C++ writer, yielding only a tiny per-file stats batch. This is
+hive-partitioned zstd parquet **directly from Arrow** with pyarrow's C++
+writer, yielding only a tiny per-file stats batch. This is
 the reference's own architecture — decode task feeding a parquet sink in
 the same worker (``osm-pbf-parquet/src/pbf.rs:51-98`` →
 ``sink.rs:69-117``) — expressed Spark-first: the blob catalog is the
 DataFrame, Spark schedules/distributes/retries the map stage, and the
 data plane stays columnar end-to-end (PBF bytes → numpy → Arrow →
 parquet) with zero per-row materialization anywhere.
+
+Per kind, like the reference's per-kind Arrow assembly (``pbf.rs:183-220``,
+``sink.rs:69-117``): the task buffers each kind's decoded blocks and
+builds ONE Arrow table, without a ``type`` column, whenever that kind
+holds ``rows_per_group`` rows (``fused_kind_tables``), then the
+remainders at task end. No wide per-blob batch is built, split back by
+``type`` or concatenated. The ``osmparquet`` DataSource writer, whose
+input is a wide DataFrame, keeps the split (``write_kind_tables``); both
+feed the same write loop (``_write_kind_pairs``), and row groups, file
+rolls and bytes come out identical.
 
 Output contract parity (same as the generic sink):
 - layout ``{out}/type={kind}/part-*.parquet``   (``sink.rs:155-179``, W1)
@@ -40,14 +50,14 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from typing import Iterator
+from typing import Iterable, Iterator
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
-from ..pbf.decode import ALL_KINDS
+from ..pbf.decode import ALL_KINDS, kind_table
 from ..schema import OSM_TYPES
 
 # one row group per ~this many rows: big enough for good column encoding
@@ -157,40 +167,33 @@ class _KindWriter:
         self._roll()
 
 
-def write_kind_tables(tables: Iterator, out_path: str, prefix: str,
-                      codec: str, level: int | None, target_bytes: int,
-                      rows_per_group: int, sort_by_id: bool,
-                      kinds=None) -> list[tuple]:
-    """Shared task-side write loop (the fused transcode kernel and the
-    ``osmparquet`` DataSource writer both route through here): split each
-    incoming Arrow table by ``type``, drop the column (the hive dir
-    carries it), append to rolling per-kind writers, and return the
-    committed-file stats. On ANY failure every file this task produced is
-    removed — the open ``.inprogress`` partial AND files already rolled
-    to final names (a rolled file from a failed attempt would otherwise
-    survive a job-level failure in append mode and duplicate rows on the
-    next tick's retry)."""
+def _write_kind_pairs(pairs: Iterable[tuple[str, pa.Table]], out_path: str,
+                      prefix: str, codec: str, level: int | None,
+                      target_bytes: int, rows_per_group: int,
+                      sort_by_id: bool) -> list[tuple]:
+    """Task-side write loop shared by every writer here: append each
+    ``(kind, table)`` (``type`` already dropped -- the hive dir carries
+    it) to that kind's rolling writer and return the committed-file
+    stats. On ANY failure every file this task produced is removed --
+    the open ``.inprogress`` partial AND files already rolled to final
+    names (a rolled file from a failed attempt would otherwise survive a
+    job-level failure in append mode and duplicate rows on the next
+    tick's retry)."""
     stats: list[tuple] = []
     writers: dict[str, _KindWriter] = {}
     try:
-        for table in tables:
-            if "type" not in table.column_names:
-                raise ValueError("OSM writer requires a 'type' column")
-            types = table.column("type")
-            for kind in OSM_TYPES:
-                if kinds is not None and kind not in kinds:
-                    continue
-                part = table.filter(pc.equal(types, kind))
-                if part.num_rows == 0:
-                    continue
-                w = writers.get(kind)
-                if w is None:
-                    w = writers[kind] = _KindWriter(
-                        kind, os.path.join(out_path, f"type={kind}"),
-                        prefix, codec, level, target_bytes, stats,
-                        rows_per_group, sort_by_id,
-                    )
-                w.add(part.drop_columns(["type"]))
+        for kind, table in pairs:
+            w = writers.get(kind)
+            if w is None:
+                w = writers[kind] = _KindWriter(
+                    kind, os.path.join(out_path, f"type={kind}"),
+                    prefix, codec, level, target_bytes, stats,
+                    rows_per_group, sort_by_id,
+                )
+            w.add(table)
+            # drop the loop's reference: a written group must not stay
+            # alive while the next one is decoded
+            del table
         for w in writers.values():
             w.close()
     except BaseException:
@@ -211,6 +214,61 @@ def write_kind_tables(tables: Iterator, out_path: str, prefix: str,
                 pass
         raise
     return stats
+
+
+def write_kind_tables(tables: Iterator, out_path: str, prefix: str,
+                      codec: str, level: int | None, target_bytes: int,
+                      rows_per_group: int, sort_by_id: bool,
+                      kinds=None) -> list[tuple]:
+    """Write wide tables (all kinds, ``type`` as a column) -- the
+    ``osmparquet`` DataSource writer's input: split each by ``type`` and
+    hand the per-kind parts to ``_write_kind_pairs``."""
+
+    def split():
+        for table in tables:
+            if "type" not in table.column_names:
+                raise ValueError("OSM writer requires a 'type' column")
+            types = table.column("type")
+            for kind in OSM_TYPES:
+                if kinds is not None and kind not in kinds:
+                    continue
+                part = table.filter(pc.equal(types, kind))
+                if part.num_rows:
+                    yield kind, part.drop_columns(["type"])
+
+    return _write_kind_pairs(split(), out_path, prefix, codec, level,
+                             target_bytes, rows_per_group, sort_by_id)
+
+
+def fused_kind_tables(decoded: Iterable[dict], rows_per_group: int
+                      ) -> Iterator[tuple[str, pa.Table]]:
+    """The fused task's table assembly: buffer each kind's decoded blocks
+    (``decode_blob_entries`` output) and, whenever a kind holds at least
+    ``rows_per_group`` rows, assemble them into ONE table without
+    ``type``; the remainders follow at the end. These are exactly the
+    flush points of ``_KindWriter.add`` over per-blob tables, so row
+    groups, file rolls and bytes match the split path's."""
+    pending: dict[str, list] = {kind: [] for kind in OSM_TYPES}
+    rows = dict.fromkeys(OSM_TYPES, 0)
+
+    def build(kind: str) -> pa.Table:
+        # hand the blocks over, so they are freed before the table is
+        # written rather than held through the write
+        blocks, pending[kind], rows[kind] = pending[kind], [], 0
+        return kind_table(kind, blocks)
+
+    for per_kind in decoded:
+        for kind in OSM_TYPES:
+            cols = per_kind.get(kind)
+            if cols is None or cols.n == 0:
+                continue
+            pending[kind].append(cols)
+            rows[kind] += cols.n
+            if rows[kind] >= rows_per_group:
+                yield kind, build(kind)
+    for kind in OSM_TYPES:
+        if pending[kind]:
+            yield kind, build(kind)
 
 
 def _finalize_output(out_path: str, committed: set[str],
@@ -303,7 +361,7 @@ def transcode_pbf(
     def _transcode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
-        from ..sources.pbf_source import parse_blob_entries
+        from ..sources.pbf_source import decode_blob_entries
 
         ctx = TaskContext.get()
         prefix = f"part-{run_token}-{ctx.partitionId():05d}-{ctx.taskAttemptId()}"
@@ -316,13 +374,13 @@ def transcode_pbf(
                     b.column("size").to_pylist(),
                 )
 
-        tables = (
-            pa.Table.from_batches([batch])
-            for batch in parse_blob_entries(entries(), kinds_list, None)
-        )
-        stats = write_kind_tables(
-            tables, out_path, prefix, codec, level, target_bytes,
-            rows_per_group, sort_by_id, kinds=kinds_list,
+        stats = _write_kind_pairs(
+            fused_kind_tables(
+                decode_blob_entries(entries(), kinds_list, None),
+                rows_per_group,
+            ),
+            out_path, prefix, codec, level, target_bytes, rows_per_group,
+            sort_by_id,
         )
         yield pa.RecordBatch.from_arrays(
             [

@@ -35,8 +35,13 @@ from typing import Iterable, Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from ..pbf.blob import TYPE_DATA, TYPE_HEADER, index_blobs, read_blob_at, decompress_blob
-from ..pbf.decode import ALL_KINDS, parse_block_to_batch, parse_header_block
+from ..pbf.blob import (
+    TYPE_DATA, TYPE_HEADER, BlobError, decompress_blob, index_blobs, read_blob_at,
+)
+from ..pbf.decode import (
+    ALL_KINDS, columns_to_arrow, decode_primitive_block, parse_header_block,
+)
+from ..pbf.proto import ProtoDecodeError
 from ..schema import OSM_COLUMNS, pruned_schema
 
 # ~16 blobs ≈ 256MB of input per task: large enough to amortize file-open
@@ -215,11 +220,25 @@ def normalize_kinds_columns(kinds, columns):
     return sorted(kinds), columns
 
 
-def parse_blob_entries(entries, kinds: list[str], columns: list[str] | None):
-    """The executor parse kernel, shared by ``scan_pbf``'s ``mapInArrow``
-    closure and the ``osmpbf`` DataSource's ``read()``: iterate
-    (path, offset, size) triples, keeping one open handle per distinct
-    path, and yield non-empty Arrow batches."""
+class BlobDecodeError(ValueError):
+    """A data blob failed to read, decompress or decode. Names the file
+    and the blob's byte offset; the original ``BlobError`` /
+    ``ProtoDecodeError`` is the ``__cause__``."""
+
+    def __init__(self, path: str, offset: int, cause: Exception) -> None:
+        super().__init__(
+            f"{path}: blob at offset {offset}: {type(cause).__name__}: {cause}"
+        )
+        self.path = path
+        self.offset = offset
+
+
+def decode_blob_entries(entries, kinds: list[str], columns: list[str] | None):
+    """The executor read loop: iterate (path, offset, size) triples,
+    keeping one open handle per distinct path, and yield each blob's
+    sealed per-kind accumulators (``decode_primitive_block`` output,
+    payload already released). A decode failure is re-raised as
+    ``BlobDecodeError`` naming the file and blob offset."""
     from ..pbf.io import open_binary
 
     handles: dict[str, object] = {}
@@ -228,15 +247,30 @@ def parse_blob_entries(entries, kinds: list[str], columns: list[str] | None):
             f = handles.get(p)
             if f is None:
                 f = handles[p] = open_binary(p)
-            out = parse_block_to_batch(
-                decompress_blob(read_blob_at(f, off, size)),
-                kinds=kinds, columns=columns,
-            )
-            if out is not None and out.num_rows:
-                yield out
+            try:
+                per_kind = decode_primitive_block(
+                    decompress_blob(read_blob_at(f, off, size)),
+                    kinds=kinds, columns=columns,
+                )
+                for cols in per_kind.values():
+                    cols.seal()
+            except (BlobError, ProtoDecodeError) as exc:
+                raise BlobDecodeError(p, off, exc) from exc
+            yield per_kind
     finally:
         for f in handles.values():
             f.close()  # type: ignore[union-attr]
+
+
+def parse_blob_entries(entries, kinds: list[str], columns: list[str] | None):
+    """The parse kernel shared by ``scan_pbf``'s ``mapInArrow`` closure
+    and the ``osmpbf`` DataSource's ``read()``: ``decode_blob_entries``
+    with each blob assembled into one wide Arrow batch; yields the
+    non-empty ones."""
+    for per_kind in decode_blob_entries(entries, kinds, columns):
+        out = columns_to_arrow(per_kind, columns=columns)
+        if out is not None and out.num_rows:
+            yield out
 
 
 def scan_pbf(

@@ -123,3 +123,46 @@ def test_osmparquet_writer_append(spark, tmp_path):
     back = spark.read.parquet(out)
     counts = {r["type"]: r["count"] for r in back.groupBy("type").count().collect()}
     assert counts == {"node": 6, "way": 2, "relation": 2}
+
+
+def test_osmparquet_writer_matches_fused_transcode(spark, tmp_path):
+    """The ``osmparquet`` writer (wide batches split by ``type``) and the
+    fused transcode (per-kind tables built from decoded blocks) write the
+    same rows per kind, on a synthetic multi-blob PBF, with row groups
+    small enough that both paths flush many times."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from osm_pbf_parquet_spark.sinks.native_sink import transcode_pbf
+    from osm_pbf_parquet_spark.sinks.osm_writer_datasource import register_osm_parquet
+
+    from pbf_encoder import write_synthetic_pbf
+
+    pbf = str(tmp_path / "syn.osm.pbf")
+    stats = write_synthetic_pbf(pbf, n_nodes=3000, n_ways=300, n_rels=30)
+    register_osm_parquet(spark)
+    ds_out = str(tmp_path / "viads")
+    fused_out = str(tmp_path / "fused")
+    (scan_pbf(spark, pbf).write.format("osmparquet").mode("overwrite")
+        .option("rows_per_group", "700").save(ds_out))
+    res = transcode_pbf(spark, pbf, fused_out, rows_per_group=700)
+    expected = {"node": stats["nodes"], "way": stats["ways"],
+                "relation": stats["relations"]}
+    assert res["rows"] == expected
+    assert os.path.exists(os.path.join(ds_out, "_SUCCESS"))
+    for kind in expected:
+        for out in (ds_out, fused_out):
+            files = [os.path.join(out, f"type={kind}", f)
+                     for f in os.listdir(os.path.join(out, f"type={kind}"))]
+            assert all(f.endswith(".parquet") for f in files)
+            meta = [pq.ParquetFile(f).metadata for f in files]
+            assert sum(m.num_rows for m in meta) == expected[kind]
+            assert "type" not in pq.ParquetFile(files[0]).schema_arrow.names
+    a = spark.read.parquet(ds_out).withColumn("tags", F.map_entries("tags"))
+    b = spark.read.parquet(fused_out).withColumn("tags", F.map_entries("tags"))
+    assert dict(a.dtypes) == dict(b.dtypes)
+    counts = {r["type"]: r["count"] for r in a.groupBy("type").count().collect()}
+    assert counts == expected
+    b = b.select(*a.columns)
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0

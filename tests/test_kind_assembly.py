@@ -1,0 +1,293 @@
+"""Multi-block Arrow assembly: the fused transcode builds one table per row
+group per kind from many blocks' accumulators (``decode.kind_table`` via
+``native_sink.fused_kind_tables``). Its rows must equal the per-blob wide
+batches of ``columns_to_arrow``, split by ``type``, concatenated."""
+
+from __future__ import annotations
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pytest
+
+from osm_pbf_parquet_spark.pbf import decode as D
+from osm_pbf_parquet_spark.pbf.blob import BlobError
+from osm_pbf_parquet_spark.pbf.proto import ProtoDecodeError
+from osm_pbf_parquet_spark.sinks.native_sink import fused_kind_tables
+from osm_pbf_parquet_spark.sources.pbf_source import (
+    BlobDecodeError,
+    decode_blob_entries,
+)
+
+from pbf_encoder import (
+    StringTable,
+    _len_field,
+    _packed_svarints,
+    _packed_uvarints,
+    encode_dense_nodes,
+    encode_plain_node,
+    encode_primitive_block,
+    encode_relation,
+    encode_way,
+    write_blob,
+)
+
+KINDS = ("node", "way", "relation")
+
+
+def _dense_without_info(st: StringTable, nodes: list[dict]) -> bytes:
+    """DenseNodes with no DenseInfo: every metadata column, user included,
+    decodes as null."""
+    kv: list[int] = []
+    for n in nodes:
+        for k, v in n.get("tags", {}).items():
+            kv += [st.add(k), st.add(v)]
+        kv.append(0)
+    body = _packed_svarints(1, [n["id"] for n in nodes], delta=True)
+    body += _packed_svarints(8, [n["lat_raw"] for n in nodes], delta=True)
+    body += _packed_svarints(9, [n["lon_raw"] for n in nodes], delta=True)
+    body += _packed_uvarints(10, kv)
+    return _len_field(2, body)
+
+
+def _nodes(first: int, n: int, tag: str) -> list[dict]:
+    return [
+        {"id": first + i, "lat_raw": 500_000_000 + 7 * i,
+         "lon_raw": 100_000_000 - 3 * i,
+         "tags": {tag: f"v{i % 5}"} if i % 3 else {},
+         "version": 1 + i % 4, "timestamp_s": 1_600_000_000 + i,
+         "changeset": 90 + i, "uid": 7 + i % 2, "user": f"{tag}-u{i % 3}"}
+        for i in range(n)
+    ]
+
+
+def _block(i: int) -> bytes:
+    """Block ``i`` of a small corpus. Each block builds its own string
+    table with a different insertion order, so equal strings have
+    different indices in different blocks."""
+    st = StringTable()
+    for j in range(i):  # shift every later index of this block
+        st.add(f"pad{i}-{j}")
+    first = 1 + 1000 * i
+    groups = []
+    if i % 2 == 0:
+        groups.append(encode_dense_nodes(st, _nodes(first, 40 + 7 * i, f"k{i}")))
+    else:
+        groups.append(_dense_without_info(st, _nodes(first, 30 + 5 * i, "amenity")))
+        # plain nodes, one with no user in its Info (→ "")
+        groups.append(encode_plain_node(st, {
+            "id": first + 900, "lat": 12, "lon": -34, "tags": {"name": "x"},
+            "version": 2, "uid": 3}))
+    ways = b"".join(
+        encode_way(st, {"id": 100_000 + 10 * i + w, "refs": [first, first + 1, first + w],
+                        "tags": {"highway": f"h{w}"} if w % 2 else {},
+                        "version": 1, "changeset": 5, "uid": 6,
+                        **({"user": f"wu{w}"} if w % 3 else {})})  # no user → ""
+        for w in range(3 + i)
+    )
+    groups.append(ways)
+    if i % 3 != 1:
+        groups.append(encode_relation(st, {
+            "id": 500_000 + i, "version": 3, "uid": 4, "user": f"ru{i}",
+            "tags": {"type": "route", "ref": str(i)},
+            "members": [{"type": "node", "ref": first, "role": "stop"},
+                        {"type": "way", "ref": 100_000 + 10 * i, "role": ""},
+                        {"type": "relation", "ref": 500_000, "role": f"r{i}"}]}))
+    return encode_primitive_block(groups, st=st)
+
+
+BLOCKS = [_block(i) for i in range(6)]
+
+
+def _expected(payloads, kinds=KINDS) -> dict[str, pa.Table]:
+    """Per kind: the per-blob wide batches, filtered to the kind, ``type``
+    dropped, concatenated."""
+    out: dict[str, list] = {k: [] for k in kinds}
+    for p in payloads:
+        batch = D.columns_to_arrow(D.decode_primitive_block(p, kinds=kinds))
+        if batch is None:
+            continue
+        table = pa.Table.from_batches([batch])
+        for kind in kinds:
+            part = table.filter(pc.equal(table.column("type"), kind))
+            if part.num_rows:
+                out[kind].append(part.drop_columns(["type"]))
+    return {k: pa.concat_tables(v).combine_chunks() for k, v in out.items() if v}
+
+
+def _fused(payloads, rows_per_group, kinds=KINDS) -> list[tuple[str, pa.Table]]:
+    decoded = (D.decode_primitive_block(p, kinds=kinds) for p in payloads)
+    return list(fused_kind_tables(decoded, rows_per_group))
+
+
+def _by_kind(pairs) -> dict[str, pa.Table]:
+    out: dict[str, list] = {}
+    for kind, table in pairs:
+        out.setdefault(kind, []).append(table)
+    return {k: pa.concat_tables(v).combine_chunks() for k, v in out.items()}
+
+
+def test_corpus_covers_null_and_empty_users():
+    """The corpus holds both user sentinels: null (dense nodes without
+    DenseInfo) and "" (non-dense elements whose Info has no user)."""
+    exp = _expected(BLOCKS)
+    node_users = exp["node"].column("user").to_pylist()
+    way_users = exp["way"].column("user").to_pylist()
+    assert None in node_users and "" in node_users
+    assert "" in way_users and "wu1" in way_users
+    assert exp["node"].column("version").null_count > 0
+    assert exp["relation"].num_rows == 4
+
+
+def test_kind_table_matches_per_blob_batches():
+    exp = _expected(BLOCKS)
+    for kind in KINDS:
+        blocks = [D.decode_primitive_block(p)[kind] for p in BLOCKS
+                  if kind in D.decode_primitive_block(p)]
+        got = D.kind_table(kind, blocks)
+        assert got.schema == exp[kind].schema
+        assert got.equals(exp[kind]), kind
+        assert "type" not in got.column_names
+
+
+def test_single_block_is_columns_to_arrow_without_type():
+    payload = BLOCKS[1]
+    batch = D.columns_to_arrow(D.decode_primitive_block(payload))
+    wide = pa.Table.from_batches([batch])
+    for kind in KINDS:
+        cols = D.decode_primitive_block(payload).get(kind)
+        if cols is None:
+            continue
+        part = wide.filter(pc.equal(wide.column("type"), kind))
+        assert D.kind_table(kind, [cols]).equals(
+            part.drop_columns(["type"]).combine_chunks())
+
+
+@pytest.mark.parametrize("rows_per_group", [1, 25, 60, 10_000])
+def test_fused_tables_match_and_flush_like_the_split_path(rows_per_group):
+    """Rows equal the split path's, and each kind's tables end exactly
+    where ``_KindWriter.add`` over per-blob tables would flush: below a
+    block's row count every block flushes; above it blocks accumulate."""
+    pairs = _fused(BLOCKS, rows_per_group)
+    exp = _expected(BLOCKS)
+    got = _by_kind(pairs)
+    assert got.keys() == exp.keys()
+    for kind in exp:
+        assert got[kind].equals(exp[kind]), kind
+    # the split path's flush points: running per-blob row counts
+    for kind in KINDS:
+        sizes, acc = [], 0
+        for p in BLOCKS:
+            cols = D.decode_primitive_block(p).get(kind)
+            if cols is None or cols.n == 0:
+                continue
+            acc += cols.n
+            if acc >= rows_per_group:
+                sizes.append(acc)
+                acc = 0
+        if acc:
+            sizes.append(acc)
+        assert [t.num_rows for k, t in pairs if k == kind] == sizes
+    if rows_per_group == 10_000:  # one table per kind
+        assert [k for k, _t in pairs] == list(KINDS)
+
+
+def test_fused_tables_kind_subset():
+    kinds = ("way",)
+    pairs = _fused(BLOCKS, 5, kinds=kinds)
+    assert {k for k, _t in pairs} == {"way"}
+    assert _by_kind(pairs)["way"].equals(_expected(BLOCKS, kinds)["way"])
+
+
+def test_tag_index_past_its_own_block_raises():
+    """Block 2's tag key index 5 is out of range for its own 4-entry
+    table but would land inside the concatenated table (8 + 4 entries):
+    the per-block check must still reject it."""
+    st_a = StringTable()
+    for s in ("a", "b", "c", "d", "e", "f", "g"):
+        st_a.add(s)
+    good = encode_primitive_block(
+        [encode_way(st_a, {"id": 1, "refs": [1, 2], "tags": {"a": "b"}})],
+        st=st_a)
+    st_big = StringTable()
+    for s in ("w", "x", "y", "z", "k5"):
+        st_big.add(s)
+    bad_way = encode_way(st_big, {"id": 2, "refs": [3], "tags": {"k5": "x"}})
+    st_small = StringTable()
+    for s in ("w", "x", "y"):
+        st_small.add(s)
+    bad = encode_primitive_block([bad_way], st=st_small)
+    blocks = [D.decode_primitive_block(p)["way"] for p in (good, bad)]
+    assert len(blocks[1]._stringtable) == 4
+    with pytest.raises(ProtoDecodeError, match="out of bounds"):
+        D.kind_table("way", blocks)
+    with pytest.raises(ProtoDecodeError):
+        D.parse_block_to_batch(bad)
+
+
+def test_user_sid_past_its_table_raises():
+    """A user index equal to the table length is out of range (it is not
+    the empty-string sentinel, which is encoded as a missing user)."""
+    st = StringTable()
+    st.add("u")
+    body = encode_way(st, {"id": 9, "refs": [1], "version": 1, "user": "u"})
+    short = StringTable()  # index 0 only, so user index 1 == len(table)
+    with pytest.raises(ProtoDecodeError, match="user_sid"):
+        D.parse_block_to_batch(encode_primitive_block([body], st=short))
+
+
+def test_sealed_block_drops_the_payload():
+    cols = D.decode_primitive_block(BLOCKS[0])["node"]
+    assert cols._stringtable is not None
+    cols.seal()
+    assert cols._stringtable is None and isinstance(cols.strings, pa.Array)
+    assert len(cols.strings) > 0
+
+
+def test_decode_errors_name_file_and_blob_offset(tmp_path):
+    """A blob that fails to decompress or decode surfaces as
+    BlobDecodeError naming the path and the blob's byte offset, with the
+    original error as its cause."""
+    from osm_pbf_parquet_spark.pbf.blob import TYPE_DATA, index_blobs
+
+    path = str(tmp_path / "bad.osm.pbf")
+    truncated = BLOCKS[0][: len(BLOCKS[0]) // 2]
+    with open(path, "wb") as f:
+        write_blob(f, "OSMData", BLOCKS[1])
+        write_blob(f, "OSMData", truncated, compress=False)
+    infos = [i for i in index_blobs(path) if i.blob_type == TYPE_DATA]
+    entries = [(path, i.offset, i.size) for i in infos]
+    it = decode_blob_entries(iter(entries), list(KINDS), None)
+    assert set(next(it)) == {"node", "way"}  # block 1 has no relation
+    with pytest.raises(BlobDecodeError) as ei:
+        next(it)
+    err = ei.value
+    assert err.path == path and err.offset == infos[1].offset
+    assert path in str(err) and f"offset {infos[1].offset}" in str(err)
+    assert isinstance(err.__cause__, (ProtoDecodeError, BlobError))
+
+    # a corrupt zlib stream is a BlobError too, and is named the same way
+    zpath = str(tmp_path / "badz.osm.pbf")
+    with open(zpath, "wb") as f:
+        write_blob(f, "OSMData", BLOCKS[2])
+    data = bytearray(open(zpath, "rb").read())
+    data[-6] ^= 0xFF
+    open(zpath, "wb").write(bytes(data))
+    [info] = index_blobs(zpath)
+    with pytest.raises(BlobDecodeError, match=f"offset {info.offset}") as ei:
+        list(decode_blob_entries([(zpath, info.offset, info.size)], list(KINDS), None))
+    assert isinstance(ei.value.__cause__, BlobError)
+
+
+def test_blocks_concat_indices_shift_per_block():
+    """Same strings at different indices in two blocks read back as the
+    same strings after the shift into the joined table."""
+    a = D.decode_primitive_block(BLOCKS[2])["way"]
+    b = D.decode_primitive_block(BLOCKS[4])["way"]
+    t = D.kind_table("way", [a, b])
+    hw = [dict(m).get("highway") for m in t.column("tags").to_pylist()]
+    assert hw.count("h1") == 2 and hw.count("h3") == 2
+    assert np.array_equal(
+        t.column("id").to_numpy(),
+        np.concatenate([np.arange(100_020, 100_025), np.arange(100_040, 100_047)]),
+    )

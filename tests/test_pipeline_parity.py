@@ -534,7 +534,6 @@ def test_ivfpq_recall_vs_brute_force(spark):
 
 
 @pytest.mark.slow  # r13 driver tier: operator keeps oracle-parity coverage; full tier runs this each round
-@pytest.mark.slow  # r13 driver tier: operator keeps oracle-parity coverage; full tier runs this each round
 def test_ivfpq_residual_beats_raw_on_clustered(spark):
     """Residual encoding (Jégou et al. 2011 §V) demonstrated where the
     mechanism binds — a clustered corpus, IVFADC's deployment case.
@@ -659,7 +658,6 @@ def test_pq_codebook_artifact_roundtrip_and_guards(spark, tmp_path):
 
 
 @pytest.mark.slow  # r13 driver tier: operator keeps oracle-parity coverage; full tier runs this each round
-@pytest.mark.slow  # r13 driver tier: operator keeps oracle-parity coverage; full tier runs this each round
 def test_ivfpq_index_search_equals_in_process(spark, tmp_path):
     """Serving from the persisted IVFADC index must return EXACTLY what
     the in-process composition returns — same trainers, same arithmetic,
@@ -686,7 +684,6 @@ def test_ivfpq_index_search_equals_in_process(spark, tmp_path):
         similarity.ivfpq_search_index(spark, path, q, k=5, rerank=40)
 
 
-@pytest.mark.slow  # r13 driver tier: operator keeps oracle-parity coverage; full tier runs this each round
 @pytest.mark.slow  # r13 driver tier: operator keeps oracle-parity coverage; full tier runs this each round
 def test_ivfpq_index_append_composes(spark, tmp_path):
     """Appending in two disjoint batches equals appending the union in
@@ -760,7 +757,6 @@ def test_pq_contract_violations_fail_loudly(spark):
         similarity.pq_train_codebooks(emb.limit(3), dim=64, m=8, ks=4)
 
 
-@pytest.mark.slow  # r13 driver tier: operator keeps oracle-parity coverage; full tier runs this each round
 @pytest.mark.slow  # r13 driver tier: operator keeps oracle-parity coverage; full tier runs this each round
 def test_ivfpq_serve_stream_equals_batch_top1(spark, tmp_path):
     """Serve-on-arrival must answer EXACTLY what the batch index search

@@ -414,3 +414,18 @@ def test_compact_changes_stateful_checkpoint_resume(spark, tmp_path):
         for r in compact_changes(full).collect()
     }
     assert got2 == batch
+
+
+def test_stream_replay_width_override_is_tri_state():
+    """SPARK_GRAFT_STREAM_SHUFFLE: unset → min(parallelism, 8); 0 → the
+    session's own width; any other value → exactly that width."""
+    from osm_pbf_parquet_spark.plans.analytic_queries import _stream_replay_width
+
+    assert _stream_replay_width(32, "200", None) == "8"
+    assert _stream_replay_width(4, "200", None) == "4"
+    assert _stream_replay_width(32, "200", "") == "8"
+    assert _stream_replay_width(32, "200", "0") == "200"
+    assert _stream_replay_width(32, "200", "3") == "3"
+    assert _stream_replay_width(4, "200", "16") == "16"
+    with pytest.raises(ValueError):
+        _stream_replay_width(32, "200", "-1")

@@ -328,17 +328,27 @@ def test_fused_transcode_corrupt_input_fails_clean(spark, tmp_path, synthetic_pb
     """E1 stop-on-error parity for the fused sink: a payload corrupted
     after indexing fails the job (no silent partial success), and the
     failing task's .inprogress partials are cleaned up."""
+    from pyspark.errors import PythonException
+
+    from osm_pbf_parquet_spark.pbf.blob import index_blobs
+
     path, _stats = synthetic_pbf
     corrupt = str(tmp_path / "corrupt.osm.pbf")
     data = bytearray(open(path, "rb").read())
-    data[len(data) // 2] ^= 0xFF  # flip a byte inside some blob payload
+    flip = len(data) // 2
+    data[flip] ^= 0xFF  # flip a byte inside some blob payload
     with open(corrupt, "wb") as f:
         f.write(data)
+    [hit] = [i for i in index_blobs(corrupt)
+             if i.offset <= flip < i.offset + i.size]
     from osm_pbf_parquet_spark.sinks.native_sink import transcode_pbf
 
     out = str(tmp_path / "out_corrupt")
-    with pytest.raises(Exception):
+    with pytest.raises(PythonException) as ei:
         transcode_pbf(spark, corrupt, out, blobs_per_task=100)
+    # the worker-side error names the file and the failing blob's offset
+    assert "BlobDecodeError" in str(ei.value)
+    assert f"{corrupt}: blob at offset {hit.offset}" in str(ei.value)
     # no committed _SUCCESS, no dangling .inprogress from the failed task
     assert not os.path.exists(os.path.join(out, "_SUCCESS"))
     leftovers = [f for _, _, fs in os.walk(out) for f in fs
