@@ -25,76 +25,30 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _registry() -> dict[str, tuple]:
-    from osm_pbf_parquet_spark.plans.relational import QUERIES as RELATIONAL
-    from osm_pbf_parquet_spark.plans.osm_queries import OSM_QUERIES
+    from osm_pbf_parquet_spark.plans.advanced_queries import ADVANCED_QUERIES
     from osm_pbf_parquet_spark.plans.analytic_queries import ANALYTIC_QUERIES
+    from osm_pbf_parquet_spark.plans.eval_queries import EVAL_QUERIES
+    from osm_pbf_parquet_spark.plans.media_queries import MEDIA_QUERIES
+    from osm_pbf_parquet_spark.plans.mining_queries import MINING_QUERIES
+    from osm_pbf_parquet_spark.plans.osm_queries import OSM_QUERIES
+    from osm_pbf_parquet_spark.plans.pipeline_queries import PIPELINE_QUERIES
+    from osm_pbf_parquet_spark.plans.quality_queries import QUALITY_QUERIES
+    from osm_pbf_parquet_spark.plans.relational import QUERIES as RELATIONAL
+    from osm_pbf_parquet_spark.plans.sampling_queries import SAMPLING_QUERIES
+    from osm_pbf_parquet_spark.plans.selection_queries import SELECTION_QUERIES
+    from osm_pbf_parquet_spark.plans.stream_dedup_queries import (
+        STREAM_DEDUP_QUERIES,
+    )
+    from osm_pbf_parquet_spark.plans.tokenizer_queries import TOKENIZER_QUERIES
 
     reg: dict[str, tuple] = {}
-    reg.update(RELATIONAL)
-    reg.update(OSM_QUERIES)
-    reg.update(ANALYTIC_QUERIES)
-    try:  # data-pipeline operator suites land incrementally
-        from osm_pbf_parquet_spark.plans.pipeline_queries import PIPELINE_QUERIES
-        from osm_pbf_parquet_spark.plans.sampling_queries import SAMPLING_QUERIES
-
-        reg.update(PIPELINE_QUERIES)
-        reg.update(SAMPLING_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from osm_pbf_parquet_spark.plans.advanced_queries import ADVANCED_QUERIES
-
-        reg.update(ADVANCED_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from osm_pbf_parquet_spark.plans.mining_queries import MINING_QUERIES
-
-        reg.update(MINING_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from osm_pbf_parquet_spark.plans.quality_queries import QUALITY_QUERIES
-
-        reg.update(QUALITY_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from osm_pbf_parquet_spark.plans.eval_queries import EVAL_QUERIES
-
-        reg.update(EVAL_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from osm_pbf_parquet_spark.plans.media_queries import MEDIA_QUERIES
-
-        reg.update(MEDIA_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from osm_pbf_parquet_spark.plans.tokenizer_queries import (
-            TOKENIZER_QUERIES,
-        )
-
-        reg.update(TOKENIZER_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from osm_pbf_parquet_spark.plans.stream_dedup_queries import (
-            STREAM_DEDUP_QUERIES,
-        )
-
-        reg.update(STREAM_DEDUP_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from osm_pbf_parquet_spark.plans.selection_queries import (
-            SELECTION_QUERIES,
-        )
-
-        reg.update(SELECTION_QUERIES)
-    except ImportError:
-        pass
+    for part in (
+        RELATIONAL, OSM_QUERIES, ANALYTIC_QUERIES, PIPELINE_QUERIES,
+        SAMPLING_QUERIES, ADVANCED_QUERIES, MINING_QUERIES, QUALITY_QUERIES,
+        EVAL_QUERIES, MEDIA_QUERIES, TOKENIZER_QUERIES, STREAM_DEDUP_QUERIES,
+        SELECTION_QUERIES,
+    ):
+        reg.update(part)
     return _verification_order(reg)
 
 

@@ -30,9 +30,20 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def validate_args(args) -> None:
-    codec = args.compression.split(":")[0]
+    codec, has_level, level = args.compression.partition(":")
     if codec not in {"zstd", "snappy", "gzip", "lz4", "none", "uncompressed"}:
         raise SystemExit(f"unsupported compression codec: {codec}")
+    if has_level:
+        # zstd levels 1-22 as in the reference (sink.rs:134-153, W5); other
+        # codecs take no level here
+        if codec != "zstd":
+            raise SystemExit(f"--compression: only zstd takes a level, got {args.compression!r}")
+        try:
+            n = int(level)
+        except ValueError:
+            raise SystemExit(f"--compression: level must be an integer, got {level!r}") from None
+        if not 1 <= n <= 22:
+            raise SystemExit(f"--compression: zstd level must be 1-22, got {n}")
     if args.target_file_mb <= 0:
         raise SystemExit("--target-file-mb must be positive")
     kinds = set(args.kinds.split(","))

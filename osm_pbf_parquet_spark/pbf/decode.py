@@ -280,26 +280,6 @@ def _concat(chunks: list[np.ndarray], dtype) -> np.ndarray:
     return np.concatenate([np.asarray(c, dtype=dtype) for c in chunks])
 
 
-def _masked_int(
-    values: list[np.ndarray], valids: list[np.ndarray], n: int, pa_type
-) -> pa.Array:
-    vals = _concat(values, np.int64)
-    mask = _concat(valids, np.bool_)
-    if vals.size == 0:
-        return pa.nulls(n, pa_type)
-    return pa.array(vals, mask=~mask).cast(pa_type)
-
-
-def _counts_to_offsets(counts: list[np.ndarray], n: int) -> np.ndarray:
-    flat = _concat(counts, np.int64)
-    if flat.size == 0:
-        flat = np.zeros(n, dtype=np.int64)
-    offsets = np.empty(flat.size + 1, dtype=np.int32)
-    offsets[0] = 0
-    np.cumsum(flat, out=offsets[1:])
-    return offsets
-
-
 def decode_primitive_block(
     payload: bytes,
     kinds: Iterable[str] = ALL_KINDS,
@@ -691,29 +671,20 @@ def _decode_plain_nodes(node_payloads, c: _Columns, st, granularity, lat_offset,
     if want_meta:
         _append_meta_arrays(c, info_b.finish(date_granularity))
     else:
-        _append_meta_rows(c, [], n0, want_meta=False)
+        _append_absent_meta(c, n0)
 
 
-def _append_meta_rows(c: _Columns, meta_rows, n0: int, want_meta: bool) -> None:
-    if not want_meta:
-        meta_rows = []
-    if meta_rows:
-        m = np.array(meta_rows, dtype=np.int64)
-        c.changeset.append(m[:, 0]); c.changeset_valid.append(m[:, 1].astype(bool))
-        c.ts_ms.append(m[:, 2]); c.ts_valid.append(m[:, 3].astype(bool))
-        c.uid.append(m[:, 4]); c.uid_valid.append(m[:, 5].astype(bool))
-        c.user_sid.append(m[:, 6])
-        c.version.append(m[:, 7]); c.version_valid.append(m[:, 8].astype(bool))
-        c.visible.append(m[:, 9].astype(bool)); c.visible_valid.append(m[:, 10].astype(bool))
-    else:
-        false = np.zeros(n0, dtype=bool)
-        zero = np.zeros(n0, dtype=np.int64)
-        c.changeset.append(zero); c.changeset_valid.append(false)
-        c.ts_ms.append(zero); c.ts_valid.append(false)
-        c.uid.append(zero); c.uid_valid.append(false)
-        c.user_sid.append(np.full(n0, -1, dtype=np.int64))
-        c.version.append(zero); c.version_valid.append(false)
-        c.visible.append(np.ones(n0, dtype=bool)); c.visible_valid.append(false)
+def _append_absent_meta(c: _Columns, n0: int) -> None:
+    """Metadata for ``n0`` elements decoded without it: every column null,
+    ``visible`` true."""
+    false = np.zeros(n0, dtype=bool)
+    zero = np.zeros(n0, dtype=np.int64)
+    c.changeset.append(zero); c.changeset_valid.append(false)
+    c.ts_ms.append(zero); c.ts_valid.append(false)
+    c.uid.append(zero); c.uid_valid.append(false)
+    c.user_sid.append(np.full(n0, -1, dtype=np.int64))
+    c.version.append(zero); c.version_valid.append(false)
+    c.visible.append(np.ones(n0, dtype=bool)); c.visible_valid.append(false)
 
 
 def _decode_dense_nodes(payload, c: _Columns, granularity, lat_offset, lon_offset,
@@ -754,7 +725,7 @@ def _decode_dense_nodes(payload, c: _Columns, granularity, lat_offset, lon_offse
     # DenseInfo (osmformat.proto:159-175): parallel arrays, some delta-coded
     info = f.get(5, [None])[0]
     if info is None:
-        _append_meta_rows(c, [], n0, want_meta=False)
+        _append_absent_meta(c, n0)
         return
     fi = message_fields(info)
     versions = repeated_numeric(fi.get(1, []), signed_zigzag=False)  # not delta
@@ -892,7 +863,7 @@ def _decode_ways(way_payloads, c: _Columns, granularity, lat_offset, lon_offset,
         info_b = _InfoBatch.from_ranges(arr, rs[m], rn[m], rl[m], n0)
         _append_meta_arrays(c, info_b.finish(date_granularity))
     else:
-        _append_meta_rows(c, [], n0, want_meta=False)
+        _append_absent_meta(c, n0)
 
 
 def _decode_ways_scalar(way_payloads, c: _Columns, granularity, lat_offset,
@@ -988,7 +959,7 @@ def _decode_ways_scalar(way_payloads, c: _Columns, granularity, lat_offset,
     if want_meta:
         _append_meta_arrays(c, info_b.finish(date_granularity))
     else:
-        _append_meta_rows(c, [], n0, want_meta=False)
+        _append_absent_meta(c, n0)
 
 
 def decode_way_locations(way_payload, granularity=100, lat_offset=0, lon_offset=0):
@@ -1056,7 +1027,7 @@ def _decode_relations(rel_payloads, c: _Columns, date_granularity, _want) -> Non
         info_b = _InfoBatch.from_ranges(arr, rs[m], rn[m], rl[m], n0)
         _append_meta_arrays(c, info_b.finish(date_granularity))
     else:
-        _append_meta_rows(c, [], n0, want_meta=False)
+        _append_absent_meta(c, n0)
 
 
 def _decode_relations_scalar(rel_payloads, c: _Columns, date_granularity, _want) -> None:
@@ -1163,7 +1134,7 @@ def _decode_relations_scalar(rel_payloads, c: _Columns, date_granularity, _want)
     if want_meta:
         _append_meta_arrays(c, info_b.finish(date_granularity))
     else:
-        _append_meta_rows(c, [], n0, want_meta=False)
+        _append_absent_meta(c, n0)
 
 
 # --- Arrow assembly ----------------------------------------------------------

@@ -18,15 +18,19 @@ DataFrame, Spark schedules/distributes/retries the map stage, and the
 data plane stays columnar end-to-end (PBF bytes → numpy → Arrow →
 parquet) with zero per-row materialization anywhere.
 
-Per kind, like the reference's per-kind Arrow assembly (``pbf.rs:183-220``,
-``sink.rs:69-117``): the task buffers each kind's decoded blocks and
-builds ONE Arrow table, without a ``type`` column, whenever that kind
-holds ``rows_per_group`` rows (``fused_kind_tables``), then the
-remainders at task end. No wide per-blob batch is built, split back by
-``type`` or concatenated. The ``osmparquet`` DataSource writer, whose
-input is a wide DataFrame, keeps the split (``write_kind_tables``); both
-feed the same write loop (``_write_kind_pairs``), and row groups, file
-rolls and bytes come out identical.
+One flush rule, like the reference's per-kind builders (``pbf.rs:183-220``,
+``sink.rs:69-117``): ``_KindWriter`` is the only code that buffers and
+flushes. Each task feeds ``(kind, part, rows)`` to ``_write_kind_parts``;
+a kind's writer buffers the parts and, whenever it holds
+``rows_per_group`` rows, builds ONE table with its route's ``build`` and
+writes it as a row group; the remainders follow at task end. The fused
+transcode's parts are each blob's decoded blocks and ``build`` is
+``decode.kind_table`` (``write_decoded_blocks``): no wide per-blob batch
+is built, split back by ``type`` or concatenated. The ``osmparquet``
+DataSource writer, whose input is a wide DataFrame, feeds the per-kind
+slices of each batch and concatenates them (``write_kind_tables``). Both
+routes flush at the same rows, so row groups, file rolls and bytes come
+out identical.
 
 Output contract parity (same as the generic sink):
 - layout ``{out}/type={kind}/part-*.parquet``   (``sink.rs:155-179``, W1)
@@ -34,15 +38,18 @@ Output contract parity (same as the generic sink):
 - target file size rolling                       (``sink.rs:82-105``, W3)
 - ``_SUCCESS`` marker on job completion          (commit protocol, W4)
 
-Commit protocol (replaces Spark's OutputCommitter, which only serves the
-JVM writer path): tasks write to ``.inprogress`` names and rename to
-final names — which embed the task attempt id, so concurrent speculative
-attempts can never collide — only at task end; the driver then keeps
-exactly the files reported by collected stats rows (one winning attempt
-per partition), deleting stragglers from lost/duplicate attempts before
-writing ``_SUCCESS``. Local/POSIX filesystem semantics; an object-store
-deployment would swap the rename for a multipart-commit (documented
-limitation, same one the reference's local writer has).
+One commit protocol for both writers (Spark's OutputCommitter only
+serves the JVM writer path): ``_prepare_output`` clears the output for
+overwrite and draws the job's run token; tasks write ``.inprogress``
+files under ``_task_prefix`` names -- run token, partition and attempt
+id, so concurrent speculative attempts never collide -- and rename them
+to final names only at task end; the driver then keeps exactly the files
+the winning attempts reported (``_finalize_output``) or none of them (the
+``osmparquet`` writer's ``abort``), deleting this job's other files
+(``_remove_uncommitted``) and never another job's. The driver-side
+``os.listdir`` needs driver and executors to share one POSIX filesystem;
+an object-store deployment would swap the rename for a multipart-commit
+(documented limitation, same one the reference's local writer has).
 """
 
 from __future__ import annotations
@@ -50,7 +57,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from typing import Iterable, Iterator
+from typing import Callable, Iterable, Iterator
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -67,16 +74,18 @@ _ROWS_PER_GROUP = 400_000
 
 
 class _KindWriter:
-    """Rolling parquet writer for one element kind inside one task."""
+    """Rolling parquet writer for one element kind inside one task: the one
+    place that buffers parts and flushes a row group at ``rows_per_group``
+    rows."""
 
     __slots__ = ("kind", "kind_dir", "prefix", "codec", "level", "target_bytes",
-                 "rows_per_group", "sort_by_id", "writer", "path", "file_no",
-                 "rows", "pending", "pending_rows", "stats")
+                 "rows_per_group", "sort_by_id", "build", "writer", "path",
+                 "file_no", "rows", "pending", "pending_rows", "stats")
 
     def __init__(self, kind: str, kind_dir: str, prefix: str, codec: str,
                  level: int | None, target_bytes: int, stats: list,
-                 rows_per_group: int = _ROWS_PER_GROUP,
-                 sort_by_id: bool = False) -> None:
+                 rows_per_group: int, sort_by_id: bool,
+                 build: Callable[[str, list], pa.Table]) -> None:
         os.makedirs(kind_dir, exist_ok=True)
         self.kind = kind
         self.kind_dir = kind_dir
@@ -86,11 +95,12 @@ class _KindWriter:
         self.target_bytes = target_bytes
         self.rows_per_group = rows_per_group
         self.sort_by_id = sort_by_id
+        self.build = build
         self.writer: pq.ParquetWriter | None = None
         self.path = ""
         self.file_no = 0
         self.rows = 0
-        self.pending: list[pa.Table] = []
+        self.pending: list = []
         self.pending_rows = 0
         self.stats = stats
 
@@ -126,17 +136,20 @@ class _KindWriter:
         )
         self.rows = 0
 
-    def add(self, table: pa.Table) -> None:
-        self.pending.append(table)
-        self.pending_rows += table.num_rows
+    def add(self, part, rows: int) -> None:
+        self.pending.append(part)
+        self.pending_rows += rows
         if self.pending_rows >= self.rows_per_group:
             self._flush_group()
 
     def _flush_group(self) -> None:
         if not self.pending_rows:
             return
-        table = pa.concat_tables(self.pending).combine_chunks()
-        self.pending, self.pending_rows = [], 0
+        # hand the parts over, so they are freed before the group is
+        # written rather than held through the write
+        parts, self.pending, self.pending_rows = self.pending, [], 0
+        table = self.build(self.kind, parts)
+        del parts
         if self.sort_by_id:
             # row-group stats are the zone-map granularity (F2 parity):
             # sorting each group makes its id min/max exact. Blobs are
@@ -167,33 +180,33 @@ class _KindWriter:
         self._roll()
 
 
-def _write_kind_pairs(pairs: Iterable[tuple[str, pa.Table]], out_path: str,
-                      prefix: str, codec: str, level: int | None,
-                      target_bytes: int, rows_per_group: int,
-                      sort_by_id: bool) -> list[tuple]:
+def _write_kind_parts(parts: Iterable[tuple[str, object, int]],
+                      out_path: str, prefix: str, codec: str,
+                      level: int | None, target_bytes: int,
+                      rows_per_group: int, sort_by_id: bool,
+                      build: Callable[[str, list], pa.Table]) -> list[tuple]:
     """Task-side write loop shared by every writer here: append each
-    ``(kind, table)`` (``type`` already dropped -- the hive dir carries
-    it) to that kind's rolling writer and return the committed-file
-    stats. On ANY failure every file this task produced is removed --
-    the open ``.inprogress`` partial AND files already rolled to final
-    names (a rolled file from a failed attempt would otherwise survive a
-    job-level failure in append mode and duplicate rows on the next
-    tick's retry)."""
+    ``(kind, part, rows)`` to that kind's rolling writer, which builds its
+    row groups with ``build``, and return the committed-file stats. On ANY
+    failure every file this task produced is removed -- the open
+    ``.inprogress`` partial AND files already rolled to final names (a
+    rolled file from a failed attempt would otherwise survive a job-level
+    failure in append mode and duplicate rows on the next tick's retry)."""
     stats: list[tuple] = []
     writers: dict[str, _KindWriter] = {}
     try:
-        for kind, table in pairs:
+        for kind, part, rows in parts:
             w = writers.get(kind)
             if w is None:
                 w = writers[kind] = _KindWriter(
                     kind, os.path.join(out_path, f"type={kind}"),
                     prefix, codec, level, target_bytes, stats,
-                    rows_per_group, sort_by_id,
+                    rows_per_group, sort_by_id, build,
                 )
-            w.add(table)
+            w.add(part, rows)
             # drop the loop's reference: a written group must not stay
-            # alive while the next one is decoded
-            del table
+            # alive while the next part is produced
+            del part
         for w in writers.values():
             w.close()
     except BaseException:
@@ -216,79 +229,88 @@ def _write_kind_pairs(pairs: Iterable[tuple[str, pa.Table]], out_path: str,
     return stats
 
 
+def _concat_parts(_kind: str, parts: list[pa.Table]) -> pa.Table:
+    return pa.concat_tables(parts).combine_chunks()
+
+
 def write_kind_tables(tables: Iterator, out_path: str, prefix: str,
                       codec: str, level: int | None, target_bytes: int,
-                      rows_per_group: int, sort_by_id: bool,
-                      kinds=None) -> list[tuple]:
+                      rows_per_group: int, sort_by_id: bool) -> list[tuple]:
     """Write wide tables (all kinds, ``type`` as a column) -- the
     ``osmparquet`` DataSource writer's input: split each by ``type`` and
-    hand the per-kind parts to ``_write_kind_pairs``."""
+    write the per-kind slices, concatenated per row group."""
 
-    def split():
+    def parts():
         for table in tables:
             if "type" not in table.column_names:
                 raise ValueError("OSM writer requires a 'type' column")
             types = table.column("type")
             for kind in OSM_TYPES:
-                if kinds is not None and kind not in kinds:
-                    continue
                 part = table.filter(pc.equal(types, kind))
                 if part.num_rows:
-                    yield kind, part.drop_columns(["type"])
+                    yield kind, part.drop_columns(["type"]), part.num_rows
 
-    return _write_kind_pairs(split(), out_path, prefix, codec, level,
-                             target_bytes, rows_per_group, sort_by_id)
-
-
-def fused_kind_tables(decoded: Iterable[dict], rows_per_group: int
-                      ) -> Iterator[tuple[str, pa.Table]]:
-    """The fused task's table assembly: buffer each kind's decoded blocks
-    (``decode_blob_entries`` output) and, whenever a kind holds at least
-    ``rows_per_group`` rows, assemble them into ONE table without
-    ``type``; the remainders follow at the end. These are exactly the
-    flush points of ``_KindWriter.add`` over per-blob tables, so row
-    groups, file rolls and bytes match the split path's."""
-    pending: dict[str, list] = {kind: [] for kind in OSM_TYPES}
-    rows = dict.fromkeys(OSM_TYPES, 0)
-
-    def build(kind: str) -> pa.Table:
-        # hand the blocks over, so they are freed before the table is
-        # written rather than held through the write
-        blocks, pending[kind], rows[kind] = pending[kind], [], 0
-        return kind_table(kind, blocks)
-
-    for per_kind in decoded:
-        for kind in OSM_TYPES:
-            cols = per_kind.get(kind)
-            if cols is None or cols.n == 0:
-                continue
-            pending[kind].append(cols)
-            rows[kind] += cols.n
-            if rows[kind] >= rows_per_group:
-                yield kind, build(kind)
-    for kind in OSM_TYPES:
-        if pending[kind]:
-            yield kind, build(kind)
+    return _write_kind_parts(parts(), out_path, prefix, codec, level,
+                             target_bytes, rows_per_group, sort_by_id,
+                             _concat_parts)
 
 
-def _finalize_output(out_path: str, committed: set[str],
-                     run_token: str | None = None) -> None:
-    """Job-commit step: delete THIS JOB's partition-dir files that were
-    NOT committed by a winning attempt (``.inprogress`` partials from
-    failed tasks, complete files from losing speculative attempts), then
-    write ``_SUCCESS``. ``run_token`` scopes the cleanup to files this
-    job wrote — append-mode jobs must never touch earlier jobs' output
-    (None = legacy unscoped behavior, only safe for overwrite mode)."""
+def write_decoded_blocks(decoded: Iterable[dict], out_path: str, prefix: str,
+                         codec: str, level: int | None, target_bytes: int,
+                         rows_per_group: int, sort_by_id: bool) -> list[tuple]:
+    """The fused task's write: each blob's decoded per-kind blocks
+    (``decode_blob_entries`` output) are the parts, and each row group is
+    built from its blocks by ``decode.kind_table``, without ``type``."""
+    parts = (
+        (kind, cols, cols.n)
+        for per_kind in decoded
+        for kind in OSM_TYPES
+        if (cols := per_kind.get(kind)) is not None and cols.n
+    )
+    return _write_kind_parts(parts, out_path, prefix, codec, level,
+                             target_bytes, rows_per_group, sort_by_id,
+                             kind_table)
+
+
+def _prepare_output(out_path: str, overwrite: bool) -> str:
+    """Driver-side job start: clear ``out_path`` for an overwrite, create
+    it, and return a new run token. Every file name of the job carries the
+    token, so its commit and abort touch only this job's files."""
+    if overwrite and os.path.exists(out_path):
+        shutil.rmtree(out_path)
+    os.makedirs(out_path, exist_ok=True)
+    return f"j{uuid.uuid4().hex[:12]}"
+
+
+def _task_prefix(run_token: str) -> str:
+    """File-name prefix of the running task attempt."""
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    return f"part-{run_token}-{ctx.partitionId():05d}-{ctx.taskAttemptId()}"
+
+
+def _remove_uncommitted(out_path: str, committed: set[str],
+                        run_token: str) -> None:
+    """Delete this job's partition-dir files that are not in ``committed``:
+    ``.inprogress`` partials from failed tasks and complete files from
+    losing speculative attempts. Files without ``run_token`` belong to
+    other jobs (append mode) and are never touched."""
     for kind_dir in os.listdir(out_path):
         full = os.path.join(out_path, kind_dir)
         if not os.path.isdir(full):
             continue
         for fname in os.listdir(full):
-            if run_token is not None and run_token not in fname:
-                continue  # another job's file — not ours to judge
             fpath = os.path.join(full, fname)
-            if fname.endswith(".inprogress") or fpath not in committed:
+            if run_token in fname and fpath not in committed:
                 os.remove(fpath)
+
+
+def _finalize_output(out_path: str, committed: set[str],
+                     run_token: str) -> None:
+    """Job commit: keep exactly the winning attempts' files, then write
+    ``_SUCCESS``."""
+    _remove_uncommitted(out_path, committed, run_token)
     with open(os.path.join(out_path, "_SUCCESS"), "w"):
         pass
 
@@ -332,17 +354,11 @@ def transcode_pbf(
             "transcode_pbf's fused sink assumes a shared POSIX filesystem "
             f"(task renames + driver finalize); master {master!r} is not "
             "local. Use sinks.parquet_sink.write_osm_parquet (Spark-managed "
-            "commit) or the 'osmparquet' DataSource writer on a cluster."
+            "commit) on a cluster."
         )
-    if os.path.exists(out_path):
-        if mode == "overwrite":
-            shutil.rmtree(out_path)
-        elif mode == "error":
-            raise ValueError(f"output path exists: {out_path}")
-    os.makedirs(out_path, exist_ok=True)
-    # per-job token in every file name: append-mode finalize cleans up ONLY
-    # this job's losing/partial files, never earlier jobs' committed output
-    run_token = f"j{uuid.uuid4().hex[:12]}"
+    if mode == "error" and os.path.exists(out_path):
+        raise ValueError(f"output path exists: {out_path}")
+    run_token = _prepare_output(out_path, overwrite=mode == "overwrite")
 
     rows, n_groups = _catalog_rows(
         path, spark.sparkContext.defaultParallelism, blobs_per_task,
@@ -355,32 +371,15 @@ def transcode_pbf(
     )
     catalog = _partitioned_catalog(spark, rows, n_groups)
     target_bytes = target_file_mb * 1024 * 1024
-    codec = compression
     level = zstd_level if compression == "zstd" else None
 
     def _transcode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
+        from ..sources.pbf_source import catalog_entries, decode_blob_entries
 
-        from ..sources.pbf_source import decode_blob_entries
-
-        ctx = TaskContext.get()
-        prefix = f"part-{run_token}-{ctx.partitionId():05d}-{ctx.taskAttemptId()}"
-
-        def entries():
-            for b in batches:
-                yield from zip(
-                    b.column("path").to_pylist(),
-                    b.column("offset").to_pylist(),
-                    b.column("size").to_pylist(),
-                )
-
-        stats = _write_kind_pairs(
-            fused_kind_tables(
-                decode_blob_entries(entries(), kinds_list, None),
-                rows_per_group,
-            ),
-            out_path, prefix, codec, level, target_bytes, rows_per_group,
-            sort_by_id,
+        stats = write_decoded_blocks(
+            decode_blob_entries(catalog_entries(batches), kinds_list, None),
+            out_path, _task_prefix(run_token), compression, level, target_bytes,
+            rows_per_group, sort_by_id,
         )
         yield pa.RecordBatch.from_arrays(
             [

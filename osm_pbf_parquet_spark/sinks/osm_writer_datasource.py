@@ -13,15 +13,19 @@ flow straight from the executor into the C++ parquet writer
         .option("compression", "zstd").option("zstd_level", "3") \
         .save("/out/dir")
 
-Commit protocol — here Spark drives it, which is exactly what the API is
-for: each task's ``write()`` returns the files it committed (renamed from
-``.inprogress`` at task end) as its ``WriterCommitMessage``; the driver
-calls ``commit(messages)`` once every task succeeded — which prunes
-losing/partial files of THIS job (run-token scoped, so ``append`` jobs
-never disturb earlier output) and drops ``_SUCCESS`` — or ``abort()``,
-which deletes everything this job wrote. Compare ``sinks/native_sink.py``
-where the fused transcode implements the same protocol by hand because
-its write happens inside a ``mapInArrow`` stage.
+Commit protocol — the fused transcode's, driven here by Spark, which is
+exactly what the API is for: ``__init__`` prepares the output and draws
+the job's run token (``native_sink._prepare_output``); each task's
+``write()`` returns the files it committed (renamed from ``.inprogress``
+at task end) as its ``WriterCommitMessage``; the driver calls
+``commit(messages)`` once every task succeeded -- ``_finalize_output``
+keeps exactly those files of THIS job and drops ``_SUCCESS`` -- or
+``abort()``, which removes every file of this job and writes no
+``_SUCCESS``. Other jobs' files (``append``) are never touched. The
+commit and abort list the output directory on the driver with
+``os.listdir``, so, like ``transcode_pbf``, this writer needs driver and
+executors to share one POSIX filesystem; on a cluster without one, use
+``parquet_sink.write_osm_parquet``.
 
 Unlike the fused sink this path receives whatever the upstream plan
 produces (shuffles, filters, joins included), so it is the general-
@@ -31,15 +35,21 @@ PBF→parquet product flow.
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
 from typing import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
     WriterCommitMessage,
+)
+
+from .native_sink import (
+    _ROWS_PER_GROUP,
+    _finalize_output,
+    _prepare_output,
+    _remove_uncommitted,
+    _task_prefix,
+    write_kind_tables,
 )
 
 
@@ -61,44 +71,26 @@ class OsmParquetWriter(DataSourceArrowWriter):
             3 if self.codec == "zstd" else None
         )
         self.target_bytes = int(options.get("target_file_mb", 500)) * 1024 * 1024
-        self.rows_per_group = int(options.get("rows_per_group", 400_000))
+        self.rows_per_group = int(options.get("rows_per_group", _ROWS_PER_GROUP))
         self.sort_by_id = options.get("sort_by_id", "false").lower() == "true"
-        self.run_token = f"j{uuid.uuid4().hex[:12]}"
-        if overwrite and os.path.exists(self.path):
-            shutil.rmtree(self.path)
-        os.makedirs(self.path, exist_ok=True)
+        self.run_token = _prepare_output(self.path, overwrite)
 
     def write(self, iterator: Iterator) -> _Committed:  # executor side
         import pyarrow as pa
-        from pyspark import TaskContext
 
-        from .native_sink import write_kind_tables
-
-        ctx = TaskContext.get()
-        prefix = (
-            f"part-{self.run_token}-{ctx.partitionId():05d}-{ctx.taskAttemptId()}"
-        )
         tables = (pa.Table.from_batches([b]) for b in iterator)
         stats = write_kind_tables(
-            tables, self.path, prefix, self.codec, self.level,
+            tables, self.path, _task_prefix(self.run_token), self.codec, self.level,
             self.target_bytes, self.rows_per_group, self.sort_by_id,
         )
         return _Committed([s[1] for s in stats])
 
     def commit(self, messages) -> None:  # driver side, all tasks succeeded
-        from .native_sink import _finalize_output
-
         committed = {f for m in messages if m is not None for f in m.files}
         _finalize_output(self.path, committed, self.run_token)
 
     def abort(self, messages) -> None:  # driver side, job failed
-        for kind_dir in os.listdir(self.path):
-            full = os.path.join(self.path, kind_dir)
-            if not os.path.isdir(full):
-                continue
-            for fname in os.listdir(full):
-                if self.run_token in fname:
-                    os.remove(os.path.join(full, fname))
+        _remove_uncommitted(self.path, set(), self.run_token)
 
 
 class OsmParquetDataSource(DataSource):

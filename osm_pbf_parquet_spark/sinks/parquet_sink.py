@@ -61,12 +61,6 @@ def write_osm_parquet(
     return obs.get if obs is not None else None
 
 
-def read_osm_parquet(spark, path: str) -> DataFrame:
-    """Read the engine's (or the reference's) partitioned output back as a
-    DataFrame; hive partition discovery restores the ``type`` column."""
-    return spark.read.parquet(path)
-
-
 def compact_parquet_dataset(
     spark,
     in_path: str,

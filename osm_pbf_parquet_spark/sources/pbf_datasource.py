@@ -125,7 +125,7 @@ class OsmPbfReader(DataSourceReader):
                 yield f
 
     def partitions(self) -> list[_BlobRangePartition]:
-        from .pbf_source import _catalog_rows
+        from .pbf_source import _catalog_rows, _group_entries
 
         if not self.kinds:
             return [_BlobRangePartition([])]
@@ -139,12 +139,8 @@ class OsmPbfReader(DataSourceReader):
         except Exception:
             pass
         rows, n_groups = _catalog_rows(self.paths, parallelism, self.blobs_per_task)
-        if not rows:
-            return [_BlobRangePartition([])]
-        groups: dict[int, list] = {}
-        for p, off, sz, gid in rows:  # gid = size-weighted contiguous chunks
-            groups.setdefault(gid, []).append((p, off, sz))
-        parts = [_BlobRangePartition(groups[g]) for g in sorted(groups)]
+        # gid = size-weighted contiguous chunks; empty groups are dropped
+        parts = [_BlobRangePartition(g) for g in _group_entries(rows, n_groups) if g]
         return parts or [_BlobRangePartition([])]
 
     def read(self, partition: _BlobRangePartition) -> Iterator:

@@ -125,6 +125,60 @@ def test_osmparquet_writer_append(spark, tmp_path):
     assert counts == {"node": 6, "way": 2, "relation": 2}
 
 
+def test_osmparquet_writer_append_and_abort(spark, tmp_path):
+    """On a synthetic PBF: an append job doubles every kind's rows next to
+    the first job's files; ``abort()`` removes this job's final and
+    ``.inprogress`` files, keeps the earlier jobs' files and writes no
+    ``_SUCCESS``."""
+    from osm_pbf_parquet_spark.sinks.osm_writer_datasource import (
+        OsmParquetWriter,
+        register_osm_parquet,
+    )
+
+    from pbf_encoder import write_synthetic_pbf
+
+    pbf = str(tmp_path / "syn.osm.pbf")
+    stats = write_synthetic_pbf(pbf, n_nodes=2000, n_ways=200, n_rels=20)
+    expected = {"node": stats["nodes"], "way": stats["ways"],
+                "relation": stats["relations"]}
+    register_osm_parquet(spark)
+    out = str(tmp_path / "appended")
+
+    def counts():
+        back = spark.read.parquet(out)
+        return {r["type"]: r["count"] for r in back.groupBy("type").count().collect()}
+
+    def listing():
+        return sorted(
+            os.path.join(d, f) for d in os.listdir(out)
+            if os.path.isdir(os.path.join(out, d))
+            for f in os.listdir(os.path.join(out, d))
+        )
+
+    df = scan_pbf(spark, pbf)
+    df.write.format("osmparquet").mode("overwrite").save(out)
+    assert counts() == expected
+    first = listing()
+    df.write.format("osmparquet").mode("append").save(out)
+    assert counts() == {k: 2 * n for k, n in expected.items()}
+    earlier = listing()
+    assert set(first) < set(earlier)
+
+    os.remove(os.path.join(out, "_SUCCESS"))
+    writer = OsmParquetWriter({"path": out}, overwrite=False)
+    mine = [
+        os.path.join(out, "type=node", f"part-{writer.run_token}-00000-9-000.zstd.parquet"),
+        os.path.join(out, "type=way",
+                     f"part-{writer.run_token}-00001-10-000.zstd.parquet.inprogress"),
+    ]
+    for path in mine:
+        open(path, "wb").close()
+    writer.abort([None])
+    assert not any(os.path.exists(p) for p in mine)
+    assert listing() == earlier
+    assert not os.path.exists(os.path.join(out, "_SUCCESS"))
+
+
 def test_osmparquet_writer_matches_fused_transcode(spark, tmp_path):
     """The ``osmparquet`` writer (wide batches split by ``type``) and the
     fused transcode (per-kind tables built from decoded blocks) write the

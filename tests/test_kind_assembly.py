@@ -1,22 +1,32 @@
 """Multi-block Arrow assembly: the fused transcode builds one table per row
-group per kind from many blocks' accumulators (``decode.kind_table`` via
-``native_sink.fused_kind_tables``). Its rows must equal the per-blob wide
-batches of ``columns_to_arrow``, split by ``type``, concatenated."""
+group per kind from many blocks' accumulators (``decode.kind_table``,
+written by ``native_sink.write_decoded_blocks``). Its rows must equal the
+per-blob wide batches of ``columns_to_arrow``, split by ``type``,
+concatenated, and its files must equal the split route's
+(``write_kind_tables``) byte for byte."""
 
 from __future__ import annotations
+
+import hashlib
+import os
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 
 from osm_pbf_parquet_spark.pbf import decode as D
-from osm_pbf_parquet_spark.pbf.blob import BlobError
+from osm_pbf_parquet_spark.pbf.blob import TYPE_DATA, BlobError, index_blobs
 from osm_pbf_parquet_spark.pbf.proto import ProtoDecodeError
-from osm_pbf_parquet_spark.sinks.native_sink import fused_kind_tables
+from osm_pbf_parquet_spark.sinks.native_sink import (
+    write_decoded_blocks,
+    write_kind_tables,
+)
 from osm_pbf_parquet_spark.sources.pbf_source import (
     BlobDecodeError,
     decode_blob_entries,
+    parse_blob_entries,
 )
 
 from pbf_encoder import (
@@ -115,16 +125,63 @@ def _expected(payloads, kinds=KINDS) -> dict[str, pa.Table]:
     return {k: pa.concat_tables(v).combine_chunks() for k, v in out.items() if v}
 
 
-def _fused(payloads, rows_per_group, kinds=KINDS) -> list[tuple[str, pa.Table]]:
-    decoded = (D.decode_primitive_block(p, kinds=kinds) for p in payloads)
-    return list(fused_kind_tables(decoded, rows_per_group))
+@pytest.fixture(scope="module")
+def blocks_pbf(tmp_path_factory):
+    """``BLOCKS`` as the data blobs of one PBF file."""
+    path = str(tmp_path_factory.mktemp("blocks") / "blocks.osm.pbf")
+    with open(path, "wb") as f:
+        for payload in BLOCKS:
+            write_blob(f, "OSMData", payload)
+    return [(path, i.offset, i.size)
+            for i in index_blobs(path) if i.blob_type == TYPE_DATA]
 
 
-def _by_kind(pairs) -> dict[str, pa.Table]:
-    out: dict[str, list] = {}
-    for kind, table in pairs:
-        out.setdefault(kind, []).append(table)
-    return {k: pa.concat_tables(v).combine_chunks() for k, v in out.items()}
+def _write(route, entries, out, rows_per_group, kinds=KINDS, target_bytes=0):
+    """Write ``entries`` through the fused route (decoded blocks) or the
+    split route (wide per-blob batches split by ``type``); return the
+    written files per kind, in write order."""
+    args = (str(out), "part-t", "zstd", 3, target_bytes, rows_per_group, False)
+    if route == "fused":
+        stats = write_decoded_blocks(
+            decode_blob_entries(entries, list(kinds), None), *args)
+    else:
+        stats = write_kind_tables(
+            (pa.Table.from_batches([b])
+             for b in parse_blob_entries(entries, list(kinds), None)), *args)
+    files: dict[str, list[str]] = {}
+    for kind, path, rows, _bytes in stats:
+        assert pq.ParquetFile(path).metadata.num_rows == rows
+        files.setdefault(kind, []).append(path)
+    return files
+
+
+def _md5s(out) -> dict[str, str]:
+    return {
+        os.path.relpath(os.path.join(root, f), out):
+            hashlib.md5(open(os.path.join(root, f), "rb").read()).hexdigest()
+        for root, _dirs, names in os.walk(out) for f in names
+    }
+
+
+def _read_back(files: list[str]) -> pa.Table:
+    return pa.concat_tables(pq.read_table(f) for f in files).combine_chunks()
+
+
+def _flush_sizes(kind: str, rows_per_group: int) -> list[int]:
+    """Where the split path flushes ``kind``: a group is built as soon as
+    the running per-blob row count reaches ``rows_per_group``."""
+    sizes, acc = [], 0
+    for p in BLOCKS:
+        cols = D.decode_primitive_block(p).get(kind)
+        if cols is None or cols.n == 0:
+            continue
+        acc += cols.n
+        if acc >= rows_per_group:
+            sizes.append(acc)
+            acc = 0
+    if acc:
+        sizes.append(acc)
+    return sizes
 
 
 def test_corpus_covers_null_and_empty_users():
@@ -164,39 +221,53 @@ def test_single_block_is_columns_to_arrow_without_type():
 
 
 @pytest.mark.parametrize("rows_per_group", [1, 25, 60, 10_000])
-def test_fused_tables_match_and_flush_like_the_split_path(rows_per_group):
-    """Rows equal the split path's, and each kind's tables end exactly
-    where ``_KindWriter.add`` over per-blob tables would flush: below a
-    block's row count every block flushes; above it blocks accumulate."""
-    pairs = _fused(BLOCKS, rows_per_group)
+def test_fused_tables_match_and_flush_like_the_split_path(
+        blocks_pbf, tmp_path, rows_per_group):
+    """The fused write's rows equal the split path's, and each kind's row
+    groups end exactly where the split path flushes: below a block's row
+    count every block flushes; above it blocks accumulate. With a 0-byte
+    file target every flush rolls its own file, so each file is one flush
+    and its row groups are that flush in ``rows_per_group`` chunks. Every
+    file is byte-identical to the split route's."""
+    fused = _write("fused", blocks_pbf, tmp_path / "fused", rows_per_group)
+    split = _write("split", blocks_pbf, tmp_path / "split", rows_per_group)
     exp = _expected(BLOCKS)
-    got = _by_kind(pairs)
-    assert got.keys() == exp.keys()
+    assert fused.keys() == exp.keys()
     for kind in exp:
-        assert got[kind].equals(exp[kind]), kind
-    # the split path's flush points: running per-blob row counts
-    for kind in KINDS:
-        sizes, acc = [], 0
-        for p in BLOCKS:
-            cols = D.decode_primitive_block(p).get(kind)
-            if cols is None or cols.n == 0:
-                continue
-            acc += cols.n
-            if acc >= rows_per_group:
-                sizes.append(acc)
-                acc = 0
-        if acc:
-            sizes.append(acc)
-        assert [t.num_rows for k, t in pairs if k == kind] == sizes
-    if rows_per_group == 10_000:  # one table per kind
-        assert [k for k, _t in pairs] == list(KINDS)
+        assert _read_back(fused[kind]).equals(exp[kind]), kind
+        sizes = _flush_sizes(kind, rows_per_group)
+        meta = [pq.ParquetFile(f).metadata for f in fused[kind]]
+        assert [m.num_rows for m in meta] == sizes
+        for m, size in zip(meta, sizes):
+            groups = [m.row_group(i).num_rows for i in range(m.num_row_groups)]
+            assert groups == [min(rows_per_group, size - i)
+                              for i in range(0, size, rows_per_group)]
+    if rows_per_group == 10_000:  # one row group per kind
+        assert all(len(f) == 1 for f in fused.values())
+    md5 = _md5s(tmp_path / "fused")
+    assert md5 == _md5s(tmp_path / "split")
+    assert len(md5) == sum(len(f) for f in fused.values())
 
 
-def test_fused_tables_kind_subset():
+def test_fused_tables_one_file_per_kind_match_split(blocks_pbf, tmp_path):
+    """With the default-sized file target, each kind is one file of many
+    row groups, byte-identical to the split route's."""
+    fused = _write("fused", blocks_pbf, tmp_path / "fused", 25,
+                   target_bytes=500 * 1024 * 1024)
+    _write("split", blocks_pbf, tmp_path / "split", 25,
+           target_bytes=500 * 1024 * 1024)
+    assert {k: len(f) for k, f in fused.items()} == dict.fromkeys(KINDS, 1)
+    assert _md5s(tmp_path / "fused") == _md5s(tmp_path / "split")
+
+
+def test_fused_tables_kind_subset(blocks_pbf, tmp_path):
     kinds = ("way",)
-    pairs = _fused(BLOCKS, 5, kinds=kinds)
-    assert {k for k, _t in pairs} == {"way"}
-    assert _by_kind(pairs)["way"].equals(_expected(BLOCKS, kinds)["way"])
+    fused = _write("fused", blocks_pbf, tmp_path / "fused", 5, kinds=kinds)
+    _write("split", blocks_pbf, tmp_path / "split", 5, kinds=kinds)
+    assert set(fused) == {"way"}
+    assert os.listdir(tmp_path / "fused") == ["type=way"]
+    assert _read_back(fused["way"]).equals(_expected(BLOCKS, kinds)["way"])
+    assert _md5s(tmp_path / "fused") == _md5s(tmp_path / "split")
 
 
 def test_tag_index_past_its_own_block_raises():
@@ -248,8 +319,6 @@ def test_decode_errors_name_file_and_blob_offset(tmp_path):
     """A blob that fails to decompress or decode surfaces as
     BlobDecodeError naming the path and the blob's byte offset, with the
     original error as its cause."""
-    from osm_pbf_parquet_spark.pbf.blob import TYPE_DATA, index_blobs
-
     path = str(tmp_path / "bad.osm.pbf")
     truncated = BLOCKS[0][: len(BLOCKS[0]) // 2]
     with open(path, "wb") as f:

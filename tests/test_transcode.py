@@ -127,6 +127,15 @@ def test_cli_validation():
     with pytest.raises(SystemExit):
         validate_args(build_parser().parse_args(
             ["--input", "a", "--output", "o", "--kinds", "node,bogus"]))
+    # compression levels: zstd only, integer, 1-22 (sink.rs:134-153, W5)
+    for ok in ("zstd", "zstd:1", "zstd:22", "snappy", "none"):
+        validate_args(build_parser().parse_args(
+            ["--input", "a", "--output", "o", "--compression", ok]))
+    for bad in ("zstd:abc", "zstd:", "zstd:3.5", "zstd:0", "zstd:23",
+                "zstd:-1", "snappy:3", "gzip:9", "none:1"):
+        with pytest.raises(SystemExit):
+            validate_args(build_parser().parse_args(
+                ["--input", "a", "--output", "o", "--compression", bad]))
 
 
 def test_observe_elements_progress_counter(spark):
@@ -233,21 +242,23 @@ def test_fused_transcode_file_rolling(spark, tmp_path, synthetic_pbf):
 
 
 def test_fused_sink_finalize_commit_protocol(tmp_path):
-    """The driver finalize keeps exactly the committed files: stragglers
-    from failed attempts (.inprogress) and losing speculative attempts
-    (complete but unreported) are deleted; _SUCCESS lands last."""
+    """The driver finalize keeps exactly this job's committed files:
+    stragglers from failed attempts (.inprogress) and losing speculative
+    attempts (complete but unreported) are deleted, another job's file
+    (no run token of this job) survives; _SUCCESS lands last."""
     from osm_pbf_parquet_spark.sinks.native_sink import _finalize_output
 
     out = tmp_path / "out"
     nd = out / "type=node"
     nd.mkdir(parents=True)
-    keep = nd / "part-00000-1-000.zstd.parquet"
-    loser = nd / "part-00000-7-000.zstd.parquet"  # speculative duplicate
-    partial = nd / "part-00001-2-000.zstd.parquet.inprogress"
-    for p in (keep, loser, partial):
+    keep = nd / "part-jabc-00000-1-000.zstd.parquet"
+    loser = nd / "part-jabc-00000-7-000.zstd.parquet"  # speculative duplicate
+    partial = nd / "part-jabc-00001-2-000.zstd.parquet.inprogress"
+    other = nd / "part-jold-00000-3-000.zstd.parquet"  # an earlier job's
+    for p in (keep, loser, partial, other):
         p.write_bytes(b"x")
-    _finalize_output(str(out), {str(keep)})
-    assert keep.exists()
+    _finalize_output(str(out), {str(keep)}, "jabc")
+    assert keep.exists() and other.exists()
     assert not loser.exists() and not partial.exists()
     assert (out / "_SUCCESS").exists()
 
