@@ -545,14 +545,14 @@ def _pigeonhole_guard(bands: int, max_distance: int) -> None:
         )
 
 
-def _swar_bucket_pairs(k, h, max_distance: int, out_a, out_b, out_d):
+def _swar_bucket_pairs(k, h, max_distance: int):
     """ONE bucket's all-pairs Hamming enumeration, vectorized: XOR the
     bucket's fingerprints as a blocked outer product in numpy and
     popcount with the SWAR folds (uint64, wrap-around multiply is
     exactly the mod-2⁶⁴ SWAR needs). ``k`` must be sorted ascending so
-    the row<col emission yields doc_a < doc_b. Appends survivor arrays
-    into the caller's accumulators. Blocked so peak memory is ~block ×
-    bucket_rows × 8 B even on a degenerate hot bucket."""
+    the row<col emission yields doc_a < doc_b. Yields each block's
+    survivor arrays ``(doc_a, doc_b, hamming)``. Blocked so peak memory
+    is ~block × bucket_rows × 8 B even on a degenerate hot bucket."""
     n = len(k)
     cols = np.arange(n, dtype=np.int64)
     block = max(1, min(1024, 8_000_000 // n))
@@ -568,16 +568,21 @@ def _swar_bucket_pairs(k, h, max_distance: int, out_a, out_b, out_d):
             cols[None, :] > np.arange(i0, i1)[:, None])
         r, c = np.nonzero(hit)
         if r.size:
-            out_a.append(k[r + i0])
-            out_b.append(k[c])
-            out_d.append(d[r, c].astype(np.int32))
+            yield k[r + i0], k[c], d[r, c].astype(np.int32)
 
 
-_PAIRS_EMPTY = {
-    "doc_a": pd.Series(dtype="int64"),
-    "doc_b": pd.Series(dtype="int64"),
-    "hamming": pd.Series(dtype="int32"),
-}
+# Pairs one kernel output frame holds before it is yielded: the frame
+# bound on degenerate all-equal corpora. Checked after every block, so a
+# frame holds at most this plus one block's pairs, even within one bucket.
+_PAIRS_PER_FRAME = 4_000_000
+
+
+def _pairs_frame(out_a, out_b, out_d) -> pd.DataFrame:
+    return pd.DataFrame({
+        "doc_a": np.concatenate(out_a) if out_a else np.empty(0, np.int64),
+        "doc_b": np.concatenate(out_b) if out_b else np.empty(0, np.int64),
+        "hamming": np.concatenate(out_d) if out_d else np.empty(0, np.int32),
+    })
 
 
 def _bucket_pairs_map_kernel(max_distance: int):
@@ -587,12 +592,13 @@ def _bucket_pairs_map_kernel(max_distance: int):
     enumerating each bucket with the shared SWAR core emits EXACTLY the
     per-group kernel's rows. One Python call and one Arrow round-trip
     per partition instead of one per bucket, and no grouped sort
-    (lexsort inside the kernel replaces it)."""
+    (lexsort inside the kernel replaces it). A frame is yielded as soon
+    as it holds more than ``_PAIRS_PER_FRAME`` pairs."""
 
     def _pairs(batches):
         parts = [pdf for pdf in batches if len(pdf)]
         if not parts:
-            yield pd.DataFrame(_PAIRS_EMPTY)
+            yield _pairs_frame([], [], [])
             return
         pdf = parts[0] if len(parts) == 1 else pd.concat(parts)
         band = pdf["_band"].to_numpy(np.int64)
@@ -613,26 +619,16 @@ def _bucket_pairs_map_kernel(max_distance: int):
         for s, e in zip(starts, ends):
             if e - s < 2:
                 continue
-            _swar_bucket_pairs(k[s:e], h[s:e], max_distance,
-                               out_a, out_b, out_d)
-            emitted = sum(a.size for a in out_a)
-            if emitted > 4_000_000:  # bound the output frame on
-                yield pd.DataFrame({  # degenerate all-equal corpora
-                    "doc_a": np.concatenate(out_a),
-                    "doc_b": np.concatenate(out_b),
-                    "hamming": np.concatenate(out_d),
-                })
-                out_a, out_b, out_d = [], [], []
-                emitted = 0
-        yield (
-            pd.DataFrame({
-                "doc_a": np.concatenate(out_a),
-                "doc_b": np.concatenate(out_b),
-                "hamming": np.concatenate(out_d),
-            })
-            if out_a
-            else pd.DataFrame(_PAIRS_EMPTY)
-        )
+            for a, b, d in _swar_bucket_pairs(k[s:e], h[s:e], max_distance):
+                out_a.append(a)
+                out_b.append(b)
+                out_d.append(d)
+                emitted += a.size
+                if emitted > _PAIRS_PER_FRAME:
+                    yield _pairs_frame(out_a, out_b, out_d)
+                    out_a, out_b, out_d = [], [], []
+                    emitted = 0
+        yield _pairs_frame(out_a, out_b, out_d)
 
     return _pairs
 

@@ -13,10 +13,13 @@ hive-partitioned zstd parquet **directly from Arrow** with pyarrow's C++
 writer, yielding only a tiny per-file stats batch. This is
 the reference's own architecture — decode task feeding a parquet sink in
 the same worker (``osm-pbf-parquet/src/pbf.rs:51-98`` →
-``sink.rs:69-117``) — expressed Spark-first: the blob catalog is the
-DataFrame, Spark schedules/distributes/retries the map stage, and the
-data plane stays columnar end-to-end (PBF bytes → numpy → Arrow →
-parquet) with zero per-row materialization anywhere.
+``sink.rs:69-117``) — expressed Spark-first: the stage runs over
+``spark.range`` with one row per blob group (``pbf_source.map_blob_groups``;
+the group lists ride in the task closure), so each task is ONE Python
+worker that reads, decodes and writes its group; Spark
+schedules/distributes/retries the map stage, and the data plane stays
+columnar end-to-end (PBF bytes → numpy → Arrow → parquet) with zero
+per-row materialization anywhere.
 
 One flush rule, like the reference's per-kind builders (``pbf.rs:183-220``,
 ``sink.rs:69-117``): ``_KindWriter`` is the only code that buffers and
@@ -336,7 +339,8 @@ def transcode_pbf(
     """
     from ..sources.pbf_source import (
         _catalog_rows,
-        _partitioned_catalog,
+        decode_blob_entries,
+        map_blob_groups,
         normalize_kinds_columns,
     )
 
@@ -369,30 +373,25 @@ def transcode_pbf(
         # deal unconditionally
         interleave=True,
     )
-    catalog = _partitioned_catalog(spark, rows, n_groups)
     target_bytes = target_file_mb * 1024 * 1024
     level = zstd_level if compression == "zstd" else None
 
-    def _transcode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..sources.pbf_source import catalog_entries, decode_blob_entries
-
+    def _transcode(entries: Iterator[tuple]) -> Iterator[pa.RecordBatch]:
         stats = write_decoded_blocks(
-            decode_blob_entries(catalog_entries(batches), kinds_list, None),
+            decode_blob_entries(entries, kinds_list, None),
             out_path, _task_prefix(run_token), compression, level, target_bytes,
             rows_per_group, sort_by_id,
         )
+        kind_col, files, n_rows, n_bytes = zip(*stats) if stats else ((),) * 4
         yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([s[0] for s in stats], pa.string()),
-                pa.array([s[1] for s in stats], pa.string()),
-                pa.array([s[2] for s in stats], pa.int64()),
-                pa.array([s[3] for s in stats], pa.int64()),
-            ],
+            [pa.array(kind_col, pa.string()), pa.array(files, pa.string()),
+             pa.array(n_rows, pa.int64()), pa.array(n_bytes, pa.int64())],
             names=["kind", "file", "rows", "bytes"],
         )
 
-    stat_rows = catalog.mapInArrow(
-        _transcode, schema="kind string, file string, rows long, bytes long"
+    stat_rows = map_blob_groups(
+        spark, rows, n_groups, _transcode,
+        "kind string, file string, rows long, bytes long",
     ).collect()
 
     committed = {r["file"] for r in stat_rows}

@@ -5,21 +5,25 @@ Spark-first re-expression of the reference's scan pipeline
 blob.rs:164-449`` readers):
 
 1. **Index pass (driver)** — metadata-only scan of BlobHeaders (S3,
-   ``blob.rs:422-448`` parity). Reads ~32 bytes per ~16MB blob, so a
-   planet file indexes in seconds. Produces the blob-range catalog.
-2. **Scan DataFrame** — the catalog becomes a DataFrame of
-   ``(path, offset, size)`` rows; contiguous blobs are grouped so each
-   Spark task issues one coalesced byte-range read (S3-friendly: fewer
-   range GETs; local: sequential I/O).
-3. **Parse kernel (executors)** — ``mapInArrow`` over the catalog: each
-   task seeks to its ranges, decompresses (D1), and runs the vectorized
-   PrimitiveBlock decoder. Spark's scheduler replaces the reference's
-   hand-rolled semaphore/JoinSet admission control (``pbf.rs:66-96``).
+   ``blob.rs:422-448`` parity), a few dozen bytes per blob; each blob is
+   assigned to a task group (``_catalog_rows``).
+2. **Group feed** — ``map_blob_groups``: the stage input is
+   ``spark.range(0, n_groups, 1, n_groups)``, one JVM-native row per
+   group, and the groups' ``(path, offset, size)`` lists ride in the
+   ``mapInArrow`` closure, so each task is ONE Python worker. Groups
+   hold adjacent blobs (S3-friendly: fewer range GETs; local: sequential
+   I/O).
+3. **Parse kernel (executors)** — each task seeks to its ranges,
+   decompresses (D1), and runs the vectorized PrimitiveBlock decoder.
+   Spark's scheduler replaces the reference's hand-rolled
+   semaphore/JoinSet admission control (``pbf.rs:66-96``).
 
 Scale notes (100 TB posture):
-- Parallelism is bounded by blob count (~16MB each → a planet file has
-  ~5k blobs; 100TB of PBF → ~6M blobs). ``blobs_per_task`` keeps the task
-  count in the tens-of-thousands range rather than millions.
+- Parallelism is bounded by blob count: blobs average ~90 KB compressed
+  (~8k elements each), so a planet file has on the order of 10⁶ blobs;
+  ``blobs_per_task`` or the default one group per core keeps tasks few.
+- The closure costs ~14 B per blob pickled; past PySpark's 1 MB threshold
+  (a planet: ~14 MB) the pickled command is broadcast, once per executor.
 - Kind/column pushdown reaches the kernel as plan literals — a node-only
   query never decodes way/relation groups (mirrors ``indexed.rs:277-278``).
 - The kernel is stateless per blob; no cross-task shared state exists, so
@@ -30,7 +34,8 @@ from __future__ import annotations
 
 import math
 import os
-from typing import Iterable, Iterator
+from functools import partial
+from typing import Callable, Iterable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -189,35 +194,33 @@ def _group_entries(rows: list[tuple], n_groups: int) -> list[list[tuple]]:
     return groups
 
 
-def _partitioned_catalog(spark: SparkSession, rows: list[tuple],
-                         n_groups: int) -> DataFrame:
-    """Ship the catalog pre-partitioned along the size-weighted gid
-    boundaries: one group-list per parallelize slice, flattened in place —
-    each task gets its contiguous byte-balanced blob run with NO
-    repartition shuffle and no extra stage (a shuffle roundtrip cost
-    ~1.8s of dead time per scan on a 123 MB input)."""
-    rdd = spark.sparkContext.parallelize(
-        _group_entries(rows, n_groups), max(n_groups, 1)
-    ).flatMap(lambda grp: grp)
-    return spark.createDataFrame(rdd, "path string, offset long, size long")
+def map_blob_groups(spark: SparkSession, rows: list[tuple], n_groups: int,
+                    kernel: Callable[[Iterator[tuple]], Iterator[pa.RecordBatch]],
+                    schema) -> DataFrame:
+    """Run ``kernel`` over each group's ``(path, offset, size)`` entries,
+    one group per task: task ``i`` of ``spark.range(0, n, 1, n)`` holds
+    the one row ``i``, so partition id == group id. A JVM-native input
+    keeps each task at one Python worker; a Python RDD input would hold a
+    second one just to feed the tuples to the JVM."""
+    groups = _group_entries(rows, n_groups)
+    n = len(groups)
 
-
-def catalog_entries(batches: Iterable[pa.RecordBatch]) -> Iterator[tuple]:
-    """The ``(path, offset, size)`` triples of the catalog batches one
-    ``mapInArrow`` task receives."""
-    for b in batches:
-        yield from zip(
-            b.column("path").to_pylist(),
-            b.column("offset").to_pylist(),
-            b.column("size").to_pylist(),
+    def _task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        yield from kernel(
+            entry
+            for b in batches
+            for gid in b.column(0).to_pylist()
+            for entry in groups[gid]
         )
+
+    return spark.range(0, n, 1, n).mapInArrow(_task, schema=schema)
 
 
 def pbf_blob_catalog(spark: SparkSession, path: str, blobs_per_task: int | None = None) -> DataFrame:
     """The blob-range catalog as a DataFrame: (path, offset, size, task_group).
 
     This is the engine's analog of a Parquet footer listing — a tiny
-    metadata DataFrame that scan tasks fan out over.
+    metadata DataFrame (the PBF stages themselves use ``map_blob_groups``).
     """
     rows, _ = _catalog_rows(path, spark.sparkContext.defaultParallelism, blobs_per_task)
     return spark.createDataFrame(rows, "path string, offset long, size long, task_group int")
@@ -312,16 +315,12 @@ def scan_pbf(
     rows, n_groups = _catalog_rows(
         path, spark.sparkContext.defaultParallelism, blobs_per_task
     )
-    catalog = _partitioned_catalog(spark, rows, n_groups)
-
     columns_list = list(columns) if columns is not None else None
-
-    def _parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        yield from parse_blob_entries(
-            catalog_entries(batches), kinds_list, columns_list
-        )
-
-    return catalog.mapInArrow(_parse, schema=spark_schema)
+    return map_blob_groups(
+        spark, rows, n_groups,
+        partial(parse_blob_entries, kinds=kinds_list, columns=columns_list),
+        spark_schema,
+    )
 
 
 def estimate_rows_per_file(sample_df: DataFrame, target_mb: int = 500, sample_rows: int = 50_000) -> int:

@@ -61,3 +61,42 @@ def test_pigeonhole_guard_rejects_unsound_geometry():
     with pytest.raises(ValueError):
         _pigeonhole_guard(bands=4, max_distance=4)
     _pigeonhole_guard(bands=4, max_distance=3)  # boundary is sound
+
+
+def test_hot_bucket_frames_are_bounded(monkeypatch):
+    """One degenerate all-equal bucket: the partition kernel yields a
+    frame as soon as the pair bound is passed INSIDE the bucket, so no
+    frame exceeds the bound plus one block's pairs, and the frames
+    together hold exactly the unbounded run's pairs."""
+    import numpy as np
+    import pandas as pd
+
+    from osm_pbf_parquet_spark.operators import dedup
+
+    n = 3000  # > one 1024-row block
+    block_pairs = min(1024, 8_000_000 // n) * n
+    pdf = pd.DataFrame({
+        "_band": np.zeros(n, np.int64),
+        "_bits": np.full(n, 7, np.int64),
+        "_k": np.arange(n, 0, -1, dtype=np.int64),
+        "_h": np.full(n, -0x0123456789ABCDEF, np.int64),
+    })
+
+    def frames(bound):
+        monkeypatch.setattr(dedup, "_PAIRS_PER_FRAME", bound)
+        return list(dedup._bucket_pairs_map_kernel(0)(iter([pdf])))
+
+    def pairs(fs):
+        out = pd.concat(fs, ignore_index=True)
+        return out.sort_values(["doc_a", "doc_b"]).to_numpy()
+
+    bound = 100_000
+    bounded = frames(bound)
+    sizes = [len(f) for f in bounded]
+    assert sum(1 for s in sizes if s) >= 3
+    assert max(sizes) <= bound + block_pairs < n * (n - 1) // 2
+    unbounded = frames(10 * n * n)
+    assert [len(f) for f in unbounded] == [n * (n - 1) // 2]
+    got = pairs(bounded)
+    assert (got == pairs(unbounded)).all()
+    assert (got[:, 0] < got[:, 1]).all() and (got[:, 2] == 0).all()

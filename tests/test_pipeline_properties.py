@@ -858,6 +858,12 @@ def test_ivfpq_matches_sequential_reference(spark, vec_lists):
     (first-max cosine), probe selection, the cell restriction of ADC
     candidates, and the refinement all pinned on arbitrary integer
     vectors."""
+    _assert_ivfpq_matches_reference(spark, vec_lists)
+
+
+def _assert_ivfpq_matches_reference(spark, vec_lists):
+    """Distributed IVFADC (``ivfpq_topk``) top-k rows == the sequential
+    reference's, query by query."""
     from pyspark.sql import functions as F
 
     from osm_pbf_parquet_spark.operators import similarity
@@ -881,3 +887,17 @@ def test_ivfpq_matches_sequential_reference(spark, vec_lists):
         want = [(i, round(d, 6), rk) for i, d, rk in ref[q]]
         have = sorted(got_by_q.get(q, []), key=lambda t: t[2])
         assert have == want, f"query {q}: {have} != {want}"
+
+
+def test_ivfpq_matches_sequential_reference_fixed(spark):
+    """Default-tier IVFADC parity: one fixed seeded draw of 14 vectors
+    around three clusters against the sequential reference (the property
+    test above runs arbitrary draws in the full tier)."""
+    import random
+
+    rng = random.Random(11)
+    centers = ([40] * 8, [-40] * 8, [0, 30, 0, -30, 0, 30, 0, -30])
+    vec_lists = [
+        [c + rng.randint(-6, 6) for c in centers[i % 3]] for i in range(14)
+    ]
+    _assert_ivfpq_matches_reference(spark, vec_lists)

@@ -263,6 +263,114 @@ def test_fused_sink_finalize_commit_protocol(tmp_path):
     assert (out / "_SUCCESS").exists()
 
 
+@pytest.fixture(scope="module")
+def many_blobs_pbf(spark, tmp_path_factory):
+    """A synthetic PBF with more one-blob groups than the session has
+    cores: 2·parallelism+1 dense-node blobs, one way blob, one relation
+    blob."""
+    par = spark.sparkContext.defaultParallelism
+    path = str(tmp_path_factory.mktemp("many") / "many.osm.pbf")
+    stats = write_synthetic_pbf(path, n_nodes=(2 * par + 1) * 20, n_ways=20,
+                                n_rels=2, nodes_per_block=20)
+    return path, stats
+
+
+def test_scan_pbf_feeds_groups_from_range(spark, many_blobs_pbf):
+    """The scan stage's input is a JVM ``Range`` with one row per blob
+    group -- no Python RDD (``ExistingRDD``) feeding the ``MapInArrow``
+    kernel -- and it runs exactly one task per group."""
+    from osm_pbf_parquet_spark.sources.pbf_source import _catalog_rows
+
+    path, stats = many_blobs_pbf
+    par = spark.sparkContext.defaultParallelism
+    _rows, n_groups = _catalog_rows(path, par, 1)
+    assert n_groups == 2 * par + 3 > par
+    df = scan_pbf(spark, path, blobs_per_task=1)
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
+    top, child = plan.splitlines()[:2]
+    assert top.startswith("MapInArrow")
+    assert f"Range (0, {n_groups}, step=1, splits={n_groups})" in child
+    assert "ExistingRDD" not in plan
+    assert qe.toRdd().getNumPartitions() == n_groups
+    counts = {r["type"]: r["count"] for r in df.groupBy("type").count().collect()}
+    assert counts == {"node": stats["nodes"], "way": stats["ways"],
+                      "relation": stats["relations"]}
+
+
+def test_fused_transcode_task_files_match_the_kernel(spark, tmp_path, many_blobs_pbf):
+    """``transcode_pbf`` with ``blobs_per_task=2``: every element is written
+    exactly once, and task ``i`` writes exactly the files, byte for byte,
+    that the Spark-free write loop writes for catalog group ``i`` -- the
+    blob-to-partition assignment and the per-task output are the
+    catalog's, whatever feeds the stage."""
+    import hashlib
+
+    import pyarrow.parquet as pq
+
+    from osm_pbf_parquet_spark.sinks.native_sink import (
+        _ROWS_PER_GROUP, transcode_pbf, write_decoded_blocks,
+    )
+    from osm_pbf_parquet_spark.sources.pbf_source import (
+        _catalog_rows, _group_entries, decode_blob_entries,
+    )
+
+    path, stats = many_blobs_pbf
+    out = str(tmp_path / "spark")
+    res = transcode_pbf(spark, path, out, blobs_per_task=2)
+    assert res["rows"] == {"node": stats["nodes"], "way": stats["ways"],
+                           "relation": stats["relations"]}
+    ids = {
+        kind: sorted(pq.read_table(os.path.join(out, f"type={kind}"),
+                                   columns=["id"]).column("id").to_pylist())
+        for kind in ("node", "way", "relation")
+    }
+    assert ids == {
+        "node": list(range(1, stats["nodes"] + 1)),
+        "way": list(range(100_000, 100_000 + stats["ways"])),
+        "relation": list(range(500_000, 500_000 + stats["relations"])),
+    }
+
+    def md5(p):
+        with open(p, "rb") as f:
+            return hashlib.md5(f.read()).hexdigest()
+
+    def task_key(p):
+        # part-{token}-{partition}-{attempt}-{file_no}.zstd.parquet
+        parts = os.path.basename(p).split("-")
+        return os.path.basename(os.path.dirname(p)), parts[2], parts[4]
+
+    got = {task_key(p): md5(p) for p in res["files"]}
+    rows, n_groups = _catalog_rows(
+        path, spark.sparkContext.defaultParallelism, 2, interleave=True)
+    want = {}
+    for gid, entries in enumerate(_group_entries(rows, n_groups)):
+        for _kind, p, _rows, _bytes in write_decoded_blocks(
+            decode_blob_entries(entries, ["node", "relation", "way"], None),
+            str(tmp_path / "kernel"), f"part-t-{gid:05d}-0", "zstd", 3,
+            500 * 1024 * 1024, _ROWS_PER_GROUP, False,
+        ):
+            want[task_key(p)] = md5(p)
+    assert got == want
+
+
+def test_header_only_pbf_scans_and_transcodes_empty(spark, tmp_path):
+    """A PBF with no data blobs is one empty group: the scan is empty and
+    the transcode commits no files but writes ``_SUCCESS``."""
+    from osm_pbf_parquet_spark.sinks.native_sink import transcode_pbf
+
+    from pbf_encoder import encode_header_block, write_blob
+
+    path = str(tmp_path / "header_only.osm.pbf")
+    with open(path, "wb") as f:
+        write_blob(f, "OSMHeader", encode_header_block())
+    assert scan_pbf(spark, path).count() == 0
+    out = str(tmp_path / "empty_out")
+    res = transcode_pbf(spark, path, out)
+    assert res == {"files": [], "rows": {}, "bytes": 0}
+    assert os.listdir(out) == ["_SUCCESS"]
+
+
 def test_file_url_scan_end_to_end(spark, synthetic_pbf):
     """S5 opener: a file:// URL flows through index pass AND executor
     range reads (scan_pbf) identically to the plain path."""
