@@ -16,11 +16,19 @@ canonical wide OSM schema (schema.py). Parity targets in the reference:
 Where the reference runs scalar per-element loops, this kernel decodes the
 packed delta arrays with ``np.cumsum`` and builds Arrow arrays from flat
 buffers + offsets — columnar end-to-end for the dominant dense-node path.
+The reference's three non-dense iterators (plain nodes, ways, relations)
+are one decoder here: a field table (``_PLAIN_NODE``/``_WAY``/
+``_RELATION``) names each message's required scalars and packed lists,
+``_decode_elements`` decodes a whole group field at once, and
+``_decode_elements_scalar`` is its row-at-a-time reference (and the path
+for unpacked repeated fields); both end in ``_finish_elements``.
 
 Semantics honored (format-mandated, see SURVEY §1.3):
 - coordinate degrees = 1e-9 × (offset + granularity × raw)
 - timestamp ms = raw × date_granularity
 - ``visible`` defaults true when absent
+- a missing ``required`` field (element id, plain-node lat/lon) is a
+  ProtoDecodeError; a scalar field sent twice keeps its last value
 - non-dense elements with metadata: missing user → empty string
   (``sink.rs:182-183``); dense nodes without DenseInfo → all metadata null
   (``sink.rs:203-220``).
@@ -28,7 +36,7 @@ Semantics honored (format-mandated, see SURVEY §1.3):
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Iterable, NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -39,11 +47,13 @@ from .proto import (
     Wire2Ranges,
     extract_ranges,
     finish_packed,
+    iter_fields,
     message_fields,
     read_varint,
     repeated_numeric,
     scan_message_batch,
     scan_wire2_fields,
+    zigzag_decode,
     zigzag_i64,
 )
 
@@ -300,12 +310,7 @@ def decode_primitive_block(
         return want is None or col in want
 
     fields = message_fields(payload)
-    # granularity/date_granularity are int32, offsets int64 — negative
-    # values are legal and arrive as unsigned varint bit patterns
-    granularity = _i32(fields.get(17, [100])[0]) or 100
-    lat_offset = _i64(fields.get(19, [0])[0])
-    lon_offset = _i64(fields.get(20, [0])[0])
-    date_granularity = _i32(fields.get(18, [1000])[0]) or 1000
+    geo = block_geometry(fields)
     st = _StringTable(fields.get(1, [None])[0])
 
     out: dict[str, _Columns] = {}
@@ -316,8 +321,7 @@ def decode_primitive_block(
         return out[kind]
 
     try:
-        _decode_groups(fields, kinds, cols_for, st, granularity, lat_offset,
-                       lon_offset, date_granularity, _want)
+        _decode_groups(fields, kinds, cols_for, geo, _want)
     except IndexError as exc:
         # inline varint fast paths index 1-2 bytes past a truncated
         # payload — surface as the module's decode error, not IndexError
@@ -327,63 +331,52 @@ def decode_primitive_block(
     return out
 
 
-def _decode_groups(fields, kinds, cols_for, st, granularity, lat_offset,
-                   lon_offset, date_granularity, _want) -> None:
+class BlockGeometry(NamedTuple):
+    """A PrimitiveBlock's coordinate and date scales (its fields 17-20):
+    degrees = 1e-9 × (offset + granularity × raw)."""
+
+    granularity: int
+    lat_offset: int
+    lon_offset: int
+    date_granularity: int
+
+
+def block_geometry(fields: dict) -> BlockGeometry:
+    """The scales of a PrimitiveBlock from its ``message_fields``.
+    granularity/date_granularity are int32, offsets int64 — negative
+    values are legal and arrive as unsigned varint bit patterns."""
+    return BlockGeometry(
+        _i32(fields.get(17, [100])[0]) or 100,
+        _i64(fields.get(19, [0])[0]),
+        _i64(fields.get(20, [0])[0]),
+        _i32(fields.get(18, [1000])[0]) or 1000,
+    )
+
+
+def _decode_groups(fields, kinds, cols_for, geo: BlockGeometry, _want) -> None:
     for group_payload in fields.get(2, []):
-        # fast path: every PrimitiveGroup field is a wire-2 submessage, so
-        # the tight range scan applies — and hands the way/relation
-        # decoders zero-copy spans (no per-entry memoryview, no re-join)
-        fast = scan_wire2_fields(group_payload)
-        if fast is not None:
-            fnos, ranges = fast
-
-            def sub(fno):
-                m = fnos == fno
-                return Wire2Ranges(ranges.buf, ranges.arr,
-                                   ranges.starts[m], ranges.ends[m])
-
-            if bool((fnos == 1).any()) and _KIND_NODE in kinds:  # plain nodes
-                _decode_plain_nodes(
-                    sub(1), cols_for(_KIND_NODE), st, granularity, lat_offset,
-                    lon_offset, date_granularity, _want,
-                )
-            if bool((fnos == 2).any()) and _KIND_NODE in kinds:  # dense nodes
-                i = int(np.flatnonzero(fnos == 2)[0])  # first occurrence,
-                # matching the general path's group[2][0]
+        # every PrimitiveGroup entry is a wire-2 submessage: one range scan
+        # hands the element decoders zero-copy spans (no per-entry
+        # memoryview, no re-join)
+        fnos, ranges = scan_wire2_fields(group_payload)
+        for fno in (1, 2, 3, 4):  # nodes, dense, ways, relations
+            spec = _GROUP_ELEMENTS.get(fno)
+            kind = spec.kind if spec is not None else _KIND_NODE
+            m = fnos == fno
+            if kind not in kinds or not m.any():
+                continue
+            if spec is None:  # DenseNodes: the first occurrence only
+                i = int(np.flatnonzero(m)[0])
                 dense = memoryview(ranges.buf)[
                     int(ranges.starts[i]):int(ranges.ends[i])
                 ]
-                _decode_dense_nodes(
-                    dense, cols_for(_KIND_NODE), granularity, lat_offset,
-                    lon_offset, date_granularity, _want,
+                _decode_dense_nodes(dense, cols_for(kind), *geo, _want)
+            else:
+                _decode_elements(
+                    spec, Wire2Ranges(ranges.buf, ranges.arr,
+                                      ranges.starts[m], ranges.ends[m]),
+                    cols_for(kind), geo, _want,
                 )
-            if bool((fnos == 3).any()) and _KIND_WAY in kinds:
-                _decode_ways(
-                    sub(3), cols_for(_KIND_WAY), granularity, lat_offset,
-                    lon_offset, date_granularity, _want,
-                )
-            if bool((fnos == 4).any()) and _KIND_RELATION in kinds:
-                _decode_relations(sub(4), cols_for(_KIND_RELATION),
-                                  date_granularity, _want)
-            continue
-        group = message_fields(group_payload)
-        if 1 in group and _KIND_NODE in kinds:  # plain nodes
-            _decode_plain_nodes(
-                group[1], cols_for(_KIND_NODE), st, granularity, lat_offset,
-                lon_offset, date_granularity, _want,
-            )
-        if 2 in group and _KIND_NODE in kinds:  # dense nodes
-            _decode_dense_nodes(
-                group[2][0], cols_for(_KIND_NODE), granularity, lat_offset,
-                lon_offset, date_granularity, _want,
-            )
-        if 3 in group and _KIND_WAY in kinds:
-            _decode_ways(
-                group[3], cols_for(_KIND_WAY), granularity, lat_offset,
-                lon_offset, date_granularity, _want,
-            )
-        if 4 in group and _KIND_RELATION in kinds:
-            _decode_relations(group[4], cols_for(_KIND_RELATION), date_granularity, _want)
         # field 5 (changesets) is legacy/unused — ignored, as in the
         # reference (osmpbf/src/block.rs groups only nodes/dense/ways/rels).
 
@@ -631,45 +624,157 @@ def _append_meta_arrays(c: _Columns, arrays) -> None:
     c.visible.append(visible); c.visible_valid.append(visible_valid)
 
 
-def _decode_plain_nodes(node_payloads, c: _Columns, st, granularity, lat_offset,
-                        lon_offset, date_granularity, _want) -> None:
-    """Repeated Node messages (osmformat.proto:184-195)."""
-    n0 = len(node_payloads)
-    ids = np.empty(n0, dtype=np.int64)
-    lats = np.empty(n0, dtype=np.float64)
-    lons = np.empty(n0, dtype=np.float64)
-    want_tags = _want("tags")
-    want_meta = any(map(_want, ("changeset", "timestamp", "uid", "user", "version", "visible")))
+class _Element(NamedTuple):
+    """One row of the field table: how a non-dense element message
+    (osmformat.proto:184-262) fills ``_Columns``. Every kind also has
+    packed tag keys/values (fields 2/3) and an ``Info`` (field 4)."""
+
+    kind: str
+    flag: str  # the ``_Columns`` flag the kind sets
+    # required varint scalars (field, zigzag): id, then lat/lon for nodes
+    scalars: tuple
+    column: str | None  # the list column ``lists`` fill
+    counts: str | None  # its per-row counts attribute
+    # packed lists (field, attribute, zigzag, delta); counts come from the first
+    lists: tuple
+
+    @property
+    def repeated(self) -> tuple:
+        """Every packed field of the message."""
+        return (2, 3) + tuple(fno for fno, *_ in self.lists)
+
+
+_PLAIN_NODE = _Element(_KIND_NODE, "has_coords", ((1, True), (8, True), (9, True)),
+                       None, None, ())
+_WAY = _Element(_KIND_WAY, "has_nds", ((1, False),), "nds", "nd_counts",
+                ((8, "nd_refs", True, True),))
+_RELATION = _Element(_KIND_RELATION, "has_members", ((1, False),), "members",
+                     "mem_counts", ((9, "mem_refs", True, True),
+                                    (8, "mem_roles", False, False),
+                                    (10, "mem_types", False, False)))
+# PrimitiveGroup field → its element message; field 2 (DenseNodes) has
+# its own decoder
+_GROUP_ELEMENTS = {1: _PLAIN_NODE, 3: _WAY, 4: _RELATION}
+_META_COLUMNS = ("changeset", "timestamp", "uid", "user", "version", "visible")
+
+
+def _decode_elements(spec: _Element, payloads, c: _Columns,
+                     geo: BlockGeometry, _want) -> None:
+    """Every element of one group field at once: ``scan_message_batch``
+    lane-frontier-parses all messages' top-level fields in ~6 numpy
+    passes, then each packed field and the Info metadata decode in one
+    vectorized pass across the group (per-element delta reset via
+    segmented cumsum). LocationsOnWays lat/lon arrays (way fields 9/10)
+    are not emitted in the wide schema (parity: the reference sink
+    ignores them too, sink.rs:233-234); ``decode_way_locations`` reads
+    them.
+
+    The rare legal-but-unpacked encoding (a repeated field as individual
+    wire-0 varints) drops the group to ``_decode_elements_scalar``."""
+    arr, scalars, (rf, rl, rs, rn) = scan_message_batch(payloads)
+    if bool(np.isin(scalars[0], spec.repeated).any()):
+        return _decode_elements_scalar(spec, payloads, c, geo, _want)
+    n0 = len(payloads)
+
+    def packed(fno: int, zigzag: bool, delta: bool):
+        m = rf == fno
+        blob, nbytes = extract_ranges(arr, rs[m], rn[m], rl[m], n0)
+        return finish_packed(blob, nbytes, zigzag=zigzag, delta=delta)
+
+    def info() -> _InfoBatch:
+        m = rf == 4
+        return _InfoBatch.from_ranges(arr, rs[m], rn[m], rl[m], n0)
+
+    _finish_elements(spec, c, n0, scalars, packed, info, geo, _want)
+
+
+def _decode_elements_scalar(spec: _Element, payloads, c: _Columns,
+                            geo: BlockGeometry, _want) -> None:
+    """Row-at-a-time decode of the same group: the only path for repeated
+    fields sent unpacked (proto2 readers must accept both encodings;
+    planet files never emit it), and the reference the vectorized
+    decoder is tested against."""
+    n0 = len(payloads)
+    lists = {fno: PackedBatch(n0) for fno in spec.repeated}
     info_b = _InfoBatch(n0)
-    tag_counts = np.zeros(n0, dtype=np.int64)
-    tag_keys: list[np.ndarray] = []
-    tag_vals: list[np.ndarray] = []
-    for i, payload in enumerate(node_payloads):
-        f = message_fields(payload)
-        ids[i] = zigzag_i64(f[1][0])
-        lats[i] = (lat_offset + granularity * zigzag_i64(f[8][0])) * NANO
-        lons[i] = (lon_offset + granularity * zigzag_i64(f[9][0])) * NANO
-        if want_tags and 2 in f:
-            keys = repeated_numeric(f[2], signed_zigzag=False)
-            vals = repeated_numeric(f.get(3, []), signed_zigzag=False)
-            tag_counts[i] = keys.size
-            tag_keys.append(keys)
-            tag_vals.append(vals)
-        if want_meta and 4 in f:
-            info_b.add(i, f[4][0])
-    c.has_coords = True
+    sf: list[int] = []
+    sl: list[int] = []
+    sv: list[int] = []
+    for i, payload in enumerate(payloads):
+        for fno, wire, val in iter_fields(payload):
+            batch = lists.get(fno)
+            if wire == 0:
+                if batch is not None:
+                    batch.add_scalar(i, val)
+                else:
+                    sf.append(fno); sl.append(i); sv.append(val)
+            elif wire == 2:
+                if batch is not None:
+                    batch.add(i, val)
+                elif fno == 4:
+                    info_b.add(i, val)
+    scalars = (np.array(sf, dtype=np.int64), np.array(sl, dtype=np.int64),
+               np.array(sv, dtype=np.uint64))
+    _finish_elements(
+        spec, c, n0, scalars,
+        lambda fno, zigzag, delta: lists[fno].finish(zigzag=zigzag, delta=delta),
+        lambda: info_b, geo, _want,
+    )
+
+
+def _finish_elements(spec: _Element, c: _Columns, n0: int, scalars, packed,
+                     info, geo: BlockGeometry, _want) -> None:
+    """The tail both element decoders share. ``scalars`` is every wire-0
+    occurrence as (field, element, uint64 value) arrays, each element's
+    in message order; ``packed(fno, zigzag, delta)`` decodes one packed
+    field across the group → (values, per-element counts); ``info()`` →
+    the group's ``_InfoBatch``."""
+    sf, sl, sv = scalars
+    required = []
+    for fno, zigzag in spec.scalars:
+        m = sf == fno
+        seen = np.zeros(n0, dtype=bool)
+        seen[sl[m]] = True
+        if not seen.all():
+            raise ProtoDecodeError(f"{spec.kind} without required field {fno}")
+        raw = np.empty(n0, dtype=np.uint64)
+        raw[sl[m]] = sv[m]  # assigned in order: the last occurrence wins
+        required.append(zigzag_decode(raw) if zigzag else raw.astype(np.int64))
+    setattr(c, spec.flag, True)
     c.n += n0
-    c.ids.append(ids)
-    c.lat.append(lats)
-    c.lon.append(lons)
-    c.tag_counts.append(tag_counts)
-    if tag_keys:
-        c.tag_keys.append(np.concatenate(tag_keys))
-        c.tag_vals.append(np.concatenate(tag_vals))
-    c.nd_counts.append(np.zeros(n0, dtype=np.int64))
-    c.mem_counts.append(np.zeros(n0, dtype=np.int64))
-    if want_meta:
-        _append_meta_arrays(c, info_b.finish(date_granularity))
+    c.ids.append(required[0])
+    if spec is _PLAIN_NODE:
+        c.lat.append((geo.lat_offset + geo.granularity * required[1]) * NANO)
+        c.lon.append((geo.lon_offset + geo.granularity * required[2]) * NANO)
+    else:
+        c.lat.append(np.full(n0, np.nan))
+        c.lon.append(np.full(n0, np.nan))
+    zeros = np.zeros(n0, dtype=np.int64)
+    if _want("tags"):
+        tag_keys, tag_counts = packed(2, False, False)
+        tag_vals, val_counts = packed(3, False, False)
+        if not np.array_equal(tag_counts, val_counts):
+            raise ProtoDecodeError(f"{spec.kind} tag keys and values differ in length")
+        c.tag_counts.append(tag_counts)
+        if tag_keys.size:
+            c.tag_keys.append(tag_keys)
+            c.tag_vals.append(tag_vals)
+    else:
+        c.tag_counts.append(zeros)
+    counts = zeros
+    if spec.lists and _want(spec.column):
+        decoded = [packed(fno, zigzag, delta)
+                   for fno, _attr, zigzag, delta in spec.lists]
+        counts = decoded[0][1]
+        if any(not np.array_equal(n, counts) for _vals, n in decoded[1:]):
+            raise ProtoDecodeError(f"{spec.kind} {spec.column} lists differ in length")
+        if decoded[0][0].size:
+            for (_fno, attr, *_), (vals, _n) in zip(spec.lists, decoded):
+                getattr(c, attr).append(vals)
+    c.nd_counts.append(counts if spec.counts == "nd_counts" else zeros)
+    c.mem_counts.append(counts if spec.counts == "mem_counts" else zeros)
+    if any(map(_want, _META_COLUMNS)):
+        _append_meta_arrays(c, info().finish(geo.date_granularity))
     else:
         _append_absent_meta(c, n0)
 
@@ -801,167 +906,6 @@ def _dense_tags(kv: np.ndarray, n0: int, c: _Columns) -> None:
     c.tag_vals.append(kv[key_pos + 1])
 
 
-def _decode_ways(way_payloads, c: _Columns, granularity, lat_offset, lon_offset,
-                 date_granularity, _want) -> None:
-    """Repeated Way messages (osmformat.proto:222-241), fully vectorized:
-    ``scan_message_batch`` lane-frontier-parses ALL ways' top-level fields
-    in ~6 numpy passes, then each packed field (refs/keys/vals) and the
-    Info metadata decode in one vectorized pass across the whole group
-    (per-way delta reset via segmented cumsum). LocationsOnWays lat/lon
-    arrays (fields 9/10) are not emitted in the wide schema (parity: the
-    reference sink ignores them too, sink.rs:233-234); they're validated
-    in tests via decode_way_locations().
-
-    The rare legal-but-unpacked encoding (repeated fields as individual
-    wire-0 varints) drops to the scalar row scan below for exact parity.
-    """
-    n0 = len(way_payloads)
-    want_nds = _want("nds")
-    want_tags = _want("tags")
-    want_meta = any(map(_want, ("changeset", "timestamp", "uid", "user",
-                                "version", "visible")))
-    arr, (sf, sl, sv), (rf, rl, rs, rn) = scan_message_batch(way_payloads)
-    if sf.size and bool(np.isin(sf, (2, 3, 8)).any()):
-        return _decode_ways_scalar(
-            way_payloads, c, granularity, lat_offset, lon_offset,
-            date_granularity, _want,
-        )
-    ids = np.zeros(n0, dtype=np.int64)
-    m_id = sf == 1
-    ids[sl[m_id]] = sv[m_id].astype(np.int64)
-
-    def _packed(fno: int, zigzag: bool = False, delta: bool = False):
-        m = rf == fno
-        blob, nbytes = extract_ranges(arr, rs[m], rn[m], rl[m], n0)
-        return finish_packed(blob, nbytes, zigzag=zigzag, delta=delta)
-
-    if want_nds:
-        nd_refs, nd_counts = _packed(8, zigzag=True, delta=True)
-    else:
-        nd_refs, nd_counts = _EMPTY_I64, np.zeros(n0, dtype=np.int64)
-    if want_tags:
-        tag_keys, tag_counts = _packed(2)
-        tag_vals, _vc = _packed(3)
-    else:
-        tag_keys = tag_vals = _EMPTY_I64
-        tag_counts = np.zeros(n0, dtype=np.int64)
-    c.has_nds = True
-    c.n += n0
-    c.ids.append(ids)
-    c.lat.append(np.full(n0, np.nan))
-    c.lon.append(np.full(n0, np.nan))
-    c.tag_counts.append(tag_counts)
-    if tag_keys.size:
-        c.tag_keys.append(tag_keys)
-        c.tag_vals.append(tag_vals)
-    c.nd_counts.append(nd_counts)
-    if nd_refs.size:
-        c.nd_refs.append(nd_refs)
-    c.mem_counts.append(np.zeros(n0, dtype=np.int64))
-    if want_meta:
-        m = rf == 4
-        info_b = _InfoBatch.from_ranges(arr, rs[m], rn[m], rl[m], n0)
-        _append_meta_arrays(c, info_b.finish(date_granularity))
-    else:
-        _append_absent_meta(c, n0)
-
-
-def _decode_ways_scalar(way_payloads, c: _Columns, granularity, lat_offset,
-                        lon_offset, date_granularity, _want) -> None:
-    """Row-at-a-time fallback for groups using unpacked repeated-field
-    encoding (proto2 readers must accept both; planet files never emit
-    it). Inline 1-2 byte varint fast paths keep it tolerable."""
-    n0 = len(way_payloads)
-    ids = np.empty(n0, dtype=np.int64)
-    want_nds = _want("nds")
-    want_tags = _want("tags")
-    want_meta = any(map(_want, ("changeset", "timestamp", "uid", "user", "version", "visible")))
-    refs_b = PackedBatch(n0)
-    keys_b = PackedBatch(n0)
-    vals_b = PackedBatch(n0)
-    info_b = _InfoBatch(n0)
-    for i, payload in enumerate(way_payloads):
-        view = memoryview(payload)
-        pos = 0
-        end = len(view)
-        wid = 0
-        while pos < end:
-            # inline 1-byte fast path: field keys for fno ≤ 15 are always
-            # a single byte (key = fno<<3 | wire ≤ 0x7F)
-            key = view[pos]
-            if key < 0x80:
-                pos += 1
-            else:
-                key, pos = read_varint(view, pos)
-            fno = key >> 3
-            wire = key & 7
-            if wire == 2:
-                # lengths < 16KB fit 1-2 bytes — inline both
-                ln = view[pos]
-                if ln < 0x80:
-                    pos += 1
-                else:
-                    b1 = view[pos + 1]
-                    if b1 < 0x80:
-                        ln = (ln & 0x7F) | (b1 << 7)
-                        pos += 2
-                    else:
-                        ln, pos = read_varint(view, pos)
-                nxt = pos + ln
-                if nxt > end:
-                    raise ProtoDecodeError("truncated length-delimited field")
-                if fno == 8:
-                    if want_nds:
-                        refs_b.add(i, view[pos:nxt])
-                elif fno == 2:
-                    if want_tags:
-                        keys_b.add(i, view[pos:nxt])
-                elif fno == 3:
-                    if want_tags:
-                        vals_b.add(i, view[pos:nxt])
-                elif fno == 4:
-                    if want_meta:
-                        info_b.add(i, view[pos:nxt])
-                pos = nxt
-            elif wire == 0:
-                val, pos = read_varint(view, pos)
-                if fno == 1:
-                    wid = val
-                elif fno == 8 and want_nds:
-                    refs_b.add_scalar(i, val)
-                elif fno == 2 and want_tags:
-                    keys_b.add_scalar(i, val)
-                elif fno == 3 and want_tags:
-                    vals_b.add_scalar(i, val)
-            elif wire == 1:
-                pos += 8
-            elif wire == 5:
-                pos += 4
-            else:
-                raise ProtoDecodeError(f"unsupported wire type {wire}")
-        ids[i] = _i64(wid)  # int64 plain varint
-    nd_refs, nd_counts = refs_b.finish(zigzag=True, delta=True)
-    tag_keys, tag_counts = keys_b.finish()
-    tag_vals, _vc = vals_b.finish()
-    c.has_nds = True
-    c.n += n0
-    c.ids.append(ids)
-    c.lat.append(np.full(n0, np.nan))
-    c.lon.append(np.full(n0, np.nan))
-    c.tag_counts.append(tag_counts)
-    if tag_keys.size:
-        c.tag_keys.append(tag_keys)
-        c.tag_vals.append(tag_vals)
-    c.nd_counts.append(nd_counts)
-    if nd_refs.size:
-        c.nd_refs.append(nd_refs)
-    c.mem_counts.append(np.zeros(n0, dtype=np.int64))
-    if want_meta:
-        _append_meta_arrays(c, info_b.finish(date_granularity))
-    else:
-        _append_absent_meta(c, n0)
-
-
 def decode_way_locations(way_payload, granularity=100, lat_offset=0, lon_offset=0):
     """LocationsOnWays per-way coordinates (optional feature) — returns
     (refs, lat_degrees, lon_degrees). Reference:
@@ -973,177 +917,12 @@ def decode_way_locations(way_payload, granularity=100, lat_offset=0, lon_offset=
     return refs, lat, lon
 
 
-def _decode_relations(rel_payloads, c: _Columns, date_granularity, _want) -> None:
-    """Repeated Relation messages (osmformat.proto:243-262). Same
-    lane-frontier vectorized strategy as ``_decode_ways`` (memids with
-    per-relation delta reset; roles/types zipped parallel arrays)."""
-    n0 = len(rel_payloads)
-    want_members = _want("members")
-    want_tags = _want("tags")
-    want_meta = any(map(_want, ("changeset", "timestamp", "uid", "user",
-                                "version", "visible")))
-    arr, (sf, sl, sv), (rf, rl, rs, rn) = scan_message_batch(rel_payloads)
-    if sf.size and bool(np.isin(sf, (2, 3, 8, 9, 10)).any()):
-        return _decode_relations_scalar(rel_payloads, c, date_granularity, _want)
-    ids = np.zeros(n0, dtype=np.int64)
-    m_id = sf == 1
-    ids[sl[m_id]] = sv[m_id].astype(np.int64)
-
-    def _packed(fno: int, zigzag: bool = False, delta: bool = False):
-        m = rf == fno
-        blob, nbytes = extract_ranges(arr, rs[m], rn[m], rl[m], n0)
-        return finish_packed(blob, nbytes, zigzag=zigzag, delta=delta)
-
-    if want_members:
-        mem_refs, mem_counts = _packed(9, zigzag=True, delta=True)
-        mem_roles, _rc = _packed(8)
-        mem_types, _tc = _packed(10)
-    else:
-        mem_refs = mem_roles = mem_types = _EMPTY_I64
-        mem_counts = np.zeros(n0, dtype=np.int64)
-    if want_tags:
-        tag_keys, tag_counts = _packed(2)
-        tag_vals, _vc = _packed(3)
-    else:
-        tag_keys = tag_vals = _EMPTY_I64
-        tag_counts = np.zeros(n0, dtype=np.int64)
-    c.has_members = True
-    c.n += n0
-    c.ids.append(ids)
-    c.lat.append(np.full(n0, np.nan))
-    c.lon.append(np.full(n0, np.nan))
-    c.tag_counts.append(tag_counts)
-    if tag_keys.size:
-        c.tag_keys.append(tag_keys)
-        c.tag_vals.append(tag_vals)
-    c.nd_counts.append(np.zeros(n0, dtype=np.int64))
-    c.mem_counts.append(mem_counts)
-    if mem_refs.size:
-        c.mem_refs.append(mem_refs)
-        c.mem_roles.append(mem_roles)
-        c.mem_types.append(mem_types)
-    if want_meta:
-        m = rf == 4
-        info_b = _InfoBatch.from_ranges(arr, rs[m], rn[m], rl[m], n0)
-        _append_meta_arrays(c, info_b.finish(date_granularity))
-    else:
-        _append_absent_meta(c, n0)
-
-
-def _decode_relations_scalar(rel_payloads, c: _Columns, date_granularity, _want) -> None:
-    """Row-at-a-time fallback for unpacked repeated-field encodings (see
-    ``_decode_ways_scalar``)."""
-    n0 = len(rel_payloads)
-    ids = np.empty(n0, dtype=np.int64)
-    want_members = _want("members")
-    want_tags = _want("tags")
-    want_meta = any(map(_want, ("changeset", "timestamp", "uid", "user", "version", "visible")))
-    memids_b = PackedBatch(n0)
-    roles_b = PackedBatch(n0)
-    types_b = PackedBatch(n0)
-    keys_b = PackedBatch(n0)
-    vals_b = PackedBatch(n0)
-    info_b = _InfoBatch(n0)
-    for i, payload in enumerate(rel_payloads):
-        view = memoryview(payload)
-        pos = 0
-        end = len(view)
-        rid = 0
-        while pos < end:
-            key = view[pos]
-            if key < 0x80:
-                pos += 1
-            else:
-                key, pos = read_varint(view, pos)
-            fno = key >> 3
-            wire = key & 7
-            if wire == 2:
-                ln = view[pos]
-                if ln < 0x80:
-                    pos += 1
-                else:
-                    b1 = view[pos + 1]
-                    if b1 < 0x80:
-                        ln = (ln & 0x7F) | (b1 << 7)
-                        pos += 2
-                    else:
-                        ln, pos = read_varint(view, pos)
-                nxt = pos + ln
-                if nxt > end:
-                    raise ProtoDecodeError("truncated length-delimited field")
-                if fno == 9:
-                    if want_members:
-                        memids_b.add(i, view[pos:nxt])
-                elif fno == 8:
-                    if want_members:
-                        roles_b.add(i, view[pos:nxt])
-                elif fno == 10:
-                    if want_members:
-                        types_b.add(i, view[pos:nxt])
-                elif fno == 2:
-                    if want_tags:
-                        keys_b.add(i, view[pos:nxt])
-                elif fno == 3:
-                    if want_tags:
-                        vals_b.add(i, view[pos:nxt])
-                elif fno == 4:
-                    if want_meta:
-                        info_b.add(i, view[pos:nxt])
-                pos = nxt
-            elif wire == 0:
-                val, pos = read_varint(view, pos)
-                if fno == 1:
-                    rid = val
-                elif want_members and fno == 9:
-                    memids_b.add_scalar(i, val)
-                elif want_members and fno == 8:
-                    roles_b.add_scalar(i, val)
-                elif want_members and fno == 10:
-                    types_b.add_scalar(i, val)
-                elif want_tags and fno == 2:
-                    keys_b.add_scalar(i, val)
-                elif want_tags and fno == 3:
-                    vals_b.add_scalar(i, val)
-            elif wire == 1:
-                pos += 8
-            elif wire == 5:
-                pos += 4
-            else:
-                raise ProtoDecodeError(f"unsupported wire type {wire}")
-        ids[i] = _i64(rid)
-    mem_refs, mem_counts = memids_b.finish(zigzag=True, delta=True)
-    mem_roles, _rc = roles_b.finish()
-    mem_types, _tc = types_b.finish()
-    tag_keys, tag_counts = keys_b.finish()
-    tag_vals, _vc = vals_b.finish()
-    c.has_members = True
-    c.n += n0
-    c.ids.append(ids)
-    c.lat.append(np.full(n0, np.nan))
-    c.lon.append(np.full(n0, np.nan))
-    c.tag_counts.append(tag_counts)
-    if tag_keys.size:
-        c.tag_keys.append(tag_keys)
-        c.tag_vals.append(tag_vals)
-    c.nd_counts.append(np.zeros(n0, dtype=np.int64))
-    c.mem_counts.append(mem_counts)
-    if mem_refs.size:
-        c.mem_refs.append(mem_refs)
-        c.mem_roles.append(mem_roles)
-        c.mem_types.append(mem_types)
-    if want_meta:
-        _append_meta_arrays(c, info_b.finish(date_granularity))
-    else:
-        _append_absent_meta(c, n0)
-
-
 # --- Arrow assembly ----------------------------------------------------------
 
 
 def columns_to_arrow(
     per_kind: dict[str, _Columns],
     columns: list[str] | None = None,
-    timestamp_unit: str = "us",
 ) -> pa.RecordBatch | None:
     """Assemble decoded accumulators into one wide RecordBatch (all kinds
     unioned, ``type`` as a column). Returns None when empty."""
@@ -1155,7 +934,7 @@ def columns_to_arrow(
         c = per_kind.get(kind)
         if c is None or c.n == 0:
             continue
-        batches.append(_kind_batch(kind, [c], schema, timestamp_unit))
+        batches.append(_kind_batch(kind, [c], schema))
     if not batches:
         return None
     if len(batches) == 1:
@@ -1173,11 +952,11 @@ def kind_table(kind: str, blocks: list[_Columns]) -> pa.Table:
 
     schema = osm_arrow_schema()
     schema = schema.remove(schema.get_field_index("type"))
-    return pa.Table.from_batches([_kind_batch(kind, blocks, schema, "us")])
+    return pa.Table.from_batches([_kind_batch(kind, blocks, schema)])
 
 
-def _kind_batch(kind: str, blocks: list[_Columns], schema: pa.Schema,
-                timestamp_unit: str) -> pa.RecordBatch:
+def _kind_batch(kind: str, blocks: list[_Columns],
+                schema: pa.Schema) -> pa.RecordBatch:
     """The one assembly path: ``blocks`` of one kind → a RecordBatch in
     ``schema``. Each block's string tables are concatenated and its
     string indices shifted by the table's offset in the concatenation
@@ -1212,7 +991,7 @@ def _kind_batch(kind: str, blocks: list[_Columns], schema: pa.Schema,
             arrays.append(_masked_int(blocks, "changeset", "changeset_valid", n, pa.int64()))
         elif name == "timestamp":
             ts = _masked_int(blocks, "ts_ms", "ts_valid", n, pa.int64())
-            arrays.append(ts.cast(pa.timestamp("ms")).cast(pa.timestamp(timestamp_unit)))
+            arrays.append(ts.cast(pa.timestamp("ms")).cast(field.type))
         elif name == "uid":
             arrays.append(_masked_int(blocks, "uid", "uid_valid", n, pa.int32()))
         elif name == "user":
@@ -1333,8 +1112,7 @@ def parse_block_to_batch(
     payload: bytes,
     kinds: Iterable[str] = ALL_KINDS,
     columns: list[str] | None = None,
-    timestamp_unit: str = "us",
 ) -> pa.RecordBatch | None:
     """One-shot: PrimitiveBlock payload → RecordBatch (or None if empty)."""
     per_kind = decode_primitive_block(payload, kinds=kinds, columns=columns)
-    return columns_to_arrow(per_kind, columns=columns, timestamp_unit=timestamp_unit)
+    return columns_to_arrow(per_kind, columns=columns)

@@ -87,7 +87,7 @@ def q_osm_loc_on_ways(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _kern(batches):
         from ..pbf.blob import decompress_blob, read_blob_at
-        from ..pbf.decode import decode_way_locations
+        from ..pbf.decode import block_geometry, decode_way_locations
         from ..pbf.io import open_binary
         from ..pbf.proto import message_fields
 
@@ -101,14 +101,12 @@ def q_osm_loc_on_ways(spark: SparkSession, sf_dir: str) -> DataFrame:
                 with open_binary(p) as f:
                     payload = decompress_blob(read_blob_at(f, off, sz))
                 fields = message_fields(payload)
-                gran = fields.get(17, [100])[0]
-                lat_off = fields.get(19, [0])[0]
-                lon_off = fields.get(20, [0])[0]
+                geo = block_geometry(fields)
                 for group in fields.get(2, []):
                     for wp in message_fields(group).get(3, []):
                         wid = message_fields(wp)[1][0]
                         refs, lat, lon = decode_way_locations(
-                            wp, gran, lat_off, lon_off
+                            wp, geo.granularity, geo.lat_offset, geo.lon_offset
                         )
                         for i, (r, la, lo) in enumerate(zip(refs, lat, lon)):
                             rows["way_id"].append(wid)

@@ -77,7 +77,7 @@ PA_MEMBERS_TYPE = pa.list_(
 PA_TAGS_TYPE = pa.map_(pa.string(), pa.string())
 
 
-def osm_arrow_schema(timestamp_unit: str = "us") -> pa.Schema:
+def osm_arrow_schema() -> pa.Schema:
     """Arrow schema for kernel-produced batches.
 
     Spark's Arrow bridge expects microsecond timestamps for
@@ -94,7 +94,7 @@ def osm_arrow_schema(timestamp_unit: str = "us") -> pa.Schema:
             pa.field("nds", PA_NDS_TYPE),
             pa.field("members", PA_MEMBERS_TYPE),
             pa.field("changeset", pa.int64()),
-            pa.field("timestamp", pa.timestamp(timestamp_unit)),
+            pa.field("timestamp", pa.timestamp("us")),
             pa.field("uid", pa.int32()),
             pa.field("user", pa.string()),
             pa.field("version", pa.int32()),

@@ -49,13 +49,6 @@ from ..pbf.decode import (
 from ..pbf.proto import ProtoDecodeError
 from ..schema import OSM_COLUMNS, pruned_schema
 
-# ~16 blobs ≈ 256MB of input per task: large enough to amortize file-open
-# and Python startup, small enough for executor-memory headroom (blobs cap
-# at 32MB uncompressed each, blob.rs:25). Used when the caller pins
-# blobs_per_task explicitly; the default auto mode sizes groups off the
-# cluster's parallelism instead (see _n_groups).
-DEFAULT_BLOBS_PER_TASK = 16
-
 
 def _n_groups(n_blobs: int, parallelism: int, blobs_per_task: int | None) -> int:
     """Task-group count. Explicit ``blobs_per_task`` wins; otherwise ONE
@@ -227,14 +220,18 @@ def pbf_blob_catalog(spark: SparkSession, path: str, blobs_per_task: int | None 
 
 
 def normalize_kinds_columns(kinds, columns):
-    """Validate kinds and project the column list onto the canonical
-    order with id/type always included (shared by ``scan_pbf`` and the
-    ``osmpbf`` DataSource so their pushdown semantics cannot drift)."""
+    """Validate kinds and columns and project the column list onto the
+    canonical order with id/type always included (shared by ``scan_pbf``
+    and the ``osmpbf`` DataSource so their pushdown semantics cannot
+    drift)."""
     kinds = frozenset(kinds)
     bad = kinds - ALL_KINDS
     if bad:
         raise ValueError(f"unknown kinds: {sorted(bad)}")
     if columns is not None:
+        bad = set(columns) - set(OSM_COLUMNS)
+        if bad:
+            raise ValueError(f"unknown columns: {sorted(bad)}")
         # id/type always needed downstream of a typed union
         columns = [c for c in OSM_COLUMNS if c in set(columns) | {"id", "type"}]
     return sorted(kinds), columns

@@ -63,6 +63,27 @@ def test_load_matches_scan_pbf_synthetic(spark, tmp_path):
         assert got == rows(ds)
 
 
+def test_unknown_columns_raise_in_both_readers(spark, tmp_path):
+    """One column check for both readers: ``scan_pbf`` used to drop an
+    unknown column name silently where the DataSource raised."""
+    from pbf_encoder import write_synthetic_pbf
+
+    from osm_pbf_parquet_spark.sources.pbf_source import normalize_kinds_columns
+
+    assert normalize_kinds_columns(["node"], ["lat", "id"]) == (
+        ["node"], ["id", "type", "lat"])
+    with pytest.raises(ValueError, match=r"unknown columns: \['bogus'\]"):
+        normalize_kinds_columns(["node"], ["id", "lat", "bogus"])
+    pbf = str(tmp_path / "syn.osm.pbf")
+    write_synthetic_pbf(pbf, n_nodes=50, n_ways=5, n_rels=1)
+    with pytest.raises(ValueError, match="unknown columns"):
+        scan_pbf(spark, pbf, columns=["id", "bogus"])
+    with pytest.raises(Exception, match="unknown columns"):
+        spark.read.format("osmpbf").option("columns", "id,bogus").load(pbf).schema
+    ds = spark.read.format("osmpbf").option("columns", " lat , id").load(pbf)
+    assert ds.columns == ["id", "type", "lat"]
+
+
 def test_type_filter_pushdown_count(spark):
     ds = spark.read.format("osmpbf").load(FIXTURE)
     assert ds.filter("type = 'node'").count() == 3

@@ -299,18 +299,17 @@ def test_info_batch_fallback_on_non_varint_field():
 
 
 def _data_group_payloads(path, field_no):
-    """Collect (payload_list, date_granularity) for each group carrying
-    repeated field ``field_no`` (3=ways, 4=relations) in a file."""
+    """Collect (payload_list, block_geometry) for each group carrying
+    repeated field ``field_no`` (1=plain nodes, 3=ways, 4=relations)."""
     out = []
     for info, raw in B.iter_blobs(path):
         if info.blob_type != B.TYPE_DATA:
             continue
         fields = P.message_fields(B.decompress_blob(raw))
-        dg = fields.get(18, [1000])[0] or 1000
         for group_payload in fields.get(2, []):
             group = P.message_fields(group_payload)
             if field_no in group:
-                out.append((group[field_no], dg))
+                out.append((group[field_no], D.block_geometry(fields)))
     return out
 
 
@@ -318,52 +317,56 @@ def _cols_snapshot(c):
     cat = lambda chunks: np.concatenate([np.asarray(x) for x in chunks]) if chunks else np.empty(0)
     return {
         name: cat(getattr(c, name))
-        for name in ("ids", "tag_counts", "tag_keys", "tag_vals", "nd_counts",
-                     "nd_refs", "mem_counts", "mem_refs", "mem_roles",
-                     "mem_types", "changeset", "ts_ms", "uid", "user_sid",
-                     "version", "visible")
+        for name in ("ids", "lat", "lon", "tag_counts", "tag_keys",
+                     "tag_vals", "nd_counts", "nd_refs", "mem_counts",
+                     "mem_refs", "mem_roles", "mem_types", "changeset",
+                     "ts_ms", "uid", "user_sid", "version", "visible")
     }
 
 
-def test_vectorized_way_decode_matches_scalar():
-    """The lane-frontier way decoder must agree field-for-field with the
-    row-at-a-time fallback on real multi-way groups."""
-    import sys, os, tempfile
-    sys.path.insert(0, os.path.dirname(__file__))
-    from pbf_encoder import write_synthetic_pbf
-
-    path = tempfile.mktemp(suffix=".osm.pbf")
-    write_synthetic_pbf(path, n_nodes=300, n_ways=200, n_rels=40,
-                        nodes_per_block=64)
-    try:
-        groups = _data_group_payloads(path, 3)
-        assert groups, "synthetic file must contain way groups"
-        want = lambda col: True
-        for payloads, dg in groups:
-            cv, cs = D._Columns(), D._Columns()
-            D._decode_ways(payloads, cv, 100, 0, 0, dg, want)
-            D._decode_ways_scalar(payloads, cs, 100, 0, 0, dg, want)
-            a, b = _cols_snapshot(cv), _cols_snapshot(cs)
-            for name in a:
-                assert np.array_equal(a[name], b[name]), f"way field {name}"
-        for payloads, dg in _data_group_payloads(path, 4):
-            cv, cs = D._Columns(), D._Columns()
-            D._decode_relations(payloads, cv, dg, want)
-            D._decode_relations_scalar(payloads, cs, dg, want)
-            a, b = _cols_snapshot(cv), _cols_snapshot(cs)
-            for name in a:
-                assert np.array_equal(a[name], b[name]), f"rel field {name}"
-    finally:
-        import os as _os
-        _os.unlink(path)
+def _assert_decoders_agree(spec, payloads, geo, want=lambda col: True):
+    cv, cs = D._Columns(), D._Columns()
+    D._decode_elements(spec, payloads, cv, geo, want)
+    D._decode_elements_scalar(spec, payloads, cs, geo, want)
+    a, b = _cols_snapshot(cv), _cols_snapshot(cs)
+    for name in a:
+        assert np.array_equal(a[name], b[name], equal_nan=a[name].dtype.kind == "f"), \
+            f"{spec.kind} field {name}"
+    assert cv.n == cs.n == len(payloads)
+    return cv
 
 
-def test_unpacked_repeated_fields_fall_back():
-    """proto2 allows repeated numeric fields to arrive unpacked (one
-    wire-0 entry per value); the vectorized scan must detect this and
-    route the group to the scalar decoder, producing identical refs."""
+def test_vectorized_way_decode_matches_scalar(tmp_path):
+    """The lane-frontier element decoder must agree field-for-field with
+    the row-at-a-time reference on real multi-element groups: ways and
+    relations of the synthetic file, plain nodes (with tags and Info),
+    LocationsOnWays ways and relations of the mixed file."""
     import sys, os
     sys.path.insert(0, os.path.dirname(__file__))
+    from pbf_encoder import write_mixed_pbf, write_synthetic_pbf
+
+    path = str(tmp_path / "synthetic.osm.pbf")
+    write_synthetic_pbf(path, n_nodes=300, n_ways=200, n_rels=40,
+                        nodes_per_block=64)
+    mixed = str(tmp_path / "mixed.osm.pbf")
+    write_mixed_pbf(mixed, n_dense=500, n_history=10, n_plain=400,
+                    n_ways_loc=50, n_ways=50, n_rels=30)
+    cases = [(D._WAY, path, 3), (D._RELATION, path, 4),
+             (D._PLAIN_NODE, mixed, 1), (D._WAY, mixed, 3),
+             (D._RELATION, mixed, 4)]
+    for spec, p, field_no in cases:
+        groups = _data_group_payloads(p, field_no)
+        assert groups, f"{p} must contain {spec.kind} groups"
+        for payloads, geo in groups:
+            _assert_decoders_agree(spec, payloads, geo)
+    # column pruning takes the same route through the shared tail
+    payloads, geo = _data_group_payloads(mixed, 1)[0]
+    c = _assert_decoders_agree(D._PLAIN_NODE, payloads, geo,
+                               want=lambda col: col in ("id", "lat"))
+    assert not c.tag_keys and not np.concatenate(c.version_valid).any()
+
+
+def _unpacked_way():
     from pbf_encoder import _key, _varint, _zigzag, _len_field, encode_info, StringTable
 
     st = StringTable()
@@ -373,12 +376,176 @@ def test_unpacked_repeated_fields_fall_back():
     for d in deltas:  # unpacked: each ref its own wire-0 field
         body += _key(8, 0) + _varint(_zigzag(d))
     body += _len_field(4, encode_info(st, {"version": 2, "uid": 9, "user": "u"}))
+    return D._WAY, st, body, {"nd_refs": refs, "ids": [7], "version": [2]}
+
+
+def _unpacked_relation():
+    from pbf_encoder import _key, _varint, _zigzag, _len_field, encode_info, StringTable
+
+    st = StringTable()
+    roles = [st.add("outer"), st.add("inner"), st.add("outer")]
+    body = _key(1, 0) + _varint(11)
+    # memids as one packed run split across two fields, types and roles
+    # unpacked: proto2 concatenates every occurrence in order
+    body += _len_field(9, _varint(_zigzag(40)) + _varint(_zigzag(-10)))
+    body += _key(9, 0) + _varint(_zigzag(5))
+    for r, t in zip(roles, (1, 1, 0)):
+        body += _key(8, 0) + _varint(r)
+        body += _key(10, 0) + _varint(t)
+    body += _len_field(4, encode_info(st, {"version": 3}))
+    return D._RELATION, st, body, {"mem_refs": [40, 30, 35], "mem_roles": roles,
+                                   "mem_types": [1, 1, 0], "ids": [11], "version": [3]}
+
+
+def _unpacked_plain_node():
+    from pbf_encoder import _key, _varint, _zigzag, _len_field, encode_info, StringTable
+
+    st = StringTable()
+    k1, v1, k2, v2 = (st.add(s) for s in ("amenity", "bench", "name", "x"))
+    body = _key(1, 0) + _varint(_zigzag(-3))
+    for k, v in ((k1, v1), (k2, v2)):  # unpacked tag keys/values
+        body += _key(2, 0) + _varint(k)
+        body += _key(3, 0) + _varint(v)
+    body += _len_field(4, encode_info(st, {"version": 4, "user": "u"}))
+    body += _key(8, 0) + _varint(_zigzag(-250)) + _key(9, 0) + _varint(_zigzag(700))
+    return D._PLAIN_NODE, st, body, {"tag_keys": [k1, k2], "tag_vals": [v1, v2],
+                                     "ids": [-3], "version": [4],
+                                     "lat": [-250 * 100e-9], "lon": [700 * 100e-9]}
+
+
+@pytest.mark.parametrize("case", [_unpacked_way, _unpacked_relation, _unpacked_plain_node],
+                         ids=["way", "relation", "plain_node"])
+def test_unpacked_repeated_fields_fall_back(case):
+    """proto2 allows repeated numeric fields to arrive unpacked (one
+    wire-0 entry per value); the vectorized scan must detect this and
+    route the group to the row-at-a-time decoder, producing identical
+    values."""
+    spec, st, body, want = case()
     c = D._Columns()
     c._stringtable = D._StringTable(st.encode())
-    D._decode_ways([body], c, 100, 0, 0, 1000, lambda col: True)
-    assert np.concatenate(c.nd_refs).tolist() == refs
-    assert np.concatenate(c.ids).tolist() == [7]
-    assert np.concatenate(c.version).tolist() == [2]
+    D._decode_elements(spec, [body], c, D.BlockGeometry(100, 0, 0, 1000),
+                       lambda col: True)
+    for attr, values in want.items():
+        got = np.concatenate(getattr(c, attr)).tolist()
+        assert got == (pytest.approx(values) if attr in ("lat", "lon") else values), attr
+    c.seal()  # every index is in range of the block's table
+
+
+def _element(group_field, *fields):
+    """(PrimitiveGroup field, one element message of varint ``fields``
+    and one packed list) — ids/coords are sint64 for plain nodes."""
+    from pbf_encoder import _key, _packed_svarints, _packed_uvarints, _varint
+
+    body = b"".join(_key(fno, 0) + _varint(v) for fno, v in fields)
+    if group_field == 3:
+        body += _packed_svarints(8, [1, 2], delta=True)
+    elif group_field == 4:  # one way member, role ""
+        body += (_packed_uvarints(8, [0]) + _packed_svarints(9, [1], delta=True)
+                 + _packed_uvarints(10, [1]))
+    return group_field, body
+
+
+# plain nodes' required lat/lon (fields 8/9 are lists in ways/relations)
+_COORDS = {1: ((8, 4), (9, 4)), 3: (), 4: ()}
+# a message lacking one osmformat.proto ``required`` field
+_MISSING_REQUIRED = {
+    "plain_node_lat": lambda: _element(1, (1, 10), (9, 4)),
+    "plain_node_lon": lambda: _element(1, (1, 10), (8, 4)),
+    "plain_node_id": lambda: _element(1, (8, 4), (9, 4)),
+    "way_id": lambda: _element(3),
+    "relation_id": lambda: _element(4),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_MISSING_REQUIRED))
+def test_missing_required_field_raises(name, tmp_path):
+    """A non-dense element without a required field is a ProtoDecodeError
+    in both decoders (not a KeyError, not a silent id 0), and the executor
+    read loop names the file and blob offset."""
+    from pbf_encoder import StringTable, _len_field, encode_primitive_block, write_blob
+    from osm_pbf_parquet_spark.sources.pbf_source import (
+        BlobDecodeError, decode_blob_entries,
+    )
+
+    group_field, body = _MISSING_REQUIRED[name]()
+    spec = D._GROUP_ELEMENTS[group_field]
+    geo = D.BlockGeometry(100, 0, 0, 1000)
+    for decoder in (D._decode_elements, D._decode_elements_scalar):
+        with pytest.raises(P.ProtoDecodeError, match="without required field"):
+            decoder(spec, [body], D._Columns(), geo, lambda col: True)
+    good_field, good = _element(group_field, (1, 10), *_COORDS[group_field])
+    path = str(tmp_path / "bad.osm.pbf")
+    with open(path, "wb") as f:
+        for fno, msg in ((good_field, good), (group_field, body)):
+            write_blob(f, "OSMData", encode_primitive_block(
+                [_len_field(fno, msg)], st=StringTable()))
+    infos = [i for i in B.index_blobs(path) if i.blob_type == B.TYPE_DATA]
+    it = decode_blob_entries([(path, i.offset, i.size) for i in infos],
+                             ["node", "way", "relation"], None)
+    assert next(it)[spec.kind].n == 1
+    with pytest.raises(BlobDecodeError, match=f"offset {infos[1].offset}") as ei:
+        next(it)
+    assert isinstance(ei.value.__cause__, P.ProtoDecodeError)
+
+
+def _crossed_tags():
+    """A group of two ways whose keys/values pair up across the group (3
+    and 3) but not within each way (2/1, then 1/2)."""
+    from pbf_encoder import _key, _len_field, _packed_svarints, _packed_uvarints, _varint
+
+    return b"".join(
+        _len_field(3, _key(1, 0) + _varint(wid) + _packed_uvarints(2, keys)
+                   + _packed_uvarints(3, vals) + _packed_svarints(8, [1], delta=True))
+        for wid, keys, vals in ((1, [1, 2], [3]), (2, [1], [3, 4]))
+    ), "tag keys and values"
+
+
+def _short_roles():
+    from pbf_encoder import _key, _len_field, _packed_svarints, _packed_uvarints, _varint
+
+    return _len_field(4, _key(1, 0) + _varint(9) + _packed_uvarints(8, [0])
+                      + _packed_svarints(9, [1, 2], delta=True)
+                      + _packed_uvarints(10, [1, 1])), "members lists"
+
+
+@pytest.mark.parametrize("case", [_crossed_tags, _short_roles], ids=["tags", "members"])
+def test_parallel_lists_differ_in_length_raises(case):
+    """Parallel packed lists (tag keys/values; member ids/roles/types) must
+    pair up within each element: a mismatch is a ProtoDecodeError, not
+    tags silently shifted onto the next element or an Arrow error at
+    assembly (which names no blob)."""
+    from pbf_encoder import StringTable, encode_primitive_block
+
+    group, what = case()
+    st = StringTable()
+    for s in ("a", "b", "c", "d"):
+        st.add(s)
+    block = encode_primitive_block([group], st=st)
+    with pytest.raises(P.ProtoDecodeError, match=what):
+        D.decode_primitive_block(block)
+
+
+@pytest.mark.parametrize("group_field", [1, 3, 4], ids=["plain_node", "way", "relation"])
+def test_scalar_field_sent_twice_keeps_last(group_field):
+    """proto2: a non-repeated scalar that occurs twice keeps the last
+    value — for every element kind, in both decoders."""
+    from pbf_encoder import StringTable, _len_field, encode_primitive_block
+
+    twice = [(1, 10), *_COORDS[group_field], (1, 12)]
+    if group_field == 1:
+        twice.append((8, 6))
+    fno, body = _element(group_field, *twice)
+    block = encode_primitive_block([_len_field(fno, body)], st=StringTable())
+    row = D.parse_block_to_batch(block).to_pylist()[0]
+    if group_field == 1:  # zigzag: 12 → 6, 6 → 3
+        assert (row["id"], row["lat"], row["lon"]) == (6, pytest.approx(3e-7),
+                                                        pytest.approx(2e-7))
+    else:
+        assert row["id"] == 12
+    c = D._Columns()
+    D._decode_elements_scalar(D._GROUP_ELEMENTS[group_field], [body], c,
+                              D.BlockGeometry(100, 0, 0, 1000), lambda col: True)
+    assert c.ids[0].tolist() == [row["id"]]
 
 
 # --- regression tests for review findings ------------------------------------

@@ -273,9 +273,9 @@ def _zigzag(v: int) -> int:
 
 
 def test_group_scan_fallback_on_stray_scalar_field():
-    """A group payload with a stray wire-0 field (unknown extension) must
-    take the general message_fields path and decode identically to the
-    clean encoding — the wire-2 fast scan may only ever change SPEED."""
+    """A group payload with a stray wire-0 field (unknown extension) is
+    skipped by the group scan and decodes identically to the clean
+    encoding."""
     st_ = StringTable()
     way = {"id": 9, "refs": [3, 5, 5], "tags": {"k": "v"}, "version": 2,
            "timestamp_s": 7, "changeset": 1, "uid": 4, "user": "u",
@@ -292,7 +292,7 @@ def test_group_scan_fallback_on_stray_scalar_field():
 def test_way_unpacked_refs_scalar_fallback():
     """Proto2 readers must accept UNPACKED repeated encodings: a way whose
     refs arrive as individual wire-0 varints (zigzag deltas) decodes to
-    the same refs as the packed form (exercises _decode_ways_scalar)."""
+    the same refs as the packed form (exercises _decode_elements_scalar)."""
     st_ = StringTable()
     refs = [10, 4, 4, -6]
     packed_way = encode_way(st_, {"id": 1, "refs": refs, "tags": {},

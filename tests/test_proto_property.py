@@ -12,7 +12,7 @@ fields).
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from osm_pbf_parquet_spark.pbf.proto import (
     encode_varint,
@@ -113,21 +113,29 @@ def test_scan_message_batch_matches_message_fields(msgs):
 
 
 @given(msgs=st.lists(proto_messages(), min_size=1, max_size=6))
+@example(msgs=[[(1, 0, 5), (3, 2, b"ab"), (2, 2, b"")]])  # a wire-0 field
+@example(msgs=[[(17, 2, b"xyz"), (1, 2, b"a"), (300, 0, 2**64 - 1)]])  # key ≥ 16
+@example(msgs=[[(4, 1, b"\x00" * 8), (4, 2, b"q"), (5, 5, b"\xff" * 4)]])
 @settings(max_examples=60, deadline=None)
 def test_scan_wire2_fields_fallback_contract(msgs):
-    """scan_wire2_fields either returns ranges IDENTICAL to
-    message_fields' wire-2 view (when the message is all-wire-2 with
-    1-byte keys) or None — never a wrong answer."""
+    """scan_wire2_fields is total: on any valid message it returns
+    exactly message_fields' wire-2 fields, in message order, skipping
+    wire-0/1/5 fields and reading multi-byte keys."""
     for fields in msgs:
         payload = _encode(fields)
-        fast = scan_wire2_fields(payload)
-        if fast is None:  # declining is always allowed — caller falls back
-            continue
-        fnos, ranges = fast
+        fnos, ranges = scan_wire2_fields(payload)
         mv = memoryview(payload)
         got = [(int(f), bytes(mv[int(s):int(e)]))
                for f, s, e in zip(fnos, ranges.starts, ranges.ends)]
-        want = [(fno, val) for fno, w, val in fields if w == 2]
+        assert got == [(fno, val) for fno, w, val in fields if w == 2]
+        # the same values message_fields reports at each wire-2 position
+        scalar = message_fields(payload)
+        at = {fno: iter(vals) for fno, vals in scalar.items()}
+        want = []
+        for fno, w, _val in fields:
+            v = next(at[fno])
+            if w == 2:
+                want.append((fno, bytes(v)))
         assert got == want
 
 

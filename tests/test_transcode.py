@@ -475,6 +475,63 @@ def test_fused_transcode_corrupt_input_fails_clean(spark, tmp_path, synthetic_pb
     assert leftovers == []
 
 
+def test_fused_transcode_missing_required_field_names_blob(spark, tmp_path):
+    """A way without its required id fails the transcode with a
+    BlobDecodeError naming the file and the blob's offset, instead of
+    being written with id 0."""
+    from pyspark.errors import PythonException
+
+    from pbf_encoder import (
+        StringTable, _len_field, _packed_svarints, encode_header_block,
+        encode_primitive_block, encode_way, write_blob,
+    )
+    from osm_pbf_parquet_spark.pbf.blob import TYPE_DATA, index_blobs
+    from osm_pbf_parquet_spark.sinks.native_sink import transcode_pbf
+
+    path = str(tmp_path / "no_id.osm.pbf")
+    st = StringTable()
+    good = encode_primitive_block([encode_way(st, {"id": 1, "refs": [1, 2]})], st=st)
+    no_id = _len_field(3, _packed_svarints(8, [1, 2], delta=True))
+    with open(path, "wb") as f:
+        write_blob(f, "OSMHeader", encode_header_block())
+        write_blob(f, "OSMData", good)
+        write_blob(f, "OSMData", encode_primitive_block([no_id]))
+    bad = [i for i in index_blobs(path) if i.blob_type == TYPE_DATA][1]
+    with pytest.raises(PythonException) as ei:
+        transcode_pbf(spark, path, str(tmp_path / "out"))
+    assert "BlobDecodeError" in str(ei.value)
+    assert f"{path}: blob at offset {bad.offset}" in str(ei.value)
+    assert "way without required field 1" in str(ei.value)
+
+
+def test_loc_on_ways_query_reads_signed_block_offsets(spark, tmp_path, monkeypatch):
+    """``q_osm_loc_on_ways`` reads a block's offsets as signed int64 (as
+    the decoder does): lat_offset=-1e9 places raw 2e6 at 1.0°, not at
+    1.8e10°."""
+    from pbf_encoder import (
+        StringTable, encode_header_block, encode_primitive_block,
+        encode_way_with_locations, write_blob,
+    )
+    from osm_pbf_parquet_spark.plans import osm_queries
+
+    st = StringTable()
+    way = encode_way_with_locations(st, {
+        "id": 7, "refs": [1, 2], "lats": [2_000_000, 2_000_010],
+        "lons": [3_000_000, 2_999_990], "version": 1,
+    })
+    path = str(tmp_path / "loc.osm.pbf")
+    with open(path, "wb") as f:
+        write_blob(f, "OSMHeader", encode_header_block(optional=("LocationsOnWays",)))
+        write_blob(f, "OSMData", encode_primitive_block(
+            [way], granularity=1000, lat_offset=-1_000_000_000,
+            lon_offset=-1_000_000_000, st=st))
+    monkeypatch.setattr(osm_queries, "LOC_FIXTURE", path)
+    rows = [tuple(r) for r in
+            osm_queries.q_osm_loc_on_ways(spark, str(tmp_path)).orderBy("seq").collect()]
+    assert rows == [(7, 0, 1, pytest.approx(1.0), pytest.approx(2.0)),
+                    (7, 1, 2, pytest.approx(1.00001), pytest.approx(1.99999))]
+
+
 def test_fused_transcode_append_mode(spark, tmp_path):
     """Append mode: a second job adds its rows WITHOUT touching the first
     job's files (run-token-scoped finalize)."""
