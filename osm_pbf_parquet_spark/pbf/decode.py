@@ -21,14 +21,19 @@ are one decoder here: a field table (``_PLAIN_NODE``/``_WAY``/
 ``_RELATION``) names each message's required scalars and packed lists,
 ``_decode_elements`` decodes a whole group field at once, and
 ``_decode_elements_scalar`` is its row-at-a-time reference (and the path
-for unpacked repeated fields); both end in ``_finish_elements``.
+for unpacked repeated fields); both end in ``_finish_elements``. Each
+element's ``Info`` (the reference reads it with the element's own
+protobuf reader, ``osmpbf/src/elements.rs:573-625``) is parsed by the same
+lane-frontier scanner, in place over the Info spans, and both decoders
+scatter its fields with ``_info_columns``.
 
 Semantics honored (format-mandated, see SURVEY §1.3):
 - coordinate degrees = 1e-9 × (offset + granularity × raw)
 - timestamp ms = raw × date_granularity
 - ``visible`` defaults true when absent
 - a missing ``required`` field (element id, plain-node lat/lon) is a
-  ProtoDecodeError; a scalar field sent twice keeps its last value
+  ProtoDecodeError; a scalar field sent twice keeps its last value, and
+  an Info sent twice merges field by field
 - non-dense elements with metadata: missing user → empty string
   (``sink.rs:182-183``); dense nodes without DenseInfo → all metadata null
   (``sink.rs:203-220``).
@@ -52,6 +57,7 @@ from .proto import (
     read_varint,
     repeated_numeric,
     scan_message_batch,
+    scan_message_ranges,
     scan_wire2_fields,
     zigzag_decode,
     zigzag_i64,
@@ -384,246 +390,6 @@ def _decode_groups(fields, kinds, cols_for, geo: BlockGeometry, _want) -> None:
 # --- per-kind decoders -------------------------------------------------------
 
 
-def _info_scalars(info_payload, date_granularity: int):
-    """Non-dense Info message → scalar metadata tuple.
-
-    Matches ``Info`` getter semantics (osmpbf/src/elements.rs:573-625):
-    presence-based Option fields; missing user → sink writes "" for
-    non-dense kinds (sink.rs:182-183); visible defaults true.
-    """
-    if info_payload is None:
-        return (0, False, 0, False, 0, False, -2, 0, False, True, True)
-    # lean inline scan — this runs once per way/relation/plain-node, and
-    # the dict-building generic scan was the hot spot after batching
-    version = ts = changeset = uid = user_sid = visible = None
-    view = memoryview(info_payload)
-    pos = 0
-    end = len(view)
-    while pos < end:
-        key, pos = read_varint(view, pos)
-        fno = key >> 3
-        wire = key & 7
-        if wire == 0:
-            val, pos = read_varint(view, pos)
-            if fno == 1:
-                version = val
-            elif fno == 2:
-                ts = val
-            elif fno == 3:
-                changeset = val
-            elif fno == 4:
-                uid = val
-            elif fno == 5:
-                user_sid = val
-            elif fno == 6:
-                visible = val
-        elif wire == 2:
-            ln, pos = read_varint(view, pos)
-            pos += ln
-        elif wire == 1:
-            pos += 8
-        elif wire == 5:
-            pos += 4
-        else:
-            raise ProtoDecodeError(f"unsupported wire type {wire}")
-    # two's-complement signed for int32/int64 varints
-    def _sig(v, bits=64):
-        if v is None:
-            return None
-        return v - (1 << bits) if v >= (1 << (bits - 1)) else v
-
-    version = _sig(version, 32)
-    uid = _sig(uid, 32)
-    ts = _sig(ts, 64)
-    changeset = _sig(changeset, 64)
-    return (
-        changeset if changeset is not None else 0,
-        changeset is not None,
-        ts * date_granularity if ts is not None else 0,
-        ts is not None,
-        uid if uid is not None else 0,
-        uid is not None,
-        user_sid if user_sid is not None else -2,  # -2 → ""
-        version if version is not None else 0,
-        version is not None,
-        bool(visible) if visible is not None else True,
-        True,
-    )
-
-
-class _InfoBatch:
-    """Cross-element batched decode of non-dense ``Info`` submessages.
-
-    The scalar path (`_info_scalars`) costs one Python call + ~10 scalar
-    varint reads per way/relation — the dominant decode cost in way-heavy
-    blocks. This batcher concatenates every element's Info payload and
-    mass-decodes ALL varints in one numpy pass (same shift-and-or trick as
-    ``decode_packed_uvarints``), then routes values to per-field arrays by
-    scatter. In a valid Info message every field is wire-type 0
-    (osmformat.proto:139-157), so tags and values strictly alternate; if a
-    payload ever violates that (unknown wire-2 extension etc.) we fall
-    back to the scalar decoder for exact skip semantics.
-    """
-
-    __slots__ = ("n0", "parts", "part_elem", "_arr", "_plens", "_elems")
-
-    def __init__(self, n0: int) -> None:
-        self.n0 = n0
-        self.parts: list = []
-        self.part_elem: list[int] = []
-        self._arr = None
-        self._plens = None
-        self._elems = None
-
-    def add(self, i: int, payload) -> None:
-        if payload is not None and len(payload):
-            self.parts.append(payload)
-            self.part_elem.append(i)
-
-    @classmethod
-    def from_ranges(cls, arr: np.ndarray, starts: np.ndarray,
-                    lens: np.ndarray, lanes: np.ndarray, n0: int) -> "_InfoBatch":
-        """Build directly from byte ranges of a scanned message buffer
-        (``proto.scan_message_batch`` output) — no per-element slicing.
-        Ranges are sorted by start so the extracted blob layout matches
-        the per-part length/elem arrays."""
-        self = cls(n0)
-        nz = lens > 0
-        if nz.any():
-            order = np.argsort(starts[nz], kind="stable")
-            s = starts[nz][order]
-            ln = lens[nz][order]
-            la = lanes[nz][order]
-            blob, _ = extract_ranges(arr, s, ln, la, n0)
-            self._arr = blob
-            self._plens = ln
-            self._elems = la
-        return self
-
-    def _assemble(self):
-        """→ (uint8 buffer, per-part byte lengths, per-part element ids)
-        or None when no Info payloads exist."""
-        if self._arr is not None:
-            return self._arr, self._plens, self._elems
-        if not self.parts:
-            return None
-        return (
-            np.frombuffer(b"".join(self.parts), dtype=np.uint8),
-            np.fromiter((len(p) for p in self.parts), np.int64, len(self.parts)),
-            np.asarray(self.part_elem, dtype=np.int64),
-        )
-
-    def _scalar_fallback(self, out, date_granularity, arr, plens, elems) -> None:
-        (changeset, changeset_valid, ts_ms, ts_valid, uid, uid_valid,
-         user_sid, version, version_valid, visible, visible_valid) = out
-        buf = arr.tobytes()
-        offs = np.concatenate(([0], np.cumsum(plens)))
-        # proto2 merge semantics: repeated submessage occurrences merge by
-        # payload concatenation — one _info_scalars call per ELEMENT over
-        # the joined payloads, matching the vectorized path's merge
-        merged: dict[int, list[bytes]] = {}
-        for j in range(elems.size):
-            merged.setdefault(int(elems[j]), []).append(buf[offs[j]:offs[j + 1]])
-        for i, payloads in merged.items():
-            row = _info_scalars(b"".join(payloads), date_granularity)
-            (changeset[i], changeset_valid[i], ts_ms[i], ts_valid[i],
-             uid[i], uid_valid[i], user_sid[i], version[i],
-             version_valid[i], visible[i], visible_valid[i]) = row
-
-    def finish(self, date_granularity: int):
-        """→ the 11 per-element meta arrays (defaults where Info absent:
-        parity with ``_info_scalars(None)`` — user_sid -2 → \"\",
-        visible true)."""
-        n0 = self.n0
-        out = (
-            np.zeros(n0, np.int64), np.zeros(n0, bool),   # changeset
-            np.zeros(n0, np.int64), np.zeros(n0, bool),   # ts_ms
-            np.zeros(n0, np.int64), np.zeros(n0, bool),   # uid
-            np.full(n0, -2, np.int64),                    # user_sid
-            np.zeros(n0, np.int64), np.zeros(n0, bool),   # version
-            np.ones(n0, bool), np.ones(n0, bool),         # visible
-        )
-        asm = self._assemble()
-        if asm is None:
-            return out
-        arr, plens, elems = asm
-        is_end = arr < 0x80
-        if not is_end[-1]:
-            raise ProtoDecodeError("truncated varint")
-        ends = np.flatnonzero(is_end)
-        starts = np.empty_like(ends)
-        starts[0] = 0
-        starts[1:] = ends[:-1] + 1
-        lens = ends - starts + 1
-        maxlen = int(lens.max(initial=1))
-        if maxlen > 10:
-            raise ProtoDecodeError("varint too long")
-        vals = np.zeros(ends.size, dtype=np.uint64)
-        for k in range(maxlen):
-            m = lens > k
-            vals[m] |= (arr[starts[m] + k].astype(np.uint64)
-                        & np.uint64(0x7F)) << np.uint64(7 * k)
-        byte_starts = np.concatenate(([0], np.cumsum(plens)[:-1]))
-        vfirst = np.searchsorted(starts, byte_starts)
-        if vfirst[-1] >= starts.size or not np.array_equal(
-            starts[vfirst], byte_starts
-        ):
-            raise ProtoDecodeError("varint crosses message boundary")
-        mid = np.searchsorted(byte_starts, starts, side="right") - 1
-        counts = np.bincount(mid, minlength=plens.size)
-        pos_in_msg = np.arange(starts.size, dtype=np.int64) - vfirst[mid]
-        is_tag = (pos_in_msg & 1) == 0
-        tags = vals[is_tag]
-        if (counts & 1).any() or ((tags & np.uint64(7)) != 0).any():
-            # a non-wire-0 field breaks tag/value alternation — rare;
-            # take the exact scalar skip path
-            self._scalar_fallback(out, date_granularity, arr, plens, elems)
-            return out
-        (changeset, changeset_valid, ts_ms, ts_valid, uid, uid_valid,
-         user_sid, version, version_valid, visible, visible_valid) = out
-        fns = (tags >> np.uint64(3)).astype(np.int64)
-        x = vals[~is_tag].astype(np.int64)  # two's-complement int64
-        elem = elems[mid[~is_tag]]
-
-        def _s32(a):
-            # int32 encoded as positive varint < 2^32 with sign bit set
-            return np.where((a >= 1 << 31) & (a < 1 << 32), a - (1 << 32), a)
-
-        for fno in range(1, 7):
-            m = fns == fno
-            if not m.any():
-                continue
-            e, v = elem[m], x[m]
-            if fno == 1:
-                version[e] = _s32(v)
-                version_valid[e] = True
-            elif fno == 2:
-                ts_ms[e] = v * date_granularity
-                ts_valid[e] = True
-            elif fno == 3:
-                changeset[e] = v
-                changeset_valid[e] = True
-            elif fno == 4:
-                uid[e] = _s32(v)
-                uid_valid[e] = True
-            elif fno == 5:
-                user_sid[e] = v
-            elif fno == 6:
-                visible[e] = v != 0
-        return out
-
-
-def _append_meta_arrays(c: _Columns, arrays) -> None:
-    (changeset, changeset_valid, ts_ms, ts_valid, uid, uid_valid,
-     user_sid, version, version_valid, visible, visible_valid) = arrays
-    c.changeset.append(changeset); c.changeset_valid.append(changeset_valid)
-    c.ts_ms.append(ts_ms); c.ts_valid.append(ts_valid)
-    c.uid.append(uid); c.uid_valid.append(uid_valid)
-    c.user_sid.append(user_sid)
-    c.version.append(version); c.version_valid.append(version_valid)
-    c.visible.append(visible); c.visible_valid.append(visible_valid)
-
-
 class _Element(NamedTuple):
     """One row of the field table: how a non-dense element message
     (osmformat.proto:184-262) fills ``_Columns``. Every kind also has
@@ -662,12 +428,12 @@ def _decode_elements(spec: _Element, payloads, c: _Columns,
                      geo: BlockGeometry, _want) -> None:
     """Every element of one group field at once: ``scan_message_batch``
     lane-frontier-parses all messages' top-level fields in ~6 numpy
-    passes, then each packed field and the Info metadata decode in one
-    vectorized pass across the group (per-element delta reset via
-    segmented cumsum). LocationsOnWays lat/lon arrays (way fields 9/10)
-    are not emitted in the wide schema (parity: the reference sink
-    ignores them too, sink.rs:233-234); ``decode_way_locations`` reads
-    them.
+    passes, then each packed field decodes in one vectorized pass across
+    the group (per-element delta reset via segmented cumsum), and the
+    same scanner parses every Info submessage in place. LocationsOnWays
+    lat/lon arrays (way fields 9/10) are not emitted in the wide schema
+    (parity: the reference sink ignores them too, sink.rs:233-234);
+    ``decode_way_locations`` reads them.
 
     The rare legal-but-unpacked encoding (a repeated field as individual
     wire-0 varints) drops the group to ``_decode_elements_scalar``."""
@@ -681,9 +447,18 @@ def _decode_elements(spec: _Element, payloads, c: _Columns,
         blob, nbytes = extract_ranges(arr, rs[m], rn[m], rl[m], n0)
         return finish_packed(blob, nbytes, zigzag=zigzag, delta=delta)
 
-    def info() -> _InfoBatch:
+    def info():
         m = rf == 4
-        return _InfoBatch.from_ranges(arr, rs[m], rn[m], rl[m], n0)
+        elems, starts = rl[m], rs[m]
+        _, (fno, lane, val), _ = scan_message_ranges(arr, starts, starts + rn[m])
+        if elems.size and np.bincount(elems).max() > 1:
+            # an element sent Info twice: proto2 merges the occurrences
+            # like one concatenated message, so order the (iteration-
+            # major) fields by occurrence start; stable keeps each
+            # occurrence's own field order
+            order = np.argsort(starts[lane], kind="stable")
+            fno, lane, val = fno[order], lane[order], val[order]
+        return fno, elems[lane], val
 
     _finish_elements(spec, c, n0, scalars, packed, info, geo, _want)
 
@@ -696,10 +471,8 @@ def _decode_elements_scalar(spec: _Element, payloads, c: _Columns,
     decoder is tested against."""
     n0 = len(payloads)
     lists = {fno: PackedBatch(n0) for fno in spec.repeated}
-    info_b = _InfoBatch(n0)
-    sf: list[int] = []
-    sl: list[int] = []
-    sv: list[int] = []
+    rows: list[tuple] = []  # (field, element, value) of every wire-0 field
+    infos: list[tuple] = []  # (element, Info payload), in message order
     for i, payload in enumerate(payloads):
         for fno, wire, val in iter_fields(payload):
             batch = lists.get(fno)
@@ -707,19 +480,27 @@ def _decode_elements_scalar(spec: _Element, payloads, c: _Columns,
                 if batch is not None:
                     batch.add_scalar(i, val)
                 else:
-                    sf.append(fno); sl.append(i); sv.append(val)
+                    rows.append((fno, i, val))
             elif wire == 2:
                 if batch is not None:
                     batch.add(i, val)
                 elif fno == 4:
-                    info_b.add(i, val)
-    scalars = (np.array(sf, dtype=np.int64), np.array(sl, dtype=np.int64),
-               np.array(sv, dtype=np.uint64))
+                    infos.append((i, val))
     _finish_elements(
-        spec, c, n0, scalars,
+        spec, c, n0, _wire0(rows),
         lambda fno, zigzag, delta: lists[fno].finish(zigzag=zigzag, delta=delta),
-        lambda: info_b, geo, _want,
+        lambda: _wire0([(fno, i, val) for i, info in infos
+                        for fno, wire, val in iter_fields(info) if wire == 0]),
+        geo, _want,
     )
+
+
+def _wire0(rows: list[tuple]) -> tuple:
+    """(field, element, value) rows → the wire-0 arrays of
+    ``scan_message_batch``."""
+    f, e, v = zip(*rows) if rows else ((), (), ())
+    return (np.array(f, dtype=np.int64), np.array(e, dtype=np.int64),
+            np.array(v, dtype=np.uint64))
 
 
 def _finish_elements(spec: _Element, c: _Columns, n0: int, scalars, packed,
@@ -728,17 +509,12 @@ def _finish_elements(spec: _Element, c: _Columns, n0: int, scalars, packed,
     occurrence as (field, element, uint64 value) arrays, each element's
     in message order; ``packed(fno, zigzag, delta)`` decodes one packed
     field across the group → (values, per-element counts); ``info()`` →
-    the group's ``_InfoBatch``."""
-    sf, sl, sv = scalars
+    the same arrays for the fields of every element's Info."""
     required = []
     for fno, zigzag in spec.scalars:
-        m = sf == fno
-        seen = np.zeros(n0, dtype=bool)
-        seen[sl[m]] = True
+        raw, seen = _last(scalars, fno, n0)
         if not seen.all():
             raise ProtoDecodeError(f"{spec.kind} without required field {fno}")
-        raw = np.empty(n0, dtype=np.uint64)
-        raw[sl[m]] = sv[m]  # assigned in order: the last occurrence wins
         required.append(zigzag_decode(raw) if zigzag else raw.astype(np.int64))
     setattr(c, spec.flag, True)
     c.n += n0
@@ -774,7 +550,9 @@ def _finish_elements(spec: _Element, c: _Columns, n0: int, scalars, packed,
     c.nd_counts.append(counts if spec.counts == "nd_counts" else zeros)
     c.mem_counts.append(counts if spec.counts == "mem_counts" else zeros)
     if any(map(_want, _META_COLUMNS)):
-        _append_meta_arrays(c, info().finish(geo.date_granularity))
+        meta = _info_columns(info(), n0, geo.date_granularity)
+        for attr, arr in zip(_META_ATTRS, meta):
+            getattr(c, attr).append(arr)
     else:
         _append_absent_meta(c, n0)
 
@@ -790,6 +568,53 @@ def _append_absent_meta(c: _Columns, n0: int) -> None:
     c.user_sid.append(np.full(n0, -1, dtype=np.int64))
     c.version.append(zero); c.version_valid.append(false)
     c.visible.append(np.ones(n0, dtype=bool)); c.visible_valid.append(false)
+
+
+def _last(scalars, fno: int, n0: int):
+    """Wire-0 field ``fno`` of ``n0`` elements → (uint64 values, presence
+    mask). Each element's occurrences come in message order, so assigning
+    in order keeps the last one (proto2: a scalar sent twice keeps its
+    last value)."""
+    sf, sl, sv = scalars
+    m = sf == fno
+    seen = np.zeros(n0, dtype=bool)
+    seen[sl[m]] = True
+    raw = np.zeros(n0, dtype=np.uint64)
+    raw[sl[m]] = sv[m]
+    return raw, seen
+
+
+# the ``_Columns`` metadata accumulators, in ``_info_columns`` order
+_META_ATTRS = ("changeset", "changeset_valid", "ts_ms", "ts_valid", "uid",
+               "uid_valid", "user_sid", "version", "version_valid", "visible",
+               "visible_valid")
+
+
+def _info_columns(scalars, n0: int, date_granularity: int) -> tuple:
+    """The wire-0 fields of ``n0`` elements' Info messages
+    (osmformat.proto:139-157), as ``scalars`` arrays → their metadata in
+    ``_META_ATTRS`` order. Parity with the reference's ``Info`` getters
+    (osmpbf/src/elements.rs:573-625): a field is valid when present, a
+    missing user is ``""`` for a non-dense element (sink.rs:182-183),
+    ``visible`` defaults true. version/uid (int32) and changeset/
+    timestamp (int64) are plain varints: negatives arrive as 64-bit (or,
+    for int32, 32-bit-wrapped) two's complement."""
+    (version, has_version), (ts, has_ts), (changeset, has_changeset), \
+        (uid, has_uid), (user, has_user), (visible, has_visible) = (
+            _last(scalars, fno, n0) for fno in range(1, 7))
+    return (
+        changeset.astype(np.int64), has_changeset,
+        ts.astype(np.int64) * date_granularity, has_ts,
+        _s32(uid.astype(np.int64)), has_uid,
+        np.where(has_user, user.astype(np.int64), -2),  # -2 → ""
+        _s32(version.astype(np.int64)), has_version,
+        ~has_visible | (visible != 0), np.ones(n0, dtype=bool),
+    )
+
+
+def _s32(v: np.ndarray) -> np.ndarray:
+    """``_i32`` over an int64 array."""
+    return np.where((v >= 1 << 31) & (v < 1 << 32), v - (1 << 32), v)
 
 
 def _decode_dense_nodes(payload, c: _Columns, granularity, lat_offset, lon_offset,

@@ -16,7 +16,7 @@ reads) goes through :func:`open_binary`, which dispatches on scheme:
 Seek/read semantics are identical across backends (fsspec files support
 ``seek``/``read``/``tell``), so the blob framing and range-read code is
 backend-agnostic. On a cluster, executors open their OWN handle per task
-(``decode_blob_entries`` keeps one per distinct path) and issue one range
+(``read_blob_entries`` keeps one per distinct path) and issue one range
 read per blob (~90 KB on average): the fused transcode's task groups
 interleave blobs from across the file, so reads are not coalesced (one
 object-store GET per blob), where the reference streams through a 16 MB

@@ -207,21 +207,6 @@ def zigzag_decode(values: np.ndarray) -> np.ndarray:
     return ((values >> _U64_1).astype(np.int64)) ^ -((values & _U64_1).astype(np.int64))
 
 
-def packed_svarints(chunks) -> np.ndarray:
-    """Packed ``sint64``/``sint32`` (zigzag) → int64 array."""
-    return zigzag_decode(decode_packed_uvarints(chunks))
-
-
-def packed_varints_signed(chunks) -> np.ndarray:
-    """Packed two's-complement varint ``int32``/``int64`` (no zigzag) → int64."""
-    return decode_packed_uvarints(chunks).astype(np.int64)
-
-
-def packed_delta(chunks) -> np.ndarray:
-    """Packed zigzag varints with running-sum (DELTA) decoding."""
-    return np.cumsum(packed_svarints(chunks))
-
-
 def vec_varints_at(arr: np.ndarray, positions: np.ndarray):
     """Decode one varint per lane at arbitrary byte ``positions`` of
     ``arr`` (uint8 view of a buffer). Returns ``(values uint64, next_pos
@@ -368,19 +353,21 @@ def scan_message_batch(payloads):
     disjoint ascending spans). Wire 1/5 fields are skipped structurally.
     """
     if isinstance(payloads, Wire2Ranges):
-        return _scan_message_ranges(payloads.arr, payloads.starts,
-                                    payloads.ends)
+        return scan_message_ranges(payloads.arr, payloads.starts,
+                                   payloads.ends)
     n = len(payloads)
     buf = b"".join(payloads)
     arr = np.frombuffer(buf, dtype=np.uint8)
     lens = np.fromiter((len(p) for p in payloads), np.int64, n)
     w_end = np.cumsum(lens)
     w_start = w_end - lens
-    return _scan_message_ranges(arr, w_start, w_end)
+    return scan_message_ranges(arr, w_start, w_end)
 
 
-def _scan_message_ranges(arr: np.ndarray, w_start: np.ndarray,
-                         w_end: np.ndarray):
+def scan_message_ranges(arr: np.ndarray, w_start: np.ndarray,
+                        w_end: np.ndarray):
+    """``scan_message_batch`` over the spans ``[w_start, w_end)`` of one
+    uint8 buffer ``arr``, in place; lanes are span indices."""
     n = w_start.size
     pos = w_start.copy()
     lanes_all = np.arange(n, dtype=np.int64)

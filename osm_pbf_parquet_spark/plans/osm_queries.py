@@ -16,11 +16,19 @@ sort-then-hash comparison, and the exploded form oracles exactly.
 
 from __future__ import annotations
 
+from functools import partial
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import osm_ops
-from ..sources.pbf_source import scan_pbf
+from ..pbf.decode import block_geometry, decode_primitive_block, decode_way_locations
+from ..pbf.proto import message_fields
+from ..sources.pbf_source import (
+    _catalog_rows, map_blob_groups, read_blob_entries, scan_pbf,
+)
 
 FIXTURE = "/root/reference/osmpbf/tests/test.osm.pbf"
 
@@ -74,59 +82,45 @@ LOC_FIXTURE = "/root/reference/osmpbf/tests/loc_on_ways.osm.pbf"
 def q_osm_loc_on_ways(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D5: the ``LocationsOnWays`` optional feature — per-way inline
     lat/lon arrays (osmformat.proto:233-240; reference decoder
-    ``osmpbf/src/elements.rs:352-423``) — decoded DISTRIBUTED: the blob
-    catalog fans out and each task runs ``decode_way_locations`` over its
-    blobs inside ``mapInArrow``, one scalar row per way vertex (the
-    geometry shortcut that skips the node join entirely when the writer
-    declared the feature)."""
-    import pyarrow as pa
+    ``osmpbf/src/elements.rs:352-423``) — decoded DISTRIBUTED: each task
+    of ``map_blob_groups`` reads its blobs with ``read_blob_entries`` and
+    emits one scalar row per way vertex (the geometry shortcut that skips
+    the node join entirely when the writer declared the feature)."""
+    rows, n_groups = _catalog_rows(
+        LOC_FIXTURE, spark.sparkContext.defaultParallelism, None
+    )
+    return map_blob_groups(
+        spark, rows, n_groups, partial(read_blob_entries, decode=_way_vertices),
+        "way_id long, seq int, ref long, lat double, lon double",
+    )
 
-    from ..sources.pbf_source import pbf_blob_catalog
 
-    catalog = pbf_blob_catalog(spark, LOC_FIXTURE)
-
-    def _kern(batches):
-        from ..pbf.blob import decompress_blob, read_blob_at
-        from ..pbf.decode import block_geometry, decode_way_locations
-        from ..pbf.io import open_binary
-        from ..pbf.proto import message_fields
-
-        for b in batches:
-            rows = {"way_id": [], "seq": [], "ref": [], "lat": [], "lon": []}
-            for p, off, sz in zip(
-                b.column("path").to_pylist(),
-                b.column("offset").to_pylist(),
-                b.column("size").to_pylist(),
-            ):
-                with open_binary(p) as f:
-                    payload = decompress_blob(read_blob_at(f, off, sz))
-                fields = message_fields(payload)
-                geo = block_geometry(fields)
-                for group in fields.get(2, []):
-                    for wp in message_fields(group).get(3, []):
-                        wid = message_fields(wp)[1][0]
-                        refs, lat, lon = decode_way_locations(
-                            wp, geo.granularity, geo.lat_offset, geo.lon_offset
-                        )
-                        for i, (r, la, lo) in enumerate(zip(refs, lat, lon)):
-                            rows["way_id"].append(wid)
-                            rows["seq"].append(i)
-                            rows["ref"].append(int(r))
-                            rows["lat"].append(float(la))
-                            rows["lon"].append(float(lo))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(rows["way_id"], pa.int64()),
-                    pa.array(rows["seq"], pa.int32()),
-                    pa.array(rows["ref"], pa.int64()),
-                    pa.array(rows["lat"], pa.float64()),
-                    pa.array(rows["lon"], pa.float64()),
-                ],
-                names=["way_id", "seq", "ref", "lat", "lon"],
+def _way_vertices(payload):
+    """One PrimitiveBlock → a row per way vertex: way id, position in the
+    way, node ref and inline location. Ids come from the block decoder,
+    so a way without its required id fails as it does in a scan; a way
+    with fewer locations than refs keeps the paired prefix, as the
+    reference's ``node_locations`` zip does."""
+    ways = decode_primitive_block(payload, kinds=["way"], columns=["id"]).get("way")
+    ids = np.concatenate(ways.ids) if ways is not None else np.empty(0, np.int64)
+    fields = message_fields(payload)
+    geo = block_geometry(fields)
+    refs, lats, lons = [], [], []
+    for group in fields.get(2, []):
+        for wp in message_fields(group).get(3, []):
+            r, la, lo = decode_way_locations(
+                wp, geo.granularity, geo.lat_offset, geo.lon_offset
             )
-
-    return catalog.mapInArrow(
-        _kern, schema="way_id long, seq int, ref long, lat double, lon double"
+            k = min(r.size, la.size, lo.size)
+            refs.append(r[:k]); lats.append(la[:k]); lons.append(lo[:k])
+    counts = np.array([r.size for r in refs], dtype=np.int64)
+    seq = np.arange(int(counts.sum())) - np.repeat(np.cumsum(counts) - counts, counts)
+    cat = lambda parts: np.concatenate(parts) if parts else np.empty(0)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(np.repeat(ids, counts), pa.int64()), pa.array(seq, pa.int32()),
+         pa.array(cat(refs), pa.int64()), pa.array(cat(lats), pa.float64()),
+         pa.array(cat(lons), pa.float64())],
+        names=["way_id", "seq", "ref", "lat", "lon"],
     )
 
 

@@ -250,12 +250,12 @@ class BlobDecodeError(ValueError):
         self.offset = offset
 
 
-def decode_blob_entries(entries, kinds: list[str], columns: list[str] | None):
+def read_blob_entries(entries, decode: Callable):
     """The executor read loop: iterate (path, offset, size) triples,
-    keeping one open handle per distinct path, and yield each blob's
-    sealed per-kind accumulators (``decode_primitive_block`` output,
-    payload already released). A decode failure is re-raised as
-    ``BlobDecodeError`` naming the file and blob offset."""
+    keeping one open handle per distinct path, and yield ``decode`` of
+    each blob's decompressed payload. A read, decompress or decode
+    failure is re-raised as ``BlobDecodeError`` naming the file and blob
+    offset."""
     from ..pbf.io import open_binary
 
     handles: dict[str, object] = {}
@@ -265,18 +265,27 @@ def decode_blob_entries(entries, kinds: list[str], columns: list[str] | None):
             if f is None:
                 f = handles[p] = open_binary(p)
             try:
-                per_kind = decode_primitive_block(
-                    decompress_blob(read_blob_at(f, off, size)),
-                    kinds=kinds, columns=columns,
-                )
-                for cols in per_kind.values():
-                    cols.seal()
+                out = decode(decompress_blob(read_blob_at(f, off, size)))
             except (BlobError, ProtoDecodeError) as exc:
                 raise BlobDecodeError(p, off, exc) from exc
-            yield per_kind
+            yield out
     finally:
         for f in handles.values():
             f.close()  # type: ignore[union-attr]
+
+
+def decode_blob_entries(entries, kinds: list[str], columns: list[str] | None):
+    """``read_blob_entries`` yielding each blob's sealed per-kind
+    accumulators (``decode_primitive_block`` output, payload already
+    released)."""
+
+    def decode(payload) -> dict:
+        per_kind = decode_primitive_block(payload, kinds=kinds, columns=columns)
+        for cols in per_kind.values():
+            cols.seal()
+        return per_kind
+
+    return read_blob_entries(entries, decode)
 
 
 def parse_blob_entries(entries, kinds: list[str], columns: list[str] | None):

@@ -244,60 +244,6 @@ def test_corrupt_input_raises():
         os.unlink(name)
 
 
-def _enc_varint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def test_info_batch_matches_scalar_decoder():
-    """_InfoBatch's vectorized mass-varint path must agree with
-    _info_scalars field-for-field, including int32 sign handling, missing
-    fields, visible=false, and absent Info defaults."""
-    infos = [
-        # version=3, ts=1000, changeset=77, uid=42, user_sid=5, visible=1
-        b"\x08\x03\x10" + _enc_varint(1000) + b"\x18\x4d\x20\x2a\x28\x05\x30\x01",
-        # minimal: version only
-        b"\x08\x01",
-        None,  # no Info at all
-        # visible=0 (deleted), negative uid as 32-bit two's complement varint
-        b"\x08\x02\x20" + _enc_varint((1 << 32) - 7) + b"\x30\x00",
-        b"",  # empty Info payload
-    ]
-    batch = D._InfoBatch(len(infos))
-    for i, p in enumerate(infos):
-        batch.add(i, p)
-    got = batch.finish(1000)
-    for i, p in enumerate(infos):
-        expected = D._info_scalars(p if p else None, 1000)
-        actual = tuple(int(a[i]) if a.dtype != bool else bool(a[i]) for a in got)
-        assert actual == tuple(
-            int(x) if not isinstance(x, bool) else x for x in expected
-        ), f"row {i}: {actual} != {expected}"
-
-
-def test_info_batch_fallback_on_non_varint_field():
-    """An unknown wire-2 field inside Info breaks tag/value alternation;
-    the batch decoder must detect it and fall back to the scalar skip
-    path rather than mis-route values."""
-    # version=9 then an unknown length-delimited field no. 7, then uid=13
-    weird = b"\x08\x09\x3a\x03abc\x20\x0d"
-    batch = D._InfoBatch(2)
-    batch.add(0, weird)
-    batch.add(1, b"\x08\x04")
-    got = batch.finish(1000)
-    exp0 = D._info_scalars(weird, 1000)
-    actual0 = tuple(int(a[0]) if a.dtype != bool else bool(a[0]) for a in got)
-    assert actual0 == tuple(int(x) if not isinstance(x, bool) else x for x in exp0)
-    assert int(got[7][1]) == 4 and bool(got[8][1])  # row 1 version intact
-
-
 def _data_group_payloads(path, field_no):
     """Collect (payload_list, block_geometry) for each group carrying
     repeated field ``field_no`` (1=plain nodes, 3=ways, 4=relations)."""
@@ -364,6 +310,98 @@ def test_vectorized_way_decode_matches_scalar(tmp_path):
     c = _assert_decoders_agree(D._PLAIN_NODE, payloads, geo,
                                want=lambda col: col in ("id", "lat"))
     assert not c.tag_keys and not np.concatenate(c.version_valid).any()
+
+
+def _info(*fields, extra=b""):
+    """An Info body: wire-0 ``fields`` (field, value), then ``extra``."""
+    from pbf_encoder import _key, _varint
+
+    return b"".join(_key(fno, 0) + _varint(v) for fno, v in fields) + extra
+
+
+def _way_with_info(wid, *infos):
+    """A way message (refs [1, 2]) sending each of ``infos`` as an Info."""
+    from pbf_encoder import _key, _len_field, _packed_svarints, _varint
+
+    body = _key(1, 0) + _varint(wid) + _packed_svarints(8, [1, 2], delta=True)
+    return body + b"".join(_len_field(4, info) for info in infos)
+
+
+def _meta_rows(c):
+    """Per element: (version, ts_ms, changeset, uid, user_sid, visible),
+    None where the field is null."""
+    cat = lambda attr: np.concatenate(getattr(c, attr)).tolist()
+    opt = lambda attr, valid: [v if ok else None
+                               for v, ok in zip(cat(attr), cat(valid))]
+    return list(zip(opt("version", "version_valid"), opt("ts_ms", "ts_valid"),
+                    opt("changeset", "changeset_valid"), opt("uid", "uid_valid"),
+                    cat("user_sid"), opt("visible", "visible_valid")))
+
+
+_GEO = D.BlockGeometry(100, 0, 0, 1000)
+
+
+def _info_cases():
+    from pbf_encoder import _key, _len_field
+
+    return {  # Info occurrences → the element's metadata row
+        "full": ([_info((1, 3), (2, 1000), (3, 77), (4, 42), (5, 5), (6, 1))],
+                 (3, 1_000_000, 77, 42, 5, True)),
+        "version_only": ([_info((1, 1))], (1, None, None, None, -2, True)),
+        "absent": ([], (None, None, None, None, -2, True)),
+        "empty": ([b""], (None, None, None, None, -2, True)),
+        "deleted": ([_info((1, 2), (6, 0))], (2, None, None, None, -2, False)),
+        "uid_32bit_negative": ([_info((1, 2), (4, (1 << 32) - 7))],
+                               (2, None, None, -7, -2, True)),
+        "uid_64bit_negative": ([_info((3, (1 << 64) - 5), (4, (1 << 64) - 7))],
+                               (None, None, -5, -7, -2, True)),
+        "unknown_wire2": ([_info((1, 9), extra=_len_field(7, b"abc") + _info((4, 13)))],
+                          (9, None, None, 13, -2, True)),
+        "wire1_wire5": ([_info((1, 4), extra=_key(8, 1) + bytes(8) + _key(9, 5)
+                               + bytes(4) + _info((3, 6)))],
+                        (4, None, 6, None, -2, True)),
+        "field_twice": ([_info((1, 1), (4, 3), (1, 5))], (5, None, None, 3, -2, True)),
+        # proto2 merges the two: the later one wins per field, a field
+        # only the earlier one has survives
+        "info_twice": ([_info((4, 8), (1, 1), (5, 2)), _info((1, 6), (2, 20))],
+                       (6, 20_000, None, 8, 2, True)),
+    }
+
+
+def test_info_decodes_to_literal_values():
+    """Every element's Info decodes the same in both decoders, alone and
+    in one group with the others: present fields valid, 32- and 64-bit
+    two's-complement negatives, absent or empty Info (user "", visible
+    true), skipped wire-1/2/5 fields, a field or a whole Info sent
+    twice."""
+    cases = _info_cases()
+    ways = [_way_with_info(i, *infos) for i, (infos, _) in enumerate(cases.values())]
+    c = _assert_decoders_agree(D._WAY, ways, _GEO)
+    assert dict(zip(cases, _meta_rows(c))) == {k: row for k, (_, row) in cases.items()}
+    for name, way in zip(cases, ways):
+        assert _meta_rows(_assert_decoders_agree(D._WAY, [way], _GEO)) == [cases[name][1]]
+
+
+def test_info_decode_does_not_depend_on_neighbours(tmp_path):
+    """A negative uid in 10-byte two's complement decodes as -7 whatever
+    the other Infos of its group hold -- here one with an unknown wire-2
+    field -- in both decoders and through the executor read loop."""
+    from pbf_encoder import _len_field, encode_primitive_block, write_blob
+    from osm_pbf_parquet_spark.sources.pbf_source import decode_blob_entries
+
+    a = _way_with_info(1, _info((1, 2), (4, (1 << 64) - 7)))
+    b = _way_with_info(2, _info((1, 9), extra=_len_field(7, b"abc")))
+    rows = [(2, None, None, -7, -2, True), (9, None, None, None, -2, True)]
+    assert _meta_rows(_assert_decoders_agree(D._WAY, [a, b], _GEO)) == rows
+    path = str(tmp_path / "info.osm.pbf")
+    with open(path, "wb") as f:
+        write_blob(f, "OSMData", encode_primitive_block(
+            [_len_field(3, a) + _len_field(3, b)]))
+    info = B.index_blobs(path)[0]
+    (per_kind,) = decode_blob_entries([(path, info.offset, info.size)], ["way"], None)
+    got = D.kind_table("way", [per_kind["way"]]).select(["id", "uid", "version"])
+    assert got.to_pylist() == [{"id": 1, "uid": -7, "version": 2},
+                               {"id": 2, "uid": None, "version": 9}]
 
 
 def _unpacked_way():

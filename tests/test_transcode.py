@@ -532,6 +532,43 @@ def test_loc_on_ways_query_reads_signed_block_offsets(spark, tmp_path, monkeypat
                     (7, 1, 2, pytest.approx(1.00001), pytest.approx(1.99999))]
 
 
+def test_loc_on_ways_query_names_blob_of_way_without_id(spark, tmp_path, monkeypatch):
+    """A way without its required id fails ``q_osm_loc_on_ways`` with a
+    BlobDecodeError naming the file and the blob's offset (not a bare
+    ``KeyError``), and the query's stage is fed from a JVM ``Range``,
+    not a Python RDD."""
+    from pyspark.errors import PythonException
+
+    from pbf_encoder import (
+        StringTable, _len_field, _packed_svarints, encode_header_block,
+        encode_primitive_block, encode_way_with_locations, write_blob,
+    )
+    from osm_pbf_parquet_spark.pbf.blob import TYPE_DATA, index_blobs
+    from osm_pbf_parquet_spark.plans import osm_queries
+
+    st = StringTable()
+    way = encode_way_with_locations(st, {"id": 7, "refs": [1, 2], "lats": [1, 2],
+                                         "lons": [3, 4], "version": 1})
+    no_id = _len_field(3, _packed_svarints(8, [1, 2], delta=True)
+                       + _packed_svarints(9, [1, 2], delta=True)
+                       + _packed_svarints(10, [3, 4], delta=True))
+    path = str(tmp_path / "loc.osm.pbf")
+    with open(path, "wb") as f:
+        write_blob(f, "OSMHeader", encode_header_block(optional=("LocationsOnWays",)))
+        write_blob(f, "OSMData", encode_primitive_block([way], st=st))
+        write_blob(f, "OSMData", encode_primitive_block([no_id]))
+    bad = [i for i in index_blobs(path) if i.blob_type == TYPE_DATA][1]
+    monkeypatch.setattr(osm_queries, "LOC_FIXTURE", path)
+    df = osm_queries.q_osm_loc_on_ways(spark, str(tmp_path))
+    with pytest.raises(PythonException) as ei:
+        df.collect()
+    assert "BlobDecodeError" in str(ei.value)
+    assert f"{path}: blob at offset {bad.offset}" in str(ei.value)
+    assert "way without required field 1" in str(ei.value)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "Range (0, " in plan
+
+
 def test_fused_transcode_append_mode(spark, tmp_path):
     """Append mode: a second job adds its rows WITHOUT touching the first
     job's files (run-token-scoped finalize)."""
