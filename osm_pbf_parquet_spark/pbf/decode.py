@@ -16,10 +16,14 @@ canonical wide OSM schema (schema.py). Parity targets in the reference:
 Where the reference runs scalar per-element loops, this kernel decodes the
 packed delta arrays with ``np.cumsum`` and builds Arrow arrays from flat
 buffers + offsets — columnar end-to-end for the dominant dense-node path.
+Every packed repeated field goes through one decoder,
+``proto.finish_packed``: across a group's elements (``extract_ranges`` or
+``PackedBatch`` lanes), or as one lane per DenseNodes/DenseInfo array.
 The reference's three non-dense iterators (plain nodes, ways, relations)
 are one decoder here: a field table (``_PLAIN_NODE``/``_WAY``/
-``_RELATION``) names each message's required scalars and packed lists,
-``_decode_elements`` decodes a whole group field at once, and
+``_RELATION``) names each message's required scalars and packed lists
+(and the way's LocationsOnWays lists, read only for the ``locations``
+column), ``_decode_elements`` decodes a whole group field at once, and
 ``_decode_elements_scalar`` is its row-at-a-time reference (and the path
 for unpacked repeated fields); both end in ``_finish_elements``. Each
 element's ``Info`` (the reference reads it with the element's own
@@ -34,6 +38,8 @@ Semantics honored (format-mandated, see SURVEY §1.3):
 - a missing ``required`` field (element id, plain-node lat/lon) is a
   ProtoDecodeError; a scalar field sent twice keeps its last value, and
   an Info sent twice merges field by field
+- int32 fields keep their low 32 bits (``_int32``); a present user
+  string id outside the block's table is a ProtoDecodeError
 - non-dense elements with metadata: missing user → empty string
   (``sink.rs:182-183``); dense nodes without DenseInfo → all metadata null
   (``sink.rs:203-220``).
@@ -55,7 +61,6 @@ from .proto import (
     iter_fields,
     message_fields,
     read_varint,
-    repeated_numeric,
     scan_message_batch,
     scan_message_ranges,
     scan_wire2_fields,
@@ -78,12 +83,13 @@ def _i64(raw: int) -> int:
     return raw - (1 << 64) if raw >= (1 << 63) else raw
 
 
-def _i32(raw: int) -> int:
-    """Unsigned varint payload → two's-complement int32 (plain int32
-    fields; negative values may arrive as 32-bit-wrapped OR full 64-bit
-    two's complement depending on the encoder)."""
-    v = _i64(raw)
-    return v - (1 << 32) if (1 << 31) <= v < (1 << 32) else v
+def _int32(v):
+    """protobuf's int32 parse rule, for an int or an int64 array: keep the
+    low 32 bits as two's complement, as the reference's generated reader
+    does. A negative value may arrive 32-bit-wrapped or as full 64-bit
+    two's complement; a value past int32 wraps instead of failing late,
+    at Arrow assembly."""
+    return ((v & 0xFFFFFFFF) ^ 0x80000000) - 0x80000000
 
 
 def parse_header_block(payload: bytes) -> dict:
@@ -184,10 +190,10 @@ class _StringTable:
             # boundary-delta mask, then wrap buffer + offsets as a binary
             # array; the cast validates UTF-8 (StringtableUtf8 parity)
             arr = np.frombuffer(self._payload, dtype=np.uint8)
-            blob, _ = extract_ranges(
+            blob = extract_ranges(
                 arr, self._starts, self._lens,
                 np.zeros(self._n, dtype=np.int64), 1,
-            )
+            )[0]
             offsets = np.zeros(self._n + 1, dtype=np.int32)
             np.cumsum(self._lens, out=offsets[1:])
             binarr = pa.Array.from_buffers(
@@ -230,6 +236,11 @@ class _Columns:
         self.mem_types: list[np.ndarray] = []
         self.mem_refs: list[np.ndarray] = []
         self.mem_roles: list[np.ndarray] = []
+        # LocationsOnWays (read on request): flat degrees + per-row counts
+        self.loc_lat: list[np.ndarray] = []
+        self.loc_lat_counts: list[np.ndarray] = []
+        self.loc_lon: list[np.ndarray] = []
+        self.loc_lon_counts: list[np.ndarray] = []
         # metadata (nullable): numpy float64 with nan = null for ints is
         # lossy, so keep int64 + validity masks
         self.changeset: list[np.ndarray] = []
@@ -307,13 +318,15 @@ def decode_primitive_block(
     without decoding their payloads (mirrors the reference's
     skip-blobs-without-ways logic, ``osmpbf/src/indexed.rs:277-278``).
     ``columns`` prunes expensive columns (tags / nds / members / metadata)
-    when the query doesn't need them.
+    when the query doesn't need them. ``locations`` (the LocationsOnWays
+    lat/lon of each way) is not a wide-schema column: it is decoded only
+    when ``columns`` names it.
     """
     kinds = frozenset(kinds)
     want = set(columns) if columns is not None else None
 
     def _want(col: str) -> bool:
-        return want is None or col in want
+        return col in want if want is not None else col != "locations"
 
     fields = message_fields(payload)
     geo = block_geometry(fields)
@@ -352,10 +365,10 @@ def block_geometry(fields: dict) -> BlockGeometry:
     granularity/date_granularity are int32, offsets int64 — negative
     values are legal and arrive as unsigned varint bit patterns."""
     return BlockGeometry(
-        _i32(fields.get(17, [100])[0]) or 100,
+        _int32(fields.get(17, [100])[0]) or 100,
         _i64(fields.get(19, [0])[0]),
         _i64(fields.get(20, [0])[0]),
-        _i32(fields.get(18, [1000])[0]) or 1000,
+        _int32(fields.get(18, [1000])[0]) or 1000,
     )
 
 
@@ -403,17 +416,21 @@ class _Element(NamedTuple):
     counts: str | None  # its per-row counts attribute
     # packed lists (field, attribute, zigzag, delta); counts come from the first
     lists: tuple
+    # sint64 delta coordinate lists read for the ``locations`` column, each
+    # with its own counts (field, attribute, ``BlockGeometry`` offset)
+    locations: tuple = ()
 
     @property
     def repeated(self) -> tuple:
         """Every packed field of the message."""
-        return (2, 3) + tuple(fno for fno, *_ in self.lists)
+        return (2, 3) + tuple(fno for fno, *_ in self.lists + self.locations)
 
 
 _PLAIN_NODE = _Element(_KIND_NODE, "has_coords", ((1, True), (8, True), (9, True)),
                        None, None, ())
 _WAY = _Element(_KIND_WAY, "has_nds", ((1, False),), "nds", "nd_counts",
-                ((8, "nd_refs", True, True),))
+                ((8, "nd_refs", True, True),),
+                ((9, "loc_lat", "lat_offset"), (10, "loc_lon", "lon_offset")))
 _RELATION = _Element(_KIND_RELATION, "has_members", ((1, False),), "members",
                      "mem_counts", ((9, "mem_refs", True, True),
                                     (8, "mem_roles", False, False),
@@ -432,8 +449,8 @@ def _decode_elements(spec: _Element, payloads, c: _Columns,
     the group (per-element delta reset via segmented cumsum), and the
     same scanner parses every Info submessage in place. LocationsOnWays
     lat/lon arrays (way fields 9/10) are not emitted in the wide schema
-    (parity: the reference sink ignores them too, sink.rs:233-234);
-    ``decode_way_locations`` reads them.
+    (parity: the reference sink ignores them too, sink.rs:233-234); they
+    are decoded only for the ``locations`` column.
 
     The rare legal-but-unpacked encoding (a repeated field as individual
     wire-0 varints) drops the group to ``_decode_elements_scalar``."""
@@ -444,8 +461,8 @@ def _decode_elements(spec: _Element, payloads, c: _Columns,
 
     def packed(fno: int, zigzag: bool, delta: bool):
         m = rf == fno
-        blob, nbytes = extract_ranges(arr, rs[m], rn[m], rl[m], n0)
-        return finish_packed(blob, nbytes, zigzag=zigzag, delta=delta)
+        return finish_packed(*extract_ranges(arr, rs[m], rn[m], rl[m], n0),
+                             zigzag=zigzag, delta=delta)
 
     def info():
         m = rf == 4
@@ -549,6 +566,11 @@ def _finish_elements(spec: _Element, c: _Columns, n0: int, scalars, packed,
                 getattr(c, attr).append(vals)
     c.nd_counts.append(counts if spec.counts == "nd_counts" else zeros)
     c.mem_counts.append(counts if spec.counts == "mem_counts" else zeros)
+    if spec.locations and _want("locations"):
+        for fno, attr, offset in spec.locations:
+            raw, n = packed(fno, True, True)
+            getattr(c, attr).append((getattr(geo, offset) + geo.granularity * raw) * NANO)
+            getattr(c, attr + "_counts").append(n)
     if any(map(_want, _META_COLUMNS)):
         meta = _info_columns(info(), n0, geo.date_granularity)
         for attr, arr in zip(_META_ATTRS, meta):
@@ -597,24 +619,28 @@ def _info_columns(scalars, n0: int, date_granularity: int) -> tuple:
     (osmpbf/src/elements.rs:573-625): a field is valid when present, a
     missing user is ``""`` for a non-dense element (sink.rs:182-183),
     ``visible`` defaults true. version/uid (int32) and changeset/
-    timestamp (int64) are plain varints: negatives arrive as 64-bit (or,
-    for int32, 32-bit-wrapped) two's complement."""
+    timestamp (int64) are plain varints: negatives arrive as two's
+    complement (``_int32`` for the int32 ones)."""
     (version, has_version), (ts, has_ts), (changeset, has_changeset), \
         (uid, has_uid), (user, has_user), (visible, has_visible) = (
             _last(scalars, fno, n0) for fno in range(1, 7))
     return (
         changeset.astype(np.int64), has_changeset,
         ts.astype(np.int64) * date_granularity, has_ts,
-        _s32(uid.astype(np.int64)), has_uid,
-        np.where(has_user, user.astype(np.int64), -2),  # -2 → ""
-        _s32(version.astype(np.int64)), has_version,
+        _int32(uid.astype(np.int64)), has_uid,
+        np.where(has_user, _user_sids(user.astype(np.int64)), -2),  # -2 → ""
+        _int32(version.astype(np.int64)), has_version,
         ~has_visible | (visible != 0), np.ones(n0, dtype=bool),
     )
 
 
-def _s32(v: np.ndarray) -> np.ndarray:
-    """``_i32`` over an int64 array."""
-    return np.where((v >= 1 << 31) & (v < 1 << 32), v - (1 << 32), v)
+def _user_sids(sids: np.ndarray) -> np.ndarray:
+    """Present user string ids; a negative one (e.g. a uint32 sent as
+    2^64 - 1) is out of bounds, not the null/empty sentinel it would
+    alias (``seal`` checks the upper bound)."""
+    if sids.size and int(sids.min()) < 0:
+        raise ProtoDecodeError("user_sid out of bounds")
+    return sids
 
 
 def _decode_dense_nodes(payload, c: _Columns, granularity, lat_offset, lon_offset,
@@ -622,31 +648,30 @@ def _decode_dense_nodes(payload, c: _Columns, granularity, lat_offset, lon_offse
     """DenseNodes (osmformat.proto:209-219): the hot path — pure numpy.
 
     Delta chains reset per DenseNodes message; keys_vals is
-    ``((<k> <v>)* 0)*`` with stringid 0 as delimiter.
+    ``((<k> <v>)* 0)*`` with stringid 0 as delimiter. Every array is a
+    one-lane ``_dense_field``; lat/lon and each DenseInfo array must pair
+    up with the ids.
     """
     f = message_fields(payload)
-    ids = repeated_numeric(f.get(1, []), signed_zigzag=True, delta=True)
+    ids = _dense_field(f.get(1, []), zigzag=True, delta=True)
     n0 = ids.size
     if n0 == 0:
         return
     c.has_coords = True
     c.n += n0
     c.ids.append(ids)
-    if _want("lat"):
-        raw_lat = repeated_numeric(f.get(8, []), signed_zigzag=True, delta=True)
-        c.lat.append((lat_offset + granularity * raw_lat) * NANO)
-    else:
-        c.lat.append(np.full(n0, np.nan))
-    if _want("lon"):
-        raw_lon = repeated_numeric(f.get(9, []), signed_zigzag=True, delta=True)
-        c.lon.append((lon_offset + granularity * raw_lon) * NANO)
-    else:
-        c.lon.append(np.full(n0, np.nan))
+    for fno, name, offset, out in ((8, "lat", lat_offset, c.lat),
+                                   (9, "lon", lon_offset, c.lon)):
+        if _want(name):
+            raw = _paired(_dense_field(f.get(fno, []), zigzag=True, delta=True),
+                          n0, "DenseNodes", name, absent_ok=False)
+            out.append((offset + granularity * raw) * NANO)
+        else:
+            out.append(np.full(n0, np.nan))
 
     # tags from keys_vals
     if _want("tags") and 10 in f:
-        kv = repeated_numeric(f[10], signed_zigzag=False)
-        _dense_tags(kv, n0, c)
+        _dense_tags(_dense_field(f[10]), n0, c)
     else:
         c.tag_counts.append(np.zeros(n0, dtype=np.int64))
     c.nd_counts.append(np.zeros(n0, dtype=np.int64))
@@ -658,47 +683,54 @@ def _decode_dense_nodes(payload, c: _Columns, granularity, lat_offset, lon_offse
         _append_absent_meta(c, n0)
         return
     fi = message_fields(info)
-    versions = repeated_numeric(fi.get(1, []), signed_zigzag=False)  # not delta
-    ts = repeated_numeric(fi.get(2, []), signed_zigzag=True, delta=True) * date_granularity
-    changesets = repeated_numeric(fi.get(3, []), signed_zigzag=True, delta=True)
-    uids = repeated_numeric(fi.get(4, []), signed_zigzag=True, delta=True)
-    user_sids = repeated_numeric(fi.get(5, []), signed_zigzag=True, delta=True)
-    visible_raw = repeated_numeric(fi.get(6, []), signed_zigzag=False)
+    # (field, name, zigzag+delta); version and visible are plain
+    versions, ts, changesets, uids, user_sids, visible_raw = (
+        _paired(_dense_field(fi.get(fno, []), zigzag=coded, delta=coded),
+                n0, "DenseInfo", name)
+        for fno, name, coded in ((1, "version", False), (2, "timestamp", True),
+                                 (3, "changeset", True), (4, "uid", True),
+                                 (5, "user_sid", True), (6, "visible", False)))
 
-    # DenseInfo parallel arrays must match the node count exactly (or be
-    # absent) — zero-padding a short array would fabricate version=0/ts=0
-    # values presented as real metadata
-    for name, arr in (("version", versions), ("timestamp", ts),
-                      ("changeset", changesets), ("uid", uids),
-                      ("user_sid", user_sids), ("visible", visible_raw)):
-        if arr.size not in (0, n0):
-            raise ProtoDecodeError(
-                f"DenseInfo {name} array length {arr.size} != node count {n0}"
-            )
-
-    def _present(arr, absent_fill):
-        if arr.size:
-            return arr.astype(np.int64, copy=False), np.ones(n0, dtype=bool)
-        return (np.full(n0, absent_fill, dtype=np.int64),
-                np.zeros(n0, dtype=bool))
-
-    v, vv = _present(versions, 0)
-    c.version.append(v); c.version_valid.append(vv)
-    v, vv = _present(ts, 0)
-    c.ts_ms.append(v); c.ts_valid.append(vv)
-    v, vv = _present(changesets, 0)
-    c.changeset.append(v); c.changeset_valid.append(vv)
-    v, vv = _present(uids, 0)
-    c.uid.append(v); c.uid_valid.append(vv)
+    for arr, attr, valid in ((_int32(versions), "version", "version_valid"),
+                             (ts * date_granularity, "ts_ms", "ts_valid"),
+                             (changesets, "changeset", "changeset_valid"),
+                             (_int32(uids), "uid", "uid_valid")):
+        getattr(c, attr).append(arr if arr.size else np.zeros(n0, dtype=np.int64))
+        getattr(c, valid).append(np.full(n0, arr.size > 0))
     # user present whenever DenseInfo has user_sids; missing → "" parity
     # (dense.rs DenseNodeInfo::user over parallel arrays)
-    c.user_sid.append(user_sids.astype(np.int64, copy=False)
-                      if user_sids.size else np.full(n0, -2, dtype=np.int64))
+    c.user_sid.append(_user_sids(user_sids) if user_sids.size
+                      else np.full(n0, -2, dtype=np.int64))
     if visible_raw.size:
         c.visible.append(visible_raw.astype(bool))
     else:
         c.visible.append(np.ones(n0, dtype=bool))  # default true (dense.rs:310)
     c.visible_valid.append(np.ones(n0, dtype=bool))
+
+
+def _dense_field(values, zigzag: bool = False, delta: bool = False) -> np.ndarray:
+    """Every occurrence of one DenseNodes/DenseInfo field (its
+    ``message_fields`` values: packed chunks, or varints sent unpacked),
+    in order → its int64 values, decoded as one lane."""
+    batch = PackedBatch(1)
+    for v in values:
+        if isinstance(v, int):
+            batch.add_scalar(0, v)
+        else:
+            batch.add(0, v)
+    return batch.finish(zigzag=zigzag, delta=delta)[0]
+
+
+def _paired(arr: np.ndarray, n0: int, message: str, name: str,
+            absent_ok: bool = True) -> np.ndarray:
+    """A DenseNodes parallel array must have one value per node id (or,
+    where ``absent_ok``, none): padding a short one would fabricate
+    values, and a long one would fail only at Arrow assembly."""
+    if arr.size != n0 and not (absent_ok and arr.size == 0):
+        raise ProtoDecodeError(
+            f"{message} {name} array length {arr.size} != node count {n0}"
+        )
+    return arr
 
 
 def _dense_tags(kv: np.ndarray, n0: int, c: _Columns) -> None:
@@ -729,17 +761,6 @@ def _dense_tags(kv: np.ndarray, n0: int, c: _Columns) -> None:
     key_pos = reps + 2 * within
     c.tag_keys.append(kv[key_pos])
     c.tag_vals.append(kv[key_pos + 1])
-
-
-def decode_way_locations(way_payload, granularity=100, lat_offset=0, lon_offset=0):
-    """LocationsOnWays per-way coordinates (optional feature) — returns
-    (refs, lat_degrees, lon_degrees). Reference:
-    ``osmpbf/src/elements.rs:352-423``."""
-    f = message_fields(way_payload)
-    refs = repeated_numeric(f.get(8, []), signed_zigzag=True, delta=True)
-    lat = (lat_offset + granularity * repeated_numeric(f.get(9, []), signed_zigzag=True, delta=True)) * NANO
-    lon = (lon_offset + granularity * repeated_numeric(f.get(10, []), signed_zigzag=True, delta=True)) * NANO
-    return refs, lat, lon
 
 
 # --- Arrow assembly ----------------------------------------------------------

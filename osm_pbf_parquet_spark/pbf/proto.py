@@ -191,17 +191,6 @@ def uvarints_from_raw(raw: np.ndarray) -> np.ndarray:
     return vals
 
 
-def decode_packed_uvarints(chunks) -> np.ndarray:
-    """Decode one or more packed-varint payloads into a uint64 array."""
-    if not chunks:
-        return np.empty(0, dtype=np.uint64)
-    if len(chunks) == 1:
-        raw = np.frombuffer(chunks[0], dtype=np.uint8)
-    else:
-        raw = np.frombuffer(b"".join(bytes(c) for c in chunks), dtype=np.uint8)
-    return uvarints_from_raw(raw)
-
-
 def zigzag_decode(values: np.ndarray) -> np.ndarray:
     """Vectorized zigzag decode uint64 → int64."""
     return ((values >> _U64_1).astype(np.int64)) ^ -((values & _U64_1).astype(np.int64))
@@ -434,49 +423,56 @@ def scan_message_ranges(arr: np.ndarray, w_start: np.ndarray,
 
 def extract_ranges(arr: np.ndarray, starts: np.ndarray, lens: np.ndarray,
                    lanes: np.ndarray, n0: int):
-    """Concatenate the byte ranges (in lane order) and count bytes per
-    lane. Gather indices are built directly from the range bounds —
-    O(extracted bytes), independent of the buffer size (the previous
-    boundary-delta mask cost a full-buffer cumsum PER FIELD, the dominant
-    way-blob decode cost). Output is in buffer order == lane order
-    (lanes occupy disjoint ascending spans); scan_message_batch emits
-    occurrences iteration-major, NOT position-sorted, so sort when
-    needed (the mask-based predecessor was order-insensitive)."""
+    """Concatenate the byte ranges (in lane order); → (bytes, bytes per
+    lane, end offset of every range in the output). Gather indices are
+    built directly from the range bounds — O(extracted bytes), independent
+    of the buffer size (the previous boundary-delta mask cost a
+    full-buffer cumsum PER FIELD, the dominant way-blob decode cost).
+    Output is in buffer order == lane order (lanes occupy disjoint
+    ascending spans); scan_message_batch emits occurrences
+    iteration-major, NOT position-sorted, so sort when needed (the
+    mask-based predecessor was order-insensitive)."""
     nbytes = np.zeros(n0, dtype=np.int64)
     if starts.size == 0:
-        return np.empty(0, dtype=np.uint8), nbytes
+        return (np.empty(0, dtype=np.uint8), nbytes,
+                np.empty(0, dtype=np.int64))
     if starts.size > 1 and (np.diff(starts) < 0).any():
         order = np.argsort(starts, kind="stable")
         starts, lens, lanes = starts[order], lens[order], lanes[order]
-    total = int(lens.sum())
-    out_offs = np.cumsum(lens) - lens  # each range's position in the output
-    idx = (np.arange(total, dtype=np.int64)
+    ends = np.cumsum(lens)
+    out_offs = ends - lens  # each range's position in the output
+    idx = (np.arange(int(ends[-1]), dtype=np.int64)
            + np.repeat(starts - out_offs, lens))
     blob = arr[idx]
     np.add.at(nbytes, lanes, lens)
-    return blob, nbytes
+    return blob, nbytes, ends
 
 
-def finish_packed(raw: np.ndarray, nbytes: np.ndarray,
+def finish_packed(raw: np.ndarray, nbytes: np.ndarray, ends: np.ndarray,
                   zigzag: bool = False, delta: bool = False):
-    """Decode a concatenated packed-varint byte blob into values + per-lane
-    counts, with optional zigzag and per-lane delta-reset cumsum (shared
-    core of PackedBatch.finish and the vectorized range path)."""
+    """The packed-varint decoder: ``raw`` is every packed chunk of one
+    field, concatenated in lane order, ``nbytes`` its bytes per lane and
+    ``ends`` each chunk's end offset in ``raw``. → (values int64,
+    per-lane counts), with optional zigzag and a delta chain that
+    restarts at every lane (reference semantics: delta chains restart at
+    each way/relation, ``osmpbf/src/elements.rs:327-350``; a DenseNodes
+    message is one lane). Every non-empty chunk must end on a varint
+    terminator: otherwise its dangling bytes would bleed into the next
+    chunk's values, where a per-chunk decode raises. One lane skips the
+    per-lane count and segmented-delta passes."""
     n0 = nbytes.size
     if raw.size == 0:
         return np.empty(0, dtype=np.int64), np.zeros(n0, dtype=np.int64)
     u = uvarints_from_raw(raw)
     vals = zigzag_decode(u) if zigzag else u.astype(np.int64)
+    if ends.size > 1 and (raw[ends[ends > 0] - 1] >= 0x80).any():
+        raise ProtoDecodeError("packed varint run crosses a chunk boundary")
+    if n0 == 1:
+        return (np.cumsum(vals) if delta else vals), np.array([vals.size])
     term_cs = np.concatenate([[0], np.cumsum(raw < 0x80)])
     byte_bounds = np.concatenate([[0], np.cumsum(nbytes)])
-    # every non-empty element's last byte must terminate a varint —
-    # otherwise a truncated payload silently bleeds values into the next
-    # element (a per-element decode would raise on the dangling bytes)
-    last = byte_bounds[1:][nbytes > 0] - 1
-    if last.size and (raw[last] >= 0x80).any():
-        raise ProtoDecodeError("packed varint run crosses element boundary")
     counts = term_cs[byte_bounds[1:]] - term_cs[byte_bounds[:-1]]
-    if delta and vals.size:
+    if delta:
         cs = np.cumsum(vals)
         elem_starts = np.cumsum(counts) - counts
         base = np.where(elem_starts > 0, cs[np.maximum(elem_starts - 1, 0)], 0)
@@ -485,17 +481,11 @@ def finish_packed(raw: np.ndarray, nbytes: np.ndarray,
 
 
 class PackedBatch:
-    """Cross-element batcher for ONE packed field of a message group.
-
-    The per-element decode of packed arrays (way refs, relation memids,
-    tag key/val indexes) is the Python hot spot — thousands of small
-    numpy calls. This class instead accumulates every element's payload
-    bytes and decodes the WHOLE group with one vectorized pass, tracking
-    per-element value counts via byte-offset boundaries and applying the
-    per-element delta reset (reference semantics: delta chains restart at
-    each way/relation, ``osmpbf/src/elements.rs:327-350``) with a
-    segmented cumsum.
-    """
+    """Cross-lane batcher for ONE packed field: every lane's chunks
+    (packed payloads, or unpacked varints re-encoded in place) in
+    occurrence order, decoded by one ``finish_packed`` pass. A lane is a
+    way/relation/node of a group in the row-at-a-time element decoder, or
+    the whole message for a DenseNodes/DenseInfo field (one lane)."""
 
     __slots__ = ("parts", "nbytes")
 
@@ -504,43 +494,19 @@ class PackedBatch:
         self.nbytes = np.zeros(n0, dtype=np.int64)
 
     def add(self, i: int, chunk) -> None:
-        """Append a wire-2 packed payload for element ``i``."""
+        """Append a wire-2 packed payload for lane ``i``."""
         self.parts.append(chunk)
         self.nbytes[i] += len(chunk)
 
     def add_scalar(self, i: int, value: int) -> None:
         """Rare unpacked wire-0 occurrence — normalize by re-encoding."""
-        b = encode_varint(value)
-        self.parts.append(b)
-        self.nbytes[i] += len(b)
+        self.add(i, encode_varint(value))
 
     def finish(self, zigzag: bool = False, delta: bool = False):
-        """→ (values int64, per-element counts). One vectorized decode."""
-        if not self.parts:
-            return (np.empty(0, dtype=np.int64),
-                    np.zeros(self.nbytes.size, dtype=np.int64))
-        raw = np.frombuffer(b"".join(self.parts), dtype=np.uint8)
-        return finish_packed(raw, self.nbytes, zigzag=zigzag, delta=delta)
-
-
-def repeated_numeric(values, signed_zigzag: bool, delta: bool = False) -> np.ndarray:
-    """Decode a repeated numeric field that may arrive packed (wire 2 →
-    memoryview chunks) or unpacked (wire 0 → ints) — proto2 readers must
-    accept both encodings, in any interleaving, and delta decoding
-    depends on preserving the original occurrence order."""
-    segments = []
-    pending_scalars: list[int] = []
-    for v in values:
-        if isinstance(v, memoryview):
-            if pending_scalars:
-                segments.append(np.array(pending_scalars, dtype=np.uint64))
-                pending_scalars = []
-            segments.append(decode_packed_uvarints([v]))
-        else:
-            pending_scalars.append(v)
-    if pending_scalars:
-        segments.append(np.array(pending_scalars, dtype=np.uint64))
-    arr = (np.concatenate(segments) if segments
-           else np.empty(0, dtype=np.uint64))
-    out = zigzag_decode(arr) if signed_zigzag else arr.astype(np.int64)
-    return np.cumsum(out) if delta else out
+        """→ (values int64, per-lane counts). A single chunk is decoded
+        in place, not copied."""
+        parts = self.parts
+        raw = np.frombuffer(parts[0] if len(parts) == 1 else b"".join(parts),
+                            dtype=np.uint8)
+        ends = np.cumsum(np.fromiter(map(len, parts), np.int64, len(parts)))
+        return finish_packed(raw, self.nbytes, ends, zigzag=zigzag, delta=delta)

@@ -24,8 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import osm_ops
-from ..pbf.decode import block_geometry, decode_primitive_block, decode_way_locations
-from ..pbf.proto import message_fields
+from ..pbf.decode import decode_primitive_block
 from ..sources.pbf_source import (
     _catalog_rows, map_blob_groups, read_blob_entries, scan_pbf,
 )
@@ -97,29 +96,30 @@ def q_osm_loc_on_ways(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _way_vertices(payload):
     """One PrimitiveBlock → a row per way vertex: way id, position in the
-    way, node ref and inline location. Ids come from the block decoder,
-    so a way without its required id fails as it does in a scan; a way
-    with fewer locations than refs keeps the paired prefix, as the
-    reference's ``node_locations`` zip does."""
-    ways = decode_primitive_block(payload, kinds=["way"], columns=["id"]).get("way")
-    ids = np.concatenate(ways.ids) if ways is not None else np.empty(0, np.int64)
-    fields = message_fields(payload)
-    geo = block_geometry(fields)
-    refs, lats, lons = [], [], []
-    for group in fields.get(2, []):
-        for wp in message_fields(group).get(3, []):
-            r, la, lo = decode_way_locations(
-                wp, geo.granularity, geo.lat_offset, geo.lon_offset
-            )
-            k = min(r.size, la.size, lo.size)
-            refs.append(r[:k]); lats.append(la[:k]); lons.append(lo[:k])
-    counts = np.array([r.size for r in refs], dtype=np.int64)
-    seq = np.arange(int(counts.sum())) - np.repeat(np.cumsum(counts) - counts, counts)
-    cat = lambda parts: np.concatenate(parts) if parts else np.empty(0)
+    way, node ref and inline location, from one block decode. A way
+    without its required id fails as it does in a scan; a way with fewer
+    locations than refs keeps the paired prefix, as the reference's
+    ``node_locations`` zip does."""
+    ways = decode_primitive_block(
+        payload, kinds=["way"], columns=["id", "nds", "locations"]
+    ).get("way")
+
+    def flat(attr):
+        chunks = getattr(ways, attr) if ways is not None else []
+        return np.concatenate(chunks) if chunks else np.empty(0, np.int64)
+
+    lists = [(flat(vals), flat(counts)) for vals, counts in (
+        ("nd_refs", "nd_counts"), ("loc_lat", "loc_lat_counts"), ("loc_lon", "loc_lon_counts"))]
+    n = np.minimum.reduce([counts for _, counts in lists])
+
+    def within(counts):  # each value's position in its way
+        return np.arange(counts.sum()) - np.repeat(np.cumsum(counts) - counts, counts)
+
+    refs, lats, lons = (vals[within(counts) < np.repeat(n, counts)] for vals, counts in lists)
     return pa.RecordBatch.from_arrays(
-        [pa.array(np.repeat(ids, counts), pa.int64()), pa.array(seq, pa.int32()),
-         pa.array(cat(refs), pa.int64()), pa.array(cat(lats), pa.float64()),
-         pa.array(cat(lons), pa.float64())],
+        [pa.array(np.repeat(flat("ids"), n), pa.int64()), pa.array(within(n), pa.int32()),
+         pa.array(refs, pa.int64()), pa.array(lats, pa.float64()),
+         pa.array(lons, pa.float64())],
         names=["way_id", "seq", "ref", "lat", "lon"],
     )
 

@@ -49,8 +49,15 @@ def test_packed_varints_vectorized():
             else:
                 encoded.append(b)
                 break
-    out = P.decode_packed_uvarints([memoryview(bytes(encoded))])
+    out = P.uvarints_from_raw(np.frombuffer(bytes(encoded), dtype=np.uint8))
     assert [int(x) for x in out] == [v for v in values]
+    # the same run as packed chunks of one lane, cut after varint ends
+    ends = [i + 1 for i, b in enumerate(encoded) if b < 0x80]
+    pb = P.PackedBatch(1)
+    for a, b in zip([0] + ends[99::100], ends[99::100] + [len(encoded)]):
+        pb.add(0, memoryview(bytes(encoded))[a:b])
+    vals, counts = pb.finish()
+    assert vals.astype(np.uint64).tolist() == values and counts.tolist() == [len(values)]
 
 
 def test_zigzag():
@@ -160,28 +167,23 @@ def test_loc_on_ways():
     rel = rows[("relation", 120)]
     assert rel["members"] == [{"type": "way", "ref": 107, "role": "test_role"}]
 
-    # per-way locations decode (D5)
+    # per-way locations decode (D5): the block decoder's locations column
     for info, raw in B.iter_blobs(LOC_ON_WAYS_FILE):
         if info.blob_type != B.TYPE_DATA:
             continue
-        payload = B.decompress_blob(raw)
-        fields = P.message_fields(payload)
-        gran = fields.get(17, [100])[0]
-        lat_off = fields.get(19, [0])[0]
-        lon_off = fields.get(20, [0])[0]
-        for group in fields.get(2, []):
-            g = P.message_fields(group)
-            for wp in g.get(3, []):
-                refs, lat, lon = D.decode_way_locations(wp, gran, lat_off, lon_off)
-                assert list(refs) == [105, 106, 108, 105]
-                np.testing.assert_allclose(
-                    lat, [52.1224031, 52.11992359584, 52.11989910567, 52.1224031],
-                    atol=1e-7,
-                )
-                np.testing.assert_allclose(
-                    lon, [11.6284017, 11.62564468943, 11.63101926915, 11.6284017],
-                    atol=1e-7,
-                )
+        c = D.decode_primitive_block(B.decompress_blob(raw), kinds=["way"],
+                                     columns=["nds", "locations"]).get("way")
+        if c is None:
+            continue
+        assert np.concatenate(c.nd_refs).tolist() == [105, 106, 108, 105]
+        np.testing.assert_allclose(
+            np.concatenate(c.loc_lat),
+            [52.1224031, 52.11992359584, 52.11989910567, 52.1224031], atol=1e-7,
+        )
+        np.testing.assert_allclose(
+            np.concatenate(c.loc_lon),
+            [11.6284017, 11.62564468943, 11.63101926915, 11.6284017], atol=1e-7,
+        )
 
 
 def test_encoding_variants_identical():
@@ -668,6 +670,151 @@ def test_dense_info_length_mismatch_errors():
         D.parse_block_to_batch(bytes(block))
 
 
+def _read_kind(tmp_path, kind, group, st):
+    """One-blob PBF of ``group`` → ``kind_table`` through the executor
+    read loop (``decode_blob_entries``)."""
+    from pbf_encoder import encode_primitive_block, write_blob
+    from osm_pbf_parquet_spark.sources.pbf_source import decode_blob_entries
+
+    path = str(tmp_path / "one.osm.pbf")
+    with open(path, "wb") as f:
+        write_blob(f, "OSMData", encode_primitive_block([group], st=st))
+    info = B.index_blobs(path)[0]
+    (per_kind,) = decode_blob_entries([(path, info.offset, info.size)], [kind], None)
+    return D.kind_table(kind, [per_kind[kind]])
+
+
+def _dense_group(st, ids, lats=None, info=b"", id_chunks=None):
+    """A DenseNodes group: ids (or raw packed ``id_chunks``), lat/lon
+    (lat defaults to one per id), an optional DenseInfo body."""
+    from pbf_encoder import _len_field, _packed_svarints
+
+    lats = [0] * len(ids) if lats is None else lats
+    body = (b"".join(_len_field(1, c) for c in id_chunks) if id_chunks
+            else _packed_svarints(1, ids, delta=True))
+    body += _packed_svarints(8, lats, delta=True)
+    body += _packed_svarints(9, [0] * len(ids), delta=True)
+    if info:
+        body += _len_field(5, info)
+    return _len_field(2, body)
+
+
+def _len_field_way(wid, info):
+    """A PrimitiveGroup way entry sending ``info``."""
+    from pbf_encoder import _len_field
+
+    return _len_field(3, _way_with_info(wid, info))
+
+
+def test_int32_info_fields_keep_low_32_bits(tmp_path):
+    """version and uid are int32: a varint past int32 keeps its low 32
+    bits as two's complement (protobuf's parse rule), for Info and
+    DenseInfo alike, instead of an Arrow error after the read loop."""
+    from pbf_encoder import StringTable, _packed_svarints, _packed_uvarints
+
+    big = [((1 << 40) + 3, 3), ((1 << 32) - 7, -7), (1 << 31, -(1 << 31)),
+           ((1 << 64) - 2, -2)]
+    ways = b"".join(_len_field_way(i, _info((1, raw), (4, raw)))
+                    for i, (raw, _) in enumerate(big))
+    got = _read_kind(tmp_path, "way", ways, StringTable()).select(["uid", "version"])
+    assert got.to_pylist() == [{"uid": v, "version": v} for _, v in big]
+    # DenseInfo: version plain, uid delta-coded sint32 (sums past int32)
+    uids = [(1 << 40) + 3, (1 << 32) - 7, 1 << 31, -2 - (1 << 33)]
+    info = (_packed_uvarints(1, [raw for raw, _ in big])
+            + _packed_svarints(4, uids, delta=True))
+    group = _dense_group(StringTable(), [1, 2, 3, 4], info=info)
+    got = _read_kind(tmp_path, "node", group, StringTable()).select(["uid", "version"])
+    assert got.to_pylist() == [{"uid": v, "version": v} for _, v in big]
+
+
+@pytest.mark.parametrize("kind", ["way", "node"])
+def test_present_user_sid_out_of_bounds_raises(kind, tmp_path):
+    """A user string id that is present but negative (a uint32 sent as
+    2^64 - 1, or DenseInfo deltas summing below 0) is out of bounds, not
+    the null/empty-user sentinel it would alias."""
+    from pbf_encoder import StringTable, _packed_svarints
+    from osm_pbf_parquet_spark.sources.pbf_source import BlobDecodeError
+
+    st = StringTable()
+    st.add("u")
+    if kind == "way":
+        group = _len_field_way(1, _info((1, 1), (5, (1 << 64) - 1)))
+    else:
+        group = _dense_group(st, [1, 2], info=_packed_svarints(5, [1, -1], delta=True))
+    with pytest.raises(BlobDecodeError, match="user_sid out of bounds") as ei:
+        _read_kind(tmp_path, kind, group, st)
+    assert isinstance(ei.value.__cause__, P.ProtoDecodeError)
+
+
+def test_dense_coordinates_must_pair_with_ids():
+    """DenseNodes lat/lon arrays with a different count than the ids are
+    a ProtoDecodeError in the decoder, not an Arrow length error at
+    assembly."""
+    from pbf_encoder import StringTable, encode_primitive_block
+
+    block = encode_primitive_block([_dense_group(StringTable(), [1, 2, 3], lats=[0, 0])])
+    with pytest.raises(P.ProtoDecodeError, match="lat array length 2 != node count 3"):
+        D.decode_primitive_block(block)
+
+
+def _chunked(field_no):
+    """Field ``field_no`` as two packed chunks, the first ending
+    mid-varint: concatenated they would read as values [1, -64]."""
+    from pbf_encoder import _len_field
+
+    return _len_field(field_no, b"\x02\x81") + _len_field(field_no, b"\x01")
+
+
+@pytest.mark.parametrize("case", ["way", "relation", "dense_node"])
+def test_packed_chunk_must_end_on_a_varint(case):
+    """Every packed chunk must end on a varint terminator: a chunk cut
+    mid-varint is an error, not bytes that bleed into the next chunk's
+    values -- for way refs, relation member ids and dense node ids, in
+    both element decoders."""
+    from pbf_encoder import (StringTable, _key, _len_field, _packed_uvarints,
+                             _varint, encode_primitive_block)
+
+    if case == "dense_node":
+        group = _dense_group(StringTable(), [1, 2], id_chunks=[b"\x02\x81", b"\x01"])
+    else:
+        spec = D._WAY if case == "way" else D._RELATION
+        body = _key(1, 0) + _varint(5) + _chunked(8 if case == "way" else 9)
+        if case == "relation":
+            body += _packed_uvarints(8, [0, 0]) + _packed_uvarints(10, [0, 0])
+        for decoder in (D._decode_elements, D._decode_elements_scalar):
+            with pytest.raises(P.ProtoDecodeError, match="packed varint"):
+                decoder(spec, [body], D._Columns(), _GEO, lambda col: True)
+        group = _len_field(3 if case == "way" else 4, body)
+    with pytest.raises(P.ProtoDecodeError, match="packed varint"):
+        D.decode_primitive_block(encode_primitive_block([group]))
+
+
+def test_way_vertices_keep_the_paired_prefix():
+    """The LocationsOnWays query's rows come from one block decode: a way
+    with fewer locations than refs keeps the paired prefix (the
+    reference zips refs, lats and lons), a way without locations adds no
+    row, and a block without ways yields an empty batch."""
+    from pbf_encoder import (StringTable, _key, _len_field, _packed_svarints,
+                             _varint, encode_primitive_block, encode_way_with_locations)
+    from osm_pbf_parquet_spark.plans.osm_queries import _way_vertices
+
+    st = StringTable()
+    short = _len_field(3, _key(1, 0) + _varint(2) + _packed_svarints(8, [4, 5], delta=True)
+                       + _packed_svarints(9, [7], delta=True)
+                       + _packed_svarints(10, [8, 9], delta=True))
+    block = encode_primitive_block([
+        encode_way_with_locations(st, {"id": 1, "refs": [1, 2], "lats": [10, 20],
+                                       "lons": [30, 40, 50], "version": 1})
+        + short
+        + _len_field(3, _key(1, 0) + _varint(3) + _packed_svarints(8, [6], delta=True)),
+    ], granularity=1_000_000_000, st=st)
+    rows = [tuple(r.values()) for r in _way_vertices(block).to_pylist()]
+    assert rows == [(1, 0, 1, 10.0, pytest.approx(30.0)), (1, 1, 2, 20.0, 40.0),
+                    (2, 0, 4, 7.0, 8.0)]
+    empty = _way_vertices(encode_primitive_block([_dense_group(st, [1])], st=st))
+    assert empty.num_rows == 0 and empty.schema.names == ["way_id", "seq", "ref", "lat", "lon"]
+
+
 def test_overlong_varint_consistent_mask():
     """Scalar and vectorized varint decoders must agree (mod 2^64) on
     over-long 10-byte encodings."""
@@ -677,13 +824,16 @@ def test_overlong_varint_consistent_mask():
     assert scalar == vec == (1 << 64) - 1
 
 
-def test_repeated_numeric_preserves_interleaved_order():
+def test_packed_batch_preserves_interleaved_order():
     """Unpacked scalars interleaved with packed chunks must decode in
     occurrence order (delta decoding depends on it)."""
-    packed = memoryview(bytes([0x04, 0x06]))  # zigzag 2, 3
-    vals = P.repeated_numeric([2, packed, 8], signed_zigzag=True, delta=True)
+    pb = P.PackedBatch(1)
+    pb.add_scalar(0, 2)
+    pb.add(0, memoryview(bytes([0x04, 0x06])))  # zigzag 2, 3
+    pb.add_scalar(0, 8)
+    vals, counts = pb.finish(zigzag=True, delta=True)
     # zigzag: 2→1, then 2,3 ; 8→4 — cumsum: 1, 3, 6, 10
-    assert vals.tolist() == [1, 3, 6, 10]
+    assert vals.tolist() == [1, 3, 6, 10] and counts.tolist() == [4]
 
 
 def test_truncated_messages_raise_decode_error():

@@ -11,6 +11,7 @@ in seconds.
 
 from __future__ import annotations
 
+import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from osm_pbf_parquet_spark.pbf.decode import parse_block_to_batch
@@ -397,10 +398,11 @@ def loc_way_lists(draw):
 @settings(max_examples=40, deadline=None)
 def test_way_with_locations_roundtrip(ways, gran, lat_off, lon_off):
     """LocationsOnWays ways: the wide-schema decode must be unperturbed
-    by the extra packed fields 9/10 (refs/tags/meta exact), and
-    decode_way_locations must recover every per-vertex coordinate with
-    the same granularity/offset math as nodes."""
-    from osm_pbf_parquet_spark.pbf.decode import decode_way_locations
+    by the extra packed fields 9/10 (refs/tags/meta exact), and the
+    ``locations`` column of the block decoder must recover every
+    per-vertex coordinate with the same granularity/offset math as
+    nodes."""
+    from osm_pbf_parquet_spark.pbf.decode import decode_primitive_block
 
     from pbf_encoder import encode_way_with_locations
 
@@ -418,30 +420,13 @@ def test_way_with_locations_roundtrip(ways, gran, lat_off, lon_off):
         assert [d["ref"] for d in got["nds"][i]] == w["refs"]
         assert dict(got["tags"][i]) == w["tags"]
         assert got["version"][i] == w["version"]
+    assert not decode_primitive_block(payload)["way"].loc_lat  # on request only
 
-    # per-vertex locations via the dedicated decoder (D5 path)
-    from osm_pbf_parquet_spark.pbf.proto import message_fields
-
-    block = message_fields(payload)
-    grp = block[2][0]
-    way_payloads = [v for fno, _w, v in _iter_group_ways(grp)]
-    assert len(way_payloads) == len(ways)
-    for wp, w in zip(way_payloads, ways):
-        refs, lats, lons = decode_way_locations(
-            wp, granularity=gran, lat_offset=lat_off, lon_offset=lon_off
-        )
-        assert list(refs) == w["refs"]
-        assert list(lats) == [
-            _expected_coord(lat_off, gran, v) for v in w["lats"]
-        ]
-        assert list(lons) == [
-            _expected_coord(lon_off, gran, v) for v in w["lons"]
-        ]
-
-
-def _iter_group_ways(group_payload):
-    from osm_pbf_parquet_spark.pbf.proto import iter_fields
-
-    for fno, wire, val in iter_fields(group_payload):
-        if fno == 3 and wire == 2:
-            yield fno, wire, val
+    # per-vertex locations via the block decoder (D5 path)
+    c = decode_primitive_block(payload, columns=["nds", "locations"])["way"]
+    assert np.concatenate(c.nd_counts).tolist() == [len(w["refs"]) for w in ways]
+    for attr, key, off in (("loc_lat", "lats", lat_off), ("loc_lon", "lons", lon_off)):
+        assert np.concatenate(getattr(c, f"{attr}_counts")).tolist() == [
+            len(w[key]) for w in ways]
+        assert np.concatenate(getattr(c, attr)).tolist() == [
+            _expected_coord(off, gran, v) for w in ways for v in w[key]]

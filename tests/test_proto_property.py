@@ -163,12 +163,14 @@ def test_extract_ranges_matches_naive(n_ranges, data):
     # shuffle occurrence order — extract_ranges must sort internally
     order = data.draw(st.permutations(range(len(starts)))) if starts else []
     idx = np.array(order, dtype=np.int64) if starts else np.empty(0, np.int64)
-    blob, nbytes = extract_ranges(
+    blob, nbytes, ends = extract_ranges(
         arr, s[idx] if starts else s, ln[idx] if starts else ln,
         la[idx] if starts else la, 3,
     )
     want = b"".join(buf[a:a + b] for a, b in zip(starts, lens))
     assert blob.tobytes() == want
+    # every range's end in the output (ranges tied on start in either order)
+    assert sorted(np.diff(ends, prepend=0).tolist()) == sorted(lens)
     want_nbytes = [0, 0, 0]
     for a, b in zip(lanes, lens):
         want_nbytes[a] += b
