@@ -1,8 +1,11 @@
 """OSM-native queries for the driver contract.
 
 The testdata sf dirs carry no OSM table, so these run the real PBF path on
-the reference's golden fixture (tiny, read-only, content pinned by
-``osmpbf/tests/read.rs``). DuckDB can't read PBF, but the fixture content
+the golden micro-fixture (FIXTURES.md §2; content pinned by the
+reference's ``osmpbf/tests/read.rs``). The package holds its own copy of
+it in ``plans/fixtures/`` — ``test.osm.pbf`` and ``loc_on_ways.osm.pbf``,
+written by ``tests/pbf_encoder.write_golden_pbf`` — so the queries need no
+checkout of the reference. DuckDB can't read PBF, but the fixture content
 is a published golden constant — so the oracles are literal ``VALUES``
 tables carrying the exact expected rows (the SQL analog of the
 reference's hard-coded asserts, ``read.rs:109-208``), which upgrades
@@ -16,6 +19,7 @@ sort-then-hash comparison, and the exploded form oracles exactly.
 
 from __future__ import annotations
 
+import os
 from functools import partial
 
 import numpy as np
@@ -29,7 +33,8 @@ from ..sources.pbf_source import (
     _catalog_rows, map_blob_groups, read_blob_entries, scan_pbf,
 )
 
-FIXTURE = "/root/reference/osmpbf/tests/test.osm.pbf"
+_FIXTURE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
+FIXTURE = os.path.join(_FIXTURE_DIR, "test.osm.pbf")
 
 
 def q_osm_count_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -75,7 +80,7 @@ def q_osm_way_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LOC_FIXTURE = "/root/reference/osmpbf/tests/loc_on_ways.osm.pbf"
+LOC_FIXTURE = os.path.join(_FIXTURE_DIR, "loc_on_ways.osm.pbf")
 
 
 def q_osm_loc_on_ways(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -358,7 +363,6 @@ def q_stream_osm_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the snapshot. On this pinned input the result is exactly the batch
     gate's, which the shared VALUES oracle pins value-for-value."""
     import atexit
-    import os
     import shutil
     import tempfile
 

@@ -9,6 +9,7 @@ packed fields, delta coding, stringtable, zlib blobs.
 
 from __future__ import annotations
 
+import os
 import struct
 import zlib
 
@@ -169,12 +170,15 @@ def encode_primitive_block(groups: list[bytes], granularity: int = 100,
     return bytes(body)
 
 
-def encode_header_block(required=("OsmSchema-V0.6", "DenseNodes"), optional=()) -> bytes:
+def encode_header_block(required=("OsmSchema-V0.6", "DenseNodes"), optional=(),
+                        writingprogram: str | None = None) -> bytes:
     body = bytearray()
     for s in required:
         body += _len_field(4, s.encode())
     for s in optional:
         body += _len_field(5, s.encode())
+    if writingprogram is not None:
+        body += _len_field(16, writingprogram.encode())
     return bytes(body)
 
 
@@ -658,3 +662,70 @@ def write_mixed_pbf(path: str, n_dense: int = 9_000_000,
             np.arange(50_000_000, 50_000_000 + n_history) % 2 == 0))
         + (n_dense // 113),
     }
+
+
+# --- golden micro-fixture (the package's committed copy) ---------------------
+
+# Raw DenseNodes coordinates at granularity 100 (1e-7 degrees) of the golden
+# micro-fixture's nodes (FIXTURES.md §2; reference ``osmpbf/tests/read.rs``).
+GOLDEN_NODES = {
+    105: (521224031, 116284017),
+    106: (521199235, 116256446),
+    108: (521198991, 116310192),
+}
+# Every element's metadata. No document pins the changeset; 1 is this
+# generator's choice.
+GOLDEN_META = {"version": 1, "timestamp_s": 1049522828,  # 2003-04-05T06:07:08Z
+               "changeset": 1, "uid": 17, "user": "testuser", "visible": True}
+
+
+def write_golden_pbf(path: str, loc_on_ways: bool = False) -> None:
+    """The golden micro-fixture: nodes 105/106/108 as DenseNodes, way 107
+    (refs 105,106,108,105; tags building=yes, name=triangle) and relation
+    120 (member way 107 as ``test_role``; tag rel_key=rel_value). The
+    header requires OsmSchema-V0.6 and DenseNodes and names writingprogram
+    0.43.1, with no bbox and no replication fields.
+
+    ``loc_on_ways=False`` writes ``test.osm.pbf``: a header blob, then one
+    data blob holding the three groups. ``loc_on_ways=True`` writes
+    ``loc_on_ways.osm.pbf``: the header also declares the optional
+    LocationsOnWays feature, way 107 carries its four inline locations,
+    and the nodes and the way+relation sit in two data blobs."""
+    nodes = [{"id": i, "lat_raw": lat, "lon_raw": lon, **GOLDEN_META}
+             for i, (lat, lon) in GOLDEN_NODES.items()]
+    refs = [105, 106, 108, 105]
+    way = {"id": 107, "refs": refs, "tags": {"building": "yes", "name": "triangle"},
+           **GOLDEN_META}
+    rel = {"id": 120, "members": [{"type": "way", "ref": 107, "role": "test_role"}],
+           "tags": {"rel_key": "rel_value"}, **GOLDEN_META}
+    header = encode_header_block(
+        optional=("LocationsOnWays",) if loc_on_ways else (), writingprogram="0.43.1")
+    with open(path, "wb") as f:
+        write_blob(f, "OSMHeader", header)
+        st = StringTable()
+        if loc_on_ways:
+            write_blob(f, "OSMData",
+                       encode_primitive_block([encode_dense_nodes(st, nodes)], st=st))
+            st = StringTable()
+            way_group = encode_way_with_locations(st, {
+                **way, "lats": [GOLDEN_NODES[r][0] for r in refs],
+                "lons": [GOLDEN_NODES[r][1] for r in refs]})
+            groups = [way_group, encode_relation(st, rel)]
+        else:
+            groups = [encode_dense_nodes(st, nodes), encode_way(st, way),
+                      encode_relation(st, rel)]
+        write_blob(f, "OSMData", encode_primitive_block(groups, st=st))
+
+
+# The reference's own original of ``test.osm.pbf``, where a checkout of the
+# reference exists: tests that read the package copy repeat their
+# assertions on it.
+REFERENCE_TEST_PBF = "/root/reference/osmpbf/tests/test.osm.pbf"
+
+
+def golden_files() -> list[str]:
+    """The package's copy of ``test.osm.pbf``, then the reference's
+    original where that file exists."""
+    from osm_pbf_parquet_spark.plans.osm_queries import FIXTURE
+
+    return [FIXTURE] + [p for p in (REFERENCE_TEST_PBF,) if os.path.exists(p)]

@@ -2,7 +2,8 @@
 
 Fixture expectations follow the reference golden tests
 (osmpbf/tests/read.rs:109-208): test.osm.pbf = 3 nodes (105,106,108),
-1 way (107), 1 relation (120).
+1 way (107), 1 relation (120). The fixture tests read the package's copy
+(``osm_queries.FIXTURE``), then the reference's original where it exists.
 """
 
 from __future__ import annotations
@@ -11,11 +12,11 @@ import os
 import shutil
 
 import pytest
+from pbf_encoder import golden_files
 
+from osm_pbf_parquet_spark.plans.osm_queries import FIXTURE
 from osm_pbf_parquet_spark.sources.pbf_datasource import register_osm_pbf
 from osm_pbf_parquet_spark.sources.pbf_source import scan_pbf
-
-FIXTURE = "/root/reference/osmpbf/tests/test.osm.pbf"
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -24,13 +25,14 @@ def _register(spark):
 
 
 def test_load_matches_scan_pbf(spark):
-    ds = spark.read.format("osmpbf").load(FIXTURE)
-    direct = scan_pbf(spark, FIXTURE)
-    assert ds.schema == direct.schema
-    a = sorted(ds.collect(), key=lambda r: (r["type"], r["id"]))
-    b = sorted(direct.collect(), key=lambda r: (r["type"], r["id"]))
-    assert a == b
-    assert [r["id"] for r in a] == [105, 106, 108, 120, 107]
+    for fixture in golden_files():
+        ds = spark.read.format("osmpbf").load(fixture)
+        direct = scan_pbf(spark, fixture)
+        assert ds.schema == direct.schema
+        a = sorted(ds.collect(), key=lambda r: (r["type"], r["id"]))
+        b = sorted(direct.collect(), key=lambda r: (r["type"], r["id"]))
+        assert a == b
+        assert [r["id"] for r in a] == [105, 106, 108, 120, 107]
 
 
 def test_load_matches_scan_pbf_synthetic(spark, tmp_path):
@@ -85,47 +87,52 @@ def test_unknown_columns_raise_in_both_readers(spark, tmp_path):
 
 
 def test_type_filter_pushdown_count(spark):
-    ds = spark.read.format("osmpbf").load(FIXTURE)
-    assert ds.filter("type = 'node'").count() == 3
-    assert ds.filter("type IN ('node', 'way')").count() == 4
-    assert ds.filter("type = 'relation'").count() == 1
-    # impossible value → zero partitions of work, zero rows
-    assert ds.filter("type = 'bogus'").count() == 0
+    for fixture in golden_files():
+        ds = spark.read.format("osmpbf").load(fixture)
+        assert ds.filter("type = 'node'").count() == 3
+        assert ds.filter("type IN ('node', 'way')").count() == 4
+        assert ds.filter("type = 'relation'").count() == 1
+        # impossible value → zero partitions of work, zero rows
+        assert ds.filter("type = 'bogus'").count() == 0
 
 
 def test_non_type_filters_still_apply(spark):
-    ds = spark.read.format("osmpbf").load(FIXTURE)
-    # residual filters (yielded back from pushFilters) must be applied by
-    # Catalyst post-scan
-    assert ds.filter("type = 'node' AND id > 105").count() == 2
-    assert ds.filter("element_at(tags, 'building') = 'yes'").count() == 1
+    for fixture in golden_files():
+        ds = spark.read.format("osmpbf").load(fixture)
+        # residual filters (yielded back from pushFilters) must be applied
+        # by Catalyst post-scan
+        assert ds.filter("type = 'node' AND id > 105").count() == 2
+        assert ds.filter("element_at(tags, 'building') = 'yes'").count() == 1
 
 
 def test_columns_option_prunes_schema(spark):
-    ds = (
-        spark.read.format("osmpbf")
-        .option("columns", "id,lat,lon")
-        .load(FIXTURE)
-    )
-    assert set(ds.columns) == {"id", "lat", "lon", "type"}
-    nodes = ds.filter("type = 'node'").collect()
-    assert len(nodes) == 3
-    assert all(r["lat"] is not None for r in nodes)
+    for fixture in golden_files():
+        ds = (
+            spark.read.format("osmpbf")
+            .option("columns", "id,lat,lon")
+            .load(fixture)
+        )
+        assert set(ds.columns) == {"id", "lat", "lon", "type"}
+        nodes = ds.filter("type = 'node'").collect()
+        assert len(nodes) == 3
+        assert all(r["lat"] is not None for r in nodes)
 
 
 def test_kinds_option(spark):
-    ds = spark.read.format("osmpbf").option("kinds", "way").load(FIXTURE)
-    rows = ds.collect()
-    assert len(rows) == 1 and rows[0]["id"] == 107
+    for fixture in golden_files():
+        ds = spark.read.format("osmpbf").option("kinds", "way").load(fixture)
+        rows = ds.collect()
+        assert len(rows) == 1 and rows[0]["id"] == 107
 
 
 def test_directory_load(spark, tmp_path):
-    d = tmp_path / "pbfs"
-    d.mkdir()
-    shutil.copy(FIXTURE, d / "a.osm.pbf")
-    shutil.copy(FIXTURE, d / "b.osm.pbf")
-    ds = spark.read.format("osmpbf").load(str(d))
-    assert ds.count() == 10
+    for i, fixture in enumerate(golden_files()):
+        d = tmp_path / f"pbfs{i}"
+        d.mkdir()
+        shutil.copy(fixture, d / "a.osm.pbf")
+        shutil.copy(fixture, d / "b.osm.pbf")
+        ds = spark.read.format("osmpbf").load(str(d))
+        assert ds.count() == 10
 
 
 def test_bad_options_raise(spark):
@@ -146,20 +153,21 @@ def test_osmparquet_writer_roundtrip(spark, tmp_path):
     import os
 
     register_osm_parquet(spark)
-    df = scan_pbf(spark, "/root/reference/osmpbf/tests/test.osm.pbf")
-    a_out = str(tmp_path / "viads")
-    b_out = str(tmp_path / "generic")
-    df.write.format("osmparquet").mode("overwrite").save(a_out)
-    write_osm_parquet(df, b_out)
-    assert os.path.exists(os.path.join(a_out, "_SUCCESS"))
-    a = spark.read.parquet(a_out)
-    b = spark.read.parquet(b_out)
-    assert dict(a.dtypes) == dict(b.dtypes)
-    cols = [c for c in a.columns]
-    ax = a.select(*cols).withColumn("tags", F.map_entries("tags"))
-    bx = b.select(*cols).withColumn("tags", F.map_entries("tags"))
-    assert ax.exceptAll(bx).count() == 0
-    assert bx.exceptAll(ax).count() == 0
+    for i, fixture in enumerate(golden_files()):
+        df = scan_pbf(spark, fixture)
+        a_out = str(tmp_path / f"viads{i}")
+        b_out = str(tmp_path / f"generic{i}")
+        df.write.format("osmparquet").mode("overwrite").save(a_out)
+        write_osm_parquet(df, b_out)
+        assert os.path.exists(os.path.join(a_out, "_SUCCESS"))
+        a = spark.read.parquet(a_out)
+        b = spark.read.parquet(b_out)
+        assert dict(a.dtypes) == dict(b.dtypes)
+        cols = [c for c in a.columns]
+        ax = a.select(*cols).withColumn("tags", F.map_entries("tags"))
+        bx = b.select(*cols).withColumn("tags", F.map_entries("tags"))
+        assert ax.exceptAll(bx).count() == 0
+        assert bx.exceptAll(ax).count() == 0
 
 
 def test_osmparquet_writer_append(spark, tmp_path):
@@ -167,13 +175,14 @@ def test_osmparquet_writer_append(spark, tmp_path):
     from osm_pbf_parquet_spark.sources.pbf_source import scan_pbf
 
     register_osm_parquet(spark)
-    df = scan_pbf(spark, "/root/reference/osmpbf/tests/test.osm.pbf")
-    out = str(tmp_path / "appended")
-    df.write.format("osmparquet").mode("overwrite").save(out)
-    df.write.format("osmparquet").mode("append").save(out)
-    back = spark.read.parquet(out)
-    counts = {r["type"]: r["count"] for r in back.groupBy("type").count().collect()}
-    assert counts == {"node": 6, "way": 2, "relation": 2}
+    for i, fixture in enumerate(golden_files()):
+        df = scan_pbf(spark, fixture)
+        out = str(tmp_path / f"appended{i}")
+        df.write.format("osmparquet").mode("overwrite").save(out)
+        df.write.format("osmparquet").mode("append").save(out)
+        back = spark.read.parquet(out)
+        counts = {r["type"]: r["count"] for r in back.groupBy("type").count().collect()}
+        assert counts == {"node": 6, "way": 2, "relation": 2}
 
 
 def test_osmparquet_writer_append_and_abort(spark, tmp_path):

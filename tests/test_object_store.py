@@ -13,8 +13,8 @@ import os
 import sys
 
 import pytest
+from pbf_encoder import golden_files
 
-FIXTURE = "/root/reference/osmpbf/tests/test.osm.pbf"
 FAKE_DIR = os.path.join(os.path.dirname(__file__), "fake_fsspec")
 
 
@@ -39,12 +39,13 @@ def test_open_binary_routes_through_fsspec(fake_fsspec):
     from fsspec.open (not the local open())."""
     from osm_pbf_parquet_spark.pbf.io import open_binary
 
-    with open_binary(f"mock://{FIXTURE}") as f:
-        head = f.read(4)
-        f.seek(0)
-        assert f.read(4) == head
-    with open(FIXTURE, "rb") as ref:
-        assert head == ref.read(4)
+    for fixture in golden_files():
+        with open_binary(f"mock://{fixture}") as f:
+            head = f.read(4)
+            f.seek(0)
+            assert f.read(4) == head
+        with open(fixture, "rb") as ref:
+            assert head == ref.read(4)
 
 
 def test_transcode_via_object_store_url(fake_fsspec, spark, tmp_path):
@@ -55,24 +56,25 @@ def test_transcode_via_object_store_url(fake_fsspec, spark, tmp_path):
 
     from osm_pbf_parquet_spark.sinks.native_sink import transcode_pbf
 
-    out_url = str(tmp_path / "via_url")
-    out_local = str(tmp_path / "via_path")
-    stats_url = transcode_pbf(spark, f"mock://{FIXTURE}", out_url)
-    stats_local = transcode_pbf(spark, FIXTURE, out_local)
-    assert stats_url["rows"] == stats_local["rows"]
-
     def canon(path):
         # set ops reject MAP columns — canonicalize tags to sorted entries
         df = spark.read.parquet(path)
         return df.withColumn("tags", F.array_sort(F.map_entries("tags")))
 
-    a, b = canon(out_url), canon(out_local)
-    cols = sorted(a.columns)
-    assert a.select(cols).exceptAll(b.select(cols)).count() == 0
-    assert b.select(cols).exceptAll(a.select(cols)).count() == 0
-    # golden fixture content: ids 105-108 + relation 120
-    ids = {r["id"] for r in a.select("id").collect()}
-    assert ids == {105, 106, 107, 108, 120}
+    for i, fixture in enumerate(golden_files()):
+        out_url = str(tmp_path / f"via_url{i}")
+        out_local = str(tmp_path / f"via_path{i}")
+        stats_url = transcode_pbf(spark, f"mock://{fixture}", out_url)
+        stats_local = transcode_pbf(spark, fixture, out_local)
+        assert stats_url["rows"] == stats_local["rows"]
+
+        a, b = canon(out_url), canon(out_local)
+        cols = sorted(a.columns)
+        assert a.select(cols).exceptAll(b.select(cols)).count() == 0
+        assert b.select(cols).exceptAll(a.select(cols)).count() == 0
+        # golden fixture content: ids 105-108 + relation 120
+        ids = {r["id"] for r in a.select("id").collect()}
+        assert ids == {105, 106, 107, 108, 120}
 
 
 def test_scan_pbf_via_object_store_url(fake_fsspec, spark):
@@ -80,6 +82,7 @@ def test_scan_pbf_via_object_store_url(fake_fsspec, spark):
     honors URL schemes."""
     from osm_pbf_parquet_spark.sources.pbf_source import scan_pbf
 
-    rows = scan_pbf(spark, f"mock://{FIXTURE}").groupBy("type").count().collect()
-    counts = {r["type"]: r["count"] for r in rows}
-    assert counts == {"node": 3, "way": 1, "relation": 1}
+    for fixture in golden_files():
+        rows = scan_pbf(spark, f"mock://{fixture}").groupBy("type").count().collect()
+        counts = {r["type"]: r["count"] for r in rows}
+        assert counts == {"node": 3, "way": 1, "relation": 1}

@@ -6,6 +6,7 @@ accidental cartesian product) fails CI, not the cluster.
 
 from __future__ import annotations
 
+from pbf_encoder import golden_files
 from pyspark.sql import functions as F
 
 from osm_pbf_parquet_spark.plans import relational as rel
@@ -188,14 +189,15 @@ def test_osmpbf_datasource_filter_pushdown(spark):
     from osm_pbf_parquet_spark.sources.pbf_datasource import register_osm_pbf
 
     register_osm_pbf(spark)
-    df = (
-        spark.read.format("osmpbf")
-        .load("/root/reference/osmpbf/tests/test.osm.pbf")
-        .filter("type = 'node'")
-    )
-    plan = _plan(df)
-    assert "BatchScan osmpbf" in plan
-    assert "PushedFilters: [EqualTo(type,node)]" in plan
+    for fixture in golden_files():
+        df = (
+            spark.read.format("osmpbf")
+            .load(fixture)
+            .filter("type = 'node'")
+        )
+        plan = _plan(df)
+        assert "BatchScan osmpbf" in plan
+        assert "PushedFilters: [EqualTo(type,node)]" in plan
 
 
 def test_skyline_no_global_window_over_data(spark):

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from osm_pbf_parquet_spark.streaming import ops
 
-from pbf_encoder import write_synthetic_pbf
+from pbf_encoder import golden_files, write_synthetic_pbf
 
 SF = "/root/testdata/sf0.001"
 
@@ -101,8 +101,9 @@ def test_incremental_transcode(spark, tmp_path):
 
 
 def test_replication_cursor_fields():
-    cur = ops.replication_cursor("/root/reference/osmpbf/tests/test.osm.pbf")
-    assert set(cur) == {"timestamp", "sequence", "base_url"}
+    for fixture in golden_files():
+        cur = ops.replication_cursor(fixture)
+        assert set(cur) == {"timestamp", "sequence", "base_url"}
 
 
 def test_enrich_stream_static_broadcast_join(spark, events_dir):
