@@ -3,17 +3,25 @@
 ``entry`` smoke-runs the flagship query; ``queries``/``oracle_sql`` expose
 the engine's declared operator surface (SURVEY.md §2) for the DuckDB
 correctness gate. Implementations live in ``osm_pbf_parquet_spark``.
+
+The correctness gate checks the first 50 registry entries each round, so
+the registry is ordered by ``cap_order`` in ``TAINT_LEDGER.json``, which
+``tools/taint_ledger.py`` derives; a query the ledger does not know yet
+has never been checked and goes first.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
+_LEDGER = os.path.join(_HERE, "TAINT_LEDGER.json")
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -24,7 +32,8 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
-def _registry() -> dict[str, tuple]:
+def _declared() -> dict[str, tuple]:
+    """The registry in declaration order (plan module by plan module)."""
     from osm_pbf_parquet_spark.plans.advanced_queries import ADVANCED_QUERIES
     from osm_pbf_parquet_spark.plans.analytic_queries import ANALYTIC_QUERIES
     from osm_pbf_parquet_spark.plans.eval_queries import EVAL_QUERIES
@@ -49,119 +58,19 @@ def _registry() -> dict[str, tuple]:
         SELECTION_QUERIES,
     ):
         reg.update(part)
-    return _verification_order(reg)
+    return reg
 
 
-# The correctness driver checks the FIRST 50 registry entries, so insertion
-# order decides which queries get a gate row each round. Front-load (a)
-# queries that have never had a driver check, (b) queries added/changed this
-# round whose behavior must be certified, (c) queries whose last green row
-# predates a change to the module they run through. Long-stable queries take
-# the tail — every registered query keeps at least one green CORRECTNESS row
-# across rounds.
-#
-# ROUND-12 ROTATION, amended by the r12 OPTIMIZATION round
-# (mechanically derived by tools/taint_ledger.py on the final r12 tree —
-# TAINT_LEDGER.json is the committed evidence):
-#
-# The optimization round touched shared operator files (text-quality
-# expressions, the dedup/selection/graph kernels, the transcode
-# catalog), so the line-level must-cover set is 68 queries — 20
-# never-checked late-r12 gates + 48 line-tainted — against the driver's
-# 50-slot cap. 18 MUST therefore stay displaced this round; the cap is
-# spent on (a) ALL 20 never-checked gates and (b) the 30 line-tainted
-# queries whose computing code changed most (vectorized kernels,
-# restructured plans). The 18 displaced are chosen for the strongest
-# alternate evidence and least behavioral distance:
-#   - the 9 osm_* scan gates + stream_osm_apply_changes: tainted by the
-#     transcode catalog's decode-work balancing (task ASSIGNMENT only —
-#     same rows by construction), and covered by the 70-test
-#     decode/transcode suite incl. golden fixtures + the mixed-codec
-#     differential oracle;
-#   - 3 stream mirrors (quality_by_lang, fingerprint_decontaminate,
-#     incremental_dedup) whose batch operators ARE in-cap and whose
-#     streaming-specific code is untouched;
-#   - text_entropy (one-line translate swap, corpus-wide
-#     expression-equality-checked), split_leakage / semantic_dedup
-#     (shared-line taints; their specific operators un-restructured),
-#     dedup_resolve / clean_corpus_pipeline (compositions whose members
-#     are in-cap).
-# EVERY displaced query is oracle-matched on this exact tree under both
-# local-cluster topologies (LOCAL_CLUSTER_r12.json / _4x4.json) — the
-# containment is asserted machine-checkably in tests/test_entry.py.
-# The displaced 18 lead r13's rotation.
-_CHECK_FIRST = [
-    # --- 20 never-checked late-r12 gates ---
-    "kneser_ney_score",
-    "louvain_communities",
-    "unigram_vocab_costs",
-    "unigram_encode_corpus",
-    "stream_unigram_encode",
-    "unigram_em_round",
-    "louvain_coarse_graph",
-    "stream_ivfpq_serve",
-    "audio_energy_segments",
-    "stream_audio_segments",
-    "ann_recall_report",
-    "unimax_allocation",
-    "jl_distortion",
-    "knn_graph",
-    "nn_descent_round",
-    "stream_jl_encode",
-    "consistent_shards",
-    "pq_encode_artifact",
-    "ivfpq_index_search",
-    "ivfpq_index_append",
-    # --- 30 line-tainted by the r12 builds + optimization round ---
-    "ivfpq_topk",
-    "pq_ann_topk",
-    "stream_pq_encode",
-    "bpe_encode_corpus",
-    "stream_bpe_encode",
-    "dsir_importance",
-    "weighted_reservoir_sample",
-    "group_weighted_reservoir",
-    "training_set_assembly",
-    "bm25_topk",
-    "hybrid_rrf_search",
-    "jaccard_join_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "duplicate_spans",
-    "incremental_dedup",
-    "image_near_dup_pairs",
-    "winnowing_fingerprints",
-    "fingerprint_decontaminate",
-    "decontaminate",
-    "text_quality",
-    "full_curation_pipeline",
-    "mad_outliers",
-    "pagerank_suppliers",
-    "shortest_hops",
-    "margin_bitext_ann",
-    "ann_lsh_pairs",
-    # session 3: the verify-spread exchange (dedup.py:348-349) plan-
-    # drifts these three previously-displaced gates — they take the
-    # slots of label_communities / community_modularity / ann_ivf_topk,
-    # whose plans are UNCHANGED on the final tree (fingerprint_drift
-    # false: their taint is an eager-materialization line / persist
-    # lines with no plan effect) and which are oracle-matched in both
-    # committed LOCAL_CLUSTER_r12 artifacts on this exact tree.
-    "dedup_ngram_jaccard",
-    "dedup_resolve",
-    "split_leakage",
-    # ---- cap boundary: the 50 names above are positions 1-50 (pinned
-    #      in test_entry). Everything below position 50 is swept by the
-    #      local full-registry parity tests on current code every
-    #      pytest run, and the 20 displaced must-cover queries are
-    #      additionally oracle-matched in the committed
-    #      LOCAL_CLUSTER_r12 artifacts on this exact tree. ----
-]
-
-
-def _verification_order(reg: dict[str, tuple]) -> dict[str, tuple]:
-    head = {n: reg[n] for n in _CHECK_FIRST if n in reg}
-    head.update((n, v) for n, v in reg.items() if n not in head)
+def _registry() -> dict[str, tuple]:
+    reg = _declared()
+    try:
+        with open(_LEDGER) as fh:
+            order = json.load(fh)["cap_order"]
+    except FileNotFoundError:
+        order = []
+    known = set(order)
+    head = {n: v for n, v in reg.items() if n not in known}
+    head.update((n, reg[n]) for n in order if n in reg)
     return head
 
 

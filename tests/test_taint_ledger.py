@@ -7,7 +7,10 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -47,14 +50,13 @@ def test_ledger_must_cover_is_in_cap():
     if len(led["must_cover"]) <= led["cap"]:
         assert not missing, (
             f"must-cover entries below the driver cap: {missing} — "
-            "rotate _CHECK_FIRST or re-run tools/taint_ledger.py"
+            "re-run tools/taint_ledger.py and commit TAINT_LEDGER.json"
         )
         assert not led["displaced"]
         assert not led["problems"]
         return
     # structural overflow: the ledger must record exactly the displaced
-    # set as missing, with falsifier evidence for each (same contract as
-    # tests/test_entry.py::test_r9_rotation_inside_driver_cap)
+    # set as missing, with falsifier evidence for each
     assert missing == sorted(led["displaced"]), (
         "ledger displaced set out of sync with the rotation — re-run "
         "tools/taint_ledger.py"
@@ -71,6 +73,39 @@ def test_ledger_must_cover_is_in_cap():
             )
     assert len(led["problems"]) == 1 and "below the driver cap" in \
         led["problems"][0], led["problems"]
+
+
+def test_registry_order_is_ledger_cap_order():
+    """The registry's verification order is the ledger's ``cap_order``,
+    and ``cap_order`` is the stated rule applied to the ledger's own
+    rows (declaration order — the ``per_query`` order — breaks ties),
+    so neither the entry order nor a hand-edited ledger can drift from
+    what tools/taint_ledger.py derives."""
+    led = _ledger()
+    reg = list(entrymod.queries())
+    assert reg == led["cap_order"], (
+        "registry order differs from the ledger's cap_order — re-run "
+        "tools/taint_ledger.py and commit TAINT_LEDGER.json"
+    )
+    assert sorted(led["cap_order"]) == sorted(entrymod._declared())
+    rows = led["per_query"]
+    assert led["cap_order"] == sorted(
+        rows,
+        key=lambda q: (
+            not rows[q]["never_checked"],
+            not rows[q]["tainted"],
+            rows[q]["last_green_round"] or 0,
+        ),
+    )
+
+
+def test_ledger_trace_width_pinned():
+    """Partition counts appear in the analyzed plan, so the committed
+    fingerprints are only comparable at the one pinned trace width."""
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from taint_ledger import TRACE_CPUS
+
+    assert _ledger()["trace_cpus"] == TRACE_CPUS
 
 
 def test_ledger_never_checked_have_no_green():
@@ -116,6 +151,18 @@ def test_green_baseline_semantics():
     assert base_sha != None  # noqa: E711 — the inequality IS the flag
 
 
+def _has_git() -> bool:
+    return subprocess.run(
+        ["git", "-C", os.path.dirname(LEDGER), "rev-parse"],
+        capture_output=True,
+    ).returncode == 0
+
+
+@pytest.mark.skipif(
+    not _has_git(),
+    reason="no git history: earlier ledgers are read from git, and this "
+    "copy of the tree has no .git",
+)
 def test_previous_ledger_comes_from_git_history():
     """The drift baseline must be the last COMMITTED earlier-round
     ledger — the working file is overwritten by every run, so reading

@@ -1,14 +1,16 @@
 """Mechanical rotation ledger: which registry queries NEED a driver
-CORRECTNESS row this round, and does the 50-entry gate cap cover them?
+CORRECTNESS row this round, and the registry order that puts them
+inside the 50-entry gate cap.
 
 The correctness driver checks only the FIRST 50 registry entries per
-round, so ``__spark_entry__._CHECK_FIRST`` must be rotated by hand each
-round. Two consecutive judge verdicts flagged the same crack: entries
-whose latest green row predates a change to a file they execute sliding
-below the cap with only a comment as evidence. This tool rebuilds the
-evidence mechanically, at the LINE level — the "its executed operator
-lines are untouched" rationale the per-round audits kept accepting by
-hand becomes a machine-checked claim:
+round. This tool decides that order: it writes ``cap_order`` into
+``TAINT_LEDGER.json`` and ``__spark_entry__`` orders the registry by
+it. ``cap_order`` is every registry name, stably sorted by
+``(not never_checked, not tainted, last_green_round or 0)`` with
+declaration order as the tie-break — never-checked queries first, then
+tainted ones, then the oldest greens. The evidence is rebuilt at the
+LINE level, so "its executed operator lines are untouched" is a
+machine-checked claim rather than an argument:
 
 1. **Attribution** — for every registry query, the exact (file, line)
    set executed while building its plan, captured with ``sys.settrace``
@@ -54,15 +56,22 @@ r10 module-binding fallback (``module_binding_taints``): an executed
 file whose pre-existing module-level binding changed taints every
 query that executes any of its function lines.
 
-Run at round end, after the last engine edit, before the driver gate:
+Run after the last engine edit, before the correctness gate, and commit
+the result:
 
     python tools/taint_ledger.py          # rewrites TAINT_LEDGER.json
 
-Exit 0 = the cap covers EVERY must-cover query (never-checked and
-line-tainted alike); any must-cover entry below the cap is a problem —
-there is no acceptable displacement class for line-level taint.
-``tests/test_taint_ledger.py`` validates the committed JSON against the
-live registry order so CI catches a stale ledger.
+The trace session is always ``local[TRACE_CPUS]`` (32, the width every
+committed ledger was traced at), whatever ``SPARK_GRAFT_CPUS`` says:
+partition counts appear in the analyzed plan, so tracing at the host's
+core count would make the fingerprint drift with the machine. The width
+is recorded as ``trace_cpus``.
+
+Exit 0 = the first ``CAP`` entries of ``cap_order`` cover EVERY
+must-cover query (never-checked and tainted alike); a must-cover entry
+below the cap — only possible when must-cover outgrows the cap — is a
+problem. ``tests/test_taint_ledger.py`` validates the committed JSON
+against the live registry so CI catches a stale ledger.
 """
 
 from __future__ import annotations
@@ -82,6 +91,7 @@ sys.path.insert(0, REPO)
 ENGINE_PREFIX = "osm_pbf_parquet_spark/"
 SF_DIR = "/root/testdata/sf0.001"
 CAP = 50
+TRACE_CPUS = 32
 
 
 def _git(*args: str) -> str:
@@ -443,11 +453,33 @@ def green_baseline(
     )
 
 
+def cap_key(row: dict) -> tuple:
+    """Sort key of ``cap_order``: never-checked, then tainted, then the
+    oldest last green first."""
+    return (
+        not row["never_checked"],
+        not row["tainted"],
+        row["last_green_round"] or 0,
+    )
+
+
 def build_ledger() -> dict:
     import __spark_entry__ as entry
+    from osm_pbf_parquet_spark.session import get_spark
 
-    queries = entry.queries()
-    oracles = entry.oracle_sql()
+    width = get_spark().sparkContext.defaultParallelism
+    if width != TRACE_CPUS:
+        raise RuntimeError(
+            f"trace session runs {width} cores, the ledger is traced at "
+            f"{TRACE_CPUS}: plan fingerprints would drift with the width"
+        )
+    registry = entry._declared()
+    queries = {name: fn for name, (fn, _oracle) in registry.items()}
+    oracles = {
+        name: oracle
+        for name, (_fn, oracle) in registry.items()
+        if oracle is not None
+    }
     order = list(queries)
     bounds = round_boundaries()
     current_round = max(bounds) + 1
@@ -501,7 +533,6 @@ def build_ledger() -> dict:
             _bindings[key] = module_binding_taints(green_src, cur_src)
         return _bindings[key]
 
-    cap_names = order[:CAP]
     per_query: dict[str, dict] = {}
     for q in order:
         g = greens.get(q)
@@ -520,7 +551,6 @@ def build_ledger() -> dict:
             "oracle_drift": False,
             "fingerprint": fingerprints.get(q),
             "fingerprint_drift": False,
-            "in_cap": q in cap_names,
         }
         row["module_binding_tainted"] = {}
         if g is not None:
@@ -558,6 +588,10 @@ def build_ledger() -> dict:
         )
         per_query[q] = row
 
+    cap_order = sorted(order, key=lambda q: cap_key(per_query[q]))
+    cap_names = set(cap_order[:CAP])
+    for q in order:
+        per_query[q]["in_cap"] = q in cap_names
     never = [q for q in order if per_query[q]["never_checked"]]
     tainted = [
         q for q in order if per_query[q]["tainted"] and not per_query[q]["never_checked"]
@@ -591,6 +625,7 @@ def build_ledger() -> dict:
     return {
         "current_round": current_round,
         "cap": CAP,
+        "trace_cpus": TRACE_CPUS,
         "registry_size": len(order),
         "never_checked": never,
         "line_tainted": tainted,
@@ -598,11 +633,14 @@ def build_ledger() -> dict:
         "displaced": displaced,
         "lines_clear": lines_clear,
         "problems": problems,
+        "cap_order": cap_order,
         "per_query": per_query,
     }
 
 
 def main() -> int:
+    # set before the first engine import: session.py reads it then
+    os.environ["SPARK_GRAFT_CPUS"] = str(TRACE_CPUS)
     ledger = build_ledger()
     out = os.path.join(REPO, "TAINT_LEDGER.json")
     with open(out, "w") as fh:
