@@ -75,8 +75,6 @@ _KIND_RELATION = "relation"
 ALL_KINDS = frozenset((_KIND_NODE, _KIND_WAY, _KIND_RELATION))
 _MEMBER_TYPES = (_KIND_NODE, _KIND_WAY, _KIND_RELATION)
 
-_EMPTY_I64 = np.empty(0, dtype=np.int64)
-
 
 def _i64(raw: int) -> int:
     """Unsigned varint payload → two's-complement int64 (plain int64 fields)."""
@@ -215,24 +213,35 @@ class _Columns:
     """Flat per-column accumulators for one element kind of one block;
     Arrow arrays are assembled from offsets + flat value buffers (no
     per-row objects). Tag keys/values, member roles and ``user_sid`` index
-    the block's ``_stringtable`` until ``seal`` swaps it for ``strings``."""
+    the block's ``_stringtable`` until ``seal`` swaps it for ``strings``.
+
+    A block holds only what it has. Each per-row accumulator (``_ROWS``)
+    is a list of chunks that ``put`` gives to row ranges; a row no chunk
+    covers reads as the accumulator's default, so an accumulator no
+    decoder filled is absent (``[]``) and costs nothing: the counts of a
+    kind without that list, the coordinates of ways and relations, the
+    metadata of DenseNodes without DenseInfo, and every column the
+    decode's projection left out. A nullable accumulator's ``<attr>_valid``
+    mask is absent while every value it holds is valid. The flat lists
+    (``_FLAT``: tag keys/values, way refs, relation members) and the
+    LocationsOnWays lists are plain chunk lists."""
 
     def __init__(self) -> None:
         self._stringtable: _StringTable | None = None
         self.strings: pa.Array | None = None  # set by seal()
         self.n = 0
-        self.ids: list[np.ndarray] = []
-        self.lat: list[np.ndarray] = []  # degrees or None-marker chunks
-        self.lon: list[np.ndarray] = []
-        # tags: flat key/val stringtable indices + per-row pair counts
-        self.tag_counts: list[np.ndarray] = []
+        # per-row accumulators and their masks, and each chunk's first row
+        for attr in _ROWS:
+            setattr(self, attr, [])
+            if _ROWS[attr][1] is None:
+                setattr(self, attr + "_valid", [])
+        self._at: dict[str, list[int]] = {}
+        # tags: flat key/val stringtable indices (counts: tag_counts)
         self.tag_keys: list[np.ndarray] = []
         self.tag_vals: list[np.ndarray] = []
-        # nds: flat refs + per-row counts
-        self.nd_counts: list[np.ndarray] = []
+        # nds: flat refs (counts: nd_counts)
         self.nd_refs: list[np.ndarray] = []
-        # members: flat (type_idx, ref, role_sid) + per-row counts
-        self.mem_counts: list[np.ndarray] = []
+        # members: flat (type_idx, ref, role_sid) (counts: mem_counts)
         self.mem_types: list[np.ndarray] = []
         self.mem_refs: list[np.ndarray] = []
         self.mem_roles: list[np.ndarray] = []
@@ -241,70 +250,99 @@ class _Columns:
         self.loc_lat_counts: list[np.ndarray] = []
         self.loc_lon: list[np.ndarray] = []
         self.loc_lon_counts: list[np.ndarray] = []
-        # metadata (nullable): numpy float64 with nan = null for ints is
-        # lossy, so keep int64 + validity masks
-        self.changeset: list[np.ndarray] = []
-        self.changeset_valid: list[np.ndarray] = []
-        self.ts_ms: list[np.ndarray] = []
-        self.ts_valid: list[np.ndarray] = []
-        self.uid: list[np.ndarray] = []
-        self.uid_valid: list[np.ndarray] = []
-        self.user_sid: list[np.ndarray] = []  # -1 = null, -2 = empty string
-        self.version: list[np.ndarray] = []
-        self.version_valid: list[np.ndarray] = []
-        self.visible: list[np.ndarray] = []
-        self.visible_valid: list[np.ndarray] = []
-        self.has_coords = False
-        self.has_nds = False
-        self.has_members = False
+
+    def put(self, attr: str, values: np.ndarray,
+            valid: np.ndarray | None = None) -> None:
+        """Give per-row accumulator ``attr`` the values of the block's last
+        ``values.size`` rows. ``valid`` marks which values of a nullable
+        one are present: a mask is kept only when some are missing, and
+        none present keeps nothing (the rows read as null)."""
+        if valid is not None:
+            if not valid.any():
+                return
+            if not valid.all():
+                self._put(attr + "_valid", valid)
+        self._put(attr, values)
+
+    def _put(self, attr: str, values: np.ndarray) -> None:
+        getattr(self, attr).append(values)
+        self._at.setdefault(attr, []).append(self.n - values.size)
 
     def seal(self) -> None:
         """Check every string-table index (and member type) against THIS
         block's table, then keep the table as an Arrow array -- or an
         empty one when no row refers to it -- and drop the block's
         ``_StringTable``, so a sealed block no longer holds its blob's
-        decompressed payload. Idempotent. The checks live here, per
-        block, because after blocks are concatenated an index that
-        overruns its own table could silently read the next block's."""
+        decompressed payload. The checks live here, per block, because
+        after blocks are concatenated an index that overruns its own table
+        could silently read the next block's.
+
+        Sealed, every accumulator is absent (``[]``, its default) or one
+        array in its output dtype (``_ROWS``, ``_FLAT``): a per-row one
+        spans all ``n`` rows, rows no chunk covered holding the default,
+        and a nullable one has an ``<attr>_valid`` mask only where some
+        row is null. Idempotent."""
         if self.strings is not None:
             return
         st = self._stringtable
         n_st = len(st) if st is not None else 0
-        self.tag_keys = _checked(self.tag_keys, 0, n_st, "stringtable index")
-        self.tag_vals = _checked(self.tag_vals, 0, n_st, "stringtable index")
-        self.mem_roles = _checked(self.mem_roles, 0, n_st, "stringtable index")
-        self.mem_types = _checked(self.mem_types, 0, len(_MEMBER_TYPES),
-                                  "relation member type")
-        # -1 = null user, -2 = empty string (see _Columns.user_sid)
-        self.user_sid = _checked(self.user_sid, -2, n_st, "user_sid")
-        n_keys = self.tag_keys[0].size if self.tag_keys else 0
-        if n_keys != (self.tag_vals[0].size if self.tag_vals else 0):
+        for attr, lo, hi, what in (
+            ("tag_keys", 0, n_st, "stringtable index"),
+            ("tag_vals", 0, n_st, "stringtable index"),
+            ("mem_roles", 0, n_st, "stringtable index"),
+            ("mem_types", 0, len(_MEMBER_TYPES), "relation member type"),
+            # -1 = null user, -2 = empty string (see _ROWS)
+            ("user_sid", -2, n_st, "user_sid"),
+        ):
+            for a in getattr(self, attr):
+                if a.size and (int(a.min()) < lo or int(a.max()) >= hi):
+                    raise ProtoDecodeError(f"{what} out of bounds")
+        n_keys = sum(a.size for a in self.tag_keys)
+        if n_keys != sum(a.size for a in self.tag_vals):
             raise ProtoDecodeError("tag keys and values differ in length")
-        sids = self.user_sid[0] if self.user_sid else _EMPTY_I64
         refers = (n_keys > 0 or bool(self.mem_roles)
-                  or (sids.size > 0 and int(sids.max()) >= 0))
+                  or any(a.size and int(a.max()) >= 0 for a in self.user_sid))
         self.strings = (st.arrow() if refers and st is not None
                         else pa.array([], type=pa.string()))
         self._stringtable = None
+        for attr, dtype in _FLAT.items():
+            chunks = getattr(self, attr)
+            if chunks:
+                setattr(self, attr, [_concat(chunks, dtype)])
+        for attr, (dtype, default) in _ROWS.items():
+            self._seal_rows(attr, dtype, default)
+        self._at = {}
 
-
-def _checked(chunks: list[np.ndarray], lo: int, hi: int, what: str) -> list[np.ndarray]:
-    """Concatenate ``chunks`` into at most one int64 chunk whose values
-    all lie in ``[lo, hi)``; a value outside is a ProtoDecodeError."""
-    flat = _concat(chunks, np.int64)
-    if not flat.size:
-        return []
-    if int(flat.min()) < lo or int(flat.max()) >= hi:
-        raise ProtoDecodeError(f"{what} out of bounds")
-    return [flat]
+    def _seal_rows(self, attr: str, dtype, default) -> None:
+        chunks = getattr(self, attr)
+        if not chunks:
+            return
+        starts = self._at[attr]
+        whole = sum(a.size for a in chunks) == self.n
+        if default is None:
+            masks = getattr(self, attr + "_valid")
+            if masks or not whole:
+                valid = np.zeros(self.n, dtype=bool)
+                for at, a in zip(starts, chunks):
+                    valid[at:at + a.size] = True
+                for at, m in zip(self._at.get(attr + "_valid", ()), masks):
+                    valid[at:at + m.size] = m
+                setattr(self, attr + "_valid", [valid])
+        if whole:
+            flat = _concat(chunks, dtype)
+        else:
+            flat = np.full(self.n, default or 0, dtype=dtype)
+            for at, a in zip(starts, chunks):
+                flat[at:at + a.size] = a
+        setattr(self, attr, [flat])
 
 
 def _concat(chunks: list[np.ndarray], dtype) -> np.ndarray:
     if not chunks:
         return np.empty(0, dtype=dtype)
     if len(chunks) == 1:
-        return np.asarray(chunks[0], dtype=dtype)
-    return np.concatenate([np.asarray(c, dtype=dtype) for c in chunks])
+        return chunks[0].astype(dtype, copy=False)
+    return np.concatenate(chunks, dtype=dtype)
 
 
 def decode_primitive_block(
@@ -409,7 +447,6 @@ class _Element(NamedTuple):
     packed tag keys/values (fields 2/3) and an ``Info`` (field 4)."""
 
     kind: str
-    flag: str  # the ``_Columns`` flag the kind sets
     # required varint scalars (field, zigzag): id, then lat/lon for nodes
     scalars: tuple
     column: str | None  # the list column ``lists`` fill
@@ -426,19 +463,17 @@ class _Element(NamedTuple):
         return (2, 3) + tuple(fno for fno, *_ in self.lists + self.locations)
 
 
-_PLAIN_NODE = _Element(_KIND_NODE, "has_coords", ((1, True), (8, True), (9, True)),
-                       None, None, ())
-_WAY = _Element(_KIND_WAY, "has_nds", ((1, False),), "nds", "nd_counts",
+_PLAIN_NODE = _Element(_KIND_NODE, ((1, True), (8, True), (9, True)), None, None, ())
+_WAY = _Element(_KIND_WAY, ((1, False),), "nds", "nd_counts",
                 ((8, "nd_refs", True, True),),
                 ((9, "loc_lat", "lat_offset"), (10, "loc_lon", "lon_offset")))
-_RELATION = _Element(_KIND_RELATION, "has_members", ((1, False),), "members",
+_RELATION = _Element(_KIND_RELATION, ((1, False),), "members",
                      "mem_counts", ((9, "mem_refs", True, True),
                                     (8, "mem_roles", False, False),
                                     (10, "mem_types", False, False)))
 # PrimitiveGroup field → its element message; field 2 (DenseNodes) has
 # its own decoder
 _GROUP_ELEMENTS = {1: _PLAIN_NODE, 3: _WAY, 4: _RELATION}
-_META_COLUMNS = ("changeset", "timestamp", "uid", "user", "version", "visible")
 
 
 def _decode_elements(spec: _Element, payloads, c: _Columns,
@@ -533,63 +568,40 @@ def _finish_elements(spec: _Element, c: _Columns, n0: int, scalars, packed,
         if not seen.all():
             raise ProtoDecodeError(f"{spec.kind} without required field {fno}")
         required.append(zigzag_decode(raw) if zigzag else raw.astype(np.int64))
-    setattr(c, spec.flag, True)
     c.n += n0
-    c.ids.append(required[0])
+    c.put("ids", required[0])
     if spec is _PLAIN_NODE:
-        c.lat.append((geo.lat_offset + geo.granularity * required[1]) * NANO)
-        c.lon.append((geo.lon_offset + geo.granularity * required[2]) * NANO)
-    else:
-        c.lat.append(np.full(n0, np.nan))
-        c.lon.append(np.full(n0, np.nan))
-    zeros = np.zeros(n0, dtype=np.int64)
+        for name, raw, offset in (("lat", required[1], geo.lat_offset),
+                                  ("lon", required[2], geo.lon_offset)):
+            if _want(name):
+                c.put(name, (offset + geo.granularity * raw) * NANO)
     if _want("tags"):
         tag_keys, tag_counts = packed(2, False, False)
         tag_vals, val_counts = packed(3, False, False)
         if not np.array_equal(tag_counts, val_counts):
             raise ProtoDecodeError(f"{spec.kind} tag keys and values differ in length")
-        c.tag_counts.append(tag_counts)
+        c.put("tag_counts", tag_counts)
         if tag_keys.size:
             c.tag_keys.append(tag_keys)
             c.tag_vals.append(tag_vals)
-    else:
-        c.tag_counts.append(zeros)
-    counts = zeros
     if spec.lists and _want(spec.column):
         decoded = [packed(fno, zigzag, delta)
                    for fno, _attr, zigzag, delta in spec.lists]
         counts = decoded[0][1]
         if any(not np.array_equal(n, counts) for _vals, n in decoded[1:]):
             raise ProtoDecodeError(f"{spec.kind} {spec.column} lists differ in length")
+        c.put(spec.counts, counts)
         if decoded[0][0].size:
             for (_fno, attr, *_), (vals, _n) in zip(spec.lists, decoded):
                 getattr(c, attr).append(vals)
-    c.nd_counts.append(counts if spec.counts == "nd_counts" else zeros)
-    c.mem_counts.append(counts if spec.counts == "mem_counts" else zeros)
     if spec.locations and _want("locations"):
         for fno, attr, offset in spec.locations:
             raw, n = packed(fno, True, True)
             getattr(c, attr).append((getattr(geo, offset) + geo.granularity * raw) * NANO)
             getattr(c, attr + "_counts").append(n)
     if any(map(_want, _META_COLUMNS)):
-        meta = _info_columns(info(), n0, geo.date_granularity)
-        for attr, arr in zip(_META_ATTRS, meta):
-            getattr(c, attr).append(arr)
-    else:
-        _append_absent_meta(c, n0)
-
-
-def _append_absent_meta(c: _Columns, n0: int) -> None:
-    """Metadata for ``n0`` elements decoded without it: every column null,
-    ``visible`` true."""
-    false = np.zeros(n0, dtype=bool)
-    zero = np.zeros(n0, dtype=np.int64)
-    c.changeset.append(zero); c.changeset_valid.append(false)
-    c.ts_ms.append(zero); c.ts_valid.append(false)
-    c.uid.append(zero); c.uid_valid.append(false)
-    c.user_sid.append(np.full(n0, -1, dtype=np.int64))
-    c.version.append(zero); c.version_valid.append(false)
-    c.visible.append(np.ones(n0, dtype=bool)); c.visible_valid.append(false)
+        for col, vals, valid in _info_columns(info(), n0, geo.date_granularity, _want):
+            c.put(_META_ATTRS[col], vals, valid)
 
 
 def _last(scalars, fno: int, n0: int):
@@ -606,32 +618,79 @@ def _last(scalars, fno: int, n0: int):
     return raw, seen
 
 
-# the ``_Columns`` metadata accumulators, in ``_info_columns`` order
-_META_ATTRS = ("changeset", "changeset_valid", "ts_ms", "ts_valid", "uid",
-               "uid_valid", "user_sid", "version", "version_valid", "visible",
-               "visible_valid")
+# Every per-row ``_Columns`` accumulator → (sealed dtype, default). A row
+# no chunk covers reads as the default; None is null (the accumulator is
+# nullable and gets a validity mask where it has to). Defined once: the
+# decoders never write a default, ``seal`` fills one only inside a block
+# that has the accumulator for some of its rows, and ``_kind_batch`` only
+# for the blocks of a row group that lack it.
+_ROWS = {
+    "ids": (np.int64, 0),  # every row has one
+    "lat": (np.float64, None),  # degrees
+    "lon": (np.float64, None),
+    "tag_counts": (np.int32, 0),
+    "nd_counts": (np.int32, 0),
+    "mem_counts": (np.int32, 0),
+    "changeset": (np.int64, None),
+    "ts_ms": (np.int64, None),
+    "uid": (np.int32, None),
+    # a string index; -1 = null user, -2 = empty string (an element whose
+    # metadata has no user)
+    "user_sid": (np.int32, -1),
+    "version": (np.int32, None),
+    "visible": (np.bool_, None),
+}
+# the flat accumulators' sealed dtypes: string indices are checked to lie
+# below their table's length, member types below 3
+_FLAT = {"tag_keys": np.int32, "tag_vals": np.int32, "nd_refs": np.int64,
+         "mem_types": np.int8, "mem_refs": np.int64, "mem_roles": np.int32}
+# metadata column → its ``_Columns`` accumulator
+_META_ATTRS = {"version": "version", "timestamp": "ts_ms",
+               "changeset": "changeset", "uid": "uid", "user": "user_sid",
+               "visible": "visible"}
+_META_COLUMNS = tuple(_META_ATTRS)
+# Info and DenseInfo fields (osmformat.proto:139-175): (field, metadata
+# column, delta-coded sint in DenseInfo)
+_INFO_FIELDS = ((1, "version", False), (2, "timestamp", True),
+                (3, "changeset", True), (4, "uid", True), (5, "user", True),
+                (6, "visible", False))
 
 
-def _info_columns(scalars, n0: int, date_granularity: int) -> tuple:
-    """The wire-0 fields of ``n0`` elements' Info messages
-    (osmformat.proto:139-157), as ``scalars`` arrays → their metadata in
-    ``_META_ATTRS`` order. Parity with the reference's ``Info`` getters
+def _meta_values(col: str, v: np.ndarray, date_granularity: int) -> np.ndarray:
+    """Int64 Info/DenseInfo values of metadata column ``col`` → its
+    accumulator's values. version/uid are int32 (``_int32``), timestamp
+    counts ``date_granularity`` ms, changeset is int64."""
+    if col == "timestamp":
+        return v * date_granularity
+    if col in ("uid", "version"):
+        return _int32(v)
+    if col == "user":
+        return _user_sids(v)
+    if col == "visible":
+        return v != 0
+    return v
+
+
+def _info_columns(scalars, n0: int, date_granularity: int, _want):
+    """The wire-0 fields of ``n0`` elements' Info messages, as ``scalars``
+    arrays → (column, values, presence mask or None) for each wanted
+    metadata column. Parity with the reference's ``Info`` getters
     (osmpbf/src/elements.rs:573-625): a field is valid when present, a
     missing user is ``""`` for a non-dense element (sink.rs:182-183),
     ``visible`` defaults true. version/uid (int32) and changeset/
     timestamp (int64) are plain varints: negatives arrive as two's
-    complement (``_int32`` for the int32 ones)."""
-    (version, has_version), (ts, has_ts), (changeset, has_changeset), \
-        (uid, has_uid), (user, has_user), (visible, has_visible) = (
-            _last(scalars, fno, n0) for fno in range(1, 7))
-    return (
-        changeset.astype(np.int64), has_changeset,
-        ts.astype(np.int64) * date_granularity, has_ts,
-        _int32(uid.astype(np.int64)), has_uid,
-        np.where(has_user, _user_sids(user.astype(np.int64)), -2),  # -2 → ""
-        _int32(version.astype(np.int64)), has_version,
-        ~has_visible | (visible != 0), np.ones(n0, dtype=bool),
-    )
+    complement."""
+    for fno, col, _coded in _INFO_FIELDS:
+        if not _want(col):
+            continue
+        raw, seen = _last(scalars, fno, n0)
+        vals = _meta_values(col, raw.astype(np.int64), date_granularity)
+        if col == "user":
+            yield col, np.where(seen, vals, -2), None  # -2 → ""
+        elif col == "visible":
+            yield col, ~seen | vals, None
+        else:
+            yield col, vals, seen
 
 
 def _user_sids(sids: np.ndarray) -> np.ndarray:
@@ -649,94 +708,80 @@ def _decode_dense_nodes(payload, c: _Columns, granularity, lat_offset, lon_offse
 
     Delta chains reset per DenseNodes message; keys_vals is
     ``((<k> <v>)* 0)*`` with stringid 0 as delimiter. Every array is a
-    one-lane ``_dense_field``; lat/lon and each DenseInfo array must pair
-    up with the ids.
+    one-lane ``_dense_array``, decoded only for a wanted column; lat/lon
+    and each DenseInfo array must pair up with the ids whatever the
+    projection.
     """
     f = message_fields(payload)
-    ids = _dense_field(f.get(1, []), zigzag=True, delta=True)
+    ids = _dense_field(f.get(1, [])).finish(zigzag=True, delta=True)[0]
     n0 = ids.size
     if n0 == 0:
         return
-    c.has_coords = True
     c.n += n0
-    c.ids.append(ids)
-    for fno, name, offset, out in ((8, "lat", lat_offset, c.lat),
-                                   (9, "lon", lon_offset, c.lon)):
-        if _want(name):
-            raw = _paired(_dense_field(f.get(fno, []), zigzag=True, delta=True),
-                          n0, "DenseNodes", name, absent_ok=False)
-            out.append((offset + granularity * raw) * NANO)
-        else:
-            out.append(np.full(n0, np.nan))
-
-    # tags from keys_vals
+    c.put("ids", ids)
+    for fno, name, offset in ((8, "lat", lat_offset), (9, "lon", lon_offset)):
+        raw = _dense_array(f.get(fno, []), n0, "DenseNodes", name, _want(name),
+                           coded=True, absent_ok=False)
+        if raw is not None:
+            c.put(name, (offset + granularity * raw) * NANO)
     if _want("tags") and 10 in f:
-        _dense_tags(_dense_field(f[10]), n0, c)
-    else:
-        c.tag_counts.append(np.zeros(n0, dtype=np.int64))
-    c.nd_counts.append(np.zeros(n0, dtype=np.int64))
-    c.mem_counts.append(np.zeros(n0, dtype=np.int64))
+        _dense_tags(_dense_field(f[10]).finish()[0], n0, c)
 
     # DenseInfo (osmformat.proto:159-175): parallel arrays, some delta-coded
     info = f.get(5, [None])[0]
     if info is None:
-        _append_absent_meta(c, n0)
-        return
+        return  # every metadata column null
     fi = message_fields(info)
-    # (field, name, zigzag+delta); version and visible are plain
-    versions, ts, changesets, uids, user_sids, visible_raw = (
-        _paired(_dense_field(fi.get(fno, []), zigzag=coded, delta=coded),
-                n0, "DenseInfo", name)
-        for fno, name, coded in ((1, "version", False), (2, "timestamp", True),
-                                 (3, "changeset", True), (4, "uid", True),
-                                 (5, "user_sid", True), (6, "visible", False)))
-
-    for arr, attr, valid in ((_int32(versions), "version", "version_valid"),
-                             (ts * date_granularity, "ts_ms", "ts_valid"),
-                             (changesets, "changeset", "changeset_valid"),
-                             (_int32(uids), "uid", "uid_valid")):
-        getattr(c, attr).append(arr if arr.size else np.zeros(n0, dtype=np.int64))
-        getattr(c, valid).append(np.full(n0, arr.size > 0))
-    # user present whenever DenseInfo has user_sids; missing → "" parity
-    # (dense.rs DenseNodeInfo::user over parallel arrays)
-    c.user_sid.append(_user_sids(user_sids) if user_sids.size
-                      else np.full(n0, -2, dtype=np.int64))
-    if visible_raw.size:
-        c.visible.append(visible_raw.astype(bool))
-    else:
-        c.visible.append(np.ones(n0, dtype=bool))  # default true (dense.rs:310)
-    c.visible_valid.append(np.ones(n0, dtype=bool))
+    for fno, col, coded in _INFO_FIELDS:
+        vals = _dense_array(fi.get(fno, []), n0, "DenseInfo", col, _want(col),
+                            coded=coded)
+        if vals is not None:
+            c.put(_META_ATTRS[col], _meta_values(col, vals, date_granularity))
+        elif col == "user" and _want(col):
+            # user present whenever DenseInfo has user_sids; missing → ""
+            # parity (dense.rs DenseNodeInfo::user over parallel arrays)
+            c.put("user_sid", np.full(n0, -2, dtype=np.int32))
+        elif col == "visible" and _want(col):
+            c.put("visible", np.ones(n0, dtype=bool))  # default true (dense.rs:310)
 
 
-def _dense_field(values, zigzag: bool = False, delta: bool = False) -> np.ndarray:
+def _dense_field(values) -> PackedBatch:
     """Every occurrence of one DenseNodes/DenseInfo field (its
     ``message_fields`` values: packed chunks, or varints sent unpacked),
-    in order → its int64 values, decoded as one lane."""
+    in order, as one lane."""
     batch = PackedBatch(1)
     for v in values:
         if isinstance(v, int):
             batch.add_scalar(0, v)
         else:
             batch.add(0, v)
-    return batch.finish(zigzag=zigzag, delta=delta)[0]
+    return batch
 
 
-def _paired(arr: np.ndarray, n0: int, message: str, name: str,
-            absent_ok: bool = True) -> np.ndarray:
-    """A DenseNodes parallel array must have one value per node id (or,
-    where ``absent_ok``, none): padding a short one would fabricate
-    values, and a long one would fail only at Arrow assembly."""
-    if arr.size != n0 and not (absent_ok and arr.size == 0):
+def _dense_array(values, n0: int, message: str, name: str, wanted: bool,
+                 coded: bool = False, absent_ok: bool = True) -> np.ndarray | None:
+    """A DenseNodes/DenseInfo parallel array → its int64 values (zigzag
+    and delta when ``coded``), or None when it is absent or not
+    ``wanted``. It must have one value per node id (or, where
+    ``absent_ok``, none) under every projection: padding a short one
+    would fabricate values, and a long one would fail only at Arrow
+    assembly. An unwanted array is counted, not decoded."""
+    batch = _dense_field(values)
+    if wanted:
+        vals = batch.finish(zigzag=coded, delta=coded)[0]
+        size = vals.size
+    else:
+        vals, size = None, batch.count()
+    if size != n0 and not (absent_ok and size == 0):
         raise ProtoDecodeError(
-            f"{message} {name} array length {arr.size} != node count {n0}"
+            f"{message} {name} array length {size} != node count {n0}"
         )
-    return arr
+    return vals if size else None
 
 
 def _dense_tags(kv: np.ndarray, n0: int, c: _Columns) -> None:
     """Split packed ``((k v)* 0)*`` into per-node k/v index runs, vectorized."""
     if kv.size == 0:
-        c.tag_counts.append(np.zeros(n0, dtype=np.int64))
         return
     zeros = np.flatnonzero(kv == 0)
     # entries between delimiters belong to consecutive nodes
@@ -749,7 +794,7 @@ def _dense_tags(kv: np.ndarray, n0: int, c: _Columns) -> None:
             [seg_starts, np.full(n0 - seg_starts.size, kv.size, dtype=np.int64)]
         ) if seg_starts.size < n0 else seg_starts
     pair_counts = (seg_ends - seg_starts) // 2
-    c.tag_counts.append(pair_counts)
+    c.put("tag_counts", pair_counts)
     total_pairs = int(pair_counts.sum())
     if total_pairs == 0:
         return
@@ -806,7 +851,8 @@ def _kind_batch(kind: str, blocks: list[_Columns],
     """The one assembly path: ``blocks`` of one kind → a RecordBatch in
     ``schema``. Each block's string tables are concatenated and its
     string indices shifted by the table's offset in the concatenation
-    (bounds were checked per block by ``seal``)."""
+    (bounds were checked per block by ``seal``). A block without an
+    accumulator gets its default only while that column is built."""
     for c in blocks:
         c.seal()
     n = sum(c.n for c in blocks)
@@ -817,48 +863,59 @@ def _kind_batch(kind: str, blocks: list[_Columns],
     for field in schema:
         name = field.name
         if name == "id":
-            arrays.append(pa.array(_flat(blocks, "ids", np.int64), type=pa.int64()))
+            arrays.append(pa.array(_rows(blocks, "ids"), type=pa.int64()))
         elif name == "type":
             arrays.append(pa.DictionaryArray.from_arrays(
                 pa.array(np.zeros(n, dtype=np.int32)), pa.array([kind])
             ).cast(pa.string()))
         elif name == "tags":
             arrays.append(_tags_array(blocks, strings, bases, n))
-        elif name in ("lat", "lon"):
-            arrays.append(_coord_array(
-                _flat(blocks, name, np.float64),
-                n, any(c.has_coords for c in blocks),
-            ))
         elif name == "nds":
             arrays.append(_nds_array(blocks, n, field.type))
         elif name == "members":
             arrays.append(_members_array(blocks, strings, bases, n, field.type))
-        elif name == "changeset":
-            arrays.append(_masked_int(blocks, "changeset", "changeset_valid", n, pa.int64()))
-        elif name == "timestamp":
-            ts = _masked_int(blocks, "ts_ms", "ts_valid", n, pa.int64())
-            arrays.append(ts.cast(pa.timestamp("ms")).cast(field.type))
-        elif name == "uid":
-            arrays.append(_masked_int(blocks, "uid", "uid_valid", n, pa.int32()))
         elif name == "user":
             arrays.append(_user_array(blocks, strings, bases, n))
-        elif name == "version":
-            arrays.append(_masked_int(blocks, "version", "version_valid", n, pa.int32()))
-        elif name == "visible":
-            vis = _flat(blocks, "visible", np.bool_)
-            if vis.size == 0:
-                arrays.append(pa.nulls(n, pa.bool_()))
-            else:
-                mask = _flat(blocks, "visible_valid", np.bool_)
-                arrays.append(pa.array(vis, mask=~mask))
+        elif name == "timestamp":
+            ts = _nullable(blocks, "ts_ms", n, pa.timestamp("ms"))
+            arrays.append(ts.cast(field.type))
+        elif name in ("lat", "lon", "changeset", "uid", "version", "visible"):
+            arrays.append(_nullable(blocks, name, n, field.type))
         else:  # pragma: no cover
             raise ValueError(f"unknown column {name}")
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
-def _flat(blocks: list[_Columns], attr: str, dtype) -> np.ndarray:
-    """One accumulator (``attr``) of every block, concatenated."""
-    return _concat([a for c in blocks for a in getattr(c, attr)], dtype)
+def _rows(blocks: list[_Columns], attr: str) -> np.ndarray | None:
+    """Per-row accumulator ``attr`` of every sealed block, concatenated,
+    a block without it giving its default; None when no block has it."""
+    if not any(getattr(c, attr) for c in blocks):
+        return None
+    dtype, default = _ROWS[attr]
+    return _concat([getattr(c, attr)[0] if getattr(c, attr)
+                    else np.full(c.n, default or 0, dtype=dtype)
+                    for c in blocks], dtype)
+
+
+def _flat(blocks: list[_Columns], attr: str) -> np.ndarray:
+    """One flat accumulator (``attr``) of every sealed block, concatenated."""
+    return _concat([a for c in blocks for a in getattr(c, attr)], _FLAT[attr])
+
+
+def _nullable(blocks: list[_Columns], attr: str, n: int, pa_type) -> pa.Array:
+    """A nullable per-row accumulator as an Arrow array: null where a
+    block lacks it or its mask says so; no validity mask when every row
+    is valid."""
+    vals = _rows(blocks, attr)
+    if vals is None:
+        return pa.nulls(n, pa_type)
+    mask = None
+    if any(getattr(c, attr + "_valid") or not getattr(c, attr) for c in blocks):
+        mask = ~_concat([getattr(c, attr + "_valid")[0]
+                         if getattr(c, attr + "_valid")
+                         else np.full(c.n, bool(getattr(c, attr)))
+                         for c in blocks], np.bool_)
+    return pa.array(vals, type=pa_type, mask=mask)
 
 
 def _joined_strings(blocks: list[_Columns]) -> tuple[pa.Array, list[int]]:
@@ -873,49 +930,34 @@ def _joined_strings(blocks: list[_Columns]) -> tuple[pa.Array, list[int]]:
 
 
 def _string_refs(blocks: list[_Columns], attr: str, bases: list[int]) -> pa.Array:
-    """Per-block string indices (``attr``) shifted into the joined table."""
+    """Per-block int32 string indices (``attr``) shifted into the joined
+    table."""
     parts = [idx + base if base else idx
              for c, base in zip(blocks, bases)
              for idx in getattr(c, attr)]  # one chunk at most once sealed
-    return pa.array(_concat(parts, np.int64), type=pa.int64())
+    return pa.array(_concat(parts, np.int32), type=pa.int32())
 
 
-def _masked_int(blocks: list[_Columns], attr: str, valid_attr: str, n: int,
-                pa_type) -> pa.Array:
-    vals = _flat(blocks, attr, np.int64)
-    if vals.size == 0:
-        return pa.nulls(n, pa_type)
-    mask = _flat(blocks, valid_attr, np.bool_)
-    return pa.array(vals, mask=~mask).cast(pa_type)
-
-
-def _counts_to_offsets(blocks: list[_Columns], attr: str, n: int) -> pa.Array:
-    flat = _flat(blocks, attr, np.int64)
-    if flat.size == 0:
-        flat = np.zeros(n, dtype=np.int64)
-    offsets = np.empty(flat.size + 1, dtype=np.int32)
-    offsets[0] = 0
-    np.cumsum(flat, out=offsets[1:])
+def _offsets(blocks: list[_Columns], attr: str, n: int) -> pa.Array:
+    """Per-row counts (``attr``) → list offsets."""
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    counts = _rows(blocks, attr)
+    if counts is not None:
+        np.cumsum(counts, dtype=np.int32, out=offsets[1:])
     return pa.array(offsets, type=pa.int32())
-
-
-def _coord_array(vals: np.ndarray, n: int, has_coords: bool) -> pa.Array:
-    if not has_coords:
-        return pa.nulls(n, pa.float64())
-    return pa.array(vals, mask=np.isnan(vals))
 
 
 def _tags_array(blocks: list[_Columns], strings: pa.Array, bases: list[int],
                 n: int) -> pa.Array:
-    offsets = _counts_to_offsets(blocks, "tag_counts", n)
+    offsets = _offsets(blocks, "tag_counts", n)
     keys = strings.take(_string_refs(blocks, "tag_keys", bases))
     vals = strings.take(_string_refs(blocks, "tag_vals", bases))
     return pa.MapArray.from_arrays(offsets, keys, vals)
 
 
 def _nds_array(blocks: list[_Columns], n: int, list_type) -> pa.Array:
-    offsets = _counts_to_offsets(blocks, "nd_counts", n)
-    refs = _flat(blocks, "nd_refs", np.int64)
+    offsets = _offsets(blocks, "nd_counts", n)
+    refs = _flat(blocks, "nd_refs")
     struct = pa.StructArray.from_arrays([pa.array(refs, type=pa.int64())], ["ref"])
     arr = pa.ListArray.from_arrays(offsets, struct)
     return arr.cast(list_type)
@@ -923,11 +965,10 @@ def _nds_array(blocks: list[_Columns], n: int, list_type) -> pa.Array:
 
 def _members_array(blocks: list[_Columns], strings: pa.Array, bases: list[int],
                    n: int, list_type) -> pa.Array:
-    offsets = _counts_to_offsets(blocks, "mem_counts", n)
-    refs = _flat(blocks, "mem_refs", np.int64)
+    offsets = _offsets(blocks, "mem_counts", n)
+    refs = _flat(blocks, "mem_refs")
     type_dict = pa.array(list(_MEMBER_TYPES), type=pa.string())
-    types = type_dict.take(pa.array(_flat(blocks, "mem_types", np.int64),
-                                    type=pa.int64()))
+    types = type_dict.take(pa.array(_flat(blocks, "mem_types"), type=pa.int8()))
     roles = strings.take(_string_refs(blocks, "mem_roles", bases))
     struct = pa.StructArray.from_arrays(
         [types, pa.array(refs, type=pa.int64()), roles], ["type", "ref", "role"]
@@ -938,20 +979,18 @@ def _members_array(blocks: list[_Columns], strings: pa.Array, bases: list[int],
 
 def _user_array(blocks: list[_Columns], strings: pa.Array, bases: list[int],
                 n: int) -> pa.Array:
-    if not any(c.user_sid for c in blocks):
+    sids = _rows(blocks, "user_sid")
+    if sids is None:
         return pa.nulls(n, pa.string())
     # -1 → null; -2 → "" (missing user on an element that HAS metadata),
     # the last entry of the joined table; others shift by the block base
-    empty_idx = len(strings) - 1
-    parts = []
-    for c, base in zip(blocks, bases):
-        sids = c.user_sid[0] if c.user_sid else np.full(c.n, -1, np.int64)
-        parts.append(np.where(sids >= 0, sids + base,
-                              np.where(sids == -2, empty_idx, -1)))
-    idx = _concat(parts, np.int64)
-    null_mask = idx == -1
-    idx[null_mask] = 0
-    return strings.take(pa.array(idx, mask=null_mask, type=pa.int64()))
+    shift = np.repeat(np.asarray(bases, dtype=np.int32),
+                      [c.n for c in blocks])
+    idx = np.where(sids >= 0, sids + shift,
+                   np.where(sids == -2, np.int32(len(strings) - 1), np.int32(0)))
+    null_mask = sids == -1
+    return strings.take(pa.array(idx, type=pa.int32(),
+                                 mask=null_mask if null_mask.any() else None))
 
 
 def parse_block_to_batch(

@@ -465,8 +465,7 @@ def finish_packed(raw: np.ndarray, nbytes: np.ndarray, ends: np.ndarray,
         return np.empty(0, dtype=np.int64), np.zeros(n0, dtype=np.int64)
     u = uvarints_from_raw(raw)
     vals = zigzag_decode(u) if zigzag else u.astype(np.int64)
-    if ends.size > 1 and (raw[ends[ends > 0] - 1] >= 0x80).any():
-        raise ProtoDecodeError("packed varint run crosses a chunk boundary")
+    _check_chunk_ends(raw, ends)
     if n0 == 1:
         return (np.cumsum(vals) if delta else vals), np.array([vals.size])
     term_cs = np.concatenate([[0], np.cumsum(raw < 0x80)])
@@ -478,6 +477,25 @@ def finish_packed(raw: np.ndarray, nbytes: np.ndarray, ends: np.ndarray,
         base = np.where(elem_starts > 0, cs[np.maximum(elem_starts - 1, 0)], 0)
         vals = cs - np.repeat(base, counts)
     return vals, counts
+
+
+def count_packed(raw: np.ndarray, ends: np.ndarray) -> int:
+    """How many values ``finish_packed`` decodes from the same chunks,
+    counted from varint terminators without decoding them. A chunk that
+    ends mid-varint raises as there; an over-long (>10 byte) varint is
+    not detected."""
+    if raw.size == 0:
+        return 0
+    is_term = raw < 0x80
+    if not is_term[-1]:
+        raise ProtoDecodeError("truncated packed varint run")
+    _check_chunk_ends(raw, ends)
+    return int(np.count_nonzero(is_term))
+
+
+def _check_chunk_ends(raw: np.ndarray, ends: np.ndarray) -> None:
+    if ends.size > 1 and (raw[ends[ends > 0] - 1] >= 0x80).any():
+        raise ProtoDecodeError("packed varint run crosses a chunk boundary")
 
 
 class PackedBatch:
@@ -505,8 +523,16 @@ class PackedBatch:
     def finish(self, zigzag: bool = False, delta: bool = False):
         """→ (values int64, per-lane counts). A single chunk is decoded
         in place, not copied."""
+        return finish_packed(*self._raw(), zigzag=zigzag, delta=delta)
+
+    def count(self) -> int:
+        """How many values ``finish`` returns, without decoding them."""
+        raw, _nbytes, ends = self._raw()
+        return count_packed(raw, ends)
+
+    def _raw(self):
         parts = self.parts
         raw = np.frombuffer(parts[0] if len(parts) == 1 else b"".join(parts),
                             dtype=np.uint8)
         ends = np.cumsum(np.fromiter(map(len, parts), np.int64, len(parts)))
-        return finish_packed(raw, self.nbytes, ends, zigzag=zigzag, delta=delta)
+        return raw, self.nbytes, ends

@@ -299,12 +299,14 @@ def _data_group_payloads(path, field_no):
 
 def _cols_snapshot(c):
     cat = lambda chunks: np.concatenate([np.asarray(x) for x in chunks]) if chunks else np.empty(0)
+    masks = [attr + "_valid" for attr, (_dtype, default) in D._ROWS.items()
+             if default is None]
     return {
         name: cat(getattr(c, name))
         for name in ("ids", "lat", "lon", "tag_counts", "tag_keys",
                      "tag_vals", "nd_counts", "nd_refs", "mem_counts",
                      "mem_refs", "mem_roles", "mem_types", "changeset",
-                     "ts_ms", "uid", "user_sid", "version", "visible")
+                     "ts_ms", "uid", "user_sid", "version", "visible", *masks)
     }
 
 
@@ -347,7 +349,7 @@ def test_vectorized_way_decode_matches_scalar(tmp_path):
     payloads, geo = _data_group_payloads(mixed, 1)[0]
     c = _assert_decoders_agree(D._PLAIN_NODE, payloads, geo,
                                want=lambda col: col in ("id", "lat"))
-    assert not c.tag_keys and not np.concatenate(c.version_valid).any()
+    assert not c.tag_keys and not c.version and not c.version_valid
 
 
 def _info(*fields, extra=b""):
@@ -366,14 +368,17 @@ def _way_with_info(wid, *infos):
 
 
 def _meta_rows(c):
-    """Per element: (version, ts_ms, changeset, uid, user_sid, visible),
-    None where the field is null."""
-    cat = lambda attr: np.concatenate(getattr(c, attr)).tolist()
-    opt = lambda attr, valid: [v if ok else None
-                               for v, ok in zip(cat(attr), cat(valid))]
-    return list(zip(opt("version", "version_valid"), opt("ts_ms", "ts_valid"),
-                    opt("changeset", "changeset_valid"), opt("uid", "uid_valid"),
-                    cat("user_sid"), opt("visible", "visible_valid")))
+    """Per element of a one-group block: (version, ts_ms, changeset, uid,
+    user_sid, visible), None where the field is null -- an absent
+    accumulator is null, an absent mask all valid."""
+    def opt(attr):
+        cat = lambda chunks, fill: (np.concatenate(chunks).tolist() if chunks
+                                    else [fill] * c.n)
+        vals = cat(getattr(c, attr), None)
+        return [v if ok else None
+                for v, ok in zip(vals, cat(getattr(c, attr + "_valid", []), True))]
+    return list(zip(*map(opt, ("version", "ts_ms", "changeset", "uid",
+                               "user_sid", "visible"))))
 
 
 _GEO = D.BlockGeometry(100, 0, 0, 1000)
@@ -791,6 +796,81 @@ def test_dense_coordinates_must_pair_with_ids():
     block = encode_primitive_block([_dense_group(StringTable(), [1, 2, 3], lats=[0, 0])])
     with pytest.raises(P.ProtoDecodeError, match="lat array length 2 != node count 3"):
         D.decode_primitive_block(block)
+
+
+def _short_dense_block(case):
+    """A DenseNodes block with 3 ids whose ``case`` array is one short:
+    2 lats, or a DenseInfo with 2 versions (every other array full)."""
+    from pbf_encoder import (StringTable, _packed_svarints, _packed_uvarints,
+                             encode_primitive_block)
+
+    st = StringTable()
+    user = st.add("u")
+    info = (_packed_uvarints(1, [1, 2] if case == "version" else [1, 2, 3])
+            + _packed_svarints(2, [5, 6, 7], delta=True)
+            + _packed_svarints(3, [8, 8, 9], delta=True)
+            + _packed_svarints(4, [4, 4, 4], delta=True)
+            + _packed_svarints(5, [user] * 3, delta=True)
+            + _packed_uvarints(6, [1, 0, 1]))
+    lats = [0, 0] if case == "lat" else None
+    return encode_primitive_block([_dense_group(st, [1, 2, 3], lats=lats, info=info)],
+                                  st=st)
+
+
+@pytest.mark.parametrize("case", ["lat", "version"])
+def test_dense_arrays_pair_under_every_projection(case):
+    """A short DenseNodes/DenseInfo parallel array fails the same under
+    every projection, wanted or not: an unwanted array is counted, not
+    skipped."""
+    from itertools import combinations
+
+    block = _short_dense_block(case)
+    names = ("id", "lat", "lon", "tags", *D._META_COLUMNS)
+    subsets = [None] + [list(s) for r in range(len(names) + 1)
+                        for s in combinations(names, r)]
+    message = ("DenseNodes lat array length 2" if case == "lat"
+               else "DenseInfo version array length 2")
+    for columns in subsets:
+        with pytest.raises(P.ProtoDecodeError, match=f"{message} != node count 3"):
+            D.decode_primitive_block(block, columns=columns)
+
+
+def test_dense_decodes_only_wanted_columns():
+    """A DenseNodes projection decodes only its own columns: the others
+    stay absent (their default), and the full read is unchanged."""
+    block = _short_dense_block(None)
+    only_id = D.decode_primitive_block(block, columns=["id"])["node"]
+    assert only_id.ids[0].tolist() == [1, 2, 3]
+    assert not any(getattr(only_id, attr) for attr in D._ROWS if attr != "ids")
+    user = D.decode_primitive_block(block, columns=["id", "user"])["node"]
+    assert [a for a in D._ROWS if getattr(user, a)] == ["ids", "user_sid"]
+    rows = D.parse_block_to_batch(block).to_pylist()
+    assert [(r["version"], r["user"], r["visible"]) for r in rows] == [
+        (1, "u", True), (2, "u", False), (3, "u", True)]
+
+
+def test_packed_count_matches_finish():
+    """``PackedBatch.count`` is the number of values ``finish`` returns,
+    for one chunk, many chunks and unpacked varints, and raises like it
+    on a chunk cut mid-varint."""
+    from pbf_encoder import _varint
+
+    rng = np.random.default_rng(7)
+    for n_chunks in (0, 1, 2, 5):
+        pb = P.PackedBatch(1)
+        for _ in range(n_chunks):
+            vals = rng.integers(0, 1 << rng.integers(1, 63), rng.integers(0, 40))
+            pb.add(0, memoryview(b"".join(_varint(int(v)) for v in vals)))
+        pb.add_scalar(0, 300)
+        assert pb.count() == pb.finish()[0].size
+    for chunks in ([b"\x02\x81"], [b"\x02\x81", b"\x01"]):
+        pb = P.PackedBatch(1)
+        for chunk in chunks:
+            pb.add(0, memoryview(chunk))
+        with pytest.raises(P.ProtoDecodeError, match="packed varint"):
+            pb.count()
+        with pytest.raises(P.ProtoDecodeError, match="packed varint"):
+            pb.finish()
 
 
 def _chunked(field_no):
