@@ -56,6 +56,7 @@ from .proto import (
     PackedBatch,
     ProtoDecodeError,
     Wire2Ranges,
+    count_packed,
     extract_ranges,
     finish_packed,
     iter_fields,
@@ -494,10 +495,9 @@ def _decode_elements(spec: _Element, payloads, c: _Columns,
         return _decode_elements_scalar(spec, payloads, c, geo, _want)
     n0 = len(payloads)
 
-    def packed(fno: int, zigzag: bool, delta: bool):
+    def chunks(fno: int):
         m = rf == fno
-        return finish_packed(*extract_ranges(arr, rs[m], rn[m], rl[m], n0),
-                             zigzag=zigzag, delta=delta)
+        return extract_ranges(arr, rs[m], rn[m], rl[m], n0)
 
     def info():
         m = rf == 4
@@ -512,7 +512,7 @@ def _decode_elements(spec: _Element, payloads, c: _Columns,
             fno, lane, val = fno[order], lane[order], val[order]
         return fno, elems[lane], val
 
-    _finish_elements(spec, c, n0, scalars, packed, info, geo, _want)
+    _finish_elements(spec, c, n0, scalars, chunks, info, geo, _want)
 
 
 def _decode_elements_scalar(spec: _Element, payloads, c: _Columns,
@@ -539,8 +539,7 @@ def _decode_elements_scalar(spec: _Element, payloads, c: _Columns,
                 elif fno == 4:
                     infos.append((i, val))
     _finish_elements(
-        spec, c, n0, _wire0(rows),
-        lambda fno, zigzag, delta: lists[fno].finish(zigzag=zigzag, delta=delta),
+        spec, c, n0, _wire0(rows), lambda fno: lists[fno].chunks(),
         lambda: _wire0([(fno, i, val) for i, info in infos
                         for fno, wire, val in iter_fields(info) if wire == 0]),
         geo, _want,
@@ -555,13 +554,24 @@ def _wire0(rows: list[tuple]) -> tuple:
             np.array(v, dtype=np.uint64))
 
 
-def _finish_elements(spec: _Element, c: _Columns, n0: int, scalars, packed,
+def _finish_elements(spec: _Element, c: _Columns, n0: int, scalars, chunks,
                      info, geo: BlockGeometry, _want) -> None:
     """The tail both element decoders share. ``scalars`` is every wire-0
     occurrence as (field, element, uint64 value) arrays, each element's
-    in message order; ``packed(fno, zigzag, delta)`` decodes one packed
-    field across the group → (values, per-element counts); ``info()`` →
-    the same arrays for the fields of every element's Info."""
+    in message order; ``chunks(fno)`` → one packed field's chunks across
+    the group, the arguments of ``finish_packed``; ``info()`` → the same
+    arrays as ``scalars`` for the fields of every element's Info. A
+    packed list of an unwanted column is counted, not decoded, so its
+    varints and its pairing with its sibling lists are checked under
+    every projection."""
+    def lists(fields, wanted: bool) -> list:
+        """(field, zigzag, delta) of each list → [(values, per-element
+        counts)]; values are None when not ``wanted``."""
+        if not wanted:
+            return [(None, count_packed(*chunks(fno))) for fno, *_ in fields]
+        return [finish_packed(*chunks(fno), zigzag=zigzag, delta=delta)
+                for fno, zigzag, delta in fields]
+
     required = []
     for fno, zigzag in spec.scalars:
         raw, seen = _last(scalars, fno, n0)
@@ -575,30 +585,35 @@ def _finish_elements(spec: _Element, c: _Columns, n0: int, scalars, packed,
                                   ("lon", required[2], geo.lon_offset)):
             if _want(name):
                 c.put(name, (offset + geo.granularity * raw) * NANO)
-    if _want("tags"):
-        tag_keys, tag_counts = packed(2, False, False)
-        tag_vals, val_counts = packed(3, False, False)
-        if not np.array_equal(tag_counts, val_counts):
-            raise ProtoDecodeError(f"{spec.kind} tag keys and values differ in length")
+    (tag_keys, tag_counts), (tag_vals, val_counts) = lists(
+        ((2, False, False), (3, False, False)), _want("tags"))
+    if not np.array_equal(tag_counts, val_counts):
+        raise ProtoDecodeError(f"{spec.kind} tag keys and values differ in length")
+    if tag_keys is not None:
         c.put("tag_counts", tag_counts)
         if tag_keys.size:
             c.tag_keys.append(tag_keys)
             c.tag_vals.append(tag_vals)
-    if spec.lists and _want(spec.column):
-        decoded = [packed(fno, zigzag, delta)
-                   for fno, _attr, zigzag, delta in spec.lists]
+    if spec.lists:
+        wanted = _want(spec.column)
+        decoded = lists([(fno, zigzag, delta)
+                         for fno, _attr, zigzag, delta in spec.lists], wanted)
         counts = decoded[0][1]
         if any(not np.array_equal(n, counts) for _vals, n in decoded[1:]):
             raise ProtoDecodeError(f"{spec.kind} {spec.column} lists differ in length")
-        c.put(spec.counts, counts)
-        if decoded[0][0].size:
-            for (_fno, attr, *_), (vals, _n) in zip(spec.lists, decoded):
-                getattr(c, attr).append(vals)
-    if spec.locations and _want("locations"):
-        for fno, attr, offset in spec.locations:
-            raw, n = packed(fno, True, True)
-            getattr(c, attr).append((getattr(geo, offset) + geo.granularity * raw) * NANO)
-            getattr(c, attr + "_counts").append(n)
+        if wanted:
+            c.put(spec.counts, counts)
+            if decoded[0][0].size:
+                for (_fno, attr, *_), (vals, _n) in zip(spec.lists, decoded):
+                    getattr(c, attr).append(vals)
+    if spec.locations:
+        wanted = _want("locations")
+        decoded = lists([(fno, True, True) for fno, *_ in spec.locations], wanted)
+        for (_fno, attr, offset), (raw, n) in zip(spec.locations, decoded):
+            if wanted:
+                getattr(c, attr).append(
+                    (getattr(geo, offset) + geo.granularity * raw) * NANO)
+                getattr(c, attr + "_counts").append(n)
     if any(map(_want, _META_COLUMNS)):
         for col, vals, valid in _info_columns(info(), n0, geo.date_granularity, _want):
             c.put(_META_ATTRS[col], vals, valid)
@@ -724,8 +739,12 @@ def _decode_dense_nodes(payload, c: _Columns, granularity, lat_offset, lon_offse
                            coded=True, absent_ok=False)
         if raw is not None:
             c.put(name, (offset + granularity * raw) * NANO)
-    if _want("tags") and 10 in f:
-        _dense_tags(_dense_field(f[10]).finish()[0], n0, c)
+    if 10 in f:
+        keys_vals = _dense_field(f[10])
+        if _want("tags"):
+            _dense_tags(keys_vals.finish()[0], n0, c)
+        else:
+            keys_vals.count()  # its varints are checked under every projection
 
     # DenseInfo (osmformat.proto:159-175): parallel arrays, some delta-coded
     info = f.get(5, [None])[0]
@@ -771,7 +790,7 @@ def _dense_array(values, n0: int, message: str, name: str, wanted: bool,
         vals = batch.finish(zigzag=coded, delta=coded)[0]
         size = vals.size
     else:
-        vals, size = None, batch.count()
+        vals, size = None, int(batch.count()[0])
     if size != n0 and not (absent_ok and size == 0):
         raise ProtoDecodeError(
             f"{message} {name} array length {size} != node count {n0}"

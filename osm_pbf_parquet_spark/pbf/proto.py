@@ -468,9 +468,7 @@ def finish_packed(raw: np.ndarray, nbytes: np.ndarray, ends: np.ndarray,
     _check_chunk_ends(raw, ends)
     if n0 == 1:
         return (np.cumsum(vals) if delta else vals), np.array([vals.size])
-    term_cs = np.concatenate([[0], np.cumsum(raw < 0x80)])
-    byte_bounds = np.concatenate([[0], np.cumsum(nbytes)])
-    counts = term_cs[byte_bounds[1:]] - term_cs[byte_bounds[:-1]]
+    counts = _lane_counts(raw < 0x80, nbytes)
     if delta:
         cs = np.cumsum(vals)
         elem_starts = np.cumsum(counts) - counts
@@ -479,18 +477,30 @@ def finish_packed(raw: np.ndarray, nbytes: np.ndarray, ends: np.ndarray,
     return vals, counts
 
 
-def count_packed(raw: np.ndarray, ends: np.ndarray) -> int:
-    """How many values ``finish_packed`` decodes from the same chunks,
-    counted from varint terminators without decoding them. A chunk that
-    ends mid-varint raises as there; an over-long (>10 byte) varint is
-    not detected."""
+def count_packed(raw: np.ndarray, nbytes: np.ndarray, ends: np.ndarray):
+    """The per-lane counts ``finish_packed`` returns for the same chunks,
+    counted from varint terminators without decoding the values. It
+    raises wherever ``finish_packed`` does: a run or chunk that ends
+    mid-varint, or a varint longer than 10 bytes."""
     if raw.size == 0:
-        return 0
+        return np.zeros(nbytes.size, dtype=np.int64)
     is_term = raw < 0x80
     if not is_term[-1]:
         raise ProtoDecodeError("truncated packed varint run")
+    if not is_term.all():
+        if int(np.diff(np.flatnonzero(is_term), prepend=-1).max()) > 10:
+            raise ProtoDecodeError("varint too long")
     _check_chunk_ends(raw, ends)
-    return int(np.count_nonzero(is_term))
+    if nbytes.size == 1:
+        return np.array([np.count_nonzero(is_term)])
+    return _lane_counts(is_term, nbytes)
+
+
+def _lane_counts(is_term: np.ndarray, nbytes: np.ndarray) -> np.ndarray:
+    """Varint terminators per lane of ``nbytes`` bytes each."""
+    term_cs = np.concatenate([[0], np.cumsum(is_term)])
+    byte_bounds = np.concatenate([[0], np.cumsum(nbytes)])
+    return term_cs[byte_bounds[1:]] - term_cs[byte_bounds[:-1]]
 
 
 def _check_chunk_ends(raw: np.ndarray, ends: np.ndarray) -> None:
@@ -523,14 +533,14 @@ class PackedBatch:
     def finish(self, zigzag: bool = False, delta: bool = False):
         """→ (values int64, per-lane counts). A single chunk is decoded
         in place, not copied."""
-        return finish_packed(*self._raw(), zigzag=zigzag, delta=delta)
+        return finish_packed(*self.chunks(), zigzag=zigzag, delta=delta)
 
-    def count(self) -> int:
-        """How many values ``finish`` returns, without decoding them."""
-        raw, _nbytes, ends = self._raw()
-        return count_packed(raw, ends)
+    def count(self) -> np.ndarray:
+        """The per-lane counts ``finish`` returns, without decoding."""
+        return count_packed(*self.chunks())
 
-    def _raw(self):
+    def chunks(self):
+        """→ (raw, nbytes, ends), the arguments of ``finish_packed``."""
         parts = self.parts
         raw = np.frombuffer(parts[0] if len(parts) == 1 else b"".join(parts),
                             dtype=np.uint8)

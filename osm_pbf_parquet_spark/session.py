@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import _daemon
+
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
@@ -57,22 +59,30 @@ def get_spark(app_name: str = "osm_pbf_parquet_spark", **extra_confs) -> SparkSe
         # lets the osmpbf Python data source accept type=... predicates as
         # kind pushdown (sources/pbf_datasource.py::pushFilters)
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # the package root on the Python workers' path: workers do not
+        # inherit the driver's sys.path, and the daemon module below is
+        # imported before any task
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+            + os.pathsep
+            + os.environ.get("PYTHONPATH", ""),
+        )
     )
+    if _daemon.needs_fix():
+        # Python workers fork from our daemon module, not pyspark.daemon:
+        # up to Python 3.12, the importlib.invalidate_caches() PySpark
+        # runs before every task re-reads pyspark.zip's whole directory
+        # in each of a worker's 16 zip importers, 0.1-0.2 CPU-s per task.
+        # _daemon re-reads an archive only when it has changed.
+        builder = builder.config("spark.python.daemon.module", _daemon.__name__)
     if master.startswith("local-cluster"):
         # executors are separate JVMs here: size them from the master
         # string's per-worker MB (local-cluster[n,cores,mb]) — the JVM
-        # default 1g OOMs the wide-row Arrow stages — and ship the repo
-        # root on the Python workers' path (single-JVM local mode
-        # inherits the driver's sys.path; real executors do not).
+        # default 1g OOMs the wide-row Arrow stages.
         mb = master.rstrip("]").rsplit(",", 1)[-1].strip()
         builder = (
             builder.config("spark.executor.memory", f"{mb}m")
-            .config(
-                "spark.executorEnv.PYTHONPATH",
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-                + os.pathsep
-                + os.environ.get("PYTHONPATH", ""),
-            )
             .config(
                 "spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),

@@ -56,9 +56,16 @@ def _n_groups(n_blobs: int, parallelism: int, blobs_per_task: int | None) -> int
     classic 2×-parallelism over-decomposition here because the
     size-weighted contiguous grouping already equalizes task cost:
     measured on the 130 MB bench input, 32 groups = 95 MB/s vs 64 groups
-    = 63 MB/s (and 118 vs 86 at 531 MB) — the second wave only re-pays
-    per-task fixed costs and tail quantization. Contiguous chunking keeps
-    each task's byte ranges adjacent (coalesced reads)."""
+    = 63 MB/s (and 118 vs 86 at 531 MB). Most of what a second wave
+    re-paid was the Python worker's per-task fixed cost, which the
+    engine's worker daemon (``_daemon``) now removes. Transcode of the
+    75 MB benchmark input (4 × 208 blobs, 4 vCPU, median of 5 alternating
+    runs per session, two sessions per side) at 4 / 8 / 12 groups:
+    stock daemon 1.74–1.78 / 1.94–2.12 / 2.05–2.40 s wall and
+    6.7–6.9 / 7.4–7.9 / 7.9–8.8 process-tree CPU-s; ``_daemon``
+    1.69–1.86 / 1.74–1.90 / 1.83–1.97 s and 6.5–7.0 / 6.8–7.2 / 6.9–7.3
+    CPU-s. One wave is still the fastest, by less. Contiguous chunking
+    keeps each task's byte ranges adjacent (coalesced reads)."""
     if n_blobs == 0:
         return 1
     if blobs_per_task:

@@ -850,9 +850,9 @@ def test_dense_decodes_only_wanted_columns():
 
 
 def test_packed_count_matches_finish():
-    """``PackedBatch.count`` is the number of values ``finish`` returns,
-    for one chunk, many chunks and unpacked varints, and raises like it
-    on a chunk cut mid-varint."""
+    """``PackedBatch.count`` is the per-lane counts ``finish`` returns,
+    for one chunk, many chunks, many lanes and unpacked varints, and
+    raises like it on a chunk cut mid-varint or an over-long varint."""
     from pbf_encoder import _varint
 
     rng = np.random.default_rng(7)
@@ -862,7 +862,15 @@ def test_packed_count_matches_finish():
             vals = rng.integers(0, 1 << rng.integers(1, 63), rng.integers(0, 40))
             pb.add(0, memoryview(b"".join(_varint(int(v)) for v in vals)))
         pb.add_scalar(0, 300)
-        assert pb.count() == pb.finish()[0].size
+        assert pb.count().tolist() == [pb.finish()[0].size]
+    pb = P.PackedBatch(3)
+    pb.add(0, memoryview(b"\x01\x82\x01"))
+    pb.add(2, memoryview(b"\x03"))
+    assert pb.count().tolist() == pb.finish()[1].tolist() == [2, 0, 1]
+    pb = P.PackedBatch(1)
+    pb.add(0, memoryview(_OVERLONG))
+    with pytest.raises(P.ProtoDecodeError, match="varint too long"):
+        pb.count()
     for chunks in ([b"\x02\x81"], [b"\x02\x81", b"\x01"]):
         pb = P.PackedBatch(1)
         for chunk in chunks:
@@ -903,6 +911,63 @@ def test_packed_chunk_must_end_on_a_varint(case):
         group = _len_field(3 if case == "way" else 4, body)
     with pytest.raises(P.ProtoDecodeError, match="packed varint"):
         D.decode_primitive_block(encode_primitive_block([group]))
+
+
+# an 11-byte varint: one continuation byte past the 10 a uint64 needs
+_OVERLONG = b"\x80" * 10 + b"\x01"
+
+
+def _malformed_groups():
+    """name → (PrimitiveGroup, error) for blocks whose fault sits in a
+    packed list that a projection may leave undecoded."""
+    from pbf_encoder import StringTable, _key, _len_field, _packed_svarints, _varint
+
+    def way(*fields):
+        return _len_field(3, _key(1, 0) + _varint(5) + b"".join(fields))
+
+    refs = _packed_svarints(8, [1, 2], delta=True)
+    return {
+        "tags_crossed": _crossed_tags(),
+        "members_short": _short_roles(),
+        "refs_chunk_cut": (way(_chunked(8)), "packed varint"),
+        "refs_overlong": (way(_len_field(8, _OVERLONG)), "varint too long"),
+        "tag_key_overlong": (way(_len_field(2, _OVERLONG), _len_field(3, b"\x01"),
+                                 refs), "varint too long"),
+        "location_overlong": (way(refs, _len_field(9, _OVERLONG)), "varint too long"),
+        "dense_keys_vals_overlong": (
+            _len_field(2, _packed_svarints(1, [1], delta=True)
+                       + _packed_svarints(8, [0], delta=True)
+                       + _packed_svarints(9, [0], delta=True)
+                       + _len_field(10, _OVERLONG)), "varint too long"),
+        "dense_info_version_overlong": (
+            _dense_group(StringTable(), [1, 2], info=_len_field(1, b"\x01" + _OVERLONG)),
+            "varint too long"),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_malformed_groups()))
+def test_malformed_lists_raise_under_every_projection(case):
+    """Validation does not depend on the projection: a block whose fault
+    is in one packed list (an over-long varint, a chunk cut mid-varint,
+    paired lists of different lengths) raises under every ``columns``
+    subset, as it does under the full read. An unwanted list is counted,
+    not decoded. ``id`` is decoded under every projection, and the six
+    metadata columns share one Info decode, so ``version`` and ``user``
+    stand in for them."""
+    from itertools import combinations
+    from pbf_encoder import StringTable, encode_primitive_block
+
+    group, message = _malformed_groups()[case]
+    st = StringTable()
+    for s in ("a", "b", "c", "d"):
+        st.add(s)
+    block = encode_primitive_block([group], st=st)
+    names = ("lat", "lon", "tags", "nds", "members", "locations", "version", "user")
+    subsets = [None] + [list(s) for r in range(len(names) + 1)
+                        for s in combinations(names, r)]
+    for columns in subsets:
+        with pytest.raises(P.ProtoDecodeError, match=message):
+            D.decode_primitive_block(block, columns=columns)
 
 
 def test_way_vertices_keep_the_paired_prefix():
