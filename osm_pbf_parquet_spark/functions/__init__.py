@@ -10,27 +10,11 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-NANO_PER_DEGREE = 1_000_000_000
-
 
 def tag(col: Column | str, key: str) -> Column:
     """``tags['key']`` — null-safe map access."""
     c = F.col(col) if isinstance(col, str) else col
     return F.element_at(c, key)
-
-
-def has_tag(col: Column | str, key: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.map_contains_key(c, key)
-
-
-def degrees_to_nano(deg: Column) -> Column:
-    """Degrees → nanodegrees (the PBF storage unit; osmformat.proto:46-55)."""
-    return F.round(deg * F.lit(NANO_PER_DEGREE)).cast("long")
-
-
-def nano_to_degrees(nano: Column) -> Column:
-    return nano.cast("double") / F.lit(NANO_PER_DEGREE)
 
 
 def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
@@ -43,13 +27,6 @@ def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Colum
         + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.sin(dlon / 2) ** 2
     )
     return F.lit(2 * r) * F.asin(F.sqrt(a))
-
-
-def bbox_contains(lat: Column, lon: Column, south: float, west: float,
-                  north: float, east: float) -> Column:
-    """Bounding-box predicate (pushes down to Parquet row-group stats when
-    output is sorted/clustered spatially)."""
-    return (lat >= south) & (lat <= north) & (lon >= west) & (lon <= east)
 
 
 # --- Z-order spatial clustering ---------------------------------------------------

@@ -30,11 +30,6 @@ def count_by_type(osm: DataFrame) -> DataFrame:
     return osm.groupBy("type").agg(F.count("*").alias("n")).orderBy("type")
 
 
-def count_elements(osm: DataFrame) -> DataFrame:
-    """Global element count (A3 progress-counter semantics, final value)."""
-    return osm.agg(F.count("*").alias("n"))
-
-
 def observe_elements(osm: DataFrame, name: str = "osm_progress"):
     """A3 progress counter, Spark-native: attach an ``observe()`` to the
     plan so ANY downstream action (write, count, collect) reports element

@@ -52,24 +52,6 @@ def dot_expr(a: str, b: str, dim: int | None = None) -> str:
     return f"(cast(0.0 AS DOUBLE) + {terms})"
 
 
-def norm_expr(v: str, dim: int | None = None) -> str:
-    """L2 norm with the same unroll-when-dim-known contract as
-    ``dot_expr`` (identical fold order → identical IEEE result)."""
-    if dim is None:
-        return NORM.format(v=v)
-    terms = " + ".join(f"({v}[{i}] * {v}[{i}])" for i in range(dim))
-    return f"sqrt(cast(0.0 AS DOUBLE) + {terms})"
-
-
-def with_unit_vec(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """L2-normalize once up front — cosine becomes plain dot product."""
-    d = df.withColumn("_vd", F.expr(TO_DOUBLE.format(v=vec_col)))
-    return d.withColumn(
-        "unit_vec",
-        F.expr(f"transform(_vd, x -> x / ({NORM.format(v='_vd')}))"),
-    ).drop("_vd")
-
-
 def cosine_expr(a: str, b: str) -> str:
     """cos(a,b) for already-double vectors: dot / (|a||b|), sequential fold."""
     return (

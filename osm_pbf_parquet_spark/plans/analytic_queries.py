@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .relational import t
+from .relational import read_parquet, t
 
 
 # --- argmin per group (TPC-H Q2 shape: min-cost supplier per part) -----------
@@ -487,11 +487,12 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     attached. The stream schema must match the file's physical ts
     encoding, so probe it via the batch reader (same dtype branch as
     ``plans.relational.t``) instead of assuming nanos-as-long — the
-    testdata writes timestamp[us]."""
+    testdata writes timestamp[us]. The probe's schema comes from
+    ``read_parquet``'s memo, which ``t`` has filled."""
     from pyspark.sql import types as T
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    probe = spark.read.parquet(f"{sf_dir}/events.parquet")
+    probe = read_parquet(spark, f"{sf_dir}/events.parquet")
     ts_is_long = dict(probe.dtypes).get("ts") in ("bigint", "long")
     ts_type = T.LongType() if ts_is_long else T.TimestampNTZType()
     schema = T.StructType(

@@ -24,12 +24,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .relational import read_parquet
+
 
 def _doc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents table, schema probed from
     the batch reader (same convention as analytic_queries._event_stream:
-    the stream schema must match the file's physical encoding)."""
-    probe = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    the stream schema must match the file's physical encoding), through
+    ``read_parquet``'s memo."""
+    probe = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return (
         spark.readStream.schema(probe.schema)
         .option("pathGlobFilter", "documents.parquet")
