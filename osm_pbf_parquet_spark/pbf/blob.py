@@ -20,7 +20,13 @@ from dataclasses import dataclass
 from typing import BinaryIO, Iterator
 
 from .io import open_binary
-from .proto import iter_fields, message_fields
+from .proto import (
+    ProtoDecodeError,
+    iter_fields,
+    length_delimited,
+    message_fields,
+    varint_field,
+)
 
 # Spec limits, enforced identically to the reference
 # (``osmpbf/src/blob.rs:22,25``).
@@ -115,10 +121,12 @@ def _read_blob_header(f: BinaryIO) -> tuple[str, int, int] | None:
         raise BlobError(f"blob header too big: {header_size} at offset {start}")
     fields = message_fields(_read_exact(f, header_size))
     try:
-        blob_type = bytes(fields[1][0]).decode("utf-8")
-        datasize = fields[3][0]
-    except (KeyError, IndexError) as exc:  # required fields missing
+        blob_type = bytes(length_delimited(fields, 1)[0]).decode("utf-8")
+        datasize = varint_field(fields, 3)
+    except (IndexError, ProtoDecodeError) as exc:  # missing or mistyped
         raise BlobError(f"invalid BlobHeader at offset {start}") from exc
+    if datasize is None:  # required
+        raise BlobError(f"invalid BlobHeader at offset {start}")
     if datasize >= MAX_BLOB_SIZE:
         raise BlobError(f"blob too big: {datasize} at offset {start}")
     return blob_type, datasize, f.tell()

@@ -60,11 +60,13 @@ from .proto import (
     extract_ranges,
     finish_packed,
     iter_fields,
+    length_delimited,
     message_fields,
     read_varint,
     scan_message_batch,
     scan_message_ranges,
     scan_wire2_fields,
+    varint_field,
     zigzag_decode,
     zigzag_i64,
 )
@@ -95,36 +97,33 @@ def parse_header_block(payload: bytes) -> dict:
     """HeaderBlock → plain dict (bbox in degrees ×1e-9, features,
     replication metadata). Reference: ``osmpbf/src/block.rs:9-100``."""
     fields = message_fields(payload)
+
+    def strings(fno: int) -> list[str]:
+        return [bytes(v).decode("utf-8") for v in length_delimited(fields, fno)]
+
+    def string(fno: int) -> str | None:
+        return (strings(fno) or [None])[0]
+
     out: dict = {
         "bbox": None,
-        "required_features": [bytes(v).decode("utf-8") for v in fields.get(4, [])],
-        "optional_features": [bytes(v).decode("utf-8") for v in fields.get(5, [])],
-        "writingprogram": None,
-        "source": None,
-        "osmosis_replication_timestamp": None,
-        "osmosis_replication_sequence_number": None,
-        "osmosis_replication_base_url": None,
+        "required_features": strings(4),
+        "optional_features": strings(5),
+        "writingprogram": string(16),
+        "source": string(17),
+        "osmosis_replication_timestamp": varint_field(fields, 32),
+        "osmosis_replication_sequence_number": varint_field(fields, 33),
+        "osmosis_replication_base_url": string(34),
     }
-    if 1 in fields:
-        bb = message_fields(fields[1][0])
+    bbox = (length_delimited(fields, 1) or [None])[0]
+    if bbox is not None:
+        bb = message_fields(bbox)
         # HeaderBBox is sint64 nanodegrees NOT obeying granularity
-        # (osmformat.proto:88-97).
-        out["bbox"] = {
-            "left": zigzag_i64(bb[1][0]) * NANO,
-            "right": zigzag_i64(bb[2][0]) * NANO,
-            "top": zigzag_i64(bb[3][0]) * NANO,
-            "bottom": zigzag_i64(bb[4][0]) * NANO,
-        }
-    if 16 in fields:
-        out["writingprogram"] = bytes(fields[16][0]).decode("utf-8")
-    if 17 in fields:
-        out["source"] = bytes(fields[17][0]).decode("utf-8")
-    if 32 in fields:
-        out["osmosis_replication_timestamp"] = fields[32][0]
-    if 33 in fields:
-        out["osmosis_replication_sequence_number"] = fields[33][0]
-    if 34 in fields:
-        out["osmosis_replication_base_url"] = bytes(fields[34][0]).decode("utf-8")
+        # (osmformat.proto:88-97); all four sides are required.
+        sides = {side: varint_field(bb, fno)
+                 for fno, side in enumerate(("left", "right", "top", "bottom"), 1)}
+        if None in sides.values():
+            raise ProtoDecodeError("HeaderBBox without a required side")
+        out["bbox"] = {side: zigzag_i64(v) * NANO for side, v in sides.items()}
     return out
 
 
@@ -149,7 +148,7 @@ class _StringTable:
             try:
                 while pos < n:
                     if view[pos] != 0x0A:
-                        raw = message_fields(payload).get(1, [])
+                        raw = length_delimited(message_fields(payload), 1)
                         self._pa = _utf8(pa.array(
                             (bytes(v) for v in raw), type=pa.binary()
                         ))
@@ -274,9 +273,9 @@ class _Columns:
         block's table, then keep the table as an Arrow array -- or an
         empty one when no row refers to it -- and drop the block's
         ``_StringTable``, so a sealed block no longer holds its blob's
-        decompressed payload. The checks live here, per block, because
-        after blocks are concatenated an index that overruns its own table
-        could silently read the next block's.
+        decompressed payload. The checks run while the blob is decoded, so
+        a bad index fails as a decode error of that blob, not as an Arrow
+        ``take`` error when its row group is assembled.
 
         Sealed, every accumulator is absent (``[]``, its default) or one
         array in its output dtype (``_ROWS``, ``_FLAT``): a per-row one
@@ -369,7 +368,7 @@ def decode_primitive_block(
 
     fields = message_fields(payload)
     geo = block_geometry(fields)
-    st = _StringTable(fields.get(1, [None])[0])
+    st = _StringTable((length_delimited(fields, 1) or [None])[0])
 
     out: dict[str, _Columns] = {}
 
@@ -404,15 +403,15 @@ def block_geometry(fields: dict) -> BlockGeometry:
     granularity/date_granularity are int32, offsets int64 — negative
     values are legal and arrive as unsigned varint bit patterns."""
     return BlockGeometry(
-        _int32(fields.get(17, [100])[0]) or 100,
-        _i64(fields.get(19, [0])[0]),
-        _i64(fields.get(20, [0])[0]),
-        _int32(fields.get(18, [1000])[0]) or 1000,
+        _int32(varint_field(fields, 17, 100)) or 100,
+        _i64(varint_field(fields, 19, 0)),
+        _i64(varint_field(fields, 20, 0)),
+        _int32(varint_field(fields, 18, 1000)) or 1000,
     )
 
 
 def _decode_groups(fields, kinds, cols_for, geo: BlockGeometry, _want) -> None:
-    for group_payload in fields.get(2, []):
+    for group_payload in length_delimited(fields, 2):
         # every PrimitiveGroup entry is a wire-2 submessage: one range scan
         # hands the element decoders zero-copy spans (no per-entry
         # memoryview, no re-join)
@@ -636,9 +635,9 @@ def _last(scalars, fno: int, n0: int):
 # Every per-row ``_Columns`` accumulator → (sealed dtype, default). A row
 # no chunk covers reads as the default; None is null (the accumulator is
 # nullable and gets a validity mask where it has to). Defined once: the
-# decoders never write a default, ``seal`` fills one only inside a block
-# that has the accumulator for some of its rows, and ``_kind_batch`` only
-# for the blocks of a row group that lack it.
+# decoders never write a default, and ``seal`` fills one only inside a
+# block that has the accumulator for some of its rows; a block without it
+# assembles as nulls or empty lists.
 _ROWS = {
     "ids": (np.int64, 0),  # every row has one
     "lat": (np.float64, None),  # degrees
@@ -747,7 +746,7 @@ def _decode_dense_nodes(payload, c: _Columns, granularity, lat_offset, lon_offse
             keys_vals.count()  # its varints are checked under every projection
 
     # DenseInfo (osmformat.proto:159-175): parallel arrays, some delta-coded
-    info = f.get(5, [None])[0]
+    info = (length_delimited(f, 5) or [None])[0]
     if info is None:
         return  # every metadata column null
     fi = message_fields(info)
@@ -772,8 +771,10 @@ def _dense_field(values) -> PackedBatch:
     for v in values:
         if isinstance(v, int):
             batch.add_scalar(0, v)
-        else:
+        elif isinstance(v, memoryview):
             batch.add(0, v)
+        else:
+            raise ProtoDecodeError("dense array field is neither packed nor a varint")
     return batch
 
 
@@ -844,7 +845,7 @@ def columns_to_arrow(
         c = per_kind.get(kind)
         if c is None or c.n == 0:
             continue
-        batches.append(_kind_batch(kind, [c], schema))
+        batches.append(_kind_batch(kind, c, schema))
     if not batches:
         return None
     if len(batches) == 1:
@@ -855,140 +856,103 @@ def columns_to_arrow(
 
 def kind_table(kind: str, blocks: list[_Columns]) -> pa.Table:
     """Assemble one kind's accumulators from any number of blocks (each a
-    ``decode_primitive_block`` value for ``kind``) into ONE single-chunk
-    table in the full wide schema without ``type``: the rows of
-    ``columns_to_arrow`` over each block in turn, filtered to ``kind``."""
+    ``decode_primitive_block`` value for ``kind``) into one table in the
+    full wide schema without ``type``, one chunk per block: the rows of
+    ``columns_to_arrow`` over each block in turn, filtered to ``kind``.
+    Nothing is concatenated: the numeric columns are views of the sealed
+    blocks' arrays, so a row group is held once."""
     from ..schema import osm_arrow_schema
 
     schema = osm_arrow_schema()
     schema = schema.remove(schema.get_field_index("type"))
-    return pa.Table.from_batches([_kind_batch(kind, blocks, schema)])
+    return pa.Table.from_batches([_kind_batch(kind, c, schema) for c in blocks],
+                                 schema=schema)
 
 
-def _kind_batch(kind: str, blocks: list[_Columns],
-                schema: pa.Schema) -> pa.RecordBatch:
-    """The one assembly path: ``blocks`` of one kind → a RecordBatch in
-    ``schema``. Each block's string tables are concatenated and its
-    string indices shifted by the table's offset in the concatenation
-    (bounds were checked per block by ``seal``). A block without an
-    accumulator gets its default only while that column is built."""
-    for c in blocks:
-        c.seal()
-    n = sum(c.n for c in blocks)
-    strings = bases = None
-    if {"tags", "members", "user"} & set(schema.names):
-        strings, bases = _joined_strings(blocks)
+def _kind_batch(kind: str, c: _Columns, schema: pa.Schema) -> pa.RecordBatch:
+    """The one assembly path: one block's accumulators of ``kind`` → a
+    RecordBatch in ``schema``. String columns take from the block's own
+    table (``seal`` checked every index against it); an accumulator the
+    block lacks reads as its default."""
+    c.seal()
+    n = c.n
     arrays = []
     for field in schema:
         name = field.name
         if name == "id":
-            arrays.append(pa.array(_rows(blocks, "ids"), type=pa.int64()))
+            arrays.append(pa.array(_concat(c.ids, np.int64), type=pa.int64()))
         elif name == "type":
             arrays.append(pa.DictionaryArray.from_arrays(
                 pa.array(np.zeros(n, dtype=np.int32)), pa.array([kind])
             ).cast(pa.string()))
         elif name == "tags":
-            arrays.append(_tags_array(blocks, strings, bases, n))
+            arrays.append(_tags_array(c, n))
         elif name == "nds":
-            arrays.append(_nds_array(blocks, n, field.type))
+            arrays.append(_nds_array(c, n, field.type))
         elif name == "members":
-            arrays.append(_members_array(blocks, strings, bases, n, field.type))
+            arrays.append(_members_array(c, n, field.type))
         elif name == "user":
-            arrays.append(_user_array(blocks, strings, bases, n))
+            arrays.append(_user_array(c, n))
         elif name == "timestamp":
-            ts = _nullable(blocks, "ts_ms", n, pa.timestamp("ms"))
+            ts = _nullable(c, "ts_ms", n, pa.timestamp("ms"))
             arrays.append(ts.cast(field.type))
         elif name in ("lat", "lon", "changeset", "uid", "version", "visible"):
-            arrays.append(_nullable(blocks, name, n, field.type))
+            arrays.append(_nullable(c, name, n, field.type))
         else:  # pragma: no cover
             raise ValueError(f"unknown column {name}")
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
-def _rows(blocks: list[_Columns], attr: str) -> np.ndarray | None:
-    """Per-row accumulator ``attr`` of every sealed block, concatenated,
-    a block without it giving its default; None when no block has it."""
-    if not any(getattr(c, attr) for c in blocks):
-        return None
-    dtype, default = _ROWS[attr]
-    return _concat([getattr(c, attr)[0] if getattr(c, attr)
-                    else np.full(c.n, default or 0, dtype=dtype)
-                    for c in blocks], dtype)
+def _flat(c: _Columns, attr: str) -> np.ndarray:
+    """Flat accumulator ``attr`` of a sealed block."""
+    return _concat(getattr(c, attr), _FLAT[attr])
 
 
-def _flat(blocks: list[_Columns], attr: str) -> np.ndarray:
-    """One flat accumulator (``attr``) of every sealed block, concatenated."""
-    return _concat([a for c in blocks for a in getattr(c, attr)], _FLAT[attr])
-
-
-def _nullable(blocks: list[_Columns], attr: str, n: int, pa_type) -> pa.Array:
-    """A nullable per-row accumulator as an Arrow array: null where a
-    block lacks it or its mask says so; no validity mask when every row
-    is valid."""
-    vals = _rows(blocks, attr)
-    if vals is None:
+def _nullable(c: _Columns, attr: str, n: int, pa_type) -> pa.Array:
+    """A nullable per-row accumulator as an Arrow array: all null when the
+    block lacks it, else null where its mask says so (no validity mask
+    when every row is valid)."""
+    if not getattr(c, attr):
         return pa.nulls(n, pa_type)
-    mask = None
-    if any(getattr(c, attr + "_valid") or not getattr(c, attr) for c in blocks):
-        mask = ~_concat([getattr(c, attr + "_valid")[0]
-                         if getattr(c, attr + "_valid")
-                         else np.full(c.n, bool(getattr(c, attr)))
-                         for c in blocks], np.bool_)
-    return pa.array(vals, type=pa_type, mask=mask)
+    valid = getattr(c, attr + "_valid")
+    return pa.array(getattr(c, attr)[0], type=pa_type,
+                    mask=~valid[0] if valid else None)
 
 
-def _joined_strings(blocks: list[_Columns]) -> tuple[pa.Array, list[int]]:
-    """→ (every block's string table concatenated, then one ``""`` for the
-    empty-user sentinel; each block's offset into it)."""
-    bases, total = [], 0
-    for c in blocks:
-        bases.append(total)
-        total += len(c.strings)
-    tables = [c.strings for c in blocks if len(c.strings)]
-    return pa.concat_arrays(tables + [pa.array([""], type=pa.string())]), bases
+def _string_refs(c: _Columns, attr: str) -> pa.Array:
+    """A block's int32 string indices (``attr``) into its table."""
+    return pa.array(_flat(c, attr), type=pa.int32())
 
 
-def _string_refs(blocks: list[_Columns], attr: str, bases: list[int]) -> pa.Array:
-    """Per-block int32 string indices (``attr``) shifted into the joined
-    table."""
-    parts = [idx + base if base else idx
-             for c, base in zip(blocks, bases)
-             for idx in getattr(c, attr)]  # one chunk at most once sealed
-    return pa.array(_concat(parts, np.int32), type=pa.int32())
-
-
-def _offsets(blocks: list[_Columns], attr: str, n: int) -> pa.Array:
+def _offsets(c: _Columns, attr: str, n: int) -> pa.Array:
     """Per-row counts (``attr``) → list offsets."""
     offsets = np.zeros(n + 1, dtype=np.int32)
-    counts = _rows(blocks, attr)
-    if counts is not None:
-        np.cumsum(counts, dtype=np.int32, out=offsets[1:])
+    if getattr(c, attr):
+        np.cumsum(getattr(c, attr)[0], dtype=np.int32, out=offsets[1:])
     return pa.array(offsets, type=pa.int32())
 
 
-def _tags_array(blocks: list[_Columns], strings: pa.Array, bases: list[int],
-                n: int) -> pa.Array:
-    offsets = _offsets(blocks, "tag_counts", n)
-    keys = strings.take(_string_refs(blocks, "tag_keys", bases))
-    vals = strings.take(_string_refs(blocks, "tag_vals", bases))
+def _tags_array(c: _Columns, n: int) -> pa.Array:
+    offsets = _offsets(c, "tag_counts", n)
+    keys = c.strings.take(_string_refs(c, "tag_keys"))
+    vals = c.strings.take(_string_refs(c, "tag_vals"))
     return pa.MapArray.from_arrays(offsets, keys, vals)
 
 
-def _nds_array(blocks: list[_Columns], n: int, list_type) -> pa.Array:
-    offsets = _offsets(blocks, "nd_counts", n)
-    refs = _flat(blocks, "nd_refs")
+def _nds_array(c: _Columns, n: int, list_type) -> pa.Array:
+    offsets = _offsets(c, "nd_counts", n)
+    refs = _flat(c, "nd_refs")
     struct = pa.StructArray.from_arrays([pa.array(refs, type=pa.int64())], ["ref"])
     arr = pa.ListArray.from_arrays(offsets, struct)
     return arr.cast(list_type)
 
 
-def _members_array(blocks: list[_Columns], strings: pa.Array, bases: list[int],
-                   n: int, list_type) -> pa.Array:
-    offsets = _offsets(blocks, "mem_counts", n)
-    refs = _flat(blocks, "mem_refs")
+def _members_array(c: _Columns, n: int, list_type) -> pa.Array:
+    offsets = _offsets(c, "mem_counts", n)
+    refs = _flat(c, "mem_refs")
     type_dict = pa.array(list(_MEMBER_TYPES), type=pa.string())
-    types = type_dict.take(pa.array(_flat(blocks, "mem_types"), type=pa.int8()))
-    roles = strings.take(_string_refs(blocks, "mem_roles", bases))
+    types = type_dict.take(pa.array(_flat(c, "mem_types"), type=pa.int8()))
+    roles = c.strings.take(_string_refs(c, "mem_roles"))
     struct = pa.StructArray.from_arrays(
         [types, pa.array(refs, type=pa.int64()), roles], ["type", "ref", "role"]
     )
@@ -996,27 +960,15 @@ def _members_array(blocks: list[_Columns], strings: pa.Array, bases: list[int],
     return arr.cast(list_type)
 
 
-def _user_array(blocks: list[_Columns], strings: pa.Array, bases: list[int],
-                n: int) -> pa.Array:
-    sids = _rows(blocks, "user_sid")
-    if sids is None:
+def _user_array(c: _Columns, n: int) -> pa.Array:
+    if not c.user_sid:
         return pa.nulls(n, pa.string())
+    sids = c.user_sid[0]
     # -1 → null; -2 → "" (missing user on an element that HAS metadata),
-    # the last entry of the joined table; others shift by the block base
-    shift = np.repeat(np.asarray(bases, dtype=np.int32),
-                      [c.n for c in blocks])
-    idx = np.where(sids >= 0, sids + shift,
-                   np.where(sids == -2, np.int32(len(strings) - 1), np.int32(0)))
+    # one entry past the block's table
+    strings = pa.concat_arrays([c.strings, pa.array([""], type=pa.string())])
+    idx = np.where(sids >= 0, sids,
+                   np.where(sids == -2, np.int32(len(c.strings)), np.int32(0)))
     null_mask = sids == -1
     return strings.take(pa.array(idx, type=pa.int32(),
                                  mask=null_mask if null_mask.any() else None))
-
-
-def parse_block_to_batch(
-    payload: bytes,
-    kinds: Iterable[str] = ALL_KINDS,
-    columns: list[str] | None = None,
-) -> pa.RecordBatch | None:
-    """One-shot: PrimitiveBlock payload → RecordBatch (or None if empty)."""
-    per_kind = decode_primitive_block(payload, kinds=kinds, columns=columns)
-    return columns_to_arrow(per_kind, columns=columns)

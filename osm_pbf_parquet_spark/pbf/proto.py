@@ -85,6 +85,9 @@ def iter_fields(buf):
 
 def message_fields(buf) -> dict[int, list]:
     """Scan a message into ``{field_no: [values...]}`` preserving order.
+    A value's type is its wire type: an int (wire 0), a memoryview (wire
+    2) or bytes (wire 1/5); read fields through ``length_delimited`` and
+    ``varint_field``, which check it.
 
     Tight non-generator loop with inline 1-2 byte varint fast paths
     (generator/yield overhead per field was a measured hot spot)."""
@@ -128,12 +131,12 @@ def message_fields(buf) -> dict[int, list]:
             elif wire == 1:
                 if pos + 8 > n:
                     raise ProtoDecodeError("truncated fixed64 field")
-                val = view[pos : pos + 8]
+                val = bytes(view[pos : pos + 8])
                 pos += 8
             elif wire == 5:
                 if pos + 4 > n:
                     raise ProtoDecodeError("truncated fixed32 field")
-                val = view[pos : pos + 4]
+                val = bytes(view[pos : pos + 4])
                 pos += 4
             else:
                 raise ProtoDecodeError(f"unsupported wire type {wire}")
@@ -145,6 +148,28 @@ def message_fields(buf) -> dict[int, list]:
     except IndexError as exc:  # any stray fast-path overrun
         raise ProtoDecodeError("truncated message") from exc
     return out
+
+
+def length_delimited(fields: dict[int, list], field_no: int) -> list:
+    """Every value of field ``field_no`` of a ``message_fields`` dict,
+    each checked to be length-delimited (a submessage, a string or a
+    packed run); ``[]`` when the field is absent."""
+    values = fields.get(field_no, [])
+    if not all(isinstance(v, memoryview) for v in values):
+        raise ProtoDecodeError(f"field {field_no} is not length-delimited")
+    return values
+
+
+def varint_field(fields: dict[int, list], field_no: int, default=None):
+    """The first value of varint field ``field_no`` of a ``message_fields``
+    dict (every occurrence checked to be a varint), or ``default`` when
+    the field is absent."""
+    values = fields.get(field_no)
+    if values is None:
+        return default
+    if not all(isinstance(v, int) for v in values):
+        raise ProtoDecodeError(f"field {field_no} is not a varint")
+    return values[0]
 
 
 # --- packed repeated decoding (the hot path) --------------------------------

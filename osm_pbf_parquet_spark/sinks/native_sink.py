@@ -25,15 +25,17 @@ One flush rule, like the reference's per-kind builders (``pbf.rs:183-220``,
 ``sink.rs:69-117``): ``_KindWriter`` is the only code that buffers and
 flushes. Each task feeds ``(kind, part, rows)`` to ``_write_kind_parts``;
 a kind's writer buffers the parts and, whenever it holds
-``rows_per_group`` rows, builds ONE table with its route's ``build`` and
-writes it as a row group; the remainders follow at task end. The fused
-transcode's parts are each blob's decoded blocks and ``build`` is
-``decode.kind_table`` (``write_decoded_blocks``): no wide per-blob batch
-is built, split back by ``type`` or concatenated. The ``osmparquet``
-DataSource writer, whose input is a wide DataFrame, feeds the per-kind
-slices of each batch and concatenates them (``write_kind_tables``). Both
-routes flush at the same rows, so row groups, file rolls and bytes come
-out identical.
+``rows_per_group`` rows, builds a table with its route's ``build``, one
+chunk per part, and writes it as a row group; the remainders follow at
+task end. Parts are never concatenated, so a row group is held once, in
+its parts' own buffers (the reference's builders likewise become the
+batch its sink writes). The fused transcode's parts are each blob's
+decoded blocks and ``build`` is ``decode.kind_table``
+(``write_decoded_blocks``): no wide per-blob batch is built or split back
+by ``type``. The ``osmparquet`` DataSource writer, whose input is a wide
+DataFrame, feeds the per-kind slices of each batch (``write_kind_tables``).
+Both routes flush at the same rows with the same per-blob chunks, so row
+groups, file rolls and bytes come out identical.
 
 Output contract parity (same as the generic sink):
 - layout ``{out}/type={kind}/part-*.parquet``   (``sink.rs:155-179``, W1)
@@ -148,8 +150,9 @@ class _KindWriter:
     def _flush_group(self) -> None:
         if not self.pending_rows:
             return
-        # hand the parts over, so they are freed before the group is
-        # written rather than held through the write
+        # hand the parts over: the table's chunks share their arrays, and
+        # what it does not share (string indices, counts, masks) is freed
+        # before the group is written rather than held through the write
         parts, self.pending, self.pending_rows = self.pending, [], 0
         table = self.build(self.kind, parts)
         del parts
@@ -233,7 +236,7 @@ def _write_kind_parts(parts: Iterable[tuple[str, object, int]],
 
 
 def _concat_parts(_kind: str, parts: list[pa.Table]) -> pa.Table:
-    return pa.concat_tables(parts).combine_chunks()
+    return pa.concat_tables(parts)
 
 
 def write_kind_tables(tables: Iterator, out_path: str, prefix: str,
@@ -241,7 +244,7 @@ def write_kind_tables(tables: Iterator, out_path: str, prefix: str,
                       rows_per_group: int, sort_by_id: bool) -> list[tuple]:
     """Write wide tables (all kinds, ``type`` as a column) -- the
     ``osmparquet`` DataSource writer's input: split each by ``type`` and
-    write the per-kind slices, concatenated per row group."""
+    write the per-kind slices, each one chunk of its row group."""
 
     def parts():
         for table in tables:

@@ -1,9 +1,9 @@
 """Multi-block Arrow assembly: the fused transcode builds one table per row
-group per kind from many blocks' accumulators (``decode.kind_table``,
-written by ``native_sink.write_decoded_blocks``). Its rows must equal the
-per-blob wide batches of ``columns_to_arrow``, split by ``type``,
-concatenated, and its files must equal the split route's
-(``write_kind_tables``) byte for byte."""
+group per kind from many blocks' accumulators, one chunk per block and no
+concatenated copy (``decode.kind_table``, written by
+``native_sink.write_decoded_blocks``). Its rows must equal the per-blob
+wide batches of ``columns_to_arrow``, split by ``type``, and its files
+must equal the split route's (``write_kind_tables``) byte for byte."""
 
 from __future__ import annotations
 
@@ -272,8 +272,8 @@ def test_fused_tables_kind_subset(blocks_pbf, tmp_path):
 
 def test_tag_index_past_its_own_block_raises():
     """Block 2's tag key index 5 is out of range for its own 4-entry
-    table but would land inside the concatenated table (8 + 4 entries):
-    the per-block check must still reject it."""
+    table but inside block 1's 8-entry one: the per-block check rejects
+    it."""
     st_a = StringTable()
     for s in ("a", "b", "c", "d", "e", "f", "g"):
         st_a.add(s)
@@ -293,7 +293,7 @@ def test_tag_index_past_its_own_block_raises():
     with pytest.raises(ProtoDecodeError, match="out of bounds"):
         D.kind_table("way", blocks)
     with pytest.raises(ProtoDecodeError):
-        D.parse_block_to_batch(bad)
+        D.columns_to_arrow(D.decode_primitive_block(bad))
 
 
 def test_user_sid_past_its_table_raises():
@@ -304,7 +304,8 @@ def test_user_sid_past_its_table_raises():
     body = encode_way(st, {"id": 9, "refs": [1], "version": 1, "user": "u"})
     short = StringTable()  # index 0 only, so user index 1 == len(table)
     with pytest.raises(ProtoDecodeError, match="user_sid"):
-        D.parse_block_to_batch(encode_primitive_block([body], st=short))
+        D.columns_to_arrow(D.decode_primitive_block(
+            encode_primitive_block([body], st=short)))
 
 
 def _mixed_blocks() -> list[bytes]:
@@ -406,6 +407,29 @@ def test_sealed_bytes_per_row_stay_bounded(tmp_path):
         and per_row["relation"] <= 75, per_row
 
 
+def test_row_group_holds_no_second_copy(tmp_path):
+    """A memory guard that counts instead of timing: a row group is one
+    chunk per block, and its numeric columns are the sealed blocks' own
+    arrays, not a concatenated copy held beside them."""
+    from pbf_encoder import write_synthetic_pbf_fast
+
+    path = str(tmp_path / "planet.osm.pbf")
+    write_synthetic_pbf_fast(path, n_nodes=24_000, n_ways=0, n_rels=0,
+                             seed=1000)
+    entries = [(path, i.offset, i.size)
+               for i in index_blobs(path) if i.blob_type == TYPE_DATA]
+    blocks = [per_kind["node"]
+              for per_kind in decode_blob_entries(entries, ["node"], None)]
+    assert len(blocks) > 1
+    table = D.kind_table("node", blocks)
+    assert table.num_rows == 24_000
+    for name, attr in (("id", "ids"), ("lat", "lat")):
+        column = table.column(name)
+        assert column.num_chunks == len(blocks)
+        for chunk, cols in zip(column.chunks, blocks):
+            assert chunk.buffers()[1].address == getattr(cols, attr)[0].ctypes.data
+
+
 def test_sealed_block_drops_the_payload():
     cols = D.decode_primitive_block(BLOCKS[0])["node"]
     assert cols._stringtable is not None
@@ -449,7 +473,7 @@ def test_decode_errors_name_file_and_blob_offset(tmp_path):
 
 def test_blocks_concat_indices_shift_per_block():
     """Same strings at different indices in two blocks read back as the
-    same strings after the shift into the joined table."""
+    same strings: each block's chunk takes from its own table."""
     a = D.decode_primitive_block(BLOCKS[2])["way"]
     b = D.decode_primitive_block(BLOCKS[4])["way"]
     t = D.kind_table("way", [a, b])

@@ -115,7 +115,8 @@ def _decode_file(path, **kw):
         if info.blob_type == B.TYPE_HEADER:
             header = D.parse_header_block(payload)
         else:
-            batch = D.parse_block_to_batch(payload, **kw)
+            batch = D.columns_to_arrow(D.decode_primitive_block(payload, **kw),
+                                       columns=kw.get("columns"))
             if batch is not None:
                 batches.append(batch)
     import pyarrow as pa
@@ -617,7 +618,7 @@ def test_scalar_field_sent_twice_keeps_last(group_field):
         twice.append((8, 6))
     fno, body = _element(group_field, *twice)
     block = encode_primitive_block([_len_field(fno, body)], st=StringTable())
-    row = D.parse_block_to_batch(block).to_pylist()[0]
+    row = D.columns_to_arrow(D.decode_primitive_block(block)).to_pylist()[0]
     if group_field == 1:  # zigzag: 12 → 6, 6 → 3
         assert (row["id"], row["lat"], row["lon"]) == (6, pytest.approx(3e-7),
                                                         pytest.approx(2e-7))
@@ -653,7 +654,7 @@ def test_negative_lat_lon_offset_decodes_signed():
     neg = (1 << 64) - 1_000_000_000  # -1e9 as unsigned varint bits
     body += _key(19, 0) + _varint(neg)
     body += _key(20, 0) + _varint(neg)
-    batch = D.parse_block_to_batch(bytes(body))
+    batch = D.columns_to_arrow(D.decode_primitive_block(bytes(body)))
     row = batch.to_pylist()[0]
     assert row["lat"] == pytest.approx(1.0, abs=1e-9)
     assert row["lon"] == pytest.approx(1.0, abs=1e-9)
@@ -708,7 +709,7 @@ def test_dense_info_length_mismatch_errors():
     dense += _packed_svarints(9, [0, 0, 0], delta=True)
     block = _len_field(1, st.encode()) + _len_field(2, _len_field(2, bytes(dense)))
     with pytest.raises(P.ProtoDecodeError):
-        D.parse_block_to_batch(bytes(block))
+        D.columns_to_arrow(D.decode_primitive_block(bytes(block)))
 
 
 def _read_kind(tmp_path, kind, group, st):
@@ -844,7 +845,7 @@ def test_dense_decodes_only_wanted_columns():
     assert not any(getattr(only_id, attr) for attr in D._ROWS if attr != "ids")
     user = D.decode_primitive_block(block, columns=["id", "user"])["node"]
     assert [a for a in D._ROWS if getattr(user, a)] == ["ids", "user_sid"]
-    rows = D.parse_block_to_batch(block).to_pylist()
+    rows = D.columns_to_arrow(D.decode_primitive_block(block)).to_pylist()
     assert [(r["version"], r["user"], r["visible"]) for r in rows] == [
         (1, "u", True), (2, "u", False), (3, "u", True)]
 
@@ -1028,12 +1029,95 @@ def test_truncated_messages_raise_decode_error():
         P.message_fields(b"\x09\x01")  # fixed64 with 1 byte left
 
 
+def _wire_mismatch_blocks() -> dict[str, bytes]:
+    """PrimitiveBlocks with a field sent in the wrong wire type."""
+    from pbf_encoder import _key, _len_field, _varint
+
+    return {
+        # a string table, then a PrimitiveGroup (field 2) as a varint
+        "group as varint": _len_field(1, _len_field(1, b"")) + _key(2, 0) + _varint(5),
+        # the string table (field 1) itself as a varint
+        "stringtable as varint": _key(1, 0) + _varint(5),
+        # granularity (field 17) as a length-delimited field
+        "granularity as bytes": (_len_field(1, _len_field(1, b""))
+                                 + _len_field(17, b"\x64")),
+        # a string table entry as a fixed32, through the generic split
+        "string as fixed32": _len_field(1, _key(1, 5) + b"\x00" * 4),
+        # DenseNodes ids (field 1) as a fixed64
+        "dense ids as fixed64": _len_field(1, _len_field(1, b"")) + _len_field(
+            2, _len_field(2, _key(1, 1) + b"\x00" * 8)),
+        # DenseInfo (DenseNodes field 5) as a varint
+        "denseinfo as varint": _len_field(1, _len_field(1, b"")) + _len_field(
+            2, _len_field(2, _len_field(1, b"\x02") + _len_field(8, b"\x00")
+                          + _len_field(9, b"\x00") + _key(5, 0) + _varint(1))),
+    }
+
+
+@pytest.mark.parametrize("case", list(_wire_mismatch_blocks()))
+def test_wire_type_mismatch_raises_decode_error(case):
+    """A PrimitiveBlock field in the wrong wire type is a ProtoDecodeError,
+    never a bare TypeError from using a varint as bytes or bytes as a
+    varint."""
+    block = _wire_mismatch_blocks()[case]
+    with pytest.raises(P.ProtoDecodeError, match="not|neither"):
+        D.decode_primitive_block(block)
+
+
+def test_header_wire_type_mismatch_raises_decode_error():
+    from pbf_encoder import _key, _len_field, _varint
+
+    for header in (_key(16, 0) + _varint(3),  # writingprogram as a varint
+                   _len_field(32, b"x"),  # replication timestamp as bytes
+                   _len_field(1, _len_field(1, b"x"))):  # bbox side as bytes
+        with pytest.raises(P.ProtoDecodeError):
+            D.parse_header_block(header)
+
+
+def test_blob_header_wire_type_mismatch_is_a_blob_error(tmp_path):
+    """A BlobHeader whose type or datasize has the wrong wire type, or
+    lacks datasize, is an invalid header, not a bare TypeError."""
+    import struct
+
+    from pbf_encoder import _key, _len_field, _varint
+
+    for header in (_len_field(1, b"OSMData") + _len_field(3, b"\x05"),
+                   _key(1, 0) + _varint(1) + _key(3, 0) + _varint(5),
+                   _len_field(1, b"OSMData")):
+        path = tmp_path / "header.osm.pbf"
+        path.write_bytes(struct.pack(">I", len(header)) + header + b"\x00" * 5)
+        with pytest.raises(B.BlobError, match="invalid BlobHeader at offset 0"):
+            B.index_blobs(str(path))
+
+
+def test_wire_type_mismatch_in_a_file_names_the_blob(tmp_path):
+    """Read from a file, the first repro fails as BlobDecodeError naming
+    the path and the blob's offset, with the ProtoDecodeError as cause."""
+    from pbf_encoder import write_blob
+    from osm_pbf_parquet_spark.sources.pbf_source import (
+        BlobDecodeError, decode_blob_entries,
+    )
+
+    path = str(tmp_path / "wire.osm.pbf")
+    with open(path, "wb") as f:
+        write_blob(f, "OSMData", _wire_mismatch_blocks()["group as varint"])
+    [info] = B.index_blobs(path)
+    with pytest.raises(BlobDecodeError) as ei:
+        list(decode_blob_entries([(path, info.offset, info.size)],
+                                 ["node", "way", "relation"], None))
+    err = ei.value
+    assert (err.path, err.offset) == (path, info.offset)
+    assert f"{path}: blob at offset {info.offset}" in str(err)
+    assert isinstance(err.__cause__, P.ProtoDecodeError)
+
+
 def test_lzma_blob_decode(tmp_path):
     """D1: lzma-compressed blobs (Blob field 4) decode identically to
     zlib — the spec alternative the golden fixtures don't exercise."""
     import pbf_encoder as E
     from osm_pbf_parquet_spark.pbf import blob as B
-    from osm_pbf_parquet_spark.pbf.decode import parse_block_to_batch
+    from osm_pbf_parquet_spark.pbf.decode import (
+        columns_to_arrow, decode_primitive_block,
+    )
 
     st = E.StringTable()
     nodes = [{"id": i, "lat_raw": i * 10, "lon_raw": -i * 10,
@@ -1049,7 +1133,7 @@ def test_lzma_blob_decode(tmp_path):
     for info, raw in B.iter_blobs(p):
         out = B.decompress_blob(raw)
         if info.blob_type == B.TYPE_DATA:
-            batches.append(parse_block_to_batch(out))
+            batches.append(columns_to_arrow(decode_primitive_block(out)))
     [batch] = batches
     got = batch.to_pydict()
     assert got["id"] == [n["id"] for n in nodes]

@@ -14,7 +14,7 @@ from __future__ import annotations
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
-from osm_pbf_parquet_spark.pbf.decode import parse_block_to_batch
+from osm_pbf_parquet_spark.pbf.decode import columns_to_arrow, decode_primitive_block
 
 from pbf_encoder import (
     StringTable,
@@ -89,7 +89,7 @@ def test_dense_node_roundtrip(nodes, gran, lat_off, lon_off, date_gran):
         [group], granularity=gran, lat_offset=lat_off, lon_offset=lon_off,
         date_granularity=date_gran, st=st_,
     )
-    batch = parse_block_to_batch(payload)
+    batch = columns_to_arrow(decode_primitive_block(payload))
     assert batch.num_rows == len(nodes)
     got = _as_dict(batch)
     for i, n in enumerate(nodes):
@@ -124,7 +124,8 @@ def test_dense_nodes_without_info_all_meta_null(nodes):
     body += _packed_svarints(9, [n["lon_raw"] for n in nodes], delta=True)
     body += _packed_uvarints(10, kv)
     group = _len_field(2, bytes(body))
-    batch = parse_block_to_batch(encode_primitive_block([group], st=st_))
+    batch = columns_to_arrow(decode_primitive_block(
+        encode_primitive_block([group], st=st_)))
     got = _as_dict(batch)
     assert got["id"] == ids
     for col in ("version", "timestamp", "changeset", "uid", "user", "visible"):
@@ -163,7 +164,7 @@ def test_way_roundtrip(ways, date_gran):
     payload = encode_primitive_block(
         [b"".join(entries)], date_granularity=date_gran, st=st_
     )
-    batch = parse_block_to_batch(payload)
+    batch = columns_to_arrow(decode_primitive_block(payload))
     assert batch.num_rows == len(ways)
     got = _as_dict(batch)
     for i, w in enumerate(ways):
@@ -209,9 +210,9 @@ def relation_lists(draw):
 def test_relation_roundtrip(rels):
     st_ = StringTable()
     entries = [encode_relation(st_, r) for r in rels]
-    batch = parse_block_to_batch(
+    batch = columns_to_arrow(decode_primitive_block(
         encode_primitive_block([b"".join(entries)], st=st_)
-    )
+    ))
     assert batch.num_rows == len(rels)
     got = _as_dict(batch)
     for i, r in enumerate(rels):
@@ -231,14 +232,15 @@ def test_delta_chains_reset_per_block(nodes, split):
     identically to one message — delta chains reset per message."""
     split = min(split, len(nodes))
     st1 = StringTable()
-    one = parse_block_to_batch(
+    one = columns_to_arrow(decode_primitive_block(
         encode_primitive_block([encode_dense_nodes(st1, nodes)], st=st1)
-    )
+    ))
     st2 = StringTable()
     groups = [encode_dense_nodes(st2, nodes[:split])]
     if nodes[split:]:
         groups.append(encode_dense_nodes(st2, nodes[split:]))
-    two = parse_block_to_batch(encode_primitive_block(groups, st=st2))
+    two = columns_to_arrow(decode_primitive_block(
+        encode_primitive_block(groups, st=st2)))
     assert one.num_rows == two.num_rows
     assert _as_dict(one) == _as_dict(two)
 
@@ -256,8 +258,8 @@ def test_kind_pushdown_consistent(nodes, kinds):
     payload = encode_primitive_block(
         [encode_dense_nodes(st_, nodes), encode_way(st_, way)], st=st_
     )
-    full = parse_block_to_batch(payload)
-    sub = parse_block_to_batch(payload, kinds=kinds)
+    full = columns_to_arrow(decode_primitive_block(payload))
+    sub = columns_to_arrow(decode_primitive_block(payload, kinds=kinds))
     want = {"node": len(nodes), "way": 1, "relation": 0}
     expect_rows = sum(want[k] for k in kinds)
     assert (0 if sub is None else sub.num_rows) == expect_rows
@@ -285,8 +287,10 @@ def test_group_scan_fallback_on_stray_scalar_field():
     dirty_group = _key(15, 0) + _varint(99) + clean_group  # unknown field 15
     st2 = StringTable()
     _ = encode_way(st2, way)  # same stringtable contents
-    a = parse_block_to_batch(encode_primitive_block([clean_group], st=st_))
-    b = parse_block_to_batch(encode_primitive_block([dirty_group], st=st_))
+    a = columns_to_arrow(decode_primitive_block(
+        encode_primitive_block([clean_group], st=st_)))
+    b = columns_to_arrow(decode_primitive_block(
+        encode_primitive_block([dirty_group], st=st_)))
     assert _as_dict(a) == _as_dict(b)
 
 
@@ -311,8 +315,10 @@ def test_way_unpacked_refs_scalar_fallback():
     for d in deltas:
         body += _key(8, 0) + _varint(_zigzag(d))
     unpacked_way = _len_field(3, bytes(body))
-    a = parse_block_to_batch(encode_primitive_block([packed_way], st=st_))
-    b = parse_block_to_batch(encode_primitive_block([unpacked_way], st=st_))
+    a = columns_to_arrow(decode_primitive_block(
+        encode_primitive_block([packed_way], st=st_)))
+    b = columns_to_arrow(decode_primitive_block(
+        encode_primitive_block([unpacked_way], st=st_)))
     got_a = [r["ref"] for r in _as_dict(a)["nds"][0]]
     got_b = [r["ref"] for r in _as_dict(b)["nds"][0]]
     assert got_a == refs and got_b == refs
@@ -354,7 +360,7 @@ def test_plain_node_roundtrip(nodes, gran, lat_off, lon_off):
         [group], granularity=gran, lat_offset=lat_off, lon_offset=lon_off,
         st=st_,
     )
-    batch = parse_block_to_batch(payload)
+    batch = columns_to_arrow(decode_primitive_block(payload))
     assert batch.num_rows == len(nodes)
     got = _as_dict(batch)
     for i, n in enumerate(nodes):
@@ -412,7 +418,7 @@ def test_way_with_locations_roundtrip(ways, gran, lat_off, lon_off):
         [group], granularity=gran, lat_offset=lat_off, lon_offset=lon_off,
         st=st_,
     )
-    batch = parse_block_to_batch(payload)
+    batch = columns_to_arrow(decode_primitive_block(payload))
     assert batch.num_rows == len(ways)
     got = _as_dict(batch)
     for i, w in enumerate(ways):
